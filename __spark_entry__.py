@@ -70,14 +70,11 @@ def _wrap(fn: Callable[[SparkSession, str], DataFrame]):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # REGISTRY_ORDER leads with the queries whose freshest driver record is
-    # oldest (plus anything new or behavior-touched this round): the
-    # driver's recorded correctness file covers a bounded ~50-entry prefix
-    # of this dict, so rotating the prefix each round keeps every query's
-    # record at most two rounds old (union of consecutive artifacts = full
-    # registry).
-    return {k: _wrap(fn) for k, fn in _q.ordered_queries().items()}
+    return {
+        k: _wrap(fn)
+        for k, fn in {**_q.PIPELINE_QUERIES, **_q.DOCS_QUERIES}.items()
+    }
 
 
 def oracle_sql() -> dict[str, str]:
-    return _q.ordered_oracles()
+    return {**_q.PIPELINE_ORACLES, **_q.DOCS_ORACLES}

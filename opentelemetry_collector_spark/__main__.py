@@ -9,9 +9,10 @@ Usage (local):
         [--mode batch|stream] [--n-buckets 16] [--resume]
 
 Lifecycle mirrors the reference: resolve+validate config -> build the DAG
-(one Catalyst plan) -> run -> report counters (service/service.go:83-233);
-checkpointed waves make any crash resumable (--resume skips committed
-buckets, persistent-queue semantics).
+(one Catalyst plan) -> run -> report counters (service/service.go:83-233).
+Batch flags and ``--config`` YAML both become a ``ServiceConfig`` that
+``run_service`` executes; checkpointed waves make any crash resumable
+(--resume skips committed buckets, persistent-queue semantics).
 """
 
 from __future__ import annotations
@@ -33,7 +34,10 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--output", required=False, help="sink base path")
     p.add_argument("--mode", choices=["batch", "stream"], default="batch")
     p.add_argument("--source-kind", choices=["events", "transcripts"],
-                   default="events")
+                   default="events",
+                   help="events: an sf dir, turned into transcripts; "
+                        "transcripts: a transcripts table (needed by "
+                        "--mode stream)")
     p.add_argument("--n-buckets", type=int, default=16)
     p.add_argument("--buckets-per-wave", type=int, default=4)
     p.add_argument("--bucket-seconds", type=int, default=300)
@@ -41,8 +45,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--attempt-timeout", type=float, default=0.0,
                    help="per-attempt deadline (s) on each wave's sink write;"
                         " 0 disables (timeout sender analog)")
-    p.add_argument("--salt-buckets", type=int, default=0,
-                   help="static hot-conv_id salting factor (0 = off)")
     p.add_argument("--adaptive-salting", action="store_true",
                    help="two-pass histogram-driven skew salting")
     p.add_argument("--run-id", default=None)
@@ -54,29 +56,61 @@ def build_arg_parser() -> argparse.ArgumentParser:
     return p
 
 
+def flag_service_config(args: argparse.Namespace, run_id: str):
+    """The flag CLI's default graph: one receiver feeding two pipelines,
+    ``sinks`` (checkpointed per-sink tables) and ``metrics`` (the
+    sink_counts table under ``{output}/_metrics``)."""
+    from opentelemetry_collector_spark.plans.config import ServiceConfig
+
+    receiver = {"events": "transcripts",
+                "transcripts": "transcripts_table"}[args.source_kind]
+    processors = ["parse", "enrich", "route"]
+    if args.adaptive_salting:
+        processors.insert(0, "skew_salt")
+    cfg = ServiceConfig(
+        receivers={receiver: {"path": args.source}},
+        processors={name: {} for name in processors},
+        exporters={
+            "checkpointed_sinks": {
+                "base_path": args.output,
+                "n_buckets": args.n_buckets,
+                "buckets_per_wave": args.buckets_per_wave,
+                "max_records_per_file": args.max_records_per_file,
+                "attempt_timeout_s": args.attempt_timeout,
+                "run_id": run_id,
+            },
+            "sink_counts": {
+                "path": f"{args.output}/_metrics/sink_counts",
+                "bucket_seconds": args.bucket_seconds,
+            },
+        },
+        pipelines={
+            name: {"receivers": [receiver], "processors": processors,
+                   "exporters": [exporter]}
+            for name, exporter in (("sinks", "checkpointed_sinks"),
+                                   ("metrics", "sink_counts"))
+        },
+    )
+    cfg.validate()
+    return cfg
+
+
 def main(argv: list[str] | None = None) -> int:
-    args = build_arg_parser().parse_args(argv)
+    parser = build_arg_parser()
+    args = parser.parse_args(argv)
     if args.config is None and (args.source is None or args.output is None):
-        build_arg_parser().error(
+        parser.error(
             "--source and --output are required unless --config is given"
         )
+    if (args.config is None and args.mode == "stream"
+            and args.source_kind == "events"):
+        # the stream source reads the path under the transcript schema; an
+        # sf dir of events would stream every row into dead_letter
+        parser.error("--mode stream needs --source-kind transcripts")
 
     from pyspark.sql import SparkSession
 
-    from opentelemetry_collector_spark.operators.aggregate import sink_counts
-    from opentelemetry_collector_spark.operators.route import routed_ok
-    from opentelemetry_collector_spark.plans.checkpoint import (
-        CheckpointConfig,
-        CheckpointedRunner,
-    )
-    from opentelemetry_collector_spark.plans.pipeline import (
-        Pipeline,
-        PipelineConfig,
-    )
-    from opentelemetry_collector_spark.sources.transcripts import (
-        events_to_transcripts,
-        read_transcripts,
-    )
+    from opentelemetry_collector_spark.plans.service import run_service
 
     builder = SparkSession.builder.appName("otelcol-spark")
     if args.master:
@@ -90,20 +124,16 @@ def main(argv: list[str] | None = None) -> int:
         )
     spark = builder.getOrCreate()
 
+    t0 = time.perf_counter()
     if args.config:
         # collector.Run parity: resolve config (confmap provider URIs,
         # ${} expansion, right-biased merge across files), build the
         # pipeline graph, run every pipeline (service/service.go:83-233)
-        import json as _json
-        import os as _os
+        import os
 
         from opentelemetry_collector_spark.plans.config import ServiceConfig
-        from opentelemetry_collector_spark.plans.service import run_service
 
-        svc_cfg = ServiceConfig.from_sources(
-            *args.config, env=dict(_os.environ)
-        )
-        t0 = time.perf_counter()
+        svc_cfg = ServiceConfig.from_sources(*args.config, env=dict(os.environ))
         # persist_results: the report counts below reuse the exporters'
         # execution instead of re-running every pipeline plan
         results = run_service(spark, svc_cfg, persist_results=True)
@@ -112,75 +142,61 @@ def main(argv: list[str] | None = None) -> int:
             "pipelines": {name: df.count() for name, df in results.items()},
             "wall_s": round(time.perf_counter() - t0, 2),
         }
-        print(_json.dumps(report))
-        spark.stop()
-        return 0
-
-    cfg = PipelineConfig(
-        source_path=args.source,
-        sink_base_path=args.output,
-        bucket_seconds=args.bucket_seconds,
-        max_records_per_file=args.max_records_per_file,
-        salt_buckets=args.salt_buckets,
-        adaptive_salting=args.adaptive_salting,
-    )
-    pipeline = Pipeline(spark, cfg)
-
-    if args.source_kind == "events":
-        transcripts = events_to_transcripts(spark, args.source)
-    else:
-        transcripts = read_transcripts(spark, args.source)
-
-    t0 = time.perf_counter()
-    if args.mode == "stream":
+    elif args.mode == "stream":
         from opentelemetry_collector_spark.streaming.pipeline import (
             routed_stream,
             start_sink_writer,
+            stream_transcripts,
         )
 
-        stream = routed_stream(
-            spark.readStream.schema(
-                "conv_id string, turn_idx int, role string, text string, "
-                "tool string, ts timestamp"
-            ).parquet(args.source),
-            spark,
-        )
+        stream = routed_stream(stream_transcripts(spark, args.source), spark)
         q = start_sink_writer(
             stream, f"{args.output}/sinks", f"{args.output}/_stream_checkpoint"
         )
         q.awaitTermination()
         report = {"mode": "stream", "wall_s": round(time.perf_counter() - t0, 2)}
     else:
-        routed = pipeline.routed(transcripts)
-        # the validated PipelineConfig is the single source for sink knobs
-        runner = CheckpointedRunner(
-            spark,
-            CheckpointConfig(
-                base_path=cfg.sink_base_path or args.output,
-                n_buckets=args.n_buckets,
-                buckets_per_wave=args.buckets_per_wave,
-                max_records_per_file=cfg.max_records_per_file,
-                attempt_timeout_s=args.attempt_timeout,
-            ),
+        import uuid
+
+        from pyspark.sql import functions as F
+
+        from opentelemetry_collector_spark.plans.checkpoint import (
+            CheckpointConfig,
+            CheckpointedRunner,
         )
-        if not args.resume:
+
+        run_id = args.run_id or uuid.uuid4().hex[:12]
+        svc_cfg = flag_service_config(args, run_id)
+        ledger = CheckpointedRunner(
+            spark, CheckpointConfig(args.output, n_buckets=args.n_buckets)
+        )
+        done = ledger.committed_buckets()
+        if done and not args.resume:
             # fresh run: a prior ledger would mask new work — require clean dir
-            if runner.committed_buckets():
-                print(
-                    "output ledger exists; pass --resume to continue it",
-                    file=sys.stderr,
-                )
-                return 2
-        totals = runner.run(routed, run_id=args.run_id)
-        counts = sink_counts(routed_ok(routed), cfg.bucket_seconds)
-        counts.coalesce(1).write.mode("overwrite").parquet(
-            f"{args.output}/_metrics/sink_counts"
-        )
+            print(
+                "output ledger exists; pass --resume to continue it",
+                file=sys.stderr,
+            )
+            spark.stop()
+            return 2
+        # persist_results=False: each checkpoint wave filters the
+        # unpersisted plan by its own buckets, so a resume parses only the
+        # buckets it still has to write
+        run_service(spark, svc_cfg, persist_results=False)
+        # this run's ledger rows; a reused --run-id may also own rows of
+        # buckets committed before this run
+        rows = [
+            r for r in ledger.metrics().filter(F.col("run_id") == run_id).collect()
+            if r.bucket not in done
+        ]
         report = {
             "mode": "batch",
             "wall_s": round(time.perf_counter() - t0, 2),
-            **{k: v for k, v in totals.items() if k != "run_id"},
-            "run_id": totals["run_id"],
+            "skipped_buckets": sorted(done),
+            "processed_buckets": sorted(r.bucket for r in rows),
+            "n_routed_ok": sum(r.n_routed_ok for r in rows),
+            "n_dead_letter": sum(r.n_dead_letter for r in rows),
+            "run_id": run_id,
         }
 
     print(json.dumps(report))

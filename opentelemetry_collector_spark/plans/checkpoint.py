@@ -92,6 +92,10 @@ class CheckpointConfig:
             raise ValueError("n_buckets and buckets_per_wave must be positive")
         if not self.base_path:
             raise ValueError("base_path required")
+        if self.max_records_per_file <= 0:
+            # batch processor config validation: send_batch_max_size >= 1
+            # (processor/batchprocessor/config.go:25-52)
+            raise ValueError("max_records_per_file must be positive")
         if self.attempt_timeout_s < 0:
             raise ValueError("attempt_timeout_s must be >= 0 (0 = no deadline)")
 

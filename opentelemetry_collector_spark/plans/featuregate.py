@@ -92,18 +92,6 @@ class Registry:
 # Global registry with the engine's own gates, mirroring how the reference
 # registers gates at import time.
 GLOBAL = Registry()
-GATE_ADAPTIVE_SALTING = GLOBAL.register(
-    "engine.adaptiveSalting", STAGE_BETA,
-    "two-pass histogram-driven skew salting (operators/skew.py)",
-)
-GATE_GROK_PARSE = GLOBAL.register(
-    "engine.grokParse", STAGE_ALPHA,
-    "Arrow pattern-library parse instead of native regex (operators/grok.py)",
-)
-GATE_CANONICAL_ATTRS = GLOBAL.register(
-    "engine.canonicalAttributes", STAGE_STABLE,
-    "sorted-key canonical attributes JSON (pcommon.Map parity)",
-)
 GATE_APPROX_QUANTILES = GLOBAL.register(
     "engine.approxQuantiles", STAGE_ALPHA,
     "t-digest percentile_approx for Summary quantiles instead of the exact "

@@ -11,9 +11,11 @@ exporter is one write action over the same plan).
 Component registry (extensible by passing extra factories):
   receivers:  transcripts (events-derived), transcripts_table (parquet dir),
               otlp_jsonl (JSON-lines wire)
-  processors: parse, enrich, route
-  exporters:  sinks (partitioned fan-out write), sink_counts (metrics
-              table), otlp_jsonl (JSON-lines export), dead_letter
+  processors: parse, enrich, route, skew_salt (histogram-driven hot-conv_id
+              salting)
+  exporters:  sinks (partitioned fan-out write), checkpointed_sinks
+              (resumable bucket waves with a commit ledger), sink_counts
+              (metrics table), otlp_jsonl (JSON-lines export), dead_letter
 """
 
 from __future__ import annotations
@@ -331,12 +333,20 @@ def _builtin_processors() -> dict[str, Callable]:
             doc_classifier_score,
         )
 
+        label_col = cfg.get("label_col", "label")
+        # with no labeled row the model is all prior and keeps every doc,
+        # so a wrong label_col would pass for a working filter
+        if df.filter(F.col(label_col).isNotNull()).isEmpty():
+            raise ValueError(
+                f"classifier_filter: label_col {label_col!r} is NULL on "
+                "every row; there is nothing to train on"
+            )
         scored = doc_classifier_score(
             spark,
             "",
             docs=df,
             labeled=df,
-            label_col=cfg.get("label_col", "label"),
+            label_col=label_col,
         )
         drop = scored.filter(~F.col("keep")).select("doc_id")
         return df.join(drop, "doc_id", "left_anti")
@@ -366,10 +376,24 @@ def _builtin_processors() -> dict[str, Callable]:
             budget=int(cfg.get("budget", CONV_PACK_BUDGET_TOKENS)),
         )
 
+    def skew_salt_p(spark, df, cfg):
+        # two-pass salting (operators/skew.py): the key histogram finds the
+        # hot conversations and each gets the split factor its volume
+        # needs; cold keys keep one partition cell
+        from opentelemetry_collector_spark.operators.skew import (
+            SALT_COL,
+            skew_aware_repartition,
+        )
+
+        return skew_aware_repartition(
+            df, "conv_id", "turn_idx", spark.sparkContext.defaultParallelism
+        ).drop(SALT_COL)
+
     return {
         "parse": lambda spark, df, cfg: parse_turns(df),
         "enrich": lambda spark, df, cfg: enrich(df, spark),
         "route": lambda spark, df, cfg: route(df),
+        "skew_salt": skew_salt_p,
         # telemetry-mutation / filter statements (docs/processing.md:33-60)
         "transform": transform_processor_factory,
         # sampling processors (trace-consistent hash head sampling; window
@@ -419,8 +443,25 @@ def _builtin_exporters() -> dict[str, Callable]:
                     cfg.get("max_records_per_file", 8192),
                     compression=cfg.get("compression"))
 
+    def export_checkpointed(spark, df, cfg):
+        # keys are CheckpointConfig's fields plus run_id; an unknown key
+        # fails in the dataclass constructor
+        from opentelemetry_collector_spark.plans.checkpoint import (
+            CheckpointConfig,
+            CheckpointedRunner,
+        )
+
+        ckpt = dict(cfg)
+        run_id = ckpt.pop("run_id", None)
+        CheckpointedRunner(spark, CheckpointConfig(**ckpt)).run(
+            df, run_id=run_id
+        )
+
     def export_counts(spark, df, cfg):
-        counts = sink_counts(routed_ok(df), cfg.get("bucket_seconds", 300))
+        bucket_seconds = cfg.get("bucket_seconds", 300)
+        if bucket_seconds <= 0:
+            raise ValueError("sink_counts: bucket_seconds must be positive")
+        counts = sink_counts(routed_ok(df), bucket_seconds)
         counts.coalesce(1).write.mode("overwrite").parquet(cfg["path"])
 
     def export_jsonl(spark, df, cfg):
@@ -445,6 +486,7 @@ def _builtin_exporters() -> dict[str, Callable]:
 
     return {
         "sinks": export_sinks,
+        "checkpointed_sinks": export_checkpointed,
         "sink_counts": export_counts,
         "otlp_jsonl": export_jsonl,
         "dead_letter": export_dead_letter,

@@ -18,7 +18,7 @@ from pyspark.sql import SparkSession
 _SCALE_CONFS = {
     # AQE: runtime coalescing of small shuffle partitions + skew-join split.
     # The reference has no optimizer at all (SURVEY §4); AQE is the Spark-side
-    # answer to hot conv_id skew (salting is layered on top in plans/pipeline).
+    # answer to hot conv_id skew (the skew_salt processor salts on top).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

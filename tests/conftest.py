@@ -22,6 +22,46 @@ TABLES = [
 ]
 
 
+def run_routed(spark, transcripts, salted: bool):
+    """``transcripts`` through run_service's [skew_salt] parse -> enrich ->
+    route graph; returns the routed frame (the exporter writes nothing)."""
+    from opentelemetry_collector_spark.plans.config import ServiceConfig
+    from opentelemetry_collector_spark.plans.service import run_service
+
+    processors = ["skew_salt"] * salted + ["parse", "enrich", "route"]
+    cfg = ServiceConfig(
+        receivers={"fixture": {}},
+        processors={name: {} for name in processors},
+        exporters={"none": {}},
+        pipelines={"p": {"receivers": ["fixture"], "processors": processors,
+                         "exporters": ["none"]}},
+    )
+    return run_service(
+        spark,
+        cfg,
+        extra_receivers={"fixture": lambda spark, cfg: transcripts},
+        extra_exporters={"none": lambda spark, df, cfg: None},
+    )["p"]
+
+
+def assert_same_routing(plain, salted):
+    """ok rows, dead_letter rows and sink_counts of two routed frames are
+    equal as multisets."""
+    from opentelemetry_collector_spark.operators.aggregate import sink_counts
+    from opentelemetry_collector_spark.operators.route import (
+        dead_letter,
+        routed_ok,
+    )
+
+    for split in (routed_ok, dead_letter):
+        a = split(plain).select("conv_id", "turn_idx", "sink_id")
+        b = split(salted).select("conv_id", "turn_idx", "sink_id")
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    assert {tuple(r) for r in sink_counts(routed_ok(plain)).collect()} == {
+        tuple(r) for r in sink_counts(routed_ok(salted)).collect()
+    }
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("otelcol-spark-tests", cores=8)

@@ -201,16 +201,16 @@ def test_classifier_plan_broadcasts_the_bounded_model(spark, tmp_path):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_config_built_classifier_filter(spark, tmp_path):
+def _run_classifier_filter(spark, tmp_path, docs, label_col="label"):
     from opentelemetry_collector_spark.plans.config import ServiceConfig
     from opentelemetry_collector_spark.plans.service import run_service
 
     src = str(tmp_path / "docs.parquet")
-    _fixture_docs(spark).write.parquet(src)
+    docs.write.parquet(src)
     cfg = ServiceConfig.from_sources(
         {
             "receivers": {"documents": {"path": src}},
-            "processors": {"classifier_filter": {"label_col": "label"}},
+            "processors": {"classifier_filter": {"label_col": label_col}},
             "exporters": {"parquet": {"path": str(tmp_path / "kept")}},
             "service": {
                 "pipelines": {
@@ -224,11 +224,29 @@ def test_config_built_classifier_filter(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["clf"]
+    return run_service(spark, cfg)["clf"]
+
+
+def test_config_built_classifier_filter(spark, tmp_path):
+    got = _run_classifier_filter(spark, tmp_path, _fixture_docs(spark))
     kept = {r.doc_id for r in got.collect()}
     assert kept == {0, 1, 2, 6, 8}
     # the filter preserves the flowing frame's columns
     assert sorted(got.columns) == ["doc_id", "label", "text"]
+
+
+def test_classifier_filter_refuses_a_label_col_with_no_labels(spark, tmp_path):
+    """A label_col that is NULL on every row trains no model; the filter
+    must refuse the config instead of passing every doc through."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    unlabeled = _fixture_docs(spark).withColumn(
+        "label", F.lit(None).cast("boolean")
+    )
+    with pytest.raises(ValueError, match="label_col 'label'"):
+        _run_classifier_filter(spark, tmp_path, unlabeled)
+    assert not (tmp_path / "kept").exists()
 
 
 def test_fuzz_random_labeled_corpus_matches_python_nb(spark):

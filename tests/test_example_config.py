@@ -125,3 +125,69 @@ def test_cli_requires_source_output_without_config():
     )
     assert proc.returncode != 0
     assert "--source and --output are required" in proc.stderr
+
+
+def test_cli_stream_mode_refuses_an_events_source(tmp_path):
+    """The stream source reads its path under the transcript schema, so an
+    sf dir of events would stream every row into dead_letter; the flag
+    check fails before Spark starts."""
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [sys.executable, "-m", "opentelemetry_collector_spark",
+         "--source", SF_SMOKE, "--output", str(tmp_path), "--mode", "stream"],
+        capture_output=True, text=True, timeout=60,
+        cwd=str(Path(__file__).resolve().parent.parent),
+    )
+    assert proc.returncode != 0
+    assert "--mode stream needs --source-kind transcripts" in proc.stderr
+    assert not any(tmp_path.iterdir())
+
+
+def test_cli_flag_mode_batch_run_and_resume(tmp_path):
+    """Flag mode builds the default sinks + metrics graph and runs it
+    through run_service: the report comes from this run's ledger rows, a
+    rerun over a committed ledger needs --resume, and a resume over a
+    fully committed ledger processes nothing."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "out"
+
+    def cli(*extra):
+        return subprocess.run(
+            [sys.executable, "-m", "opentelemetry_collector_spark",
+             "--source", SF_SMOKE, "--output", str(out),
+             "--n-buckets", "4", "--master", "local[2]",
+             "--shuffle-partitions", "2", *extra],
+            capture_output=True, text=True, timeout=240,
+            cwd=str(Path(__file__).resolve().parent.parent),
+        )
+
+    first = cli("--adaptive-salting")
+    assert first.returncode == 0, first.stderr[-2000:]
+    report = json.loads(first.stdout.strip().splitlines()[-1])
+    assert report["mode"] == "batch"
+    assert report["processed_buckets"] == [0, 1, 2, 3]
+    assert report["skipped_buckets"] == []
+    assert (report["n_routed_ok"], report["n_dead_letter"]) == (988, 12)
+    ledger = pq.read_table(str(out / "_checkpoints")).to_pylist()
+    assert {r["run_id"] for r in ledger} == {report["run_id"]}
+    assert sum(r["n_routed_ok"] for r in ledger) == report["n_routed_ok"]
+    counts = pq.read_table(str(out / "_metrics" / "sink_counts"))
+    assert sum(counts.column("n_rows").to_pylist()) == report["n_routed_ok"]
+
+    again = cli()
+    assert again.returncode == 2
+    assert "pass --resume" in again.stderr
+
+    resumed = cli("--resume")
+    assert resumed.returncode == 0, resumed.stderr[-2000:]
+    report = json.loads(resumed.stdout.strip().splitlines()[-1])
+    assert report["processed_buckets"] == []
+    assert report["skipped_buckets"] == [0, 1, 2, 3]
+    assert (report["n_routed_ok"], report["n_dead_letter"]) == (0, 0)

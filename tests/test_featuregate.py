@@ -69,6 +69,18 @@ def test_cli_flag_convention():
 
 
 def test_global_registry_ships_engine_gates():
-    ids = [g.gate_id for g in GLOBAL.gates()]
-    assert "engine.adaptiveSalting" in ids
-    assert GLOBAL.is_enabled("engine.canonicalAttributes")
+    """The shipped gates are exactly the ones the engine reads: setting a
+    gate that no module checks would silently do nothing."""
+    import re
+    from pathlib import Path
+
+    import opentelemetry_collector_spark as pkg
+
+    read = {
+        gate_id
+        for f in Path(pkg.__file__).parent.rglob("*.py")
+        for gate_id in re.findall(r'is_enabled\(\s*"([^"]+)"', f.read_text())
+    }
+    assert {g.gate_id for g in GLOBAL.gates()} == read == {
+        "engine.approxQuantiles"
+    }

@@ -24,9 +24,8 @@ from opentelemetry_collector_spark.plans.config import (
     expand_vars,
     load_uri,
 )
-from opentelemetry_collector_spark.plans.pipeline import Pipeline, PipelineConfig
 from opentelemetry_collector_spark.sources.transcripts import events_to_transcripts
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_same_routing, run_routed
 
 VALID_CFG = {
     "receivers": {"transcripts": {"path": "${env:SRC_PATH}"}},
@@ -226,17 +225,9 @@ def test_sink_write_respects_max_records_per_file(spark, tmp_path):
 
 def test_salted_pipeline_same_results(spark):
     t = events_to_transcripts(spark, SF_SMOKE)
-    plain = Pipeline(spark, PipelineConfig(source_path="x")).run(t)
-    salted = Pipeline(
-        spark, PipelineConfig(source_path="x", salt_buckets=7)
-    ).run(t)
-    for key in ("ok", "dead_letter"):
-        a = plain[key].select("conv_id", "turn_idx", "sink_id")
-        b = salted[key].select("conv_id", "turn_idx", "sink_id")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    sc_a = {tuple(r) for r in plain["sink_counts"].collect()}
-    sc_b = {tuple(r) for r in salted["sink_counts"].collect()}
-    assert sc_a == sc_b
+    assert_same_routing(
+        run_routed(spark, t, salted=False), run_routed(spark, t, salted=True)
+    )
 
 
 def test_expand_vars_dollar_escape():
@@ -338,44 +329,12 @@ def test_sink_write_compression_codec(spark, tmp_path):
     assert spark.read.parquet(out).count() == routed.count()
 
 
-def test_registry_order_is_a_permutation_of_the_registry():
-    """REGISTRY_ORDER drives which operators land inside the driver's
-    bounded correctness-artifact window — it must list every registered
-    query exactly once, and every oracle key must have a query."""
+def test_registry_oracles_name_unique_queries():
+    """The driver contract merges the two query families into one dict, so
+    a name in both would silently drop a query; every oracle key must name
+    a registered query."""
     from opentelemetry_collector_spark import queries as q
 
+    assert not set(q.PIPELINE_QUERIES) & set(q.DOCS_QUERIES)
     merged = {**q.PIPELINE_QUERIES, **q.DOCS_QUERIES}
-    assert sorted(q.REGISTRY_ORDER) == sorted(merged)
-    assert len(q.REGISTRY_ORDER) == len(set(q.REGISTRY_ORDER))
-    assert list(q.ordered_queries()) == q.REGISTRY_ORDER
-    oracles = {**q.PIPELINE_ORACLES, **q.DOCS_ORACLES}
-    assert set(oracles) <= set(merged)
-    # ordered_oracles preserves the same prefix order
-    assert list(q.ordered_oracles()) == [
-        n for n in q.REGISTRY_ORDER if n in oracles
-    ]
-
-
-def test_stale_or_new_operators_lead_the_registry():
-    """Rotation discipline (VERDICT r03 task 2): every operator absent
-    from the LATEST recorded artifact sits inside the first 50 registry
-    entries, so the next driver run re-records it and the union of any two
-    consecutive rounds covers the full registry."""
-    import json
-    import re
-    from pathlib import Path
-
-    from opentelemetry_collector_spark import queries as q
-
-    root = Path(__file__).resolve().parents[1]
-    latest = max(
-        root.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    recorded = json.loads(latest.read_text())
-    stale = [n for n in q.REGISTRY_ORDER if n not in recorded]
-    window = q.REGISTRY_ORDER[:50]
-    missing = [n for n in stale if n not in window]
-    assert not missing, (
-        f"operators absent from {latest.name} outside the window: {missing}"
-    )
+    assert set(q.PIPELINE_ORACLES) | set(q.DOCS_ORACLES) <= set(merged)

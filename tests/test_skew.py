@@ -1,14 +1,13 @@
 """Hot-key skew handling (SURVEY §4 'ours to design'): a conversation holding
 half the rows must neither change results nor concentrate on one partition
-when salting is enabled."""
+when the skew_salt processor runs."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_spark.plans.pipeline import Pipeline, PipelineConfig
 from opentelemetry_collector_spark.sources.transcripts import events_to_transcripts
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_same_routing, run_routed
 
 
 def _skewed_transcripts(spark):
@@ -34,10 +33,7 @@ def test_salting_spreads_hot_conversation(spark):
     n_hot = skewed.filter(F.col("conv_id") == hot_conv).count()
     assert n_hot / n_total > 0.4  # genuinely skewed fixture
 
-    # salts >> partitions: 8 salts into 8 partitions leaves 2-3 stacked on
-    # one reducer (measured 0.52 max share); 64 salts flatten it
-    pipe = Pipeline(spark, PipelineConfig(source_path="x", salt_buckets=64))
-    salted = pipe.routed(skewed)
+    salted = run_routed(spark, skewed, salted=True)
     dist = (
         salted.withColumn("pid", F.spark_partition_id())
         .groupBy("pid").count().collect()
@@ -93,32 +89,28 @@ def test_adaptive_salting_targets_only_heavy_keys(spark):
 
 
 def test_adaptive_salting_preserves_results(spark):
+    """The two-pass operator on its own, planned for four times the
+    default parallelism so the hot conversation is split further than the
+    skew_salt processor splits it: routing the spread frame gives the same
+    sink_counts as routing the unsalted one."""
+    from opentelemetry_collector_spark.operators.skew import (
+        SALT_COL,
+        skew_aware_repartition,
+    )
+
     skewed, _ = _skewed_transcripts(spark)
-    plain = Pipeline(spark, PipelineConfig(source_path="x")).run(skewed)
-    adaptive = Pipeline(
-        spark, PipelineConfig(source_path="x", adaptive_salting=True)
-    ).run(skewed)
-    a = {tuple(r) for r in plain["sink_counts"].collect()}
-    b = {tuple(r) for r in adaptive["sink_counts"].collect()}
-    assert a == b
-
-
-def test_static_and_adaptive_salting_exclusive():
-    import pytest
-
-    with pytest.raises(ValueError):
-        PipelineConfig(
-            source_path="x", salt_buckets=8, adaptive_salting=True
-        ).validate()
+    spread = skew_aware_repartition(
+        skewed, "conv_id", "turn_idx", 4 * spark.sparkContext.defaultParallelism
+    ).drop(SALT_COL)
+    assert_same_routing(
+        run_routed(spark, skewed, salted=False),
+        run_routed(spark, spread, salted=False),
+    )
 
 
 def test_salting_preserves_results_on_skewed_input(spark):
     skewed, _ = _skewed_transcripts(spark)
-    plain = Pipeline(spark, PipelineConfig(source_path="x")).run(skewed)
-    salted = Pipeline(spark, PipelineConfig(source_path="x", salt_buckets=8)).run(
-        skewed
+    assert_same_routing(
+        run_routed(spark, skewed, salted=False),
+        run_routed(spark, skewed, salted=True),
     )
-    a = {tuple(r) for r in plain["sink_counts"].collect()}
-    b = {tuple(r) for r in salted["sink_counts"].collect()}
-    assert a == b
-    assert plain["dead_letter"].count() == salted["dead_letter"].count()
