@@ -6,7 +6,7 @@ collector's receiver -> processor -> exporter DAG is re-expressed as a
 Catalyst logical plan over a transcripts table:
 
     scan (receiver)  ->  regexp/Arrow parse (processorhelper)
-                     ->  broadcast-join enrich (attributes/resource processor)
+                     ->  literal-map enrich (attributes/resource processor)
                      ->  fan-out routing filters (fanoutconsumer/router)
                      ->  groupBy(time-bucket) counts (batchprocessor/obsreport)
                      ->  checkpointed per-sink writes (exporterhelper queue/retry)

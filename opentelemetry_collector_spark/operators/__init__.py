@@ -1,10 +1,4 @@
 from opentelemetry_collector_spark.operators.parse import parse_turns  # noqa: F401
-from opentelemetry_collector_spark.operators.enrich import (  # noqa: F401
-    enrich_roles,
-    enrich_tools,
-    roles_df,
-    tools_df,
-)
 from opentelemetry_collector_spark.operators.route import (  # noqa: F401
     dead_letter,
     route,

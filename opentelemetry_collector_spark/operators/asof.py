@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from opentelemetry_collector_spark.session import local_rows
 
 # (tool, effective_ts, rate_limit_qps) — three deterministic config epochs
 # spanning the fixture ts range (base 2024-01-01, see sources/transcripts.py)
@@ -39,12 +42,10 @@ TOOL_VERSIONS: list[tuple[str, str, int]] = [
 
 
 def tool_versions_df(spark: SparkSession) -> DataFrame:
-    df = spark.createDataFrame(
-        TOOL_VERSIONS, ["tool", "effective_ts", "rate_limit_qps"]
-    )
-    return df.withColumn(
-        "effective_ts", F.col("effective_ts").cast("timestamp_ntz")
-    )
+    schema = T.StructType().add("tool", "string").add(
+        "effective_ts", "string").add("rate_limit_qps", "long")
+    return local_rows(spark, TOOL_VERSIONS, schema).withColumn(
+        "effective_ts", F.col("effective_ts").cast("timestamp_ntz"))
 
 
 def tool_versions_values_sql() -> str:

@@ -1,17 +1,18 @@
 """Enrich stage — the attributes/resource-processor analog.
 
 The reference core documents "telemetry enrichment" as a processor category
-(docs/processing.md:82-91); here it is a broadcast hash-join against small
-role/tool lookup tables (FIXTURES.md §2). Left-join with default fills:
-unmatched tool -> tool_family='unknown' (attributes-processor upsert
-semantics, pdata/pcommon/map.go:109-127).
+(docs/processing.md:82-91); here it is one projection over literal maps, no
+join: each role/tool lookup table (FIXTURES.md §2) is a ``map(...)`` literal
+keyed by role or parsed tool. Default fills: unmatched tool ->
+tool_family='unknown' (attributes-processor upsert semantics,
+pdata/pcommon/map.go:109-127).
 
 The lookup rows are module constants — the single source of truth consumed by
-BOTH the Spark side (createDataFrame + broadcast) and the DuckDB oracle
-(generated VALUES clause), so engine-vs-oracle equality is structural.
+BOTH the Spark side (the literal maps) and the DuckDB oracle (generated
+VALUES clause), so engine-vs-oracle equality is structural.
 
-Scale note: broadcast() keeps these joins shuffle-free at any fact-table size
-— the 100 TB plan is scan -> parse -> BroadcastHashJoin x2 with zero exchange.
+Scale note: the projection fuses into whole-stage codegen — the 100 TB plan
+is scan -> parse -> Project with zero exchange and no Python worker.
 """
 
 from __future__ import annotations
@@ -41,49 +42,50 @@ ROLES_COLUMNS = ["role", "role_kind", "is_human", "priority"]
 TOOLS_COLUMNS = ["tool", "tool_family", "timeout_ms", "deprecated"]
 
 
-def roles_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLES, ROLES_COLUMNS)
+def _sql(v: object) -> str:
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, str):
+        return f"'{v}'"
+    return str(v)
 
 
-def tools_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOLS, TOOLS_COLUMNS)
+def _lookup(key: str, rows: list[tuple], columns: list[str]) -> list[str]:
+    """Spark SQL for ``columns[1:]`` of the row whose first field is ``key``
+    in one literal map (NULL if none), ints as bigint. SQL text, since each
+    PySpark Column method call costs several py4j round trips."""
 
+    def lit(v: object) -> str:
+        return f"{v}L" if type(v) is int else _sql(v)
 
-def enrich_roles(parsed: DataFrame, spark: SparkSession) -> DataFrame:
-    """Broadcast left-join role metadata; unmatched role -> role_kind='unknown'."""
-    out = parsed.join(F.broadcast(roles_df(spark)), on="role", how="left")
-    return out.withColumn("role_kind", F.coalesce("role_kind", F.lit("unknown")))
-
-
-def enrich_tools(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Broadcast left-join tool metadata on the *parsed* tool; default fills."""
-    lookup = tools_df(spark)
-    out = df.join(
-        F.broadcast(lookup),
-        on=df["parsed_tool"] == lookup["tool"],
-        how="left",
-    ).drop(lookup["tool"])
-    return out.withColumn(
-        "tool_family",
-        F.when(F.col("parsed_tool").isNull(), F.lit("none")).otherwise(
-            F.coalesce("tool_family", F.lit("unknown"))
-        ),
+    entries = ", ".join(
+        f"{lit(row[0])}, named_struct("
+        + ", ".join(f"{lit(c)}, {lit(v)}" for c, v in zip(columns[1:], row[1:]))
+        + ")"
+        for row in rows
     )
+    return [f"map({entries})[{key}].{c}" for c in columns[1:]]
 
 
 def enrich(parsed: DataFrame, spark: SparkSession) -> DataFrame:
-    return enrich_tools(enrich_roles(parsed, spark), spark)
+    """One projection, no join. Column order: ``role``, the other parsed
+    columns, then the role and tool attributes."""
+    role_kind, *role_rest = _lookup("role", ROLES, ROLES_COLUMNS)
+    tool_family, *tool_rest = _lookup("parsed_tool", TOOLS, TOOLS_COLUMNS)
+    attrs = [
+        f"coalesce({role_kind}, 'unknown')", *role_rest,
+        "CASE WHEN parsed_tool IS NULL THEN 'none' "
+        f"ELSE coalesce({tool_family}, 'unknown') END", *tool_rest,
+    ]
+    return parsed.select(
+        "role", *(c for c in parsed.columns if c != "role"),
+        *(F.expr(f"{a} AS {c}")
+          for a, c in zip(attrs, ROLES_COLUMNS[1:] + TOOLS_COLUMNS[1:])),
+    )
 
 
 def _values_sql(rows: list[tuple], columns: list[str], name: str) -> str:
-    def lit(v: object) -> str:
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, str):
-            return f"'{v}'"
-        return str(v)
-
-    values = ",\n    ".join("(" + ", ".join(lit(v) for v in row) + ")" for row in rows)
+    values = ",\n    ".join("(" + ", ".join(_sql(v) for v in row) + ")" for row in rows)
     cols = ", ".join(columns)
     return f"{name}({cols}) AS (VALUES\n    {values})"
 

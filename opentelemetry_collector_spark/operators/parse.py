@@ -16,7 +16,7 @@ patterns regex-in-SQL can't express lives in operators/grok.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.functions.values import attributes_json
@@ -32,12 +32,6 @@ TRACE_PATTERN = r"trace_id=([0-9a-f]{32})"
 SPAN_PATTERN = r"span_id=([0-9a-f]{16})"
 DUR_PATTERN = r"dur_ms=([0-9]+)"
 STATUS_PATTERN = r"status=(OK|ERROR)"
-
-
-def _extract(col: Column, pattern: str) -> Column:
-    # regexp_extract returns '' on no match in both Spark and DuckDB;
-    # normalize to NULL so absence is typed, not sentinel.
-    return F.nullif(F.regexp_extract(col, pattern, 1), F.lit(""))
 
 
 def parse_turns(transcripts: DataFrame) -> DataFrame:
@@ -64,6 +58,7 @@ def parse_turns(transcripts: DataFrame) -> DataFrame:
             "__status_raw": F.regexp_extract(F.col("text"), STATUS_PATTERN, 1),
         }
     )
+    # regexp_extract gives '' on no match in Spark and DuckDB: NULL it
     typed = raw.withColumns(
         {
             "severity_text": F.nullif(F.col("__sev_raw"), F.lit("")),

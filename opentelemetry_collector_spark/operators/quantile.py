@@ -29,9 +29,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from opentelemetry_collector_spark.operators.textstats import _tokens
+from opentelemetry_collector_spark.session import local_rows
 
 # p50 / p90 / p99 as integer milli-quantiles (the repo's integer-parity
 # convention: no float literals cross the engine/oracle boundary)
@@ -85,9 +87,8 @@ def doc_length_quantiles(
             )
         ).cast("long").alias("total"),
     )
-    qs = spark.createDataFrame(
-        [(q,) for q in QUANTILES_MILLI], "q_milli int"
-    )
+    qs = local_rows(spark, [(q,) for q in QUANTILES_MILLI],
+                    T.StructType().add("q_milli", "integer"))
     hit = (
         F.broadcast(qs)
         .crossJoin(cum)

@@ -42,6 +42,8 @@ from opentelemetry_collector_spark.plans.retry import (
     with_retry,
     with_timeout,
 )
+from opentelemetry_collector_spark.session import local_rows
+from opentelemetry_collector_spark.sources.incremental import list_data_files
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -125,22 +127,18 @@ class CheckpointedRunner:
 
         Raises if the ledger was written with a DIFFERENT n_buckets —
         resuming under a changed bucketing would silently mix two
-        incompatible partitionings. Only a genuinely-missing ledger path
-        means "fresh run"; any other read failure propagates (a transient
-        FS error must not erase resume state)."""
-        try:
-            ledger = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
-                self.config.ledger_path
-            )
-            rows = (
-                ledger.filter(F.col("status") == "committed")
-                .select("bucket", "n_buckets").distinct().collect()
-            )
-        except Exception as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return set()
-            raise
+        incompatible partitionings. Only a ledger path with no data file
+        (a FileSystem probe, as in processed_files) means "fresh run"; any
+        read failure propagates (it must not erase resume state)."""
+        if not list_data_files(self.spark, self.config.ledger_path):
+            return set()
+        ledger = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
+            self.config.ledger_path
+        )
+        rows = (
+            ledger.filter(F.col("status") == "committed")
+            .select("bucket", "n_buckets").collect()
+        )
         seen_nb = {r.n_buckets for r in rows}
         if seen_nb and seen_nb != {self.config.n_buckets}:
             raise ValueError(
@@ -151,7 +149,8 @@ class CheckpointedRunner:
         return {r.bucket for r in rows}
 
     def _commit(self, records: list[dict]) -> None:
-        df = self.spark.createDataFrame(
+        df = local_rows(
+            self.spark,
             [
                 (
                     r["run_id"], self.config.n_buckets, r["bucket"],
@@ -160,7 +159,7 @@ class CheckpointedRunner:
                 )
                 for r in records
             ],
-            schema=CHECKPOINT_SCHEMA[:-1],
+            CHECKPOINT_SCHEMA[:-1],
         ).withColumn("committed_at", F.current_timestamp())
         df.coalesce(1).write.mode("append").parquet(self.config.ledger_path)
 

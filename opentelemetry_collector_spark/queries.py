@@ -371,14 +371,6 @@ def q_metrics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _met.summary_quantiles(_parsed(spark, sf_dir))
 
 
-def q_metrics_summary_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-digest path (engine.approxQuantiles) — pytest-only surface, NOT in
-    the driver registry: the sketch is not bit-reproducible in DuckDB, so
-    closeness to the exact twin (q_metrics_summary) is gated by
-    tests/test_metrics_traces.py instead of a driver oracle slot."""
-    return _met.summary_quantiles(_parsed(spark, sf_dir), approx=True)
-
-
 def q_histogram_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _met.histogram_exemplars(_parsed(spark, sf_dir))
 

@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.types import _make_type_verifier
 
 # At 100 TB / 1000 executors these become cluster-level spark-submit confs;
 # the values here are the local[N] test-scale equivalents of the same knobs.
@@ -25,8 +28,8 @@ _SCALE_CONFS = {
     # Arrow for pandas UDF / mapInPandas boundaries (the grok parse fallback).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-    # Broadcast threshold: role/tool lookups are tiny; TPC-H dims at sf0.1 are
-    # < 10 MB. 64 MB keeps every dimension join a broadcast-hash-join.
+    # Broadcast threshold: TPC-H dims at sf0.1 and the as-of versions table
+    # are < 10 MB. 64 MB keeps every dimension join a broadcast-hash-join.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Batch-processor analog (factory.go:31 — 8192-record flush): cap rows per
     # output file so sink files stay bounded like collector export batches.
@@ -63,7 +66,20 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+def local_rows(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """A small constant frame with exactly ``schema``. The rows become
+    Catalyst literals that ``inline`` expands over a one-row ``Range``, so
+    the plan stays in the JVM, where ``createDataFrame(list)`` scans a
+    Python RDD (``Scan ExistingRDD``) in Python workers. Each row is first
+    checked with ``createDataFrame``'s verifier: a wrong type or a None in
+    a non-nullable field raises before any job runs."""
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(tuple(row))
+    # one cast names the fields, widens each literal to its field's type,
+    # pins nullability to the schema's and types an empty array
+    table = F.array(*(F.struct(*map(F.lit, row)) for row in rows)).cast(
+        T.ArrayType(schema, containsNull=False))
+    return spark.range(1, numPartitions=1).select(F.inline(table))

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from opentelemetry_collector_spark.session import local_rows
+
 LEDGER_SCHEMA = T.StructType(
     [
         T.StructField("file_path", T.StringType(), False),
@@ -96,10 +98,7 @@ class IncrementalSource:
         if not list_data_files(self.spark, self.ledger_path):
             return set()
         ledger = self.spark.read.schema(LEDGER_SCHEMA).parquet(self.ledger_path)
-        return {
-            r.file_path
-            for r in ledger.select("file_path").distinct().collect()
-        }
+        return {r.file_path for r in ledger.select("file_path").collect()}
 
     def new_files(self) -> dict[str, int]:
         files = list_data_files(self.spark, self.data_path)
@@ -114,13 +113,14 @@ class IncrementalSource:
         errors: dict[str, str] | None = None,
     ) -> None:
         errors = errors or {}
-        df = self.spark.createDataFrame(
+        df = local_rows(
+            self.spark,
             [
                 (p, sz, run_id, None if p in errors else n_rows,
                  errors.get(p))
                 for p, sz in sorted(files.items())
             ],
-            schema=LEDGER_SCHEMA[:-1],
+            LEDGER_SCHEMA[:-1],
         ).withColumn("committed_at", F.current_timestamp())
         df.coalesce(1).write.mode("append").parquet(self.ledger_path)
 

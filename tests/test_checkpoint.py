@@ -94,6 +94,22 @@ def test_resume_noop_when_all_committed(spark, routed, tmp_path):
     assert sorted(totals["skipped_buckets"]) == [0, 1, 2, 3]
 
 
+def test_fresh_base_has_no_committed_buckets(spark, tmp_path):
+    cfg = CheckpointConfig(base_path=str(tmp_path / "fresh"), n_buckets=4)
+    assert CheckpointedRunner(spark, cfg).committed_buckets() == set()
+
+
+def test_unreadable_ledger_raises_instead_of_reading_as_fresh(spark, tmp_path):
+    """A ledger dir that holds a data file is read, never taken for a fresh
+    run: a file that is not parquet fails the read."""
+    cfg = CheckpointConfig(base_path=str(tmp_path / "out"), n_buckets=4)
+    ledger = tmp_path / "out" / "_checkpoints"
+    ledger.mkdir(parents=True)
+    (ledger / "part-00000.parquet").write_text("not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        CheckpointedRunner(spark, cfg).committed_buckets()
+
+
 # --- retry sender semantics (queued_retry_test.go analog) -------------------
 
 

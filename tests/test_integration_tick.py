@@ -105,3 +105,40 @@ def test_crashed_tick_resumes_at_both_layers(spark, tmp_path):
     )
     # nothing further pending
     assert src.pending() is None
+
+
+def test_tick_job_budget(spark, tmp_path):
+    """A steady-state tick (the file ledger already holds a tick) over
+    three new files, with a checkpointed parse -> enrich -> route write,
+    runs at most 9 Spark jobs on its own thread (the footer probes run on a
+    pool): enrich's lookups and the ledger rows are literals, so they start
+    no job of their own."""
+    data = str(tmp_path / "landing")
+    src = IncrementalSource(spark, data, str(tmp_path / "file_ledger"))
+    base = events_to_transcripts(spark, SF_SMOKE)
+
+    def land(k):
+        base.filter(F.crc32("conv_id") % 4 == k).coalesce(1).write.mode(
+            "append").parquet(data)
+
+    land(0)
+    src.process_new(lambda df: None)
+    for k in (1, 2, 3):
+        land(k)
+
+    def action(df):
+        CheckpointedRunner(
+            spark,
+            CheckpointConfig(base_path=str(tmp_path / "out"), n_buckets=2,
+                             buckets_per_wave=2),
+        ).run(route(enrich(parse_turns(df), spark)))
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "tick-budget")
+    try:
+        out = src.process_new(action)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out["n_files"] == 3
+    jobs = sc.statusTracker().getJobIdsForGroup("tick-budget")
+    assert 0 < len(jobs) <= 9, f"{len(jobs)} jobs in one tick"

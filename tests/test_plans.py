@@ -18,11 +18,13 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_enrich_uses_broadcast_hash_join_only(spark):
+def test_enrich_plan_has_no_join_and_no_python_scan(spark):
+    """enrich is one projection over literal maps: no join of any kind,
+    and no Scan ExistingRDD (a createDataFrame lookup side, whose tasks
+    run in Python workers)."""
     plan = _plan(PIPELINE_QUERIES["enrich"](spark, SF_SMOKE))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan, "lookup join must not shuffle the big side"
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Join" not in plan
+    assert "ExistingRDD" not in plan
 
 
 def _shuffles(plan: str) -> int:
@@ -31,10 +33,10 @@ def _shuffles(plan: str) -> int:
 
 
 def test_narrow_ops_add_no_shuffle(spark):
-    """parse/route/transform are projections: exactly one shuffle total —
-    the transcripts-derivation window (test-fixture artifact), none from
-    the operator itself."""
-    for name in ["parse_turns", "route", "transform_pipeline"]:
+    """parse/enrich/route/transform are projections: exactly one shuffle
+    total — the transcripts-derivation window (test-fixture artifact), none
+    from the operator itself."""
+    for name in ["parse_turns", "enrich", "route", "transform_pipeline"]:
         plan = _plan(PIPELINE_QUERIES[name](spark, SF_SMOKE))
         assert _shuffles(plan) <= 1, f"{name} added a shuffle"
 
