@@ -29,6 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from opentelemetry_collector_spark.ledger import Ledger
 
 BLOOM_M = 2048  # bits
 BLOOM_K = 5  # hash functions
@@ -190,16 +193,21 @@ SELECT cast({BLOOM_M} AS int) AS m,
 
 # --- cross-tick incremental Bloom (the streaming membership twin) ------------
 
-BLOOM_LEDGER_SCHEMA = "pos long, tick_id string"
+BLOOM_LEDGER_SCHEMA = T.StructType(
+    [
+        T.StructField("pos", T.LongType()),
+        T.StructField("tick_id", T.StringType()),
+    ]
+)
 
 
 class IncrementalBloom:
     """Cross-tick Bloom membership for batch-arriving streams: each tick
-    commits its distinct bit positions to a tick_id-partitioned ledger
-    (dynamic overwrite — the persistent-queue crash protocol,
-    persistent_storage.go:268-348 analog, shared with IncrementalDeduper
-    and IncrementalSketcher); the merged filter is the position-set UNION
-    over committed ticks.
+    commits its distinct bit positions to a tick_id-partitioned
+    ``ledger.Ledger`` (dynamic overwrite — the persistent-queue crash
+    protocol, persistent_storage.go:268-348 analog, shared with
+    IncrementalDeduper and IncrementalSketcher); the merged filter is the
+    position-set UNION over committed ticks.
 
     Set union is idempotent: crash-retried ticks AND re-delivered data
     leave the filter unchanged. Ledger state is <= BLOOM_M rows per tick
@@ -209,8 +217,7 @@ class IncrementalBloom:
     """
 
     def __init__(self, spark: SparkSession, ledger_path: str):
-        self.spark = spark
-        self.ledger_path = ledger_path
+        self.ledger = Ledger(spark, ledger_path, BLOOM_LEDGER_SCHEMA, "tick_id")
 
     def sketch(self, fps: DataFrame) -> DataFrame:
         """This tick's distinct positions. Pure — safe to recompute."""
@@ -218,30 +225,12 @@ class IncrementalBloom:
 
     def commit(self, bits: DataFrame, tick_id: str) -> None:
         """Record the tick's positions idempotently."""
-        (
-            bits.withColumn("tick_id", F.lit(tick_id))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
-        )
+        self.ledger.commit_tick(bits, tick_id)
 
     def merged_bits(self) -> DataFrame:
         """Position-set union over all committed ticks (empty ledger =
         empty filter: everything reads definitely-new)."""
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
-
-        if not list_data_files(self.spark, self.ledger_path):
-            return self.spark.createDataFrame([], "pos long")
-        return (
-            self.spark.read.schema(BLOOM_LEDGER_SCHEMA)
-            .parquet(self.ledger_path)
-            .select("pos")
-            .distinct()
-        )
+        return self.ledger.read().select("pos").distinct()
 
     def probe(self, fps: DataFrame) -> DataFrame:
         """(fp, bloom_hit) against the merged filter — a miss is proof

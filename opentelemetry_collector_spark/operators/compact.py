@@ -1,12 +1,19 @@
-"""Sink compaction — small-file management for the fan-out sinks.
+"""Sink and ledger compaction — small-file management for the fan-out
+sinks and the incremental ledgers.
 
 Per-sink partitioned writes at high fan-out produce many small files
 (every task x every sink partition it touches); at 10^12 rows the sink
-tables degrade scans unless compacted. Iceberg deployments run
-``rewrite_data_files`` (use that for object-store tables — this module is
-the parquet-dir equivalent for driver-local warehouses and refuses URI
-paths); the contract is the same: rows and partition values preserved
-exactly, small files merged up to the record cap.
+tables degrade scans unless compacted. Ledgers grow the same way, one
+small file per commit (``ledger.Ledger.compact`` calls this with the
+ledger's own layout). The reference's persistent queue has the same
+maintenance need on its storage backend (it bounds itself by deleting
+delivered items, persistent_storage.go:268-296); the batch ledgers are
+append-only for auditability, so they compact instead of deleting.
+Iceberg deployments run ``rewrite_data_files`` (use that for object-store
+tables — this module is the parquet-dir equivalent for driver-local
+warehouses and refuses URI paths); the contract is the same: rows and
+partition values preserved exactly, small files merged up to the record
+cap.
 
 Crash-safety protocol (rewrite-then-swap with recovery preamble):
   1. stale ``.compacting`` / orphaned ``.pre-compact`` dirs from an earlier
@@ -26,6 +33,7 @@ import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _heal(base_path: str, staging: str, backup: str) -> None:
@@ -47,14 +55,22 @@ def compact_sinks(
     partition_cols: list[str] | None = None,
     max_records_per_file: int = 8192,
     tasks_per_partition: int = 1,
+    schema: T.StructType | None = None,
 ) -> dict:
-    """Rewrite a partitioned sink dir with bin-packed files.
+    """Rewrite a partitioned sink dir or a ledger dir with bin-packed files.
 
     partition_cols must match the dir's layout (default ["sink"]; the
-    checkpoint runner's sinks use ["part_bucket", "sink"]).
-    tasks_per_partition > 1 salts the rewrite shuffle so one hot sink
-    doesn't serialize onto a single task (cost: up to that many extra
-    files per partition).
+    checkpoint runner's sinks use ["part_bucket", "sink"], a tick ledger
+    [tick_id]). An empty list is a FLAT dir — the append-only ledgers,
+    whose one-file-per-commit appends otherwise cost one parquet footer
+    per historical tick on every bookmark scan — rewritten to
+    ceil(rows / max_records_per_file) files without a shuffle.
+    tasks_per_partition > 1 salts a partitioned rewrite's shuffle so one
+    hot sink doesn't serialize onto a single task (cost: up to that many
+    extra files per partition). ``schema`` pins the read schema, so a
+    ledger written before a nullable-column addition compacts to the
+    CURRENT schema. A missing dir is a no-op (a fresh deployment's
+    maintenance cron must not fail before the first commit).
 
     Returns {files_before, files_after, rows} for observability."""
     if "://" in base_path:
@@ -62,38 +78,50 @@ def compact_sinks(
             "compact_sinks operates on driver-local paths; for object-store "
             "tables use Iceberg rewrite_data_files"
         )
-    partition_cols = partition_cols or ["sink"]
+    if partition_cols is None:
+        partition_cols = ["sink"]
+    if tasks_per_partition > 1 and not partition_cols:
+        raise ValueError(
+            "tasks_per_partition > 1 salts a partitioned rewrite; a flat "
+            "dir has no partition to spread"
+        )
     staging = base_path.rstrip("/") + ".compacting"
     backup = base_path.rstrip("/") + ".pre-compact"
     _heal(base_path, staging, backup)
+    if not os.path.exists(base_path):
+        return {"rows": 0, "files_before": 0, "files_after": 0}
 
-    df = spark.read.parquet(base_path)
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    df = reader.parquet(base_path)
     missing = [c for c in partition_cols if c not in df.columns]
     if missing:
         raise ValueError(f"partition_cols not in table: {missing}")
     rows = df.count()
     files_before = len(df.inputFiles())
 
-    shuffle_keys = [F.col(c) for c in partition_cols]
-    if tasks_per_partition > 1:
-        data_cols = [c for c in df.columns if c not in partition_cols]
-        if not data_cols:
-            raise ValueError(
-                "tasks_per_partition > 1 needs at least one non-partition "
-                "column to salt on"
+    if partition_cols:
+        shuffle_keys = [F.col(c) for c in partition_cols]
+        if tasks_per_partition > 1:
+            data_cols = [c for c in df.columns if c not in partition_cols]
+            if not data_cols:
+                raise ValueError(
+                    "tasks_per_partition > 1 needs at least one "
+                    "non-partition column to salt on"
+                )
+            shuffle_keys.append(
+                F.pmod(F.xxhash64(*data_cols), F.lit(tasks_per_partition))
             )
-        shuffle_keys.append(
-            F.pmod(F.xxhash64(*data_cols), F.lit(tasks_per_partition))
-        )
+        df = df.repartition(*shuffle_keys)
+    else:
+        df = df.coalesce(max(1, -(-rows // max_records_per_file)))
     try:
         (
-            df.repartition(*shuffle_keys)
-            .write.option("maxRecordsPerFile", max_records_per_file)
+            df.write.option("maxRecordsPerFile", max_records_per_file)
             .partitionBy(*partition_cols)
             .mode("overwrite")
             .parquet(staging)
         )
-        n_staged = spark.read.parquet(staging).count()
+        n_staged = reader.parquet(staging).count()
         if n_staged != rows:
             raise RuntimeError(
                 f"compaction would lose rows ({n_staged} != {rows}); "
@@ -108,84 +136,8 @@ def compact_sinks(
     os.rename(staging, base_path)
     shutil.rmtree(backup)
 
-    after = spark.read.parquet(base_path)
     return {
         "rows": rows,
         "files_before": files_before,
-        "files_after": len(after.inputFiles()),
-    }
-
-
-def compact_flat_dir(
-    spark: SparkSession,
-    base_path: str,
-    schema=None,
-    max_records_per_file: int = 1_000_000,
-) -> dict:
-    """Rewrite an append-accumulated FLAT parquet dir (no partition
-    columns) into O(rows / max_records_per_file) bin-packed files — the
-    ledger twin of compact_sinks.
-
-    Every ledger commit appends one tiny ``coalesce(1)`` file
-    (sources/incremental.py _commit, plans/checkpoint.py _commit), so a
-    long-lived deployment's bookmark scan opens one parquet footer per
-    historical tick — after 10^5 ticks the metadata read dwarfs the data.
-    The reference's persistent queue has the same maintenance need on its
-    storage backend (exporterhelper's queue bounds itself by deleting
-    delivered items, persistent_storage.go:268-296); the batch ledger is
-    append-only for auditability, so it compacts instead of deleting.
-    Rows are preserved exactly (no dedup — processed_files()/
-    committed_buckets() already read through duplicates), under the same
-    crash-safe rewrite-then-swap protocol as compact_sinks: any crash
-    point is healed by the next call's preamble.
-
-    ``schema`` (optional StructType) pins the read schema so a ledger
-    written before a nullable-column addition compacts to the CURRENT
-    schema rather than its historical one. Missing dir is a no-op (a
-    fresh deployment's maintenance cron must not fail before first
-    commit)."""
-    if "://" in base_path:
-        raise ValueError(
-            "compact_flat_dir operates on driver-local paths; for "
-            "object-store tables use Iceberg rewrite_data_files"
-        )
-    staging = base_path.rstrip("/") + ".compacting"
-    backup = base_path.rstrip("/") + ".pre-compact"
-    _heal(base_path, staging, backup)
-    if not os.path.exists(base_path):
-        return {"rows": 0, "files_before": 0, "files_after": 0}
-
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.parquet(base_path)
-    rows = df.count()
-    files_before = len(df.inputFiles())
-    n_out = max(1, -(-rows // max_records_per_file))
-    try:
-        (
-            df.coalesce(n_out)
-            .write.option("maxRecordsPerFile", max_records_per_file)
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        staged = (
-            spark.read.schema(schema) if schema is not None else spark.read
-        ).parquet(staging)
-        if staged.count() != rows:
-            raise RuntimeError(
-                f"compaction would lose rows ({staged.count()} != {rows}); "
-                "original left untouched"
-            )
-    except Exception:
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        raise
-
-    os.rename(base_path, backup)
-    os.rename(staging, base_path)
-    shutil.rmtree(backup)
-
-    return {
-        "rows": rows,
-        "files_before": files_before,
-        "files_after": len(spark.read.parquet(base_path).inputFiles()),
+        "files_after": len(reader.parquet(base_path).inputFiles()),
     }

@@ -15,14 +15,19 @@ persistent_storage.go:268-348's delete-after-OnProcessingFinished ordering).
 Protocol per tick (caller typically inside ``IncrementalSource.process_new``
 with the tick's ``PendingTick.tick_id``)::
 
-    fresh = deduper.dedup(new_docs)            # pure, repeatable
+    fresh = deduper.dedup(new_docs, tick_id)   # pure, repeatable
     ... write `fresh` to the accepted corpus (idempotent sink) ...
     deduper.commit(fresh, tick_id)             # fp ledger, tick-partitioned
 
-Crash anywhere before ``commit`` -> the re-run sees the SAME ledger state,
-recomputes the SAME ``fresh`` set, and the idempotent sink + tick-partition
-overwrite make the retry exactly-once. Commits are tick-partition dynamic
-overwrites, so a double-commit of one tick cannot duplicate fingerprints.
+``dedup`` reads the ledger WITHOUT the ``tick_id`` partition, so a retry
+sees the state the tick first saw at every crash point: before ``commit``
+(the ledger has not moved) and after it (the tick's own fingerprints are
+left out, instead of matching every doc and erasing the tick on the
+re-commit). The re-run recomputes the SAME ``fresh`` set, and the
+idempotent sink + tick-partition overwrite make it exactly-once. Every
+ledger here is a tick-partitioned ``ledger.Ledger``: commits are dynamic
+overwrites of the tick's partition, so a double-commit of one tick cannot
+duplicate fingerprints.
 
 Scale: the ledger holds one 32-char md5 + doc_id per accepted doc — bytes
 per doc, not the doc. The anti-join shuffles only (fp) pairs hashed on fp;
@@ -36,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from opentelemetry_collector_spark.ledger import Ledger
 
 FP_SCHEMA = T.StructType(
     [
@@ -51,6 +58,14 @@ def fingerprint(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.md5("text").alias("fp"))
 
 
+def _gauges(ledger: Ledger) -> dict:
+    """Ledger gauges (queue-gauge analog, queued_retry.go:209-223)."""
+    return ledger.read().agg(
+        F.count(F.lit(1)).alias("accepted_docs"),
+        F.countDistinct("tick_id").alias("ticks"),
+    ).first().asDict()
+
+
 class IncrementalDeduper:
     """Exact dedup of incoming batches against a persistent fp ledger."""
 
@@ -58,15 +73,9 @@ class IncrementalDeduper:
         self,
         spark: SparkSession,
         ledger_path: str,
-        ledger_write_partitions: int = 8,
         bloom_ledger_path: str | None = None,
     ):
-        self.spark = spark
-        self.ledger_path = ledger_path
-        # files per tick partition: bounds both the commit-path fan-in
-        # (never a single-task funnel on a large tick) and the ledger's
-        # file count (read amplification on every seen() scan)
-        self.ledger_write_partitions = ledger_write_partitions
+        self.ledger = Ledger(spark, ledger_path, FP_SCHEMA, "tick_id")
         # optional constant-state prefilter: with a Bloom ledger, a probe
         # MISS is proof of novelty (no false negatives), so only the
         # maybe-seen subset pays the anti-join against the growing fp
@@ -81,22 +90,11 @@ class IncrementalDeduper:
 
             self._bloom = IncrementalBloom(spark, bloom_ledger_path)
 
-    def seen(self) -> DataFrame:
-        """Accepted fingerprints (empty frame when no ledger yet —
-        explicit FS probe, same bootstrap rule as IncrementalSource)."""
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
-
-        if not list_data_files(self.spark, self.ledger_path):
-            return self.spark.createDataFrame([], FP_SCHEMA)
-        return self.spark.read.schema(FP_SCHEMA).parquet(self.ledger_path)
-
-    def dedup(self, docs: DataFrame) -> DataFrame:
+    def dedup(self, docs: DataFrame, tick_id: str) -> DataFrame:
         """The tick's accepted docs: in-batch dups collapsed to the min
-        doc_id per content hash, then everything already in the ledger
-        anti-joined away. Pure — safe to recompute on a crash retry (the
-        ledger only changes at ``commit``)."""
+        doc_id per content hash, then everything the ledger holds from
+        OTHER ticks anti-joined away. Pure — safe to recompute on a crash
+        retry, before or after ``commit``."""
         from pyspark.sql.window import Window
 
         fps = fingerprint(docs)
@@ -106,10 +104,9 @@ class IncrementalDeduper:
             .filter(F.col("doc_id") == F.col("canonical_id"))
             .drop("canonical_id")
         )
+        seen = self.ledger.read(except_tick=tick_id).select("fp")
         if self._bloom is None:
-            fresh = in_batch.join(
-                self.seen().select("fp"), "fp", "left_anti"
-            )
+            fresh = in_batch.join(seen, "fp", "left_anti")
         else:
             # bloom prefilter: misses are definitely new (no exact-ledger
             # work at all); only hits — true dups plus the bounded
@@ -120,9 +117,7 @@ class IncrementalDeduper:
                 .select("fp")
             )
             definitely_new = in_batch.join(hits, "fp", "left_anti")
-            checked = in_batch.join(hits, "fp").join(
-                self.seen().select("fp"), "fp", "left_anti"
-            )
+            checked = in_batch.join(hits, "fp").join(seen, "fp", "left_anti")
             fresh = definitely_new.unionByName(checked)
         return docs.join(fresh.select("doc_id"), "doc_id")
 
@@ -143,23 +138,11 @@ class IncrementalDeduper:
                 self._bloom.sketch(fingerprint(accepted).select("fp")),
                 tick_id,
             )
-        (
-            fingerprint(accepted)
-            .withColumn("tick_id", F.lit(tick_id))
-            .select("fp", "doc_id", "tick_id")
-            .coalesce(self.ledger_write_partitions)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
-        )
+        self.ledger.commit_tick(fingerprint(accepted), tick_id)
 
     def metrics(self) -> dict:
-        """Ledger gauges (queue-gauge analog, queued_retry.go:209-223)."""
-        led = self.seen()
-        n = led.count()
-        ticks = led.select("tick_id").distinct().count()
-        return {"accepted_docs": n, "ticks": ticks}
+        """{accepted_docs, ticks} of the fp ledger."""
+        return _gauges(self.ledger)
 
 
 # --- cross-tick curation (streaming twin of corpus_curation) ------------------
@@ -186,8 +169,9 @@ class IncrementalCurator:
     outputs equals the one-shot batch ``corpus_curation`` over the same
     corpus, because each fingerprint group's global-min passing doc_id
     lives in the earliest tick that contains the group. Same crash-safety
-    protocol as ``IncrementalDeduper`` (pure ``curate``, tick-partition
-    dynamic-overwrite ``commit``; persistent_storage.go:268-348 analog).
+    protocol as ``IncrementalDeduper`` (pure ``curate`` that reads the
+    ledger without its own tick, tick-partition dynamic-overwrite
+    ``commit``; persistent_storage.go:268-348 analog).
 
     Scale: the ledger holds one 32-char fingerprint + doc_id per accepted
     doc; the per-tick anti-join shuffles only (prefix_fp) pairs — md5-
@@ -200,28 +184,16 @@ class IncrementalCurator:
         spark: SparkSession,
         ledger_path: str,
         quality_min: float = 0.55,
-        ledger_write_partitions: int = 8,
     ):
         self.spark = spark
-        self.ledger_path = ledger_path
+        self.ledger = Ledger(spark, ledger_path, CURATION_FP_SCHEMA, "tick_id")
         self.quality_min = quality_min
-        self.ledger_write_partitions = ledger_write_partitions
 
-    def seen(self) -> DataFrame:
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
-
-        if not list_data_files(self.spark, self.ledger_path):
-            return self.spark.createDataFrame([], CURATION_FP_SCHEMA)
-        return self.spark.read.schema(CURATION_FP_SCHEMA).parquet(
-            self.ledger_path
-        )
-
-    def curate(self, docs: DataFrame) -> DataFrame:
+    def curate(self, docs: DataFrame, tick_id: str) -> DataFrame:
         """The tick's accepted docs with corpus_curation's exact columns
-        (doc_id, quality_score, prefix_fp, pred_class). Pure — safe to
-        recompute on a crash retry."""
+        (doc_id, quality_score, prefix_fp, pred_class), against the ledger
+        without ``tick_id``'s partition. Pure — safe to recompute on a
+        crash retry, before or after ``commit``."""
         from pyspark.sql.window import Window
 
         from opentelemetry_collector_spark.operators.textstats import (
@@ -251,21 +223,15 @@ class IncrementalCurator:
             .select("doc_id", "quality_score", "prefix_fp", "pred_class")
         )
         return in_tick.join(
-            self.seen().select("prefix_fp"), "prefix_fp", "left_anti"
+            self.ledger.read(except_tick=tick_id).select("prefix_fp"),
+            "prefix_fp",
+            "left_anti",
         ).select("doc_id", "quality_score", "prefix_fp", "pred_class")
 
     def commit(self, accepted: DataFrame, tick_id: str) -> None:
         """Record the tick's accepted fingerprints idempotently (dynamic
         tick-partition overwrite — a retried tick never duplicates)."""
-        (
-            accepted.select("prefix_fp", "doc_id")
-            .withColumn("tick_id", F.lit(tick_id))
-            .coalesce(self.ledger_write_partitions)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
-        )
+        self.ledger.commit_tick(accepted, tick_id)
 
 
 # --- cross-tick NEAR-dup (MinHash signature ledger) ---------------------------
@@ -305,9 +271,9 @@ class IncrementalMinHashDeduper:
     boundary).
 
     Crash contract is the module protocol: ``dedup`` is pure given the
-    ledger, ``commit`` is a dynamic tick-partition overwrite, so crash
-    retries recompute the same accepted set and double commits cannot
-    duplicate signatures.
+    ledger without its own tick, ``commit`` is a dynamic tick-partition
+    overwrite, so crash retries recompute the same accepted set and
+    double commits cannot duplicate signatures.
 
     Scale: ledger row = doc_id + {16} bigints (~150 B per accepted doc).
     The per-tick probe is an equality join on (band, key) — uniform md5
@@ -316,29 +282,14 @@ class IncrementalMinHashDeduper:
     co-locates without a ledger shuffle.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        ledger_path: str,
-        ledger_write_partitions: int = 8,
-    ):
+    def __init__(self, spark: SparkSession, ledger_path: str):
         self.spark = spark
-        self.ledger_path = ledger_path
-        self.ledger_write_partitions = ledger_write_partitions
+        self.ledger = Ledger(spark, ledger_path, SIG_SCHEMA, "tick_id")
 
-    def seen(self) -> DataFrame:
-        """Accepted (doc_id, sig) rows; empty frame before first commit."""
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
-
-        if not list_data_files(self.spark, self.ledger_path):
-            return self.spark.createDataFrame([], SIG_SCHEMA)
-        return self.spark.read.schema(SIG_SCHEMA).parquet(self.ledger_path)
-
-    def dedup(self, docs: DataFrame) -> DataFrame:
+    def dedup(self, docs: DataFrame, tick_id: str) -> DataFrame:
         """The tick's accepted docs (near-dup-free within the batch AND
-        vs everything already accepted). Pure — safe to recompute."""
+        vs everything other ticks accepted). Pure — safe to recompute,
+        before or after ``commit``."""
         from opentelemetry_collector_spark.operators.dedup import (
             JACCARD_THRESHOLD,
             MINHASH_K,
@@ -360,7 +311,7 @@ class IncrementalMinHashDeduper:
         # (2) cross-tick: band-collision candidates vs the ledger,
         # verified by the signature-estimated Jaccard
         new_sigs = minhash_signatures(self.spark, "", docs=canon)
-        led = self.seen()
+        led = self.ledger.read(except_tick=tick_id)
         cand = (
             bands_from_signatures(new_sigs)
             .join(
@@ -406,21 +357,10 @@ class IncrementalMinHashDeduper:
             minhash_signatures,
         )
 
-        (
-            minhash_signatures(self.spark, "", docs=accepted)
-            .withColumn("tick_id", F.lit(tick_id))
-            .select("doc_id", "sig", "tick_id")
-            .coalesce(self.ledger_write_partitions)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
+        self.ledger.commit_tick(
+            minhash_signatures(self.spark, "", docs=accepted), tick_id
         )
 
     def metrics(self) -> dict:
-        """Ledger gauges (queue-gauge analog)."""
-        led = self.seen()
-        return {
-            "accepted_docs": led.count(),
-            "ticks": led.select("tick_id").distinct().count(),
-        }
+        """{accepted_docs, ticks} of the signature ledger."""
+        return _gauges(self.ledger)

@@ -82,8 +82,11 @@ def write_sinks(
     default (processor/batchprocessor/factory.go:31) — the batch-split
     semantics (splitlogs.go:22-84) become a file-size cap.
 
-    extra_partition_cols are prepended to the layout (the checkpoint runner
-    passes ["part_bucket"] so waves can dynamic-overwrite their own buckets).
+    extra_partition_cols are prepended to the layout and make the write a
+    dynamic partition overwrite (a write option; the session setting is
+    left alone): the checkpoint runner passes ["part_bucket"] so a re-run
+    wave replaces only its own buckets, the stream writer ["epoch_id"] so a
+    replayed epoch replaces only its own output.
 
     compression selects the parquet codec (gzip/snappy/zstd/lz4/none) — the
     configcompression transport-tuning analog
@@ -96,6 +99,8 @@ def write_sinks(
     )
     if compression:
         writer = writer.option("compression", compression)
+    if extra_partition_cols:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     (
         writer.partitionBy(*(extra_partition_cols or []), "sink")
         .mode("overwrite")

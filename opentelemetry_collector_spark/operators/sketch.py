@@ -33,7 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from opentelemetry_collector_spark.ledger import Ledger
 from opentelemetry_collector_spark.operators.textstats import _tokens
 
 # Count-Min: D hash rows x W buckets; P(overestimate > 2N/W) < (1/2)^D-ish
@@ -233,7 +235,9 @@ def hll_registers(spark, df: DataFrame, key_col: str) -> DataFrame:
         .alias("rho"),
     )
     return (
-        spark.range(HLL_M)
+        # the register rows are one partition: a tick's sketch commits as
+        # one ledger file, and HLL_M rows need no parallelism
+        spark.range(HLL_M, numPartitions=1)
         .select(F.col("id").cast("long").alias("j"))
         .join(
             vals.groupBy("j").agg(F.max("rho").alias("mx")), "j", "left"
@@ -319,7 +323,13 @@ FROM agg, exact
 
 # --- cross-tick incremental HLL (the streaming sketch twin) ------------------
 
-HLL_LEDGER_SCHEMA = "j long, m_j int, tick_id string"
+HLL_LEDGER_SCHEMA = T.StructType(
+    [
+        T.StructField("j", T.LongType()),
+        T.StructField("m_j", T.IntegerType()),
+        T.StructField("tick_id", T.StringType()),
+    ]
+)
 
 
 class IncrementalSketcher:
@@ -338,15 +348,17 @@ class IncrementalSketcher:
     makes HLL the right cardinality aggregate for an at-least-once
     ingest pipeline.
 
-    Scale: ledger size = {HLL_M} rows per tick; the merge aggregate and
-    estimate are constant work regardless of stream size or tick count
-    (compact the ledger with operators/compact.py when tick count grows).
+    Scale: the ledger is tick-partitioned (``ledger.Ledger``), {HLL_M}
+    rows in one file per tick. The merge reads {HLL_M} rows per committed
+    tick whatever the stream size; the estimate is constant work.
+    ``sketcher.ledger.compact()`` merges files within each tick but keeps
+    one partition per tick, which the idempotent retry relies on.
     """
 
     def __init__(self, spark: SparkSession, ledger_path: str,
                  key_col: str = "event_id"):
         self.spark = spark
-        self.ledger_path = ledger_path
+        self.ledger = Ledger(spark, ledger_path, HLL_LEDGER_SCHEMA, "tick_id")
         self.key_col = key_col
 
     def sketch(self, df: DataFrame) -> DataFrame:
@@ -355,33 +367,18 @@ class IncrementalSketcher:
 
     def commit(self, regs: DataFrame, tick_id: str) -> None:
         """Record the tick's registers idempotently."""
-        (
-            regs.withColumn("tick_id", F.lit(tick_id))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("tick_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.ledger_path)
-        )
+        self.ledger.commit_tick(regs, tick_id)
 
     def merged_registers(self) -> DataFrame:
         """Per-register max over all committed ticks (all {HLL_M} rows;
         an empty ledger is the all-zero sketch)."""
-        from opentelemetry_collector_spark.sources.incremental import (
-            list_data_files,
-        )
-
         base = self.spark.range(HLL_M).select(
             F.col("id").cast("long").alias("j")
         )
-        if not list_data_files(self.spark, self.ledger_path):
-            return base.select("j", F.lit(0).cast("int").alias("m_j"))
-        led = self.spark.read.schema(HLL_LEDGER_SCHEMA).parquet(
-            self.ledger_path
+        mx = self.ledger.read().groupBy("j").agg(F.max("m_j").alias("mx"))
+        return base.join(mx, "j", "left").select(
+            "j", F.coalesce("mx", F.lit(0)).cast("int").alias("m_j")
         )
-        return base.join(
-            led.groupBy("j").agg(F.max("m_j").alias("mx")), "j", "left"
-        ).select("j", F.coalesce("mx", F.lit(0)).cast("int").alias("m_j"))
 
     def estimate(self) -> DataFrame:
         """One-row (m, zero_registers, s_scaled, est_distinct) over the

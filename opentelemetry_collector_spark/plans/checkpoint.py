@@ -14,7 +14,8 @@ for a deterministic batch DAG:
   filter prunes to 1/n of the files (partition pruning), so a wave never
   rescans the whole input.
 * Buckets are processed in **waves**; each wave's sink output is written with
-  dynamic partition overwrite (idempotent — a re-run of a half-written wave
+  dynamic partition overwrite (a per-write option of ``route.write_sinks``,
+  never a session setting; idempotent — a re-run of a half-written wave
   replaces it), and ONLY THEN is a checkpoint row committed per bucket
   (write-then-commit = delete-after-OnProcessingFinished ordering).
 * Resume = anti-join committed buckets: a new run processes only buckets with
@@ -24,7 +25,9 @@ for a deterministic batch DAG:
 Each checkpoint row carries lineage + metrics (run_id, bucket, input
 fingerprint, per-sink row counts, wall_ms) — the obsreport sent/failed
 counters (obsreport/obsreport_exporter.go:141-161) and queue-depth gauges
-(queued_retry.go:209-223) live in this table.
+(queued_retry.go:209-223) live in this table. The table is a flat
+``ledger.Ledger`` under ``{base}/_checkpoints``: one appended file per wave,
+merged between runs by ``runner.ledger.compact()``.
 """
 
 from __future__ import annotations
@@ -37,13 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from opentelemetry_collector_spark.ledger import Ledger
 from opentelemetry_collector_spark.plans.retry import (
     RetryConfig,
     with_retry,
     with_timeout,
 )
-from opentelemetry_collector_spark.session import local_rows
-from opentelemetry_collector_spark.sources.incremental import list_data_files
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -119,24 +121,19 @@ class CheckpointedRunner:
         self.spark = spark
         self.config = config
         self.retry = retry or RetryConfig()
-
-    # --- ledger -----------------------------------------------------------
+        self.ledger = Ledger(spark, config.ledger_path, CHECKPOINT_SCHEMA)
 
     def committed_buckets(self) -> set[int]:
-        """Committed bucket ids from the ledger.
+        """Committed bucket ids from the ledger (a fresh ledger answers
+        from the FileSystem probe, with no job).
 
         Raises if the ledger was written with a DIFFERENT n_buckets —
         resuming under a changed bucketing would silently mix two
-        incompatible partitionings. Only a ledger path with no data file
-        (a FileSystem probe, as in processed_files) means "fresh run"; any
-        read failure propagates (it must not erase resume state)."""
-        if not list_data_files(self.spark, self.config.ledger_path):
+        incompatible partitionings."""
+        if not self.ledger.exists():
             return set()
-        ledger = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
-            self.config.ledger_path
-        )
         rows = (
-            ledger.filter(F.col("status") == "committed")
+            self.ledger.read().filter(F.col("status") == "committed")
             .select("bucket", "n_buckets").collect()
         )
         seen_nb = {r.n_buckets for r in rows}
@@ -147,21 +144,6 @@ class CheckpointedRunner:
                 "under a different bucketing would corrupt the output"
             )
         return {r.bucket for r in rows}
-
-    def _commit(self, records: list[dict]) -> None:
-        df = local_rows(
-            self.spark,
-            [
-                (
-                    r["run_id"], self.config.n_buckets, r["bucket"],
-                    r["input_fingerprint"], r["n_input"],
-                    r["n_routed_ok"], r["n_dead_letter"], r["wall_ms"], "committed",
-                )
-                for r in records
-            ],
-            CHECKPOINT_SCHEMA[:-1],
-        ).withColumn("committed_at", F.current_timestamp())
-        df.coalesce(1).write.mode("append").parquet(self.config.ledger_path)
 
     # --- run --------------------------------------------------------------
 
@@ -189,15 +171,6 @@ class CheckpointedRunner:
 
         from opentelemetry_collector_spark.operators.route import write_sinks
 
-        # dynamic overwrite: a re-run of a crashed wave replaces only its own
-        # bucket partitions (idempotence = exactly-once output). Session
-        # config is restored afterwards — other writers in this session may
-        # rely on static overwrite truncating stale partitions.
-        prev_mode = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
         # bucket_expr overrides the work-bucket derivation (e.g. Iceberg's
         # system.bucket so wave filters prune the storage partitions)
         bucketed = routed.withColumn(
@@ -208,81 +181,73 @@ class CheckpointedRunner:
         totals = {"run_id": run_id, "skipped_buckets": sorted(done),
                   "processed_buckets": [], "n_routed_ok": 0, "n_dead_letter": 0}
 
-        try:
-            for w_idx, wave in enumerate(waves):
-                t0 = time.perf_counter()
-                # persist the wave: the sink write and the lineage stats must
-                # consume ONE materialization (a re-scan could see an input
-                # that changed between the two actions, making the committed
-                # fingerprint describe data that was never written), and it
-                # halves the upstream scans per wave
-                wave_df = bucketed.filter(
-                    F.col("part_bucket").isin(wave)
-                ).persist()
+        for w_idx, wave in enumerate(waves):
+            t0 = time.perf_counter()
+            # persist the wave: the sink write and the lineage stats must
+            # consume ONE materialization (a re-scan could see an input
+            # that changed between the two actions, making the committed
+            # fingerprint describe data that was never written), and it
+            # halves the upstream scans per wave
+            wave_df = bucketed.filter(
+                F.col("part_bucket").isin(wave)
+            ).persist()
 
-                with_retry(
-                    lambda df=wave_df: with_timeout(
-                        lambda: write_sinks(
-                            df, cfg.sinks_path, cfg.max_records_per_file,
-                            extra_partition_cols=["part_bucket"],
-                        ),
-                        cfg.attempt_timeout_s,
-                        spark=self.spark,
+            with_retry(
+                lambda df=wave_df: with_timeout(
+                    lambda: write_sinks(
+                        df, cfg.sinks_path, cfg.max_records_per_file,
+                        extra_partition_cols=["part_bucket"],
                     ),
-                    self.retry,
-                )
-
-                stats = (
-                    wave_df.groupBy("part_bucket")
-                    .agg(
-                        # order-independent 64-bit lineage fingerprint;
-                        # bit_xor cannot overflow at any row count (a sum of
-                        # hashes overflows int64 around 1.8e10 rows, which
-                        # ANSI mode turns into a post-write failure)
-                        F.expr("bit_xor(xxhash64(conv_id, turn_idx))").alias("fp"),
-                        F.count(F.lit(1)).alias("n_input"),
-                        F.count(F.when(F.col("error_reason").isNull(), 1)).alias("n_ok"),
-                        F.count(F.when(F.col("error_reason").isNotNull(), 1)).alias("n_dl"),
-                    )
-                    .collect()
-                )
-                wave_df.unpersist()
-                by_bucket = {r.part_bucket: r for r in stats}
-                wall_ms = int((time.perf_counter() - t0) * 1000)
-                # attribute wave wall time to buckets by row share (buckets
-                # run concurrently in one job; an even split overstates the
-                # small buckets' throughput)
-                wave_rows = max(sum(r.n_input for r in stats), 1)
-                self._commit(
-                    [
-                        {
-                            "run_id": run_id,
-                            "bucket": b,
-                            "input_fingerprint": int(by_bucket[b].fp) if b in by_bucket else None,
-                            "n_input": by_bucket[b].n_input if b in by_bucket else 0,
-                            "n_routed_ok": by_bucket[b].n_ok if b in by_bucket else 0,
-                            "n_dead_letter": by_bucket[b].n_dl if b in by_bucket else 0,
-                            "wall_ms": max(
-                                1,
-                                wall_ms * (by_bucket[b].n_input if b in by_bucket else 0)
-                                // wave_rows,
-                            ),
-                        }
-                        for b in wave
-                    ]
-                )
-                totals["processed_buckets"].extend(wave)
-                totals["n_routed_ok"] += sum(r.n_ok for r in stats)
-                totals["n_dead_letter"] += sum(r.n_dl for r in stats)
-
-                if fail_after_waves is not None and w_idx + 1 >= fail_after_waves:
-                    raise RuntimeError(
-                        f"injected crash after wave {w_idx + 1} (test hook)"
-                    )
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
+                    cfg.attempt_timeout_s,
+                    spark=self.spark,
+                ),
+                self.retry,
             )
+
+            stats = (
+                wave_df.groupBy("part_bucket")
+                .agg(
+                    # order-independent 64-bit lineage fingerprint;
+                    # bit_xor cannot overflow at any row count (a sum of
+                    # hashes overflows int64 around 1.8e10 rows, which
+                    # ANSI mode turns into a post-write failure)
+                    F.expr("bit_xor(xxhash64(conv_id, turn_idx))").alias("fp"),
+                    F.count(F.lit(1)).alias("n_input"),
+                    F.count(F.when(F.col("error_reason").isNull(), 1)).alias("n_ok"),
+                    F.count(F.when(F.col("error_reason").isNotNull(), 1)).alias("n_dl"),
+                )
+                .collect()
+            )
+            wave_df.unpersist()
+            by_bucket = {r.part_bucket: r for r in stats}
+            wall_ms = int((time.perf_counter() - t0) * 1000)
+            # attribute wave wall time to buckets by row share (buckets
+            # run concurrently in one job; an even split overstates the
+            # small buckets' throughput)
+            wave_rows = max(sum(r.n_input for r in stats), 1)
+            self.ledger.append(
+                [
+                    (
+                        run_id, cfg.n_buckets, b,
+                        int(r.fp) if r else None,
+                        r.n_input if r else 0,
+                        r.n_ok if r else 0,
+                        r.n_dl if r else 0,
+                        max(1, wall_ms * (r.n_input if r else 0) // wave_rows),
+                        "committed",
+                    )
+                    for b in wave
+                    for r in [by_bucket.get(b)]
+                ]
+            )
+            totals["processed_buckets"].extend(wave)
+            totals["n_routed_ok"] += sum(r.n_ok for r in stats)
+            totals["n_dead_letter"] += sum(r.n_dl for r in stats)
+
+            if fail_after_waves is not None and w_idx + 1 >= fail_after_waves:
+                raise RuntimeError(
+                    f"injected crash after wave {w_idx + 1} (test hook)"
+                )
 
         return totals
 
@@ -290,30 +255,10 @@ class CheckpointedRunner:
         """The checkpoint ledger as a DataFrame (queue-depth / sent-counter
         gauges analog, queued_retry.go:209-223), with per-bucket throughput
         (the north-rule "checkpoints carrying lineage AND throughput")."""
-        ledger = self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
-            self.config.ledger_path
-        )
-        return ledger.withColumn(
+        return self.ledger.read().withColumn(
             "rows_per_sec",
             F.round(
                 F.col("n_input") / (F.greatest(F.col("wall_ms"), F.lit(1)) / 1000.0),
                 1,
             ),
-        )
-
-    def compact_ledger(self, max_records_per_file: int = 1_000_000) -> dict:
-        """Merge the per-wave ledger appends (one coalesce(1) file per
-        _commit) into a handful of files; committed_buckets()/metrics()
-        read through unchanged. Crash-safe and re-runnable (rewrite-then-
-        swap, operators/compact.py). Run between runs, never concurrently
-        with one — the swap renames the live dir."""
-        from opentelemetry_collector_spark.operators.compact import (
-            compact_flat_dir,
-        )
-
-        return compact_flat_dir(
-            self.spark,
-            self.config.ledger_path,
-            schema=CHECKPOINT_SCHEMA,
-            max_records_per_file=max_records_per_file,
         )

@@ -38,6 +38,11 @@ _SCALE_CONFS = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.ui.enabled": "false",
     "spark.sql.shuffle.partitions": "32",
+    # Overwrites truncate unless the write itself asks for dynamic partition
+    # overwrite (route.write_sinks, ledger.Ledger.commit_tick): pinned here
+    # so a cluster default of "dynamic" cannot turn a full-table overwrite
+    # into a partial one, and no run ever has to set or restore it.
+    "spark.sql.sources.partitionOverwriteMode": "static",
 }
 
 

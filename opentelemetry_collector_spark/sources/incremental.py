@@ -16,7 +16,8 @@ plans/checkpoint.py), which makes the tick exactly-once in the output.
 
 This is the parquet-directory stand-in for Iceberg incremental snapshot
 reads (read between snapshot IDs); the ledger is the "last snapshot"
-bookmark. Structured Streaming's file source does the same bookkeeping in
+bookmark — a flat ``ledger.Ledger``, one appended file per tick, merged
+between ticks by ``source.ledger.compact()``. Structured Streaming's file source does the same bookkeeping in
 its WAL — this source exists for batch/cron deployments where a long-lived
 streaming query isn't wanted.
 """
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from opentelemetry_collector_spark.session import local_rows
+from opentelemetry_collector_spark.ledger import Ledger, list_data_files
 
 LEDGER_SCHEMA = T.StructType(
     [
@@ -52,27 +53,6 @@ LEDGER_SCHEMA = T.StructType(
 )
 
 
-def list_data_files(spark: SparkSession, path: str) -> dict[str, int]:
-    """{absolute file path: size} via the Hadoop FileSystem API — a metadata
-    listing, no data read."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    if not fs.exists(hpath):
-        return {}
-    out: dict[str, int] = {}
-    it = fs.listFiles(hpath, True)  # recursive
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):  # _SUCCESS, hidden/temp files
-            continue
-        out[p] = st.getLen()
-    return out
-
-
 @dataclass(frozen=True)
 class PendingTick:
     """Immutable snapshot of one tick's input: id + {file: size}."""
@@ -87,42 +67,21 @@ class IncrementalSource:
     def __init__(self, spark: SparkSession, data_path: str, ledger_path: str):
         self.spark = spark
         self.data_path = data_path
-        self.ledger_path = ledger_path
+        self.ledger = Ledger(spark, ledger_path, LEDGER_SCHEMA)
 
     def processed_files(self) -> set[str]:
-        # explicit existence probe via the Hadoop FileSystem API (same
-        # channel list_data_files uses) — sniffing exception text was
-        # brittle across Spark versions/locales, and a missing ledger
-        # (fresh bootstrap) must be distinguishable from a transient FS
-        # error, which must NOT look like "nothing processed"
-        if not list_data_files(self.spark, self.ledger_path):
+        # a fresh ledger answers from the FileSystem probe, with no job
+        if not self.ledger.exists():
             return set()
-        ledger = self.spark.read.schema(LEDGER_SCHEMA).parquet(self.ledger_path)
-        return {r.file_path for r in ledger.select("file_path").collect()}
+        return {
+            r.file_path
+            for r in self.ledger.read().select("file_path").collect()
+        }
 
     def new_files(self) -> dict[str, int]:
         files = list_data_files(self.spark, self.data_path)
         done = self.processed_files()
         return {p: sz for p, sz in files.items() if p not in done}
-
-    def _commit(
-        self,
-        files: dict[str, int],
-        run_id: str,
-        n_rows: int | None,
-        errors: dict[str, str] | None = None,
-    ) -> None:
-        errors = errors or {}
-        df = local_rows(
-            self.spark,
-            [
-                (p, sz, run_id, None if p in errors else n_rows,
-                 errors.get(p))
-                for p, sz in sorted(files.items())
-            ],
-            LEDGER_SCHEMA[:-1],
-        ).withColumn("committed_at", F.current_timestamp())
-        df.coalesce(1).write.mode("append").parquet(self.ledger_path)
 
     def pending(self) -> "PendingTick | None":
         """Snapshot of the CURRENT pending tick: the new-file set plus a
@@ -215,8 +174,11 @@ class IncrementalSource:
             df = self.spark.read.parquet(*sorted(good))
             n_rows = df.count()
             action(df)
-        self._commit(
-            pending.files, run_id, n_rows if good else None, errors=bad
+        self.ledger.append(
+            [
+                (p, sz, run_id, None if p in bad else n_rows, bad.get(p))
+                for p, sz in sorted(pending.files.items())
+            ]
         )
         return {
             "run_id": run_id,
@@ -236,10 +198,7 @@ class IncrementalSource:
         the scrape unit, so files_committed vs files_failed plus the
         tick's row count). The checkpoint runner's metrics() is the
         queue-gauge twin of this scrape-counter surface."""
-        ledger = self.spark.read.schema(LEDGER_SCHEMA).parquet(
-            self.ledger_path
-        )
-        return ledger.groupBy("run_id").agg(
+        return self.ledger.read().groupBy("run_id").agg(
             F.count(F.when(F.col("error").isNull(), True)).alias(
                 "files_committed"
             ),
@@ -248,22 +207,4 @@ class IncrementalSource:
             # (NULL on dead-letter rows) — max recovers the tick total
             F.max("n_rows").alias("n_rows"),
             F.max("committed_at").alias("committed_at"),
-        )
-
-    def compact_ledger(self, max_records_per_file: int = 1_000_000) -> dict:
-        """Merge the per-tick ledger appends (one coalesce(1) file each)
-        into a handful of files — maintenance for long-lived deployments,
-        where the bookmark anti-join otherwise opens one parquet footer
-        per historical tick. Crash-safe and re-runnable (rewrite-then-swap,
-        operators/compact.py); call it from the same cron that ticks, any
-        time between ticks."""
-        from opentelemetry_collector_spark.operators.compact import (
-            compact_flat_dir,
-        )
-
-        return compact_flat_dir(
-            self.spark,
-            self.ledger_path,
-            schema=LEDGER_SCHEMA,
-            max_records_per_file=max_records_per_file,
         )

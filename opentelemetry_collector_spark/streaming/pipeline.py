@@ -71,18 +71,12 @@ def start_sink_writer(
     from opentelemetry_collector_spark.operators.route import write_sinks
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            write_sinks(
-                batch_df.withColumn("epoch_id", F.lit(epoch_id)),
-                base_path,
-                max_records_per_file=max_records_per_file,
-                extra_partition_cols=["epoch_id"],
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_sinks(
+            batch_df.withColumn("epoch_id", F.lit(epoch_id)),
+            base_path,
+            max_records_per_file=max_records_per_file,
+            extra_partition_cols=["epoch_id"],
+        )
 
     writer = (
         routed.writeStream.foreachBatch(write_epoch)

@@ -279,7 +279,7 @@ def test_retry_zero_max_elapsed_means_no_limit():
 
 
 def test_checkpoint_ledger_compaction_preserves_resume(spark, routed, tmp_path):
-    """compact_ledger on the checkpoint ledger: committed_buckets() and
+    """ledger.compact() on the checkpoint ledger: committed_buckets() and
     metrics() read through unchanged, and a resumed run is still a no-op."""
     cfg = CheckpointConfig(base_path=str(tmp_path / "out"), n_buckets=8,
                            buckets_per_wave=2)
@@ -288,7 +288,7 @@ def test_checkpoint_ledger_compaction_preserves_resume(spark, routed, tmp_path):
     runner = CheckpointedRunner(spark, cfg)
     committed = runner.committed_buckets()
     rows = runner.metrics().count()
-    stats = runner.compact_ledger()
+    stats = runner.ledger.compact()
     assert stats["files_before"] == 4  # one append per 2-bucket wave
     assert stats["files_after"] == 1
     assert runner.committed_buckets() == committed

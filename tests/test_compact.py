@@ -93,6 +93,12 @@ def test_compaction_wrong_partition_cols_refused(spark, routed, tmp_path):
         compact_sinks(spark, "s3://bucket/sinks")
 
 
+def test_flat_compaction_refuses_salting(spark, tmp_path):
+    with pytest.raises(ValueError, match="tasks_per_partition"):
+        compact_sinks(spark, str(tmp_path), partition_cols=[],
+                      tasks_per_partition=2)
+
+
 def test_crash_recovery_mid_swap(spark, routed, tmp_path):
     """Simulate every crash point of the swap; the next run must heal and
     complete with identical data."""

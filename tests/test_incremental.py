@@ -159,7 +159,7 @@ def test_partial_scrape_all_bad_commits_dead_letters_only(spark, dirs):
 
 
 def test_ledger_compaction_preserves_bookmark(spark, dirs):
-    """compact_ledger merges the one-file-per-tick appends without moving
+    """ledger.compact() merges the one-file-per-tick appends without moving
     the bookmark: processed_files() identical before/after, the next tick
     still sees only genuinely-new files, and row lineage is conserved."""
     data, ledger, _ = dirs
@@ -170,7 +170,7 @@ def test_ledger_compaction_preserves_bookmark(spark, dirs):
 
     before = src.processed_files()
     rows_before = spark.read.parquet(ledger).count()
-    stats = src.compact_ledger()
+    stats = src.ledger.compact()
     assert stats["files_before"] == 4
     assert stats["files_after"] == 1
     assert stats["rows"] == rows_before
@@ -182,14 +182,14 @@ def test_ledger_compaction_preserves_bookmark(spark, dirs):
     assert r["n_rows"] == 7
 
     # re-running compaction is a cheap no-op shape (already 2 files now)
-    stats2 = src.compact_ledger()
+    stats2 = src.ledger.compact()
     assert stats2["rows"] == rows_before + 1
     assert stats2["files_after"] == 1
 
 
 def test_ledger_compaction_heals_mid_swap_crash(spark, dirs):
     """A crash between the two swap renames (live gone, backup present) is
-    healed by the next compact_ledger call — the protocol's recovery
+    healed by the next ledger.compact() call — the protocol's recovery
     preamble restores the backup before rewriting."""
     import os
 
@@ -202,7 +202,7 @@ def test_ledger_compaction_heals_mid_swap_crash(spark, dirs):
 
     before = src.processed_files()
     os.rename(ledger, ledger + ".pre-compact")  # simulate mid-swap crash
-    stats = src.compact_ledger()
+    stats = src.ledger.compact()
     assert stats["files_after"] == 1
     assert src.processed_files() == before
 
@@ -210,7 +210,7 @@ def test_ledger_compaction_heals_mid_swap_crash(spark, dirs):
 def test_ledger_compaction_missing_dir_is_noop(spark, dirs):
     data, ledger, _ = dirs
     src = IncrementalSource(spark, data, ledger)
-    assert src.compact_ledger() == {
+    assert src.ledger.compact() == {
         "rows": 0, "files_before": 0, "files_after": 0,
     }
 

@@ -22,22 +22,22 @@ def deduper(spark, tmp_path):
 
 def test_in_batch_dups_collapse_to_min_doc_id(spark, deduper):
     out = deduper.dedup(
-        _docs(spark, [(1, "aa"), (2, "bb"), (3, "aa"), (4, "aa")])
+        _docs(spark, [(1, "aa"), (2, "bb"), (3, "aa"), (4, "aa")]), "t1"
     )
     assert {r.doc_id for r in out.collect()} == {1, 2}
 
 
 def test_cross_tick_dedup_and_conservation(spark, deduper):
     t1 = _docs(spark, [(1, "aa"), (2, "bb")])
-    a1 = deduper.dedup(t1)
+    a1 = deduper.dedup(t1, "t1")
     deduper.commit(a1, "t1")
     # tick 2 repeats "aa" (different doc_id) and adds "cc"
     t2 = _docs(spark, [(10, "aa"), (11, "cc"), (12, "cc")])
-    a2 = deduper.dedup(t2)
+    a2 = deduper.dedup(t2, "t2")
     assert {r.doc_id for r in a2.collect()} == {11}
     deduper.commit(a2, "t2")
     # accepted across ticks == distinct texts, first-seen wins, no fp dups
-    led = deduper.seen().collect()
+    led = deduper.ledger.read().collect()
     assert len({r.fp for r in led}) == len(led)
     assert sorted(r.doc_id for r in led) == [1, 2, 11]
     assert deduper.metrics() == {"accepted_docs": 3, "ticks": 2}
@@ -45,20 +45,20 @@ def test_cross_tick_dedup_and_conservation(spark, deduper):
 
 def test_crash_retry_is_deterministic(spark, deduper):
     t1 = _docs(spark, [(1, "aa"), (2, "bb")])
-    deduper.commit(deduper.dedup(t1), "t1")
+    deduper.commit(deduper.dedup(t1, "t1"), "t1")
     t2 = _docs(spark, [(10, "aa"), (11, "cc")])
     # "crash" after dedup, before commit: recompute gives the same set
-    first = {r.doc_id for r in deduper.dedup(t2).collect()}
-    retry = {r.doc_id for r in deduper.dedup(t2).collect()}
+    first = {r.doc_id for r in deduper.dedup(t2, "t2").collect()}
+    retry = {r.doc_id for r in deduper.dedup(t2, "t2").collect()}
     assert first == retry == {11}
 
 
 def test_double_commit_does_not_duplicate(spark, deduper):
     t1 = _docs(spark, [(1, "aa"), (2, "bb")])
-    a1 = deduper.dedup(t1)
+    a1 = deduper.dedup(t1, "t1")
     deduper.commit(a1, "t1")
     deduper.commit(a1, "t1")  # retried tick: same partition overwritten
-    led = deduper.seen().collect()
+    led = deduper.ledger.read().collect()
     assert len(led) == 2
     assert deduper.metrics() == {"accepted_docs": 2, "ticks": 1}
 
@@ -107,7 +107,7 @@ def test_tick_by_tick_curation_equals_batch(spark, tmp_path):
         assert pending is not None
 
         def action(df, _tick=pending.tick_id):
-            accepted = curator.curate(df)
+            accepted = curator.curate(df, _tick)
             accepted.write.mode("append").parquet(out_path)
             curator.commit(accepted, _tick)
 
@@ -134,10 +134,10 @@ def test_curation_retry_is_deterministic(spark, tmp_path):
 
     docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet").limit(100)
     curator = IncrementalCurator(spark, str(tmp_path / "fp_ledger"))
-    a1 = curator.curate(docs)
+    a1 = curator.curate(docs, "t1")
     curator.commit(a1, "t1")
-    first = {r.doc_id for r in curator.curate(docs).collect()}
-    retry = {r.doc_id for r in curator.curate(docs).collect()}
+    first = {r.doc_id for r in curator.curate(docs, "t2").collect()}
+    retry = {r.doc_id for r in curator.curate(docs, "t2").collect()}
     assert first == retry == set()  # everything already accepted in t1
 
 
@@ -178,7 +178,7 @@ def test_stateless_curation_stages_commute_with_ticks(spark, tmp_path):
     ticked = set()
     for lo, hi in [(0, 160), (160, 320), (320, 10**9)]:
         tick = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        accepted = curator.curate(stages(tick))
+        accepted = curator.curate(stages(tick), f"tick{lo}")
         ticked |= {(r.doc_id, r.prefix_fp) for r in accepted.collect()}
         curator.commit(accepted, f"tick{lo}")
     assert ticked == batch
@@ -350,8 +350,8 @@ def test_bloom_prefiltered_deduper_is_bit_identical_to_plain(spark, tmp_path):
     t1 = docs.filter(F.col("doc_id") % 2 == 1).unionByName(replay)
 
     for tick_id, batch in [("tick-0", t0), ("tick-1", t1)]:
-        a = plain.dedup(batch)
-        b = bloomy.dedup(batch)
+        a = plain.dedup(batch, tick_id)
+        b = bloomy.dedup(batch, tick_id)
         got_a = {r.doc_id for r in a.select("doc_id").collect()}
         got_b = {r.doc_id for r in b.select("doc_id").collect()}
         assert got_a == got_b, tick_id
@@ -361,11 +361,13 @@ def test_bloom_prefiltered_deduper_is_bit_identical_to_plain(spark, tmp_path):
     # every replayed duplicate was rejected by both
     assert not {
         r.doc_id
-        for r in bloomy.dedup(replay).select("doc_id").collect()
+        for r in bloomy.dedup(replay, "tick-2").select("doc_id").collect()
     }
     # crash retry: recomputing tick-1 against the committed ledgers is
     # a no-op-identical set (pure dedup + idempotent commits)
-    again = {r.doc_id for r in bloomy.dedup(t1).select("doc_id").collect()}
+    again = {
+        r.doc_id for r in bloomy.dedup(t1, "tick-1").select("doc_id").collect()
+    }
     assert not (again & {r.doc_id for r in replay.select("doc_id").collect()})
 
 
@@ -389,8 +391,8 @@ def test_bloom_ledger_is_superset_of_fp_ledger_after_commit(spark, tmp_path):
     )
     for tick in range(2):
         batch = docs.filter(F.col("doc_id") % 2 == tick)
-        d.commit(d.dedup(batch), f"tick-{tick}")
-    committed = d.seen().select("fp").distinct()
+        d.commit(d.dedup(batch, f"tick-{tick}"), f"tick-{tick}")
+    committed = d.ledger.read().select("fp").distinct()
     verdicts = d._bloom.probe(committed).collect()
     assert verdicts and all(r.bloom_hit for r in verdicts)
 
@@ -414,34 +416,34 @@ def mh_deduper(spark, tmp_path):
 
 def test_minhash_in_batch_near_dups_collapse_to_canonical(spark, mh_deduper):
     out = mh_deduper.dedup(
-        _docs(spark, [(1, _BASE), (2, _NEAR), (4, _NOVEL)])
+        _docs(spark, [(1, _BASE), (2, _NEAR), (4, _NOVEL)]), "t1"
     )
     assert {r.doc_id for r in out.collect()} == {1, 4}
 
 
 def test_minhash_cross_tick_near_dup_dropped_novel_kept(spark, mh_deduper):
-    a1 = mh_deduper.dedup(_docs(spark, [(1, _BASE), (4, _NOVEL)]))
+    a1 = mh_deduper.dedup(_docs(spark, [(1, _BASE), (4, _NOVEL)]), "t1")
     mh_deduper.commit(a1, "t1")
     # tick 2: a near-dup of the ACCEPTED base (different doc_id, one word
     # changed) must be caught by the signature ledger; a novel doc passes
-    a2 = mh_deduper.dedup(_docs(spark, [(10, _NEAR), (11, _FRESH)]))
+    a2 = mh_deduper.dedup(_docs(spark, [(10, _NEAR), (11, _FRESH)]), "t2")
     assert {r.doc_id for r in a2.collect()} == {11}
     mh_deduper.commit(a2, "t2")
     assert mh_deduper.metrics() == {"accepted_docs": 3, "ticks": 2}
 
 
 def test_minhash_crash_retry_and_double_commit_idempotent(spark, mh_deduper):
-    a1 = mh_deduper.dedup(_docs(spark, [(1, _BASE)]))
+    a1 = mh_deduper.dedup(_docs(spark, [(1, _BASE)]), "t1")
     mh_deduper.commit(a1, "t1")
     t2 = _docs(spark, [(10, _NEAR), (11, _FRESH)])
     # crash after dedup, before commit: recompute is identical
-    first = {r.doc_id for r in mh_deduper.dedup(t2).collect()}
-    retry = {r.doc_id for r in mh_deduper.dedup(t2).collect()}
+    first = {r.doc_id for r in mh_deduper.dedup(t2, "t2").collect()}
+    retry = {r.doc_id for r in mh_deduper.dedup(t2, "t2").collect()}
     assert first == retry == {11}
-    a2 = mh_deduper.dedup(t2)
+    a2 = mh_deduper.dedup(t2, "t2")
     mh_deduper.commit(a2, "t2")
     mh_deduper.commit(a2, "t2")  # retried tick: partition overwritten
-    led = mh_deduper.seen().collect()
+    led = mh_deduper.ledger.read().collect()
     assert sorted(r.doc_id for r in led) == [1, 11]
     # the ledger holds the compact sketch, never shingles/text
     from opentelemetry_collector_spark.operators.dedup import MINHASH_K
@@ -453,9 +455,9 @@ def test_minhash_ledger_holds_only_accepted_docs(spark, mh_deduper):
     # the in-batch-dropped near-dup never enters the ledger: dedup is
     # against the RETAINED corpus (first-accepted-wins), so dropped docs
     # cannot justify dropping future arrivals
-    a1 = mh_deduper.dedup(_docs(spark, [(1, _BASE), (2, _NEAR)]))
+    a1 = mh_deduper.dedup(_docs(spark, [(1, _BASE), (2, _NEAR)]), "t1")
     mh_deduper.commit(a1, "t1")
-    assert sorted(r.doc_id for r in mh_deduper.seen().collect()) == [1]
+    assert sorted(r.doc_id for r in mh_deduper.ledger.read().collect()) == [1]
 
 
 def test_minhash_ticks_match_batch_policy_without_chains(spark, mh_deduper):
@@ -467,9 +469,9 @@ def test_minhash_ticks_match_batch_policy_without_chains(spark, mh_deduper):
     )
 
     all_docs = [(1, _BASE), (4, _NOVEL), (10, _NEAR), (11, _FRESH)]
-    a1 = mh_deduper.dedup(_docs(spark, all_docs[:2]))
+    a1 = mh_deduper.dedup(_docs(spark, all_docs[:2]), "t1")
     mh_deduper.commit(a1, "t1")
-    a2 = mh_deduper.dedup(_docs(spark, all_docs[2:]))
+    a2 = mh_deduper.dedup(_docs(spark, all_docs[2:]), "t2")
     incremental = {r.doc_id for r in a1.collect()} | {
         r.doc_id for r in a2.collect()
     }
@@ -481,9 +483,9 @@ def test_minhash_ticks_match_batch_policy_without_chains(spark, mh_deduper):
 
 def test_minhash_dedup_plan_has_no_cartesian(spark, mh_deduper):
     mh_deduper.commit(
-        mh_deduper.dedup(_docs(spark, [(1, _BASE)])), "t1"
+        mh_deduper.dedup(_docs(spark, [(1, _BASE)]), "t1"), "t1"
     )
-    df = mh_deduper.dedup(_docs(spark, [(10, _NEAR), (11, _FRESH)]))
+    df = mh_deduper.dedup(_docs(spark, [(10, _NEAR), (11, _FRESH)]), "t2")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -524,7 +526,7 @@ def test_minhash_dedup_over_incremental_ticks_with_crash(spark, tmp_path):
         assert pending is not None
 
         def action(df, _tick=pending.tick_id, _k=k):
-            accepted = d.dedup(df)
+            accepted = d.dedup(df, _tick)
             # idempotent sink: tick-keyed overwrite (retry re-writes the
             # same path with the same recomputed rows)
             accepted.write.mode("overwrite").parquet(f"{out}/{_tick}")
@@ -551,7 +553,80 @@ def test_minhash_dedup_over_incremental_ticks_with_crash(spark, tmp_path):
             for r in spark.read.parquet(str(tick_dir)).collect()
         }
     assert accepted_ids == {1, 2, 11, 21}
-    led = d.seen().collect()
+    led = d.ledger.read().collect()
     assert sorted(r.doc_id for r in led) == [1, 2, 11, 21]
     assert len({r.tick_id for r in led}) == 3
     assert src.pending() is None  # everything committed at the file layer
+
+
+@pytest.mark.parametrize("owner", ["exact", "curator", "minhash"])
+def test_retry_after_commit_accepts_the_same_docs(spark, tmp_path, owner):
+    """A crash after ``commit`` (before the tick is recorded upstream)
+    retries the tick over a ledger that already holds it. The retry must
+    accept the same docs again — not match the tick's own ledger rows and
+    erase the tick with its re-commit."""
+    from pyspark.sql import functions as F
+
+    from opentelemetry_collector_spark.operators.incremental_dedup import (
+        IncrementalCurator,
+        IncrementalMinHashDeduper,
+    )
+    from tests.conftest import SF_CORRECT
+
+    path = str(tmp_path / "ledger")
+    if owner == "exact":
+        d, docs = IncrementalDeduper(spark, path), _docs(spark, [(1, "aa"), (2, "bb")])
+    elif owner == "minhash":
+        d = IncrementalMinHashDeduper(spark, path)
+        docs = _docs(spark, [(1, _BASE), (2, _NOVEL)])
+    else:
+        d = IncrementalCurator(spark, path)
+        docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet").filter(
+            F.col("doc_id") < 100
+        )
+    accept = d.curate if owner == "curator" else d.dedup
+
+    def accepted_ids():
+        return sorted(r.doc_id for r in accept(docs, "t1").collect())
+
+    first = accepted_ids()
+    assert first
+    d.commit(accept(docs, "t1"), "t1")
+    assert accepted_ids() == first
+    d.commit(accept(docs, "t1"), "t1")  # the retry's own re-commit
+    assert sorted(r.doc_id for r in d.ledger.read().collect()) == first
+
+
+def test_compacted_tick_ledgers_read_like_uncompacted(spark, tmp_path):
+    """Compaction keeps one partition per tick, so a tick committed after
+    it adds to the compacted ticks instead of hiding them: the HLL
+    estimate and the fp ledger gauges equal an uncompacted copy's."""
+    from pyspark.sql import functions as F
+
+    from opentelemetry_collector_spark.operators.sketch import (
+        IncrementalSketcher,
+    )
+
+    keys = spark.range(400).select(F.col("id").alias("event_id"))
+    docs = spark.range(400).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("doc "), (F.col("id") % 300).cast("string")).alias("text"),
+    )
+    sketchers = [IncrementalSketcher(spark, str(tmp_path / n)) for n in ("h", "hc")]
+    dedupers = [IncrementalDeduper(spark, str(tmp_path / n)) for n in ("f", "fc")]
+    for t in range(4):
+        tick = f"tick-{t}"
+        for sk in sketchers:
+            sk.commit(sk.sketch(keys.filter(F.col("event_id") % 4 == t)), tick)
+        batch = docs.filter(F.col("doc_id") % 4 == t)
+        for d in dedupers:
+            d.commit(d.dedup(batch, tick), tick)
+        if t == 2:
+            for owner in (sketchers[1], dedupers[1]):
+                assert owner.ledger.compact()["files_after"] == 3  # one a tick
+    plain, compacted = (sk.estimate().collect() for sk in sketchers)
+    assert compacted == plain
+    assert dedupers[1].metrics() == dedupers[0].metrics() == {
+        "accepted_docs": 300,
+        "ticks": 4,
+    }

@@ -338,3 +338,25 @@ def test_registry_oracles_name_unique_queries():
     assert not set(q.PIPELINE_QUERIES) & set(q.DOCS_QUERIES)
     merged = {**q.PIPELINE_QUERIES, **q.DOCS_QUERIES}
     assert set(q.PIPELINE_ORACLES) | set(q.DOCS_ORACLES) <= set(merged)
+
+
+def test_overwrite_mode_and_empty_frames_have_one_home():
+    """Dynamic partition overwrite is a per-write option of the ledger's
+    tick commits and of write_sinks; no module sets (or saves and
+    restores) the session setting, which the session pins to static.
+    Empty frames are ``session.local_rows`` literals, never a Python-list
+    scan."""
+    import pathlib
+
+    import opentelemetry_collector_spark as pkg
+    from opentelemetry_collector_spark.session import _SCALE_CONFS
+
+    root = pathlib.Path(pkg.__file__).parent
+    owners = {"ledger.py", "operators/route.py", "session.py"}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        text = path.read_text()
+        assert "createDataFrame([]" not in text, rel
+        if rel not in owners:
+            assert "partitionOverwriteMode" not in text, rel
+    assert _SCALE_CONFS["spark.sql.sources.partitionOverwriteMode"] == "static"
