@@ -26,7 +26,8 @@ operators/protobuf.py, same scale shape as the protobuf codec.
 from __future__ import annotations
 
 import json
-from typing import Any
+from functools import partial
+from typing import Any, Callable
 
 
 def any_value_to_otlp_json(v: Any) -> dict[str, Any]:
@@ -110,6 +111,68 @@ def _attrs_from_json(lst: list[dict[str, Any]]) -> dict[str, Any]:
     }
 
 
+# --- Export*ServiceRequest envelope (one nesting for all three signals) ----
+# {resourceX: [{resource: {attributes}, scopeX: [{scope: {name}, items}]}]}
+# with (resourceX, scopeX, items) = (resourceLogs, scopeLogs, logRecords),
+# (resourceSpans, scopeSpans, spans) or (resourceMetrics, scopeMetrics,
+# metrics) — the same layout as protowire's request envelope.
+
+
+def _request_to_json(
+    keys: tuple[str, str, str],
+    item_to_json: Callable[[dict[str, Any]], dict[str, Any]],
+    resource_attrs: dict[str, Any],
+    scope_name: str,
+    items: list[dict[str, Any]],
+) -> str:
+    """One request as canonical OTLP/JSON text (compact separators, proto
+    field order — deterministic bytes for a given request, so
+    encode(decode(s)) == s for requests this module wrote)."""
+    resource_key, scope_key, items_key = keys
+    scope: dict[str, Any] = {}
+    if scope_name:
+        scope["name"] = scope_name
+    doc = {
+        resource_key: [
+            {
+                "resource": {"attributes": _attrs_to_json(resource_attrs)},
+                scope_key: [
+                    {
+                        "scope": scope,
+                        items_key: [item_to_json(x) for x in items],
+                    }
+                ],
+            }
+        ]
+    }
+    # allow_nan=False enforces the item encoders' invariant: non-finite
+    # doubles were already mapped to their spec string encodings, so a
+    # bare NaN/Infinity token here would be a codec bug, not valid output.
+    return json.dumps(doc, separators=(",", ":"), allow_nan=False)
+
+
+def _request_from_json(
+    keys: tuple[str, str, str],
+    item_from_json: Callable[[dict[str, Any]], dict[str, Any]],
+    s: str,
+) -> list[tuple[dict[str, Any], str, list[dict[str, Any]]]]:
+    """OTLP/JSON text -> [(resource_attrs, scope_name, [item, ...])] — the
+    flatten shape of protowire's request decoders. Strict: malformed JSON
+    raises (the receiver rejects the request)."""
+    resource_key, scope_key, items_key = keys
+    doc = json.loads(s)
+    out: list[tuple[dict[str, Any], str, list[dict[str, Any]]]] = []
+    for rx in doc.get(resource_key, []):
+        res_attrs = _attrs_from_json(
+            rx.get("resource", {}).get("attributes", [])
+        )
+        for sx in rx.get(scope_key, []):
+            scope_name = sx.get("scope", {}).get("name", "")
+            items = [item_from_json(x) for x in sx.get(items_key, [])]
+            out.append((res_attrs, scope_name, items))
+    return out
+
+
 def log_record_to_otlp_json(rec: dict[str, Any]) -> dict[str, Any]:
     """protowire LogRecord dict -> OTLP/JSON object (defaults omitted)."""
     out: dict[str, Any] = {}
@@ -157,57 +220,14 @@ def log_record_from_otlp_json(d: dict[str, Any]) -> dict[str, Any]:
     }
 
 
-def logs_request_to_otlp_json(
-    resource_attrs: dict[str, Any],
-    scope_name: str,
-    records: list[dict[str, Any]],
-) -> str:
-    """One ExportLogsServiceRequest as canonical OTLP/JSON text (compact
-    separators, proto field order — deterministic bytes for a given
-    request, so encode(decode(s)) == s for requests this module wrote)."""
-    scope: dict[str, Any] = {}
-    if scope_name:
-        scope["name"] = scope_name
-    doc = {
-        "resourceLogs": [
-            {
-                "resource": {"attributes": _attrs_to_json(resource_attrs)},
-                "scopeLogs": [
-                    {
-                        "scope": scope,
-                        "logRecords": [
-                            log_record_to_otlp_json(r) for r in records
-                        ],
-                    }
-                ],
-            }
-        ]
-    }
-    # allow_nan=False enforces the invariant above: non-finite doubles were
-    # already mapped to their spec string encodings, so a bare NaN/Infinity
-    # token here would be a codec bug, not valid output.
-    return json.dumps(doc, separators=(",", ":"), allow_nan=False)
-
-
-def logs_request_from_otlp_json(
-    s: str,
-) -> list[tuple[dict[str, Any], str, list[dict[str, Any]]]]:
-    """OTLP/JSON text -> [(resource_attrs, scope_name, [record, ...])] —
-    the same flatten shape as protowire.decode_logs_request. Strict:
-    malformed JSON raises (receiver rejects the request)."""
-    doc = json.loads(s)
-    out: list[tuple[dict[str, Any], str, list[dict[str, Any]]]] = []
-    for rl in doc.get("resourceLogs", []):
-        res_attrs = _attrs_from_json(
-            rl.get("resource", {}).get("attributes", [])
-        )
-        for sl in rl.get("scopeLogs", []):
-            scope_name = sl.get("scope", {}).get("name", "")
-            records = [
-                log_record_from_otlp_json(r) for r in sl.get("logRecords", [])
-            ]
-            out.append((res_attrs, scope_name, records))
-    return out
+logs_request_to_otlp_json = partial(
+    _request_to_json, ("resourceLogs", "scopeLogs", "logRecords"),
+    log_record_to_otlp_json,
+)
+logs_request_from_otlp_json = partial(
+    _request_from_json, ("resourceLogs", "scopeLogs", "logRecords"),
+    log_record_from_otlp_json,
+)
 
 
 def logs_response_to_otlp_json(
@@ -350,49 +370,14 @@ def span_from_otlp_json(d: dict[str, Any]) -> dict[str, Any]:
     }
 
 
-def trace_request_to_otlp_json(
-    resource_attrs: dict[str, Any],
-    scope_name: str,
-    spans: list[dict[str, Any]],
-) -> str:
-    """One ExportTraceServiceRequest as canonical OTLP/JSON text
-    (resourceSpans -> scopeSpans -> spans nesting, compact separators)."""
-    scope: dict[str, Any] = {}
-    if scope_name:
-        scope["name"] = scope_name
-    doc = {
-        "resourceSpans": [
-            {
-                "resource": {"attributes": _attrs_to_json(resource_attrs)},
-                "scopeSpans": [
-                    {
-                        "scope": scope,
-                        "spans": [span_to_otlp_json(s) for s in spans],
-                    }
-                ],
-            }
-        ]
-    }
-    return json.dumps(doc, separators=(",", ":"), allow_nan=False)
-
-
-def trace_request_from_otlp_json(
-    s: str,
-) -> list[tuple[dict[str, Any], str, list[dict[str, Any]]]]:
-    """OTLP/JSON text -> [(resource_attrs, scope_name, [span, ...])] — the
-    protowire.decode_trace_request flatten shape. Strict on malformed
-    JSON (the receiver rejects the request)."""
-    doc = json.loads(s)
-    out: list[tuple[dict[str, Any], str, list[dict[str, Any]]]] = []
-    for rs in doc.get("resourceSpans", []):
-        res_attrs = _attrs_from_json(
-            rs.get("resource", {}).get("attributes", [])
-        )
-        for ss in rs.get("scopeSpans", []):
-            scope_name = ss.get("scope", {}).get("name", "")
-            spans = [span_from_otlp_json(x) for x in ss.get("spans", [])]
-            out.append((res_attrs, scope_name, spans))
-    return out
+trace_request_to_otlp_json = partial(
+    _request_to_json, ("resourceSpans", "scopeSpans", "spans"),
+    span_to_otlp_json,
+)
+trace_request_from_otlp_json = partial(
+    _request_from_json, ("resourceSpans", "scopeSpans", "spans"),
+    span_from_otlp_json,
+)
 
 
 # --- metrics signal (pmetricjson analog) ---------------------------------------
@@ -719,47 +704,11 @@ def metric_from_otlp_json(d: dict[str, Any]) -> dict[str, Any]:
     return m
 
 
-def metrics_request_to_otlp_json(
-    resource_attrs: dict[str, Any],
-    scope_name: str,
-    metrics: list[dict[str, Any]],
-) -> str:
-    """One ExportMetricsServiceRequest as canonical OTLP/JSON text
-    (resourceMetrics -> scopeMetrics -> metrics nesting)."""
-    scope: dict[str, Any] = {}
-    if scope_name:
-        scope["name"] = scope_name
-    doc = {
-        "resourceMetrics": [
-            {
-                "resource": {"attributes": _attrs_to_json(resource_attrs)},
-                "scopeMetrics": [
-                    {
-                        "scope": scope,
-                        "metrics": [metric_to_otlp_json(m) for m in metrics],
-                    }
-                ],
-            }
-        ]
-    }
-    return json.dumps(doc, separators=(",", ":"), allow_nan=False)
-
-
-def metrics_request_from_otlp_json(
-    s: str,
-) -> list[tuple[dict[str, Any], str, list[dict[str, Any]]]]:
-    """OTLP/JSON text -> [(resource_attrs, scope_name, [metric, ...])] —
-    the protowire.decode_metrics_request flatten shape."""
-    doc = json.loads(s)
-    out: list[tuple[dict[str, Any], str, list[dict[str, Any]]]] = []
-    for rm in doc.get("resourceMetrics", []):
-        res_attrs = _attrs_from_json(
-            rm.get("resource", {}).get("attributes", [])
-        )
-        for sm in rm.get("scopeMetrics", []):
-            scope_name = sm.get("scope", {}).get("name", "")
-            metrics = [
-                metric_from_otlp_json(x) for x in sm.get("metrics", [])
-            ]
-            out.append((res_attrs, scope_name, metrics))
-    return out
+metrics_request_to_otlp_json = partial(
+    _request_to_json, ("resourceMetrics", "scopeMetrics", "metrics"),
+    metric_to_otlp_json,
+)
+metrics_request_from_otlp_json = partial(
+    _request_from_json, ("resourceMetrics", "scopeMetrics", "metrics"),
+    metric_from_otlp_json,
+)

@@ -31,7 +31,8 @@ the reference's generated marshalers.
 from __future__ import annotations
 
 import struct
-from typing import Any, Iterator
+from functools import partial
+from typing import Any, Callable, Iterator
 
 # wire types (protobuf encoding spec)
 _VARINT = 0
@@ -294,6 +295,65 @@ def _attrs_block(field: int, attrs: dict[str, Any]) -> bytes:
     )
 
 
+# --- Export*ServiceRequest envelope (one layout for all three signals) ------
+# Export{Logs,Trace,Metrics}ServiceRequest:
+#             1 repeated Resource{Logs,Spans,Metrics}
+# Resource*:  1 Resource, 2 repeated Scope*, 3 schema_url
+# Resource:   1 repeated KeyValue, 2 dropped_attributes_count
+# Scope*:     1 InstrumentationScope, 2 repeated item (LogRecord, Span or
+#             Metric), 3 schema_url
+# InstrumentationScope: 1 name, 2 version, 3 repeated KeyValue
+
+
+def _encode_request(
+    encode_item: Callable[[dict[str, Any]], bytes],
+    resource_attrs: dict[str, Any],
+    scope_name: str,
+    items: list[dict[str, Any]],
+) -> bytes:
+    """One request: one Resource{resource_attrs} -> one Scope{scope_name}
+    -> items, each written by ``encode_item``."""
+    resource = _attrs_block(1, resource_attrs)
+    scope = _str_field(1, scope_name) if scope_name else b""
+    scoped = _len_field(1, scope) + b"".join(
+        _len_field(2, encode_item(x)) for x in items
+    )
+    return _len_field(1, _len_field(1, resource) + _len_field(2, scoped))
+
+
+def _decode_request(
+    decode_item: Callable[[bytes], dict[str, Any]], buf: bytes
+) -> list[tuple[dict[str, Any], str, list[dict[str, Any]]]]:
+    """Returns [(resource_attrs, scope_name, [item, ...]), ...] — one tuple
+    per (Resource*, Scope*) pair, the receiver-side flatten (otlpreceiver
+    encoder.go:30-133)."""
+    out: list[tuple[dict[str, Any], str, list[dict[str, Any]]]] = []
+    for f1, _w1, rx in iter_fields(bytes(buf)):
+        if f1 != 1:
+            continue
+        resource_attrs: dict[str, Any] = {}
+        for f2, _w2, v2 in iter_fields(rx):
+            if f2 == 1:  # Resource
+                for f3, _w3, v3 in iter_fields(v2):
+                    if f3 == 1:
+                        k, val = decode_key_value(v3)
+                        resource_attrs[k] = val
+        for f2, _w2, v2 in iter_fields(rx):
+            if f2 != 2:  # Scope*
+                continue
+            scope_name = ""
+            items: list[dict[str, Any]] = []
+            for f3, _w3, v3 in iter_fields(v2):
+                if f3 == 1:  # InstrumentationScope
+                    for f4, _w4, v4 in iter_fields(v3):
+                        if f4 == 1:
+                            scope_name = v4.decode("utf-8")
+                elif f3 == 2:
+                    items.append(decode_item(v3))
+            out.append((resource_attrs, scope_name, items))
+    return out
+
+
 # --- LogRecord (logs.proto) ---------------------------------------------------
 # Field numbers (pdata/plog/generated_logrecord.go):
 #   1 time_unix_nano (fixed64)      2 severity_number (varint enum)
@@ -369,26 +429,11 @@ def decode_log_record(buf: bytes) -> dict[str, Any]:
     return rec
 
 
-# --- ExportLogsServiceRequest hierarchy (logs_service.proto / logs.proto) ----
-# ExportLogsServiceRequest: 1 repeated ResourceLogs
-# ResourceLogs:  1 Resource, 2 repeated ScopeLogs, 3 schema_url
-# Resource:      1 repeated KeyValue, 2 dropped_attributes_count
-# ScopeLogs:     1 InstrumentationScope, 2 repeated LogRecord, 3 schema_url
-# InstrumentationScope: 1 name, 2 version, 3 repeated KeyValue
+encode_logs_request = partial(_encode_request, encode_log_record)
+decode_logs_request = partial(_decode_request, decode_log_record)
 
 
-def encode_logs_request(
-    resource_attrs: dict[str, Any],
-    scope_name: str,
-    records: list[dict[str, Any]],
-) -> bytes:
-    resource = _attrs_block(1, resource_attrs)
-    scope = _str_field(1, scope_name) if scope_name else b""
-    scope_logs = _len_field(1, scope) + b"".join(
-        _len_field(2, encode_log_record(r)) for r in records
-    )
-    resource_logs = _len_field(1, resource) + _len_field(2, scope_logs)
-    return _len_field(1, resource_logs)
+# --- ExportLogsServiceResponse (collector/logs/v1) ---------------------------
 
 
 def encode_logs_response(
@@ -422,39 +467,6 @@ def decode_logs_response(buf: bytes) -> dict[str, Any]:
                 out["rejected_log_records"] = _to_i64(v2)
             elif f2 == 2:
                 out["error_message"] = v2.decode("utf-8")
-    return out
-
-
-def decode_logs_request(
-    buf: bytes,
-) -> list[tuple[dict[str, Any], str, list[dict[str, Any]]]]:
-    """Returns [(resource_attrs, scope_name, [log_record, ...]), ...] — one
-    tuple per (ResourceLogs, ScopeLogs) pair, the receiver-side flatten
-    (otlpreceiver encoder.go:30-133)."""
-    out: list[tuple[dict[str, Any], str, list[dict[str, Any]]]] = []
-    for f1, _w1, rl in iter_fields(buf):
-        if f1 != 1:
-            continue
-        resource_attrs: dict[str, Any] = {}
-        for f2, _w2, v2 in iter_fields(rl):
-            if f2 == 1:  # Resource
-                for f3, _w3, v3 in iter_fields(v2):
-                    if f3 == 1:
-                        k, val = decode_key_value(v3)
-                        resource_attrs[k] = val
-        for f2, _w2, v2 in iter_fields(rl):
-            if f2 != 2:  # ScopeLogs
-                continue
-            scope_name = ""
-            records: list[dict[str, Any]] = []
-            for f3, _w3, v3 in iter_fields(v2):
-                if f3 == 1:  # InstrumentationScope
-                    for f4, _w4, v4 in iter_fields(v3):
-                        if f4 == 1:
-                            scope_name = v4.decode("utf-8")
-                elif f3 == 2:
-                    records.append(decode_log_record(v3))
-            out.append((resource_attrs, scope_name, records))
     return out
 
 
@@ -602,50 +614,8 @@ def decode_span(buf: bytes) -> dict[str, Any]:
     return sp
 
 
-def encode_trace_request(
-    resource_attrs: dict[str, Any],
-    scope_name: str,
-    spans: list[dict[str, Any]],
-) -> bytes:
-    """ExportTraceServiceRequest: 1 rep ResourceSpans{1 Resource,
-    2 rep ScopeSpans{1 scope, 2 rep Span}} (collector/trace/v1)."""
-    resource = _attrs_block(1, resource_attrs)
-    scope = _str_field(1, scope_name) if scope_name else b""
-    scope_spans = _len_field(1, scope) + b"".join(
-        _len_field(2, encode_span(s)) for s in spans
-    )
-    resource_spans = _len_field(1, resource) + _len_field(2, scope_spans)
-    return _len_field(1, resource_spans)
-
-
-def decode_trace_request(
-    buf: bytes,
-) -> list[tuple[dict[str, Any], str, list[dict[str, Any]]]]:
-    out: list[tuple[dict[str, Any], str, list[dict[str, Any]]]] = []
-    for f1, _w1, rs in iter_fields(buf):
-        if f1 != 1:
-            continue
-        resource_attrs: dict[str, Any] = {}
-        for f2, _w2, v2 in iter_fields(rs):
-            if f2 == 1:
-                for f3, _w3, v3 in iter_fields(v2):
-                    if f3 == 1:
-                        k, val = decode_key_value(v3)
-                        resource_attrs[k] = val
-        for f2, _w2, v2 in iter_fields(rs):
-            if f2 != 2:
-                continue
-            scope_name = ""
-            spans: list[dict[str, Any]] = []
-            for f3, _w3, v3 in iter_fields(v2):
-                if f3 == 1:
-                    for f4, _w4, v4 in iter_fields(v3):
-                        if f4 == 1:
-                            scope_name = v4.decode("utf-8")
-                elif f3 == 2:
-                    spans.append(decode_span(v3))
-            out.append((resource_attrs, scope_name, spans))
-    return out
+encode_trace_request = partial(_encode_request, encode_span)
+decode_trace_request = partial(_decode_request, decode_span)
 
 
 # --- Metric (metrics.proto) ---------------------------------------------------
@@ -1030,47 +1000,5 @@ def decode_metric(buf: bytes) -> dict[str, Any]:
     return m
 
 
-def encode_metrics_request(
-    resource_attrs: dict[str, Any],
-    scope_name: str,
-    metrics: list[dict[str, Any]],
-) -> bytes:
-    """ExportMetricsServiceRequest: 1 rep ResourceMetrics{1 Resource,
-    2 rep ScopeMetrics{1 scope, 2 rep Metric}} (collector/metrics/v1)."""
-    resource = _attrs_block(1, resource_attrs)
-    scope = _str_field(1, scope_name) if scope_name else b""
-    scope_metrics = _len_field(1, scope) + b"".join(
-        _len_field(2, encode_metric(mm)) for mm in metrics
-    )
-    resource_metrics = _len_field(1, resource) + _len_field(2, scope_metrics)
-    return _len_field(1, resource_metrics)
-
-
-def decode_metrics_request(
-    buf: bytes,
-) -> list[tuple[dict[str, Any], str, list[dict[str, Any]]]]:
-    out: list[tuple[dict[str, Any], str, list[dict[str, Any]]]] = []
-    for f1, _w1, rm in iter_fields(buf):
-        if f1 != 1:
-            continue
-        resource_attrs: dict[str, Any] = {}
-        for f2, _w2, v2 in iter_fields(rm):
-            if f2 == 1:
-                for f3, _w3, v3 in iter_fields(v2):
-                    if f3 == 1:
-                        k, val = decode_key_value(v3)
-                        resource_attrs[k] = val
-        for f2, _w2, v2 in iter_fields(rm):
-            if f2 != 2:
-                continue
-            scope_name = ""
-            metrics: list[dict[str, Any]] = []
-            for f3, _w3, v3 in iter_fields(v2):
-                if f3 == 1:
-                    for f4, _w4, v4 in iter_fields(v3):
-                        if f4 == 1:
-                            scope_name = v4.decode("utf-8")
-                elif f3 == 2:
-                    metrics.append(decode_metric(v3))
-            out.append((resource_attrs, scope_name, metrics))
-    return out
+encode_metrics_request = partial(_encode_request, encode_metric)
+decode_metrics_request = partial(_decode_request, decode_metric)

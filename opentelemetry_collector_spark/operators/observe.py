@@ -12,10 +12,12 @@ computes the result — zero extra scans, collected on action completion.
 Metric names mirror the obsmetrics key names
 (internal/obsreportconfig/obsmetrics/obs_receiver.go:41-52 etc.).
 
-OTLP JSON codec analog (SURVEY §1.5, pdata/plog/json.go:29-42): LogRecord
-rows serialize to / parse from a canonical JSON envelope with to_json /
-from_json — the round-trip is lossless (tested) and the wire schema is the
-denormalized OTLP LogRecord shape.
+JSONL record envelope: to_otlp_json / from_otlp_json serialize parsed
+turns to / from one flat JSON object per LogRecord with to_json /
+from_json — the line format of the ``otlp_jsonl`` exporter and
+sources/jsonl.py. The round trip is lossless (tested). It is the engine's
+own envelope, not the OTLP/JSON wire: the spec-exact wires of all three
+signals are operators/protobuf.py's ``to/from_otlp_*_json``.
 """
 
 from __future__ import annotations
@@ -60,8 +62,8 @@ def observed_pipeline(routed: DataFrame) -> tuple[DataFrame, Observation]:
 
 
 def to_otlp_json(parsed: DataFrame) -> DataFrame:
-    """Serialize parsed turns to the OTLP/JSON-style record envelope
-    (plog.JSONMarshaler analog) — one JSON string per LogRecord."""
+    """Serialize parsed turns to the flat JSONL record envelope — one JSON
+    string per LogRecord."""
     return parsed.select(
         "conv_id",
         "turn_idx",
@@ -87,8 +89,8 @@ def to_otlp_json(parsed: DataFrame) -> DataFrame:
 
 
 def from_otlp_json(serialized: DataFrame) -> DataFrame:
-    """Parse the JSON envelope back to columns (plog.JSONUnmarshaler
-    analog); inverse of to_otlp_json."""
+    """Parse the JSONL record envelope back to columns; inverse of
+    to_otlp_json."""
     return serialized.select(
         F.from_json("otlp_json", LOG_RECORD_JSON_SCHEMA).alias("r")
     ).select(
@@ -99,85 +101,7 @@ def from_otlp_json(serialized: DataFrame) -> DataFrame:
     )
 
 
-# --- nested OTLP/JSON document (the wire hierarchy, plog/json.go:29-42) -----
-
-_DOC_SCHEMA = (
-    "struct<resource:struct<conv_id:string>, scope:struct<name:string>, "
-    "logRecords:array<struct<turn_idx:int, role:string, "
-    "time_unix_micros:long, severity_number:int, severity_text:string, "
-    "trace_id:string, span_id:string, attributes_json:string, body:string>>>"
-)
-
-SCOPE_NAME = "otelcol-spark/transcripts"
-
-
-def to_otlp_document_json(parsed: DataFrame) -> DataFrame:
-    """Full OTLP/JSON hierarchy: one document per conversation =
-    Resource{conv_id} -> Scope -> LogRecord[] in turn order — the actual
-    resourceLogs/scopeLogs/logRecords nesting of the wire format
-    (pdata/plog/logs.go:24,60-62), not the flat per-record envelope.
-
-    Scale note: groupBy(conv_id) + sort_array is one bucket-aligned shuffle;
-    record order inside the array is made explicit by sorting on turn_idx
-    (slice order is implicit in the reference)."""
-    rec = F.struct(
-        F.col("turn_idx"),
-        F.col("role"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("time_unix_micros"),
-        F.col("severity_number"),
-        F.col("severity_text"),
-        F.col("trace_id"),
-        F.col("span_id"),
-        F.col("attributes_json"),
-        F.col("body"),
-    )
-    return (
-        parsed.groupBy("conv_id")
-        .agg(F.sort_array(F.collect_list(rec)).alias("logRecords"))
-        .select(
-            "conv_id",
-            F.to_json(
-                F.struct(
-                    F.struct(F.col("conv_id")).alias("resource"),
-                    F.struct(F.lit(SCOPE_NAME).alias("name")).alias("scope"),
-                    F.col("logRecords"),
-                )
-            ).alias("otlp_document_json"),
-        )
-    )
-
-
-def from_otlp_document_json(serialized: DataFrame) -> DataFrame:
-    """Explode the nested document back to one row per LogRecord (the
-    receiver-side unmarshal, otlpreceiver encoder.go:30-133)."""
-    doc = serialized.select(
-        F.from_json("otlp_document_json", _DOC_SCHEMA).alias("d")
-    )
-    rec = doc.select(
-        F.col("d.resource.conv_id").alias("conv_id"),
-        F.explode("d.logRecords").alias("r"),
-    )
-    return rec.select(
-        "conv_id", "r.turn_idx", "r.role",
-        F.timestamp_micros(F.col("r.time_unix_micros"))
-        .cast("timestamp_ntz").alias("ts"),
-        "r.severity_number", "r.severity_text", "r.trace_id", "r.span_id",
-        "r.attributes_json", "r.body",
-    )
-
-
-# --- trace-signal codec (ptrace.JSONMarshaler analog, pdata/ptrace/json.go) --
-
-SPAN_JSON_SCHEMA = (
-    "struct<trace_id:string, span_id:string, trace_state:string, "
-    "parent_span_id:string, name:string, kind:int, flags:int, "
-    "start_unix_micros:long, end_unix_micros:long, "
-    "status_code:int, conv_id:string, turn_idx:int, attributes_json:string, "
-    "events:array<struct<name:string, time_unix_micros:long, "
-    "attributes_json:string>>, "
-    "links:array<struct<trace_id:string, span_id:string, "
-    "attributes_json:string>>>"
-)
+# --- trace signal: span rows built from parsed turns (pdata/ptrace) ---------
 
 # SpanKind enum (pdata/ptrace/span_kind.go): tool calls are CLIENT spans
 SPAN_KIND_CLIENT = 3
@@ -290,87 +214,4 @@ def build_spans(parsed: DataFrame) -> DataFrame:
         F.col("attributes_json"),
         events.alias("events"),
         links.alias("links"),
-    )
-
-
-def to_otlp_span_json(parsed: DataFrame) -> DataFrame:
-    """Serialize parsed tool-call spans to the OTLP/JSON Span envelope
-    (generated_span.go:58-149: identity, trace_state, name, kind, flags,
-    start/end, status, events, links). Start = the turn timestamp; end =
-    start + dur_ms."""
-    spans = build_spans(parsed)
-    return spans.select(
-        "conv_id",
-        "turn_idx",
-        F.to_json(
-            F.struct(*[F.col(f) for f in spans.columns])
-        ).alias("otlp_span_json"),
-    )
-
-
-def from_otlp_span_json(serialized: DataFrame) -> DataFrame:
-    """Inverse of to_otlp_span_json (ptrace.JSONUnmarshaler analog);
-    reconstructs span fields incl. dur_ms from start/end."""
-    return serialized.select(
-        F.from_json("otlp_span_json", SPAN_JSON_SCHEMA).alias("s")
-    ).select(
-        "s.conv_id", "s.turn_idx",
-        "s.trace_id", "s.span_id", "s.trace_state", "s.parent_span_id",
-        F.col("s.name").alias("parsed_tool"),
-        "s.kind", "s.flags",
-        F.timestamp_micros(F.col("s.start_unix_micros"))
-        .cast("timestamp_ntz").alias("ts"),
-        ((F.col("s.end_unix_micros") - F.col("s.start_unix_micros")) / 1000)
-        .cast("long").alias("dur_ms"),
-        "s.status_code", "s.attributes_json", "s.events", "s.links",
-    )
-
-
-# --- metrics-signal codec (pmetric.JSONMarshaler analog, pdata/pmetric) -----
-
-METRIC_JSON_SCHEMA = (
-    "struct<name:string, type:string, time_unix_micros:long, "
-    "value:double, attributes_json:string>"
-)
-
-
-def to_otlp_metric_json(
-    points: DataFrame,
-    metric_name: str,
-    value_col: str,
-    ts_col: str = "ts",
-    attr_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Serialize a data-point frame to NumberDataPoint JSON envelopes
-    (pdata/pmetric/generated_numberdatapoint.go): one Sum/Gauge point per
-    row, with the listed attr columns folded into sorted-key attributes."""
-    from opentelemetry_collector_spark.functions.values import attributes_json
-
-    # shared canonical serializer: sorted keys, null-omission, canonical
-    # JSON numbers bare, strings quoted — identical to every other
-    # attributes_json producer in the engine
-    attrs = attributes_json({c: F.col(c) for c in attr_cols})
-    return points.select(
-        F.to_json(
-            F.struct(
-                F.lit(metric_name).alias("name"),
-                F.lit("sum").alias("type"),
-                F.unix_micros(F.col(ts_col).cast("timestamp")).alias(
-                    "time_unix_micros"
-                ),
-                F.col(value_col).cast("double").alias("value"),
-                attrs.alias("attributes_json"),
-            )
-        ).alias("otlp_metric_json")
-    )
-
-
-def from_otlp_metric_json(serialized: DataFrame) -> DataFrame:
-    return serialized.select(
-        F.from_json("otlp_metric_json", METRIC_JSON_SCHEMA).alias("m")
-    ).select(
-        "m.name", "m.type",
-        F.timestamp_micros(F.col("m.time_unix_micros"))
-        .cast("timestamp_ntz").alias("ts"),
-        "m.value", "m.attributes_json",
     )

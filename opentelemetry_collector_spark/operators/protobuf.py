@@ -1,36 +1,42 @@
-"""OTLP protobuf codec operators — protobuf send/receive analog.
+"""OTLP codec operators — the OTLP/HTTP receiver's send/receive analog.
 
-The reference negotiates protobuf as the primary OTLP wire format
-(receiver/otlpreceiver/encoder.go:30-36; marshalers at pdata/plog/pb.go:24-40).
-This module round-trips the engine's parsed-turn LogRecord shape through
-real OTLP protobuf bytes (wire layout in functions/protowire.py) in two
-shapes:
+The reference negotiates protobuf or JSON per signal on the OTLP/HTTP
+endpoint and swaps only the serializer by content type
+(receiver/otlpreceiver/encoder.go:30-36; marshalers at
+pdata/plog/pb.go:24-40 and pdata/plog/json.go:29-42). This module
+round-trips the engine's frames through real OTLP bytes or OTLP/JSON text
+(wire layouts in functions/protowire.py and functions/otlpjson.py):
 
-* flat: one ``LogRecord`` message per row (the per-record envelope, the
-  protobuf twin of observe.to_otlp_json);
-* document: one ``ExportLogsServiceRequest`` per conversation —
-  Resource{conv_id} -> ScopeLogs -> LogRecord[] in turn order, the actual
-  resourceLogs nesting (pdata/plog/logs.go:24,60-62), protobuf twin of
-  observe.to_otlp_document_json;
-* trace signal: build_spans rows <-> ``ExportTraceServiceRequest`` (Span
-  incl. events/links/trace_state/status, ptrace pb.go marshal analog);
-* metrics signal: histogram_explicit points <-> OTLP ``Metric`` histogram
-  messages (pmetric pb.go marshal analog).
+* flat: one ``LogRecord`` protobuf message per row (to/from_otlp_protobuf);
+* logs: one ``ExportLogsServiceRequest`` per conversation —
+  Resource{conv_id} -> Scope -> LogRecord[] in turn order, the actual
+  resourceLogs nesting (pdata/plog/logs.go:24,60-62);
+* traces: build_spans rows <-> one ``ExportTraceServiceRequest`` per
+  conversation (Span incl. events/links/trace_state/status);
+* metrics: histogram_explicit points <-> one
+  ``ExportMetricsServiceRequest`` per point (Resource{tool} -> Scope ->
+  one histogram ``Metric``);
+* the ingest response: per-request partial success
+  (``ExportLogsServiceResponse``).
+
+Each signal's encoder and decoder is written once and bound to a wire;
+the ``*_protobuf`` and ``*_json`` functions differ only in that binding,
+so both wires decode to identical rows.
 
 Engine columns ride in the reserved ``otelcol.`` attribute namespace
 (conv_id/turn_idx/role/tool/parsed_tool/dur_ms/status); user attributes
 (attributes_json) become real typed KeyValue pairs and are re-canonicalized
 on decode with byte-identical rules to functions.values.attributes_json.
 
-Scale notes: both directions are ``mapInPandas`` (Arrow-batched, one pass,
-no shuffle); the document encoder's only shuffle is the groupBy(conv_id)
-that the wire hierarchy itself requires, aligned with the table bucket key.
-Byte assembly is per-record by nature (same loop shape as the reference's
+Scale notes: both directions are ``mapInPandas`` (Arrow-batched, one pass);
+the logs and trace encoders' only shuffle is the groupBy(conv_id) that the
+wire hierarchy itself requires, aligned with the table bucket key. Byte
+assembly is per-record by nature (same loop shape as the reference's
 generated Marshal), but stays inside the Arrow batch.
 
 Native fast path: Spark 3.4+ ships ``from_protobuf``/``to_protobuf`` in the
-``spark-protobuf`` artifact. The jar is not in this sandbox (gated the same
-way sources/catalog.py gates Iceberg) — ``native_protobuf_available()``
+``spark-protobuf`` artifact. The engine does not bundle the jar (gated the
+same way sources/catalog.py gates Iceberg) — ``native_protobuf_available()``
 probes for it; when a deployment ships the jar plus the OTLP descriptor
 set, the swap is mechanical and this codec is the conformance oracle
 (byte-identical proto3 output is asserted by the golden-vector tests).
@@ -40,20 +46,19 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_spark.functions import otlpjson, protowire
 from opentelemetry_collector_spark.functions.otlpjson import (
     any_value_from_otlp_json,
     any_value_to_otlp_json,
 )
 from opentelemetry_collector_spark.functions.protowire import (
     decode_log_record,
-    decode_logs_request,
     encode_log_record,
-    encode_logs_request,
 )
 from opentelemetry_collector_spark.functions.values import (
     JSON_ESCAPES as _ESCAPES,
@@ -369,225 +374,274 @@ def from_otlp_protobuf(serialized: DataFrame) -> DataFrame:
     )
 
 
-def to_otlp_request_protobuf(parsed: DataFrame) -> DataFrame:
-    """One ExportLogsServiceRequest per conversation: Resource{conv_id} ->
-    Scope -> LogRecord[] sorted by turn_idx. The groupBy(conv_id) shuffle is
-    inherent to the wire hierarchy and aligns with the table bucket key."""
-    rec = F.struct(*[F.col(c) for c in _WIRE_INPUT_FIELDS if c != "conv_id"])
-    grouped = (
-        _wire_input(parsed)
-        .groupBy("conv_id")
-        # struct sorts lexicographically by field order; turn_idx leads
-        .agg(F.sort_array(F.collect_list(rec)).alias("records"))
+# --- one Spark codec per signal, bound to a wire -----------------------------
+# The OTLP/HTTP receiver serves each signal on two wires and swaps only the
+# serializer by content type (receiver/otlpreceiver/encoder.go:30-36). So
+# does this module: each signal's Spark encoder and decoder is written once
+# and takes a _Wire, which supplies the request codecs and the Spark type
+# of the wire column. Each public function binds one wire.
+
+
+class _Wire(NamedTuple):
+    spark_type: str  # of the wire column
+    encode_logs: Callable[..., Any]
+    decode_logs: Callable[[Any], list]
+    encode_traces: Callable[..., Any]
+    decode_traces: Callable[[Any], list]
+    encode_metrics: Callable[..., Any]
+    decode_metrics: Callable[[Any], list]
+    encode_logs_response: Callable[[int, str], Any]
+
+
+_PROTOBUF = _Wire(
+    "binary",
+    protowire.encode_logs_request, protowire.decode_logs_request,
+    protowire.encode_trace_request, protowire.decode_trace_request,
+    protowire.encode_metrics_request, protowire.decode_metrics_request,
+    protowire.encode_logs_response,
+)
+_JSON = _Wire(
+    "string",
+    otlpjson.logs_request_to_otlp_json, otlpjson.logs_request_from_otlp_json,
+    otlpjson.trace_request_to_otlp_json, otlpjson.trace_request_from_otlp_json,
+    otlpjson.metrics_request_to_otlp_json,
+    otlpjson.metrics_request_from_otlp_json,
+    otlpjson.logs_response_to_otlp_json,
+)
+
+
+def _frame(rows: list, cols: list[str], int_dtypes: tuple = ()):
+    """rows -> a pandas frame of exactly ``cols`` (an empty batch still
+    carries them: pd.DataFrame([]) has none and fails Arrow schema
+    conversion), with nullable Int dtypes where a NULL would otherwise
+    widen the column to float."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=cols)
+    for col, dtype in int_dtypes:
+        pdf[col] = pdf[col].astype(dtype)
+    return pdf
+
+
+def _encode_by_conv(
+    rows: DataFrame,
+    item: Column,
+    to_item: Callable[[dict[str, Any]], dict[str, Any]],
+    encode: Callable[..., Any],
+    out_col: str,
+    spark_type: str,
+) -> DataFrame:
+    """One request per conversation: Resource{conv_id} -> Scope -> one
+    wire item per row, sorted by ``item`` (a struct led by turn_idx, so
+    the order is turn order). The groupBy(conv_id) shuffle is inherent to
+    the wire hierarchy and aligns with the table bucket key."""
+    grouped = rows.groupBy("conv_id").agg(
+        F.sort_array(F.collect_list(item)).alias("items")
     )
 
-    def encode(batches) -> Iterator:
+    def encode_batches(batches) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            out_conv, out_bytes = [], []
-            for conv_id, recs in zip(pdf["conv_id"], pdf["records"]):
-                rows = [
-                    _clean_row(dict(r) | {"conv_id": conv_id}) for r in recs
-                ]
-                out_conv.append(conv_id)
-                out_bytes.append(
-                    encode_logs_request(
-                        {"conv_id": conv_id},
-                        SCOPE_NAME,
-                        [_row_to_record(r) for r in rows],
-                    )
-                )
+            convs = list(pdf["conv_id"])
             yield pd.DataFrame(
-                {"conv_id": out_conv, "otlp_request": out_bytes}
+                {
+                    "conv_id": convs,
+                    out_col: [
+                        encode(
+                            {"conv_id": conv_id},
+                            SCOPE_NAME,
+                            [to_item(dict(r) | {"conv_id": conv_id})
+                             for r in items],
+                        )
+                        for conv_id, items in zip(convs, pdf["items"])
+                    ],
+                }
             )
 
-    return grouped.mapInPandas(encode, "conv_id string, otlp_request binary")
+    return grouped.mapInPandas(
+        encode_batches, f"conv_id string, {out_col} {spark_type}"
+    )
+
+
+def _decode_requests(
+    serialized: DataFrame,
+    in_col: str,
+    decode: Callable[[Any], list],
+    to_rows: Callable[[dict[str, Any], dict[str, Any]], list],
+    to_pdf: Callable[[list], Any],
+    schema: str,
+) -> DataFrame:
+    """Explode request blobs to output rows (receiver-side unmarshal +
+    flatten, otlpreceiver encoder.go:30-133): ``to_rows(resource_attrs,
+    item)`` gives the rows of one wire item. Strict — a malformed blob
+    raises, mirroring the reference unmarshal error that makes the
+    receiver reject the request."""
+
+    def decode_batches(batches) -> Iterator:
+        for pdf in batches:
+            yield to_pdf(
+                [
+                    row
+                    for blob in pdf[in_col]
+                    for res_attrs, _scope, items in decode(blob)
+                    for item in items
+                    for row in to_rows(res_attrs, item)
+                ]
+            )
+
+    return serialized.select(in_col).mapInPandas(decode_batches, schema)
+
+
+def _resource_conv(
+    res_attrs: dict[str, Any], row: dict[str, Any]
+) -> dict[str, Any]:
+    """The resource-level conv_id wins over the item's own attribute
+    copy."""
+    row["conv_id"] = res_attrs.get("conv_id", row["conv_id"])
+    return row
+
+
+# --- logs signal -------------------------------------------------------------
+
+
+def _to_logs_requests(
+    parsed: DataFrame, wire: _Wire, out_col: str
+) -> DataFrame:
+    item = F.struct(*[F.col(c) for c in _WIRE_INPUT_FIELDS if c != "conv_id"])
+    return _encode_by_conv(
+        _wire_input(parsed), item, lambda r: _row_to_record(_clean_row(r)),
+        wire.encode_logs, out_col, wire.spark_type,
+    )
+
+
+def _from_logs_requests(
+    serialized: DataFrame, wire: _Wire, in_col: str
+) -> DataFrame:
+    return _decode_requests(
+        serialized, in_col, wire.decode_logs,
+        lambda res, rec: [_resource_conv(res, _record_to_row(rec))],
+        _rows_to_pdf, DECODED_SCHEMA,
+    )
+
+
+def to_otlp_request_protobuf(parsed: DataFrame) -> DataFrame:
+    """One ExportLogsServiceRequest per conversation -> [conv_id,
+    otlp_request]: Resource{conv_id} -> Scope -> LogRecord[] sorted by
+    turn_idx (plog ProtoMarshaler analog)."""
+    return _to_logs_requests(parsed, _PROTOBUF, "otlp_request")
 
 
 def from_otlp_request_protobuf(serialized: DataFrame) -> DataFrame:
     """Explode ExportLogsServiceRequest blobs back to one row per LogRecord
-    (receiver-side unmarshal+flatten, otlpreceiver encoder.go:30-133).
-    Resource-level conv_id wins over the record's own attribute copy."""
-
-    def decode(batches) -> Iterator:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for blob in pdf["otlp_request"]:
-                for res_attrs, _scope, recs in decode_logs_request(bytes(blob)):
-                    for rec in recs:
-                        row = _record_to_row(rec)
-                        row["conv_id"] = res_attrs.get("conv_id", row["conv_id"])
-                        rows.append(row)
-            yield _rows_to_pdf(rows)
-
-    return serialized.select("otlp_request").mapInPandas(
-        decode, DECODED_SCHEMA
-    )
+    on DECODED_SCHEMA (receiver-side unmarshal+flatten)."""
+    return _from_logs_requests(serialized, _PROTOBUF, "otlp_request")
 
 
 def to_otlp_request_json(parsed: DataFrame) -> DataFrame:
-    """One ExportLogsServiceRequest per conversation as spec-exact
-    OTLP/JSON text (plogjson JSONMarshaler analog) — the OTLP/HTTP
-    endpoint's OTHER content type (receiver/otlpreceiver/encoder.go:30-36
-    negotiates protobuf or JSON). Same grouping shuffle and record
-    assembly as to_otlp_request_protobuf; only the final serializer
-    differs (functions/otlpjson.py vs functions/protowire.py)."""
-    from opentelemetry_collector_spark.functions.otlpjson import (
-        logs_request_to_otlp_json,
-    )
-
-    rec = F.struct(*[F.col(c) for c in _WIRE_INPUT_FIELDS if c != "conv_id"])
-    grouped = (
-        _wire_input(parsed)
-        .groupBy("conv_id")
-        .agg(F.sort_array(F.collect_list(rec)).alias("records"))
-    )
-
-    def encode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out_conv, out_json = [], []
-            for conv_id, recs in zip(pdf["conv_id"], pdf["records"]):
-                rows = [
-                    _clean_row(dict(r) | {"conv_id": conv_id}) for r in recs
-                ]
-                out_conv.append(conv_id)
-                out_json.append(
-                    logs_request_to_otlp_json(
-                        {"conv_id": conv_id},
-                        SCOPE_NAME,
-                        [_row_to_record(r) for r in rows],
-                    )
-                )
-            yield pd.DataFrame(
-                {"conv_id": out_conv, "otlp_json_request": out_json}
-            )
-
-    return grouped.mapInPandas(
-        encode, "conv_id string, otlp_json_request string"
-    )
+    """to_otlp_request_protobuf on the OTLP/JSON wire (plogjson
+    JSONMarshaler analog) -> [conv_id, otlp_json_request]."""
+    return _to_logs_requests(parsed, _JSON, "otlp_json_request")
 
 
 def from_otlp_request_json(serialized: DataFrame) -> DataFrame:
-    """Explode OTLP/JSON request documents back to one row per LogRecord —
-    the JSON twin of from_otlp_request_protobuf, landing on the SAME
-    decoded schema (conformance property: both wires decode to identical
-    rows; tests/test_protobuf.py)."""
-    from opentelemetry_collector_spark.functions.otlpjson import (
-        logs_request_from_otlp_json,
-    )
-
-    def decode(batches) -> Iterator:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for doc in pdf["otlp_json_request"]:
-                for res_attrs, _scope, recs in logs_request_from_otlp_json(doc):
-                    for rec in recs:
-                        row = _record_to_row(rec)
-                        row["conv_id"] = res_attrs.get("conv_id", row["conv_id"])
-                        rows.append(row)
-            yield _rows_to_pdf(rows)
-
-    return serialized.select("otlp_json_request").mapInPandas(
-        decode, DECODED_SCHEMA
-    )
+    """from_otlp_request_protobuf on the OTLP/JSON wire: both wires decode
+    to identical rows (tests/test_protobuf.py)."""
+    return _from_logs_requests(serialized, _JSON, "otlp_json_request")
 
 
-INGEST_RESPONSE_SCHEMA = (
-    "conv_id string, accepted int, rejected int, error_message string, "
-    "response_protobuf binary"
-)
-
-
-def otlp_ingest_response(serialized: DataFrame) -> DataFrame:
-    """Per-request partial-success surface for protobuf ingest — one row
-    per ExportLogsServiceRequest blob with (accepted, rejected,
-    error_message) and the wire ``ExportLogsServiceResponse`` bytes,
-    mirroring otlpreceiver's per-Export response
-    (receiver/otlpreceiver/otlp.go Export -> plogotlp/response.go
+def _ingest_response(
+    serialized: DataFrame, wire: _Wire, in_col: str, out_col: str
+) -> DataFrame:
+    """Per-request partial-success surface — one row per request with
+    (accepted, rejected, error_message) and the wire
+    ``ExportLogsServiceResponse``, mirroring otlpreceiver's per-Export
+    response (receiver/otlpreceiver/otlp.go Export -> plogotlp/response.go
     ExportPartialSuccess{rejected_log_records, error_message}).
 
     A record is REJECTED when it fails the engine ingest contract at the
     codec boundary: no ``otelcol.conv_id`` identity, or a severity token
     the 25-level table cannot map (severity_number NULL with non-empty
-    text) — the dead-letter predicate. A blob that fails protobuf
-    unmarshal outright is a FULL reject — the reference answers that with
-    an error status, not partial success — surfaced as accepted/rejected
-    NULL, the unmarshal message, and NULL response bytes (never b"",
-    which is the wire encoding of full success).
+    text) — the dead-letter predicate. A request that fails unmarshal
+    outright is a FULL reject — the reference answers that with an error
+    status, not partial success — surfaced as accepted/rejected NULL, the
+    unmarshal message, and a NULL response.
 
-    Scale: one mapInPandas pass over the blobs, no shuffle; pairs with
-    ``from_otlp_request_protobuf`` (same input, second action) the way the
-    receiver's response writer pairs with its consumer push.
-    """
-    from opentelemetry_collector_spark.functions.protowire import (
-        encode_logs_response,
-    )
+    Scale: one mapInPandas pass over the requests, no shuffle; pairs with
+    the request decoder (same input, second action) the way the
+    receiver's response writer pairs with its consumer push."""
 
     def respond(batches) -> Iterator:
-        import pandas as pd
-
         for pdf in batches:
             rows = []
-            for conv_id, blob in zip(pdf["conv_id"], pdf["otlp_request"]):
+            for conv_id, blob in zip(pdf["conv_id"], pdf[in_col]):
                 try:
-                    requests = decode_logs_request(bytes(blob))
-                except Exception as e:  # malformed bytes: full reject
-                    # NULL wire bytes, NOT b"": an empty response encodes
-                    # FULL SUCCESS (encode_logs_response of 0 rejects), so
-                    # the wire must never claim success for a rejected
-                    # request — the reference answers unmarshal failures
-                    # with an error status and no Export response at all.
-                    rows.append(
-                        (conv_id, None, None, f"unmarshal: {e}", None)
-                    )
+                    requests = wire.decode_logs(blob)
+                except Exception as e:  # malformed request: full reject
+                    # NULL response, NOT the empty one: an empty response
+                    # encodes FULL SUCCESS (0 rejects), so the wire must
+                    # never claim success for a rejected request — the
+                    # reference answers unmarshal failures with an error
+                    # status and no Export response at all.
+                    rows.append((conv_id, None, None, f"unmarshal: {e}", None))
                     continue
                 accepted = rejected = 0
                 first_error = None
                 for res_attrs, _scope, recs in requests:
                     for rec in recs:
-                        row = _record_to_row(rec)
-                        row["conv_id"] = res_attrs.get(
-                            "conv_id", row["conv_id"]
-                        )
+                        row = _resource_conv(res_attrs, _record_to_row(rec))
+                        error = None
                         if row["conv_id"] is None:
-                            rejected += 1
-                            first_error = first_error or "missing conv_id"
+                            error = "missing conv_id"
                         elif (
                             row["severity_number"] is None
                             and row["severity_text"]
                         ):
-                            rejected += 1
-                            first_error = first_error or (
-                                "unmappable severity: "
-                                + str(row["severity_text"])
+                            error = "unmappable severity: " + str(
+                                row["severity_text"]
                             )
-                        else:
+                        if error is None:
                             accepted += 1
+                        else:
+                            rejected += 1
+                            first_error = first_error or error
                 rows.append(
                     (
                         conv_id,
                         accepted,
                         rejected,
                         first_error,
-                        encode_logs_response(rejected, first_error or ""),
+                        wire.encode_logs_response(rejected, first_error or ""),
                     )
                 )
-            out = pd.DataFrame(
+            yield _frame(
                 rows,
-                columns=[
-                    "conv_id", "accepted", "rejected", "error_message",
-                    "response_protobuf",
-                ],
+                ["conv_id", "accepted", "rejected", "error_message", out_col],
+                (("accepted", "Int32"), ("rejected", "Int32")),
             )
-            out["accepted"] = out["accepted"].astype("Int32")
-            out["rejected"] = out["rejected"].astype("Int32")
-            yield out
 
-    return serialized.select("conv_id", "otlp_request").mapInPandas(
-        respond, INGEST_RESPONSE_SCHEMA
+    return serialized.select("conv_id", in_col).mapInPandas(
+        respond,
+        "conv_id string, accepted int, rejected int, error_message string, "
+        f"{out_col} {wire.spark_type}",
+    )
+
+
+def otlp_ingest_response(serialized: DataFrame) -> DataFrame:
+    """Partial-success responses to [conv_id, otlp_request] protobuf
+    requests -> [conv_id, accepted, rejected, error_message,
+    response_protobuf]; full success is b"", a full reject NULL."""
+    return _ingest_response(
+        serialized, _PROTOBUF, "otlp_request", "response_protobuf"
+    )
+
+
+def otlp_ingest_response_json(serialized: DataFrame) -> DataFrame:
+    """otlp_ingest_response on the OTLP/JSON wire (the HTTP receiver
+    answers JSON requests with JSON responses) -> [..., response_json];
+    full success is "{}", a full reject NULL."""
+    return _ingest_response(
+        serialized, _JSON, "otlp_json_request", "response_json"
     )
 
 
@@ -650,7 +704,7 @@ def decode_log_records(
     return from_otlp_protobuf(serialized)
 
 
-# --- trace signal (ptrace ProtoMarshaler analog) ------------------------------
+# --- trace signal (ptrace ProtoMarshaler analog) -----------------------------
 
 SPAN_DECODED_SCHEMA = (
     "trace_id string, span_id string, trace_state string, "
@@ -668,6 +722,11 @@ _SPAN_OUT_COLS = [
     "flags", "start_unix_micros", "end_unix_micros", "status_code",
     "conv_id", "turn_idx", "attributes_json", "events", "links",
 ]
+_SPAN_INT_DTYPES = (
+    ("kind", "Int32"), ("flags", "Int32"), ("turn_idx", "Int32"),
+    ("status_code", "Int32"), ("start_unix_micros", "Int64"),
+    ("end_unix_micros", "Int64"),
+)
 
 
 def _cell_list(v: Any) -> list:
@@ -763,82 +822,57 @@ def _wire_to_span_row(sp: dict[str, Any]) -> dict[str, Any]:
     }
 
 
-def to_otlp_trace_protobuf(parsed: DataFrame) -> DataFrame:
-    """parse -> build_spans -> one ExportTraceServiceRequest per conversation
-    (Resource{conv_id} -> Scope -> Span[] in turn order; ptrace pb.go
-    marshal analog). groupBy(conv_id) is the wire hierarchy's own shuffle,
-    aligned with the table bucket key."""
+def _to_trace_requests(
+    parsed: DataFrame, wire: _Wire, out_col: str
+) -> DataFrame:
     from opentelemetry_collector_spark.operators.observe import build_spans
-    from opentelemetry_collector_spark.functions.protowire import (
-        encode_trace_request,
-    )
 
-    spans = build_spans(parsed)
-    rec = F.struct(
+    item = F.struct(
         "turn_idx", *[F.col(c) for c in _SPAN_OUT_COLS if c != "turn_idx"]
     )
-    grouped = spans.groupBy("conv_id").agg(
-        F.sort_array(F.collect_list(rec)).alias("spans")
+    return _encode_by_conv(
+        build_spans(parsed), item, _span_row_to_wire, wire.encode_traces,
+        out_col, wire.spark_type,
     )
 
-    def encode(batches) -> Iterator:
-        import pandas as pd
 
-        for pdf in batches:
-            out_conv, out_bytes = [], []
-            for conv_id, rows in zip(pdf["conv_id"], pdf["spans"]):
-                out_conv.append(conv_id)
-                out_bytes.append(
-                    encode_trace_request(
-                        {"conv_id": conv_id},
-                        SCOPE_NAME,
-                        [_span_row_to_wire(dict(r)) for r in rows],
-                    )
-                )
-            yield pd.DataFrame(
-                {"conv_id": out_conv, "otlp_trace_request": out_bytes}
-            )
-
-    return grouped.mapInPandas(
-        encode, "conv_id string, otlp_trace_request binary"
+def _from_trace_requests(
+    serialized: DataFrame, wire: _Wire, in_col: str
+) -> DataFrame:
+    return _decode_requests(
+        serialized, in_col, wire.decode_traces,
+        lambda res, sp: [_resource_conv(res, _wire_to_span_row(sp))],
+        lambda rows: _frame(rows, _SPAN_OUT_COLS, _SPAN_INT_DTYPES),
+        SPAN_DECODED_SCHEMA,
     )
+
+
+def to_otlp_trace_protobuf(parsed: DataFrame) -> DataFrame:
+    """parse -> build_spans -> one ExportTraceServiceRequest per
+    conversation -> [conv_id, otlp_trace_request] (Resource{conv_id} ->
+    Scope -> Span[] in turn order; ptrace pb.go marshal analog)."""
+    return _to_trace_requests(parsed, _PROTOBUF, "otlp_trace_request")
 
 
 def from_otlp_trace_protobuf(serialized: DataFrame) -> DataFrame:
     """Unmarshal ExportTraceServiceRequest blobs back to one row per Span
     with the exact build_spans schema (receiver-side flatten)."""
-    from opentelemetry_collector_spark.functions.protowire import (
-        decode_trace_request,
-    )
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for blob in pdf["otlp_trace_request"]:
-                for res_attrs, _scope, sps in decode_trace_request(bytes(blob)):
-                    for sp in sps:
-                        row = _wire_to_span_row(sp)
-                        row["conv_id"] = res_attrs.get("conv_id", row["conv_id"])
-                        rows.append(row)
-            pdf_out = pd.DataFrame(
-                {c: [r[c] for r in rows] for c in _SPAN_OUT_COLS}
-            )
-            for int_col, dtype in (("kind", "Int32"), ("flags", "Int32"),
-                                   ("turn_idx", "Int32"),
-                                   ("status_code", "Int32"),
-                                   ("start_unix_micros", "Int64"),
-                                   ("end_unix_micros", "Int64")):
-                pdf_out[int_col] = pdf_out[int_col].astype(dtype)
-            yield pdf_out
-
-    return serialized.select("otlp_trace_request").mapInPandas(
-        decode, SPAN_DECODED_SCHEMA
-    )
+    return _from_trace_requests(serialized, _PROTOBUF, "otlp_trace_request")
 
 
-# --- metrics signal (pmetric ProtoMarshaler analog) ---------------------------
+def to_otlp_trace_json(parsed: DataFrame) -> DataFrame:
+    """to_otlp_trace_protobuf on the OTLP/JSON wire (ptracejson marshaler
+    analog) -> [conv_id, otlp_trace_json_request]."""
+    return _to_trace_requests(parsed, _JSON, "otlp_trace_json_request")
+
+
+def from_otlp_trace_json(serialized: DataFrame) -> DataFrame:
+    """from_otlp_trace_protobuf on the OTLP/JSON wire: both wires decode to
+    identical rows (tests/test_protobuf.py)."""
+    return _from_trace_requests(serialized, _JSON, "otlp_trace_json_request")
+
+
+# --- metrics signal (pmetric ProtoMarshaler analog) --------------------------
 
 _HIST_DECODED_SCHEMA_TMPL = (
     "bucket_start_epoch bigint, tool string, n_points bigint, "
@@ -854,447 +888,146 @@ def _hist_bucket_cols() -> list[str]:
     ]
 
 
-def to_otlp_metric_protobuf(parsed: DataFrame) -> DataFrame:
-    """histogram_explicit points -> one OTLP Metric protobuf message per row
-    (delta-temporality HistogramDataPoint; metrics.pb.go marshal analog).
-    Bucket counts map 1:1: explicit_bounds = HISTOGRAM_BOUNDS, counts =
-    per-bucket le_* columns + the gt_* overflow."""
+def _to_metric_requests(
+    parsed: DataFrame, wire: _Wire, out_col: str
+) -> DataFrame:
+    """histogram_explicit points -> one ExportMetricsServiceRequest per row:
+    Resource{tool} -> Scope -> one histogram Metric with one
+    delta-temporality HistogramDataPoint. Bucket counts map 1:1:
+    explicit_bounds = HISTOGRAM_BOUNDS, counts = per-bucket le_* columns +
+    the gt_* overflow."""
     from opentelemetry_collector_spark.operators.metrics import (
         HISTOGRAM_BOUNDS,
         histogram_explicit,
     )
-    from opentelemetry_collector_spark.functions.protowire import (
-        AGG_TEMPORALITY_DELTA,
-        encode_metric,
-    )
 
-    hist = histogram_explicit(parsed)
     bucket_cols = _hist_bucket_cols()
+    encode = wire.encode_metrics
 
-    def encode(batches) -> Iterator:
+    def metric(r: dict[str, Any]) -> dict[str, Any]:
+        start = int(r["bucket_start_epoch"])
+        dp = {
+            "attributes": {
+                "tool": r["tool"],
+                ENGINE_PREFIX + "bucket_start_epoch": start,
+            },
+            "start_time_unix_nano": start * 10**9,
+            "time_unix_nano": start * 10**9,
+            "count": int(r["n_points"]),
+            "sum": float(r["sum_value"]),
+            "bucket_counts": [int(r[c]) for c in bucket_cols],
+            "explicit_bounds": [float(b) for b in HISTOGRAM_BOUNDS],
+            "exemplars": [],
+            "flags": 0,
+            "min": float(r["min_value"]),
+            "max": float(r["max_value"]),
+        }
+        return {
+            "name": "otelcol.span.duration",
+            "description": "",
+            "unit": "ms",
+            "type": "histogram",
+            "aggregation_temporality": protowire.AGG_TEMPORALITY_DELTA,
+            "data_points": [dp],
+        }
+
+    def encode_batches(batches) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            rows = list(pdf.to_dict("records"))
-            blobs = []
-            for r in rows:
-                dp = {
-                    "attributes": {
-                        "tool": r["tool"],
-                        ENGINE_PREFIX + "bucket_start_epoch": int(
-                            r["bucket_start_epoch"]
-                        ),
-                    },
-                    "start_time_unix_nano": int(r["bucket_start_epoch"]) * 10**9,
-                    "time_unix_nano": int(r["bucket_start_epoch"]) * 10**9,
-                    "count": int(r["n_points"]),
-                    "sum": float(r["sum_value"]),
-                    "bucket_counts": [int(r[c]) for c in bucket_cols],
-                    "explicit_bounds": [float(b) for b in HISTOGRAM_BOUNDS],
-                    "exemplars": [],
-                    "flags": 0,
-                    "min": float(r["min_value"]),
-                    "max": float(r["max_value"]),
-                }
-                blobs.append(
-                    encode_metric(
-                        {
-                            "name": "otelcol.span.duration",
-                            "description": "",
-                            "unit": "ms",
-                            "type": "histogram",
-                            "aggregation_temporality": AGG_TEMPORALITY_DELTA,
-                            "data_points": [dp],
-                        }
-                    )
-                )
+            rows = pdf.to_dict("records")
             yield pd.DataFrame(
                 {
                     "tool": [r["tool"] for r in rows],
-                    "otlp_metric": blobs,
+                    out_col: [
+                        encode({"tool": r["tool"]}, SCOPE_NAME, [metric(r)])
+                        for r in rows
+                    ],
                 }
             )
 
-    return hist.mapInPandas(encode, "tool string, otlp_metric binary")
+    return histogram_explicit(parsed).mapInPandas(
+        encode_batches, f"tool string, {out_col} {wire.spark_type}"
+    )
+
+
+def _from_metric_requests(
+    serialized: DataFrame, wire: _Wire, in_col: str
+) -> DataFrame:
+    """Metric requests back to histogram_explicit's exact columns."""
+    from opentelemetry_collector_spark.operators.metrics import HISTOGRAM_BOUNDS
+
+    engine_bounds = [float(b) for b in HISTOGRAM_BOUNDS]
+    bucket_cols = _hist_bucket_cols()
+    col_order = [
+        "bucket_start_epoch", "tool", "n_points",
+        "sum_value", "min_value", "max_value", *bucket_cols,
+    ]
+
+    def point_rows(_res_attrs: dict[str, Any], m: dict[str, Any]) -> list:
+        if m["type"] != "histogram":
+            raise ValueError(f"expected histogram metric, got {m['type']}")
+        rows = []
+        for dp in m["data_points"]:
+            # sum/min/max are OPTIONAL in OTLP HistogramDataPoint — a
+            # spec-valid external producer may omit them; surface NULL
+            # instead of crashing the task on int(None)
+            row = {
+                "bucket_start_epoch": int(
+                    dp["attributes"][ENGINE_PREFIX + "bucket_start_epoch"]
+                ),
+                "tool": dp["attributes"]["tool"],
+                "n_points": dp["count"],
+                "sum_value": None if dp.get("sum") is None else int(dp["sum"]),
+                "min_value": None if dp.get("min") is None else int(dp["min"]),
+                "max_value": None if dp.get("max") is None else int(dp["max"]),
+            }
+            # strict — this decoder's columnar schema IS the bucket layout;
+            # silently zip-truncating (or NULL-padding) an external point
+            # with a different bucketization would corrupt counts,
+            # contradicting the codec's malformed-bytes-raise posture
+            if len(dp["bucket_counts"]) != len(bucket_cols):
+                raise ValueError(
+                    f"histogram point has {len(dp['bucket_counts'])} "
+                    f"bucket counts, expected {len(bucket_cols)}"
+                )
+            if dp.get("explicit_bounds") != engine_bounds:
+                raise ValueError(
+                    f"histogram point bounds {dp.get('explicit_bounds')} "
+                    f"!= engine bounds {engine_bounds}"
+                )
+            row.update(zip(bucket_cols, dp["bucket_counts"]))
+            rows.append(row)
+        return rows
+
+    return _decode_requests(
+        serialized, in_col, wire.decode_metrics, point_rows,
+        lambda rows: _frame(rows, col_order),
+        _HIST_DECODED_SCHEMA_TMPL.format(
+            buckets=", ".join(f"{c} bigint" for c in bucket_cols)
+        ),
+    )
+
+
+def to_otlp_metric_protobuf(parsed: DataFrame) -> DataFrame:
+    """histogram_explicit points -> one ExportMetricsServiceRequest per row
+    -> [tool, otlp_metric] (pmetric pb.go marshal analog)."""
+    return _to_metric_requests(parsed, _PROTOBUF, "otlp_metric")
 
 
 def from_otlp_metric_protobuf(serialized: DataFrame) -> DataFrame:
-    """Unmarshal Metric blobs back to histogram_explicit's exact columns."""
-    from opentelemetry_collector_spark.functions.protowire import decode_metric
-    from opentelemetry_collector_spark.operators.metrics import HISTOGRAM_BOUNDS
-
-    engine_bounds = [float(b) for b in HISTOGRAM_BOUNDS]
-    bucket_cols = _hist_bucket_cols()
-    schema = _HIST_DECODED_SCHEMA_TMPL.format(
-        buckets=", ".join(f"{c} bigint" for c in bucket_cols)
-    )
-
-    col_order = [
-        "bucket_start_epoch", "tool", "n_points",
-        "sum_value", "min_value", "max_value", *bucket_cols,
-    ]
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for blob in pdf["otlp_metric"]:
-                m = decode_metric(bytes(blob))
-                if m["type"] != "histogram":
-                    raise ValueError(f"expected histogram metric, got {m['type']}")
-                for dp in m["data_points"]:
-                    # sum/min/max are OPTIONAL in OTLP HistogramDataPoint —
-                    # a spec-valid external producer may omit them; surface
-                    # NULL instead of crashing the task on int(None)
-                    row = {
-                        "bucket_start_epoch": int(
-                            dp["attributes"][ENGINE_PREFIX + "bucket_start_epoch"]
-                        ),
-                        "tool": dp["attributes"]["tool"],
-                        "n_points": dp["count"],
-                        "sum_value": None if dp.get("sum") is None
-                        else int(dp["sum"]),
-                        "min_value": None if dp.get("min") is None
-                        else int(dp["min"]),
-                        "max_value": None if dp.get("max") is None
-                        else int(dp["max"]),
-                    }
-                    # strict — this decoder's columnar schema IS the bucket
-                    # layout; silently zip-truncating (or NULL-padding) an
-                    # external point with a different bucketization would
-                    # corrupt counts, contradicting the codec's
-                    # malformed-bytes-raise posture
-                    if len(dp["bucket_counts"]) != len(bucket_cols):
-                        raise ValueError(
-                            f"histogram point has {len(dp['bucket_counts'])} "
-                            f"bucket counts, expected {len(bucket_cols)}"
-                        )
-                    if dp.get("explicit_bounds") != engine_bounds:
-                        raise ValueError(
-                            f"histogram point bounds {dp.get('explicit_bounds')} "
-                            f"!= engine bounds {engine_bounds}"
-                        )
-                    for c, v in zip(bucket_cols, dp["bucket_counts"]):
-                        row[c] = v
-                    rows.append(row)
-            # an all-empty batch must still carry the declared columns —
-            # pd.DataFrame([]) has none and fails Arrow schema conversion
-            yield pd.DataFrame(rows, columns=col_order)
-
-    return serialized.select("otlp_metric").mapInPandas(decode, schema)
-
-
-# --- OTLP/JSON twins for traces and metrics ------------------------------------
-# The OTLP/HTTP endpoint negotiates protobuf or JSON per signal
-# (receiver/otlpreceiver/encoder.go:30-36); the reference's JSON marshalers
-# are ptracejson/pmetricjson (pdata/ptrace/json.go:29-42,
-# pdata/pmetric/json.go:29-42). Same grouping shuffles and row<->wire
-# helpers as the protobuf twins above; only the serializer differs.
-
-
-def to_otlp_trace_json(parsed: DataFrame) -> DataFrame:
-    """parse -> build_spans -> one ExportTraceServiceRequest per
-    conversation as spec-exact OTLP/JSON text (ptracejson marshaler
-    analog). Identical shuffle shape to to_otlp_trace_protobuf."""
-    from opentelemetry_collector_spark.operators.observe import build_spans
-    from opentelemetry_collector_spark.functions.otlpjson import (
-        trace_request_to_otlp_json,
-    )
-
-    spans = build_spans(parsed)
-    rec = F.struct(
-        "turn_idx", *[F.col(c) for c in _SPAN_OUT_COLS if c != "turn_idx"]
-    )
-    grouped = spans.groupBy("conv_id").agg(
-        F.sort_array(F.collect_list(rec)).alias("spans")
-    )
-
-    def encode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out_conv, out_json = [], []
-            for conv_id, rows in zip(pdf["conv_id"], pdf["spans"]):
-                out_conv.append(conv_id)
-                out_json.append(
-                    trace_request_to_otlp_json(
-                        {"conv_id": conv_id},
-                        SCOPE_NAME,
-                        [_span_row_to_wire(dict(r)) for r in rows],
-                    )
-                )
-            yield pd.DataFrame(
-                {"conv_id": out_conv, "otlp_trace_json_request": out_json}
-            )
-
-    return grouped.mapInPandas(
-        encode, "conv_id string, otlp_trace_json_request string"
-    )
-
-
-def from_otlp_trace_json(serialized: DataFrame) -> DataFrame:
-    """Unmarshal OTLP/JSON trace request documents back to one row per
-    Span with the exact build_spans schema — the JSON twin of
-    from_otlp_trace_protobuf (conformance: both wires decode to identical
-    rows; tests/test_protobuf.py)."""
-    from opentelemetry_collector_spark.functions.otlpjson import (
-        trace_request_from_otlp_json,
-    )
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for doc in pdf["otlp_trace_json_request"]:
-                for res_attrs, _scope, sps in trace_request_from_otlp_json(
-                    doc
-                ):
-                    for sp in sps:
-                        row = _wire_to_span_row(sp)
-                        row["conv_id"] = res_attrs.get(
-                            "conv_id", row["conv_id"]
-                        )
-                        rows.append(row)
-            pdf_out = pd.DataFrame(
-                {c: [r[c] for r in rows] for c in _SPAN_OUT_COLS}
-            )
-            for int_col, dtype in (("kind", "Int32"), ("flags", "Int32"),
-                                   ("turn_idx", "Int32"),
-                                   ("status_code", "Int32"),
-                                   ("start_unix_micros", "Int64"),
-                                   ("end_unix_micros", "Int64")):
-                pdf_out[int_col] = pdf_out[int_col].astype(dtype)
-            yield pdf_out
-
-    return serialized.select("otlp_trace_json_request").mapInPandas(
-        decode, SPAN_DECODED_SCHEMA
-    )
+    """Unmarshal metric request blobs back to histogram_explicit's exact
+    columns; strict on the bucket layout."""
+    return _from_metric_requests(serialized, _PROTOBUF, "otlp_metric")
 
 
 def to_otlp_metric_json(parsed: DataFrame) -> DataFrame:
-    """histogram_explicit points -> one OTLP/JSON Metric document per row
-    (pmetricjson marshaler analog of to_otlp_metric_protobuf: same
-    delta-temporality HistogramDataPoint mapping, JSON wire)."""
-    from opentelemetry_collector_spark.operators.metrics import (
-        HISTOGRAM_BOUNDS,
-        histogram_explicit,
-    )
-    from opentelemetry_collector_spark.functions.protowire import (
-        AGG_TEMPORALITY_DELTA,
-    )
-    from opentelemetry_collector_spark.functions.otlpjson import (
-        metrics_request_to_otlp_json,
-    )
-
-    hist = histogram_explicit(parsed)
-    bucket_cols = _hist_bucket_cols()
-
-    def encode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = list(pdf.to_dict("records"))
-            docs = []
-            for r in rows:
-                dp = {
-                    "attributes": {
-                        "tool": r["tool"],
-                        ENGINE_PREFIX + "bucket_start_epoch": int(
-                            r["bucket_start_epoch"]
-                        ),
-                    },
-                    "start_time_unix_nano": int(r["bucket_start_epoch"]) * 10**9,
-                    "time_unix_nano": int(r["bucket_start_epoch"]) * 10**9,
-                    "count": int(r["n_points"]),
-                    "sum": float(r["sum_value"]),
-                    "bucket_counts": [int(r[c]) for c in bucket_cols],
-                    "explicit_bounds": [float(b) for b in HISTOGRAM_BOUNDS],
-                    "exemplars": [],
-                    "flags": 0,
-                    "min": float(r["min_value"]),
-                    "max": float(r["max_value"]),
-                }
-                docs.append(
-                    metrics_request_to_otlp_json(
-                        {"tool": r["tool"]},
-                        SCOPE_NAME,
-                        [
-                            {
-                                "name": "otelcol.span.duration",
-                                "description": "",
-                                "unit": "ms",
-                                "type": "histogram",
-                                "aggregation_temporality": (
-                                    AGG_TEMPORALITY_DELTA
-                                ),
-                                "data_points": [dp],
-                            }
-                        ],
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "tool": [r["tool"] for r in rows],
-                    "otlp_metric_json_request": docs,
-                }
-            )
-
-    return hist.mapInPandas(
-        encode, "tool string, otlp_metric_json_request string"
-    )
+    """to_otlp_metric_protobuf on the OTLP/JSON wire (pmetricjson
+    marshaler analog) -> [tool, otlp_metric_json_request]."""
+    return _to_metric_requests(parsed, _JSON, "otlp_metric_json_request")
 
 
 def from_otlp_metric_json(serialized: DataFrame) -> DataFrame:
-    """Unmarshal OTLP/JSON metric documents back to histogram_explicit's
-    exact columns — the JSON twin of from_otlp_metric_protobuf, sharing
-    its strict bucket-layout checks."""
-    from opentelemetry_collector_spark.functions.otlpjson import (
-        metrics_request_from_otlp_json,
-    )
-    from opentelemetry_collector_spark.operators.metrics import HISTOGRAM_BOUNDS
-
-    engine_bounds = [float(b) for b in HISTOGRAM_BOUNDS]
-    bucket_cols = _hist_bucket_cols()
-    schema = _HIST_DECODED_SCHEMA_TMPL.format(
-        buckets=", ".join(f"{c} bigint" for c in bucket_cols)
-    )
-    col_order = [
-        "bucket_start_epoch", "tool", "n_points",
-        "sum_value", "min_value", "max_value", *bucket_cols,
-    ]
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc in pdf["otlp_metric_json_request"]:
-                for _res, _scope, ms in metrics_request_from_otlp_json(doc):
-                    for m in ms:
-                        if m["type"] != "histogram":
-                            raise ValueError(
-                                f"expected histogram metric, got {m['type']}"
-                            )
-                        for dp in m["data_points"]:
-                            row = {
-                                "bucket_start_epoch": int(
-                                    dp["attributes"][
-                                        ENGINE_PREFIX + "bucket_start_epoch"
-                                    ]
-                                ),
-                                "tool": dp["attributes"]["tool"],
-                                "n_points": dp["count"],
-                                "sum_value": None if dp.get("sum") is None
-                                else int(dp["sum"]),
-                                "min_value": None if dp.get("min") is None
-                                else int(dp["min"]),
-                                "max_value": None if dp.get("max") is None
-                                else int(dp["max"]),
-                            }
-                            if len(dp["bucket_counts"]) != len(bucket_cols):
-                                raise ValueError(
-                                    f"histogram point has "
-                                    f"{len(dp['bucket_counts'])} bucket "
-                                    f"counts, expected {len(bucket_cols)}"
-                                )
-                            if dp.get("explicit_bounds") != engine_bounds:
-                                raise ValueError(
-                                    f"histogram point bounds "
-                                    f"{dp.get('explicit_bounds')} != engine "
-                                    f"bounds {engine_bounds}"
-                                )
-                            for c, v in zip(bucket_cols, dp["bucket_counts"]):
-                                row[c] = v
-                            rows.append(row)
-            yield pd.DataFrame(rows, columns=col_order)
-
-    return serialized.select("otlp_metric_json_request").mapInPandas(
-        decode, schema
-    )
-
-
-INGEST_RESPONSE_JSON_SCHEMA = (
-    "conv_id string, accepted int, rejected int, error_message string, "
-    "response_json string"
-)
-
-
-def otlp_ingest_response_json(serialized: DataFrame) -> DataFrame:
-    """Partial-success surface for the JSON wire: one row per OTLP/JSON
-    request document with (accepted, rejected, error_message) and the
-    ``ExportLogsServiceResponse`` OTLP/JSON text — the HTTP receiver
-    answers JSON requests with JSON responses
-    (receiver/otlpreceiver/encoder.go:30-36; otlp.go Export). Same reject
-    predicates as the protobuf twin ``otlp_ingest_response`` (missing
-    conv_id identity, unmappable severity); a document that fails JSON
-    unmarshal is a full reject — NULL response (never "{}", which is the
-    wire encoding of full success)."""
-    from opentelemetry_collector_spark.functions.otlpjson import (
-        logs_request_from_otlp_json,
-        logs_response_to_otlp_json,
-    )
-
-    def respond(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for conv_id, doc in zip(
-                pdf["conv_id"], pdf["otlp_json_request"]
-            ):
-                try:
-                    requests = logs_request_from_otlp_json(doc)
-                except Exception as e:  # malformed JSON: full reject
-                    rows.append(
-                        (conv_id, None, None, f"unmarshal: {e}", None)
-                    )
-                    continue
-                accepted = rejected = 0
-                first_error = None
-                for res_attrs, _scope, recs in requests:
-                    for rec in recs:
-                        row = _record_to_row(rec)
-                        row["conv_id"] = res_attrs.get(
-                            "conv_id", row["conv_id"]
-                        )
-                        if row["conv_id"] is None:
-                            rejected += 1
-                            first_error = first_error or "missing conv_id"
-                        elif (
-                            row["severity_number"] is None
-                            and row["severity_text"]
-                        ):
-                            rejected += 1
-                            first_error = first_error or (
-                                "unmappable severity: "
-                                + str(row["severity_text"])
-                            )
-                        else:
-                            accepted += 1
-                rows.append(
-                    (
-                        conv_id,
-                        accepted,
-                        rejected,
-                        first_error,
-                        logs_response_to_otlp_json(
-                            rejected, first_error or ""
-                        ),
-                    )
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "accepted", "rejected", "error_message",
-                    "response_json",
-                ],
-            )
-            out["accepted"] = out["accepted"].astype("Int32")
-            out["rejected"] = out["rejected"].astype("Int32")
-            yield out
-
-    return serialized.select("conv_id", "otlp_json_request").mapInPandas(
-        respond, INGEST_RESPONSE_JSON_SCHEMA
-    )
+    """from_otlp_metric_protobuf on the OTLP/JSON wire, with the same strict
+    bucket-layout checks."""
+    return _from_metric_requests(serialized, _JSON, "otlp_metric_json_request")

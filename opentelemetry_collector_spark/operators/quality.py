@@ -900,7 +900,7 @@ FROM scores, thr
 # are integer comparisons (score_milli > 0 ⇔ positive posterior beats
 # the prior-adjusted threshold).
 #
-# Scale: the model is hash-bounded at CLF_BUCKETS (+2 sentinel) rows
+# Scale: the model is hash-bounded at CLF_BUCKETS (+3 sentinel) rows
 # regardless of vocabulary — broadcast-sized BY CONSTRUCTION (the
 # doc_tfidf_topk lesson does not apply: nothing vocabulary-sized ever
 # shuffles or broadcasts); tokens explode once; the per-doc sum shuffles
@@ -910,6 +910,7 @@ CLF_BUCKETS = 1024
 CLF_SALT = "qclf"
 CLF_BIAS_B = -1  # sentinel row: class-prior log-odds
 CLF_DEFAULT_B = -2  # sentinel row: weight of a bucket unseen in training
+CLF_NBUCKETS_B = -3  # sentinel row: the model's n_buckets (in w_milli)
 
 
 def train_quality_classifier(
@@ -920,8 +921,9 @@ def train_quality_classifier(
 ) -> DataFrame:
     """Train the NB log-odds model on docs whose ``label_col`` is a
     non-null boolean: returns (b, w_milli) with one row per observed
-    hashed-unigram bucket plus the two sentinel rows ({CLF_BIAS_B} =
-    doc-count prior log-odds, {CLF_DEFAULT_B} = unseen-bucket weight).
+    hashed-unigram bucket plus the three sentinel rows ({CLF_BIAS_B} =
+    doc-count prior log-odds, {CLF_DEFAULT_B} = unseen-bucket weight,
+    {CLF_NBUCKETS_B} = the ``n_buckets`` the tokens were hashed into).
     Two bounded aggregates over one token explosion — nothing
     vocabulary-sized anywhere."""
     lab = labeled.filter(F.col(label_col).isNotNull()).select(
@@ -988,7 +990,13 @@ def train_quality_classifier(
         .cast("long")
         .alias("w_milli"),
     )
-    return weights.unionByName(bias).unionByName(default)
+    n_buckets_row = tot.select(
+        F.lit(CLF_NBUCKETS_B).cast("bigint").alias("b"),
+        F.lit(n_buckets).cast("long").alias("w_milli"),
+    )
+    return weights.unionByName(bias).unionByName(default).unionByName(
+        n_buckets_row
+    )
 
 
 def doc_classifier_score(
@@ -1007,7 +1015,12 @@ def doc_classifier_score(
     in-flight (the self-contained single-frame shape the oracle mirrors;
     when the labels ride the scored frame itself, pass it as both).
 
-    One token explosion, one broadcast join against the ≤{CLF_BUCKETS}+2
+    A passed ``model`` must have been trained with this ``n_buckets``:
+    its tokens hash into that many buckets, and another count would look
+    up the wrong weights. Its ``{CLF_NBUCKETS_B}`` sentinel row is read
+    (one small job) and a mismatch or a missing row raises ValueError.
+
+    One token explosion, one broadcast join against the ≤{CLF_BUCKETS}+3
     row model, one doc_id-keyed aggregate. Docs with no tokens carry no
     evidence and are not scored (the dsir_weights convention)."""
     d = _docs(spark, sf_dir, docs=docs)
@@ -1017,6 +1030,21 @@ def doc_classifier_score(
         model = train_quality_classifier(
             spark, labeled, label_col=label_col, n_buckets=n_buckets
         )
+    else:
+        trained = [
+            r.w_milli
+            for r in model.filter(F.col("b") == CLF_NBUCKETS_B).collect()
+        ]
+        if len(trained) != 1:
+            raise ValueError(
+                f"classifier model has {len(trained)} n_buckets sentinel "
+                f"rows (b = {CLF_NBUCKETS_B}), expected 1: retrain it"
+            )
+        if trained[0] != n_buckets:
+            raise ValueError(
+                f"classifier model was trained with n_buckets={trained[0]}, "
+                f"scoring uses n_buckets={n_buckets}"
+            )
     sentinels = model.filter(F.col("b") < 0).groupBy().agg(
         F.max(
             F.when(F.col("b") == CLF_BIAS_B, F.col("w_milli"))

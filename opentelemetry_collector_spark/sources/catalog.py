@@ -44,20 +44,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def configure_iceberg(builder, warehouse: str, catalog: str = "otelcol"):
-    """SparkSession.Builder config for a Hadoop-backed Iceberg catalog —
-    apply BEFORE getOrCreate when the runtime jar is present."""
-    return (
-        builder.config(
-            f"spark.sql.catalog.{catalog}", "org.apache.iceberg.spark.SparkCatalog"
-        )
-        .config(f"spark.sql.catalog.{catalog}.type", "hadoop")
-        .config(f"spark.sql.catalog.{catalog}.warehouse", warehouse)
-        .config("spark.sql.extensions",
-                "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions")
-    )
-
-
 class ParquetCatalog:
     """Fallback table IO: bucket column materialized as a partition dir
     (`part_bucket=K`), so bucket-filtered reads prune directories exactly

@@ -1,12 +1,14 @@
-"""JSON-lines wire format — the OTLP/HTTP JSON receiver/exporter analog
-(SURVEY §2.1; receiver/otlpreceiver/encoder.go:30-133, pdata/plog/json.go).
+"""JSON-lines file format — a file-based receiver/exporter for JSON exports
+(SURVEY §2.1).
 
-The collector accepts OTLP/JSON over HTTP and can emit it; the Spark
-equivalent is a JSON-lines table: one LogRecord envelope per line, written
-and read with the codec in operators/observe.py (integer epoch-micros
-timestamps — lossless where string formats truncate). This is the ingest
-path for transcript data arriving as JSON exports rather than
-parquet/Iceberg.
+One line is one LogRecord in the engine's own flat JSON envelope, written
+and read with to_otlp_json / from_otlp_json in operators/observe.py
+(integer epoch-micros timestamps — lossless where string formats
+truncate). The line is NOT OTLP/JSON: the spec-exact OTLP/JSON wire
+(resource -> scope -> records nesting, proto3 JSON mapping) is
+operators/protobuf.py's ``to_otlp_request_json`` /
+``from_otlp_request_json``. This is the ingest path for transcript data
+arriving as JSON exports rather than parquet/Iceberg.
 
 Scale notes: text-file writes shard per partition (no shuffle);
 ``compression`` accepts the reference's full negotiated codec set

@@ -250,10 +250,11 @@ def test_resume_with_different_n_buckets_raises(spark, routed, tmp_path):
 
 
 def test_overwrite_mode_restored_after_run(spark, routed, tmp_path):
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
     cfg = CheckpointConfig(base_path=str(tmp_path / "out"), n_buckets=4)
     CheckpointedRunner(spark, cfg).run(routed, run_id="r")
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == prev
+    assert spark.conf.get(key) == prev
 
 
 def test_retry_zero_max_elapsed_means_no_limit():

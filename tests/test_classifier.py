@@ -162,7 +162,7 @@ def test_persisted_model_scores_a_second_corpus(spark, tmp_path):
     path = str(tmp_path / "clf_model")
     train_quality_classifier(spark, labeled).write.parquet(path)
     model = spark.read.parquet(path)
-    assert model.count() <= CLF_BUCKETS + 2
+    assert model.count() <= CLF_BUCKETS + 3
     second = spark.createDataFrame(
         [
             (100, "careful essay prose considers quiet evidence"),
@@ -186,8 +186,36 @@ def test_persisted_model_scores_a_second_corpus(spark, tmp_path):
         assert text.n_tokens == n and text.score_milli == score
 
 
+def test_persisted_model_refuses_another_bucket_count(spark, tmp_path):
+    """A model hashes tokens into its own bucket count; scoring it with
+    another count would look up the wrong weights, so the model records
+    its count and scoring refuses a mismatch (and a model without the
+    record)."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    labeled = spark.createDataFrame(
+        _labeled_rows(), "doc_id long, text string, label boolean"
+    )
+    path = str(tmp_path / "clf_model_64")
+    train_quality_classifier(spark, labeled, n_buckets=64).write.parquet(path)
+    model = spark.read.parquet(path)
+    docs = _fixture_docs(spark)
+    with pytest.raises(ValueError, match=f"64.*{CLF_BUCKETS}"):
+        doc_classifier_score(spark, "", docs=docs, model=model)
+    # the matching count scores
+    assert doc_classifier_score(
+        spark, "", docs=docs, model=model, n_buckets=64
+    ).count() == len(FIXTURE)
+    with pytest.raises(ValueError, match="n_buckets"):
+        doc_classifier_score(
+            spark, "", docs=docs, model=model.filter(F.col("b") != -3),
+            n_buckets=64,
+        )
+
+
 def test_classifier_plan_broadcasts_the_bounded_model(spark, tmp_path):
-    """100 TB shape: the ≤{CLF_BUCKETS}+2-row model rides a broadcast
+    """100 TB shape: the ≤{CLF_BUCKETS}+3-row model rides a broadcast
     join onto the token stream — no sort-merge join, no cartesian over
     the corpus, no Python eval."""
     src = str(tmp_path / "docs.parquet")

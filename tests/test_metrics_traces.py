@@ -194,32 +194,41 @@ def test_exemplars_lie_in_their_bucket(spark):
 
 
 def test_span_json_round_trip(spark):
-    """ptrace JSON codec: serialize -> parse recovers identity, timing
-    (incl. reconstructed dur_ms), and status for every span."""
-    from opentelemetry_collector_spark.operators.observe import (
-        from_otlp_span_json,
-        to_otlp_span_json,
+    """ptrace JSON wire: serialize -> parse recovers identity, timing
+    (end - start == dur_ms), and status for every span."""
+    from opentelemetry_collector_spark.operators.protobuf import (
+        from_otlp_trace_json,
+        to_otlp_trace_json,
     )
 
     parsed = _parsed(spark, SF_SMOKE)
     spans = parsed.filter(F.col("trace_id").isNotNull())
-    back = from_otlp_span_json(to_otlp_span_json(parsed))
+    back = from_otlp_trace_json(to_otlp_trace_json(parsed))
     assert back.count() == spans.count() > 0
 
     orig = spans.select(
         "conv_id", "turn_idx", "trace_id", "span_id",
-        F.col("parsed_tool"), "ts", "dur_ms", "attributes_json",
+        F.col("parsed_tool").alias("name"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias(
+            "start_unix_micros"
+        ),
+        "attributes_json",
     )
     rt = back.select(
         "conv_id", "turn_idx", "trace_id", "span_id",
-        "parsed_tool", "ts", "dur_ms", "attributes_json",
+        "name", "start_unix_micros", "attributes_json",
     )
     assert orig.exceptAll(rt).count() == 0
     assert rt.exceptAll(orig).count() == 0
-    # status enum mapping (status_code.go): ERROR->2, OK->1
     joined = back.join(
-        spans.select("conv_id", "turn_idx", "status"), ["conv_id", "turn_idx"]
+        spans.select("conv_id", "turn_idx", "status", "dur_ms"),
+        ["conv_id", "turn_idx"],
     )
+    assert joined.filter(
+        F.col("end_unix_micros") - F.col("start_unix_micros")
+        != F.col("dur_ms") * 1000
+    ).count() == 0
+    # status enum mapping (status_code.go): ERROR->2, OK->1
     assert joined.filter(
         (F.col("status") == "ERROR") & (F.col("status_code") != 2)
     ).count() == 0
@@ -230,17 +239,17 @@ def test_span_json_round_trip(spark):
 
 def test_span_events_links_tracestate_round_trip(spark):
     """Events/Links/TraceState (generated_span.go:97-149,
-    pdata/pcommon/trace_state.go) survive the JSON codec; event and link
+    pdata/pcommon/trace_state.go) survive the JSON wire; event and link
     contents follow the build_spans contract."""
-    from opentelemetry_collector_spark.operators.observe import (
-        build_spans,
-        from_otlp_span_json,
-        to_otlp_span_json,
+    from opentelemetry_collector_spark.operators.observe import build_spans
+    from opentelemetry_collector_spark.operators.protobuf import (
+        from_otlp_trace_json,
+        to_otlp_trace_json,
     )
 
     parsed = _parsed(spark, SF_SMOKE)
     spans = build_spans(parsed)
-    back = from_otlp_span_json(to_otlp_span_json(parsed))
+    back = from_otlp_trace_json(to_otlp_trace_json(parsed))
 
     # trace_state is the deterministic W3C key=value passthrough
     assert spans.filter(
@@ -279,20 +288,32 @@ def test_span_events_links_tracestate_round_trip(spark):
 
 
 def test_metric_json_round_trip(spark):
-    from opentelemetry_collector_spark.operators.observe import (
+    """pmetric JSON wire: the decoded histogram points carry
+    histogram_explicit's totals (points, duration sum, per-bucket
+    counts), and the duration sum is every span's."""
+    from opentelemetry_collector_spark.operators.metrics import (
+        histogram_explicit,
+    )
+    from opentelemetry_collector_spark.operators.protobuf import (
         from_otlp_metric_json,
         to_otlp_metric_json,
     )
 
-    spans = _parsed(spark, SF_SMOKE).filter(F.col("trace_id").isNotNull())
-    ser = to_otlp_metric_json(
-        spans, "tool.call.duration", "dur_ms", attr_cols=("parsed_tool",)
-    )
-    back = from_otlp_metric_json(ser)
-    assert back.count() == spans.count()
-    assert back.filter(F.col("name") != "tool.call.duration").count() == 0
-    total = back.agg(F.sum("value")).collect()[0][0]
-    assert int(total) == spans.agg(F.sum("dur_ms")).collect()[0][0]
+    parsed = _parsed(spark, SF_SMOKE)
+    hist = histogram_explicit(parsed)
+    back = from_otlp_metric_json(to_otlp_metric_json(parsed))
+    assert back.count() == hist.count() > 0
+    cols = ["n_points", "sum_value"] + [
+        c for c in hist.columns if c.startswith(("bucket_le_", "bucket_gt_"))
+    ]
+
+    def totals(df):
+        return df.agg(*[F.sum(c).alias(c) for c in cols]).collect()[0]
+
+    assert totals(back) == totals(hist)
+    spans = parsed.filter(F.col("trace_id").isNotNull())
+    dur_total = spans.agg(F.sum("dur_ms")).collect()[0][0]
+    assert totals(back)["sum_value"] == dur_total
 
 
 def test_red_metrics_error_rate_bounds(spark):
@@ -307,31 +328,34 @@ def test_red_metrics_error_rate_bounds(spark):
 
 
 def test_otlp_document_round_trip(spark):
-    """Nested resource->scope->logRecords document: explode recovers every
-    record with its fields, and records inside each document are in turn
-    order (slice-order parity)."""
-    import json
-
-    from opentelemetry_collector_spark.operators.observe import (
-        from_otlp_document_json,
-        to_otlp_document_json,
+    """Nested resource->scope->records OTLP/JSON request: one document per
+    conversation, explode recovers every record with its fields, and
+    records inside each document are in turn order (slice-order parity)."""
+    from opentelemetry_collector_spark.functions.otlpjson import (
+        logs_request_from_otlp_json,
+    )
+    from opentelemetry_collector_spark.operators.protobuf import (
+        from_otlp_request_json,
+        to_otlp_request_json,
     )
 
     parsed = _parsed(spark, SF_SMOKE)
-    docs = to_otlp_document_json(parsed)
+    docs = to_otlp_request_json(parsed)
     assert docs.count() == parsed.select("conv_id").distinct().count()
 
-    back = from_otlp_document_json(docs)
+    back = from_otlp_request_json(docs)
     cols = ["conv_id", "turn_idx", "role", "ts", "severity_number",
             "severity_text", "trace_id", "span_id", "attributes_json", "body"]
     a, b = parsed.select(cols), back.select(cols)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
-    one = docs.limit(1).collect()[0]
-    payload = json.loads(one.otlp_document_json)
-    assert payload["resource"]["conv_id"] == one.conv_id
-    idxs = [r["turn_idx"] for r in payload["logRecords"]]
-    assert idxs == sorted(idxs)
+    for doc in docs.collect():
+        ((res, _scope, recs),) = logs_request_from_otlp_json(
+            doc.otlp_json_request
+        )
+        assert res["conv_id"] == doc.conv_id
+        idxs = [r["attributes"]["otelcol.turn_idx"] for r in recs]
+        assert idxs == sorted(idxs)
 
 
 def test_summary_approx_close_to_exact(spark):

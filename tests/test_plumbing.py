@@ -360,3 +360,22 @@ def test_overwrite_mode_and_empty_frames_have_one_home():
         if rel not in owners:
             assert "partitionOverwriteMode" not in text, rel
     assert _SCALE_CONFS["spark.sql.sources.partitionOverwriteMode"] == "static"
+
+
+def test_otlp_json_key_names_have_one_home():
+    """The OTLP/JSON request nesting is spelled once, in
+    functions/otlpjson.py: any other module that names its keys is a
+    second OTLP/JSON codec."""
+    import pathlib
+
+    import opentelemetry_collector_spark as pkg
+
+    keys = ("logRecords", "scopeSpans", "resourceMetrics")
+    root = pathlib.Path(pkg.__file__).parent
+    home = "functions/otlpjson.py"
+    assert all(k in (root / home).read_text() for k in keys)
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel != home:
+            text = path.read_text()
+            assert not [k for k in keys if k in text], rel

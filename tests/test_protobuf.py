@@ -849,6 +849,48 @@ def test_metric_protobuf_roundtrip_spark(spark, parsed):
     )
 
 
+def test_metric_wire_is_one_request_per_point_on_both_wires(spark, parsed):
+    """OTLP/HTTP carries metrics as ExportMetricsServiceRequest on both
+    wires: each protobuf row and each JSON row is one request with
+    resource {tool}, scope SCOPE_NAME and one histogram Metric, and the two
+    wires decode to the same (resource, scope, metrics) per point."""
+    from opentelemetry_collector_spark.functions.otlpjson import (
+        metrics_request_from_otlp_json,
+    )
+    from opentelemetry_collector_spark.functions.protowire import (
+        decode_metrics_request,
+    )
+    from opentelemetry_collector_spark.operators.metrics import (
+        histogram_explicit,
+    )
+    from opentelemetry_collector_spark.operators.protobuf import (
+        SCOPE_NAME,
+        to_otlp_metric_json,
+        to_otlp_metric_protobuf,
+    )
+
+    def by_point(rows, decode):
+        out = {}
+        for tool, wire in rows:
+            ((res, scope, metrics),) = decode(wire)
+            ((dp,),) = [m["data_points"] for m in metrics]
+            key = (tool, dp["attributes"]["otelcol.bucket_start_epoch"])
+            out[key] = (res, scope, metrics)
+        return out
+
+    pb = by_point(
+        to_otlp_metric_protobuf(parsed).collect(),
+        lambda b: decode_metrics_request(bytes(b)),
+    )
+    js = by_point(
+        to_otlp_metric_json(parsed).collect(), metrics_request_from_otlp_json
+    )
+    assert len(pb) == histogram_explicit(parsed).count() > 0
+    assert pb == js
+    for (tool, _start), (res, scope, _metrics) in pb.items():
+        assert res == {"tool": tool} and scope == SCOPE_NAME
+
+
 # --- OTLP/JSON trace + metric wire (ptracejson/pmetricjson analogs) ----------
 
 
