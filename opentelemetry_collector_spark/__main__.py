@@ -151,7 +151,8 @@ def main(argv: list[str] | None = None) -> int:
 
         stream = routed_stream(stream_transcripts(spark, args.source), spark)
         q = start_sink_writer(
-            stream, f"{args.output}/sinks", f"{args.output}/_stream_checkpoint"
+            stream, f"{args.output}/sinks", f"{args.output}/_stream_checkpoint",
+            max_records_per_file=args.max_records_per_file,
         )
         q.awaitTermination()
         report = {"mode": "stream", "wall_s": round(time.perf_counter() - t0, 2)}

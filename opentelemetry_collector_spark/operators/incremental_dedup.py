@@ -145,95 +145,6 @@ class IncrementalDeduper:
         return _gauges(self.ledger)
 
 
-# --- cross-tick curation (streaming twin of corpus_curation) ------------------
-
-CURATION_FP_SCHEMA = T.StructType(
-    [
-        T.StructField("prefix_fp", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("tick_id", T.StringType(), False),
-    ]
-)
-
-
-class IncrementalCurator:
-    """Cross-tick twin of ``textstats.corpus_curation`` (quality gate ->
-    near-dup canonical -> class tag) for corpora that arrive in batches:
-    each tick quality-gates its docs, collapses in-tick near-dups to the
-    min doc_id per prefix fingerprint, anti-joins fingerprints already
-    ACCEPTED by earlier ticks, and commits the survivors' fingerprints to
-    a persistent ledger — first-accepted-wins across ticks.
-
-    Parity contract (tested): when ticks arrive in doc_id order — the
-    natural shape for append-only corpus ingest — the union of per-tick
-    outputs equals the one-shot batch ``corpus_curation`` over the same
-    corpus, because each fingerprint group's global-min passing doc_id
-    lives in the earliest tick that contains the group. Same crash-safety
-    protocol as ``IncrementalDeduper`` (pure ``curate`` that reads the
-    ledger without its own tick, tick-partition dynamic-overwrite
-    ``commit``; persistent_storage.go:268-348 analog).
-
-    Scale: the ledger holds one 32-char fingerprint + doc_id per accepted
-    doc; the per-tick anti-join shuffles only (prefix_fp) pairs — md5-
-    uniform, no skew. Bucket the ledger by prefix_fp at 10^9+ docs for a
-    shuffle-free co-located anti-join (sources/catalog.py layout note).
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        ledger_path: str,
-        quality_min: float = 0.55,
-    ):
-        self.spark = spark
-        self.ledger = Ledger(spark, ledger_path, CURATION_FP_SCHEMA, "tick_id")
-        self.quality_min = quality_min
-
-    def curate(self, docs: DataFrame, tick_id: str) -> DataFrame:
-        """The tick's accepted docs with corpus_curation's exact columns
-        (doc_id, quality_score, prefix_fp, pred_class), against the ledger
-        without ``tick_id``'s partition. Pure — safe to recompute on a
-        crash retry, before or after ``commit``."""
-        from pyspark.sql.window import Window
-
-        from opentelemetry_collector_spark.operators.textstats import (
-            doc_fingerprint,
-            doc_langid,
-            doc_quality,
-        )
-
-        q = doc_quality(self.spark, "", docs=docs).select(
-            "doc_id", "quality_score"
-        )
-        fp = doc_fingerprint(self.spark, "", docs=docs).select(
-            "doc_id", "prefix_fp"
-        )
-        lang = doc_langid(self.spark, "", docs=docs).select(
-            "doc_id", "pred_class"
-        )
-        kept = (
-            q.filter(F.col("quality_score") >= self.quality_min)
-            .join(fp, "doc_id")
-            .join(lang, "doc_id")
-        )
-        w = Window.partitionBy("prefix_fp")
-        in_tick = (
-            kept.withColumn("canonical_id", F.min("doc_id").over(w))
-            .filter(F.col("doc_id") == F.col("canonical_id"))
-            .select("doc_id", "quality_score", "prefix_fp", "pred_class")
-        )
-        return in_tick.join(
-            self.ledger.read(except_tick=tick_id).select("prefix_fp"),
-            "prefix_fp",
-            "left_anti",
-        ).select("doc_id", "quality_score", "prefix_fp", "pred_class")
-
-    def commit(self, accepted: DataFrame, tick_id: str) -> None:
-        """Record the tick's accepted fingerprints idempotently (dynamic
-        tick-partition overwrite — a retried tick never duplicates)."""
-        self.ledger.commit_tick(accepted, tick_id)
-
-
 # --- cross-tick NEAR-dup (MinHash signature ledger) ---------------------------
 
 SIG_SCHEMA = T.StructType(

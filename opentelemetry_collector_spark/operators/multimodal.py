@@ -1,20 +1,19 @@
 """Multimodal-column plumbing: opaque ``binary`` payloads + typed metadata,
-processed by Arrow-batched ``mapInPandas`` kernels.
+processed by an Arrow-batched ``mapInPandas`` kernel.
 
 A 100 TB training-data pipeline carries images/audio/video as binary columns
-next to typed metadata, and runs decode / feature-extract / resize /
-frame-sample as vectorized Python over Arrow batches. The image/audio codec
-libraries are NOT in this container, so the *codec* step is a
-deterministic fake (clearly marked below); everything Spark-side — schema,
-binary column handling, Arrow batch shape, UDF signature, partitioning —
-is real and tested.
+next to typed metadata, and runs decode / feature-extract as vectorized
+Python over Arrow batches. The engine ships no image/audio codec library
+(PIL/ffmpeg decode, resize and frame sampling are out of scope), so the
+*codec* step is a deterministic fake (clearly marked below); everything
+Spark-side — schema, binary column handling, Arrow batch shape, UDF
+signature, partitioning — is real and tested.
 
 Design rules (the parts that matter at scale):
 * binary payloads stay opaque to Catalyst — metadata columns (format,
   n_bytes, checksum) are first-class so filters/pruning never touch bytes;
 * ``mapInPandas`` (not a scalar UDF) so one Python invocation handles a
-  whole Arrow batch and can drop/expand rows (corrupt-payload dead-letter,
-  frame sampling);
+  whole Arrow batch;
 * batch size is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
   — payload bytes dominate memory, so real deployments lower it per modality.
 """
@@ -59,7 +58,7 @@ def _make_fake_decode():
     Spark plumbing is unchanged.
 
     Returned as a fresh closure so cloudpickle ships it BY VALUE inside the
-    mapInPandas kernels — executors never need this module importable
+    mapInPandas kernel — executors never need this module importable
     (spark-submit --py-files works, but the driver contract must not
     depend on worker PYTHONPATH)."""
 
@@ -72,9 +71,6 @@ def _make_fake_decode():
         return w, h, frames
 
     return fake_decode
-
-
-_fake_decode = _make_fake_decode()  # driver-side/test alias
 
 
 def extract_features(media: DataFrame) -> DataFrame:
@@ -124,72 +120,6 @@ def extract_features(media: DataFrame) -> DataFrame:
         (F.md5("payload") == F.col("declared_md5")).alias("md5_ok"),
     )
     return base.mapInPandas(kernel, FEATURE_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_n: int = 8) -> DataFrame:
-    """Frame sampling: one output row per sampled frame (row-expanding
-    mapInPandas — the shape video pipelines need). Frames are the fake
-    decoder's frames; a real deployment decodes keyframes here."""
-    import pandas as pd
-
-    decode = _make_fake_decode()  # local binding -> pickled by value
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                payload = bytes(r.payload)
-                try:
-                    _w, _h, n = decode(payload, r.media_type)
-                except ValueError:
-                    continue
-                for f in range(0, n, every_n):
-                    # STUB: frame bytes = an 8-byte deterministic slice
-                    start = (f * 7) % max(len(payload) - 8, 1)
-                    rows.append((r.doc_id, f, payload[start : start + 8]))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_bytes"])
-
-    return media.mapInPandas(kernel, "doc_id long, frame_idx int, frame_bytes binary")
-
-
-def resize_media(media: DataFrame, target_w: int = 64, target_h: int = 64) -> DataFrame:
-    """Resize kernel: re-encode each payload at target dimensions.
-
-    STUB CODEC (like decode): the "resized" payload is a deterministic
-    byte-slice proportional to the target area — a real deployment swaps in
-    PIL/ffmpeg scaling; the Spark contract is what is under test: one
-    mapInPandas pass, payload-in/payload-out with updated metadata, rows
-    conserved, failures kept as null payloads for the dead-letter split."""
-    import pandas as pd
-
-    decode = _make_fake_decode()  # local binding -> pickled by value
-    tw, th = int(target_w), int(target_h)
-
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                payload = bytes(r.payload)
-                try:
-                    w, h, _ = decode(payload, r.media_type)
-                    # fake scale: output size proportional to target area
-                    n_out = max(8, (tw * th) // 256)
-                    resized = (payload * (n_out // max(len(payload), 1) + 1))[:n_out]
-                except ValueError:
-                    w = h = None
-                    resized = None
-                out.append((r.doc_id, r.media_type, w, h, tw, th, resized))
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "media_type", "orig_width", "orig_height",
-                         "width", "height", "payload"],
-            )
-
-    return media.mapInPandas(
-        kernel,
-        "doc_id long, media_type string, orig_width int, orig_height int, "
-        "width int, height int, payload binary",
-    )
 
 
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -565,7 +565,9 @@ def _ingest_response(
     text) — the dead-letter predicate. A request that fails unmarshal
     outright is a FULL reject — the reference answers that with an error
     status, not partial success — surfaced as accepted/rejected NULL, the
-    unmarshal message, and a NULL response.
+    unmarshal message, and a NULL response. A NULL request cell (no body)
+    is the same full reject with one message on both wires,
+    ``unmarshal: NULL request``, answered before the wire decoder runs.
 
     Scale: one mapInPandas pass over the requests, no shuffle; pairs with
     the request decoder (same input, second action) the way the
@@ -575,6 +577,11 @@ def _ingest_response(
         for pdf in batches:
             rows = []
             for conv_id, blob in zip(pdf["conv_id"], pdf[in_col]):
+                if blob is None:
+                    rows.append(
+                        (conv_id, None, None, "unmarshal: NULL request", None)
+                    )
+                    continue
                 try:
                     requests = wire.decode_logs(blob)
                 except Exception as e:  # malformed request: full reject

@@ -134,8 +134,9 @@ def sft_loss_mask(
     )
 
 
-# Runs verbatim in DuckDB against a `transcripts` view (register one from
-# events via transcripts_oracle_cte(), or from a fixture frame directly).
+# Runs verbatim in DuckDB against a `transcripts` view (create one over an
+# `events` view with sources/transcripts.py's TRANSCRIPTS_FROM_EVENTS_SQL,
+# or register a fixture frame directly).
 SFT_LOSS_MASK_ORACLE = f"""
 SELECT conv_id, turn_idx, role, n_tokens,
     cast(tok_end - n_tokens AS bigint) AS tok_start,
@@ -165,9 +166,14 @@ def conversation_pack(
 
     Rollup to one row per conversation (partial agg — map-side combine
     collapses each task before the only conv-keyed shuffle), hash-route
-    into {CONV_PACK_BUCKETS} packing streams, then the corpus_pack greedy
-    rule per stream: deterministic md5 order, integer cumsum,
-    ``pack_seq`` = the budget window of the conversation's start offset.
+    into {CONV_PACK_BUCKETS} packing streams, then per stream a
+    deterministic md5 order and an integer cumsum. A pack is a start-offset
+    window: ``pack_seq`` = floor(start offset / budget), so a pack holds
+    every conversation that STARTS inside its budget window and can overrun
+    the budget (greedy close-on-overflow is sequential per stream and is
+    not attempted). ``over_budget`` flags every row of a pack whose summed
+    ``n_tokens`` exceeds the budget; ``is_oversize`` flags a conversation
+    over the budget on its own.
     """
     from pyspark.sql.window import Window
 
@@ -192,39 +198,48 @@ def conversation_pack(
         .orderBy("ord_key")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = conv.withColumn("cum_tokens", F.sum("n_tokens").over(w))
+    cum = conv.withColumn("cum_tokens", F.sum("n_tokens").over(w)).withColumn(
+        "pack_seq",
+        F.floor((F.col("cum_tokens") - F.col("n_tokens")) / budget).cast("int"),
+    )
+    # partitioned by pack_bucket first: rides the stream window's exchange
+    pack = Window.partitionBy("pack_bucket", "pack_seq")
     return cum.select(
         "conv_id",
         "pack_bucket",
         "n_tokens",
         "cum_tokens",
-        F.floor((F.col("cum_tokens") - F.col("n_tokens")) / budget)
-        .cast("int")
-        .alias("pack_seq"),
+        "pack_seq",
         (F.col("n_tokens") > budget).alias("is_oversize"),
+        (F.sum("n_tokens").over(pack) > budget).alias("over_budget"),
     )
 
 
 CONVERSATION_PACK_ORACLE = f"""
-SELECT conv_id, pack_bucket, n_tokens,
-    cast(cum_tokens AS bigint) AS cum_tokens,
-    cast(floor((cum_tokens - n_tokens) / {CONV_PACK_BUDGET_TOKENS}) AS int)
-        AS pack_seq,
-    n_tokens > {CONV_PACK_BUDGET_TOKENS} AS is_oversize
+SELECT *,
+    sum(n_tokens) OVER (PARTITION BY pack_bucket, pack_seq)
+        > {CONV_PACK_BUDGET_TOKENS} AS over_budget
 FROM (
     SELECT conv_id, pack_bucket, n_tokens,
-        sum(n_tokens) OVER (PARTITION BY pack_bucket ORDER BY ord_key
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
+        cast(cum_tokens AS bigint) AS cum_tokens,
+        cast(floor((cum_tokens - n_tokens) / {CONV_PACK_BUDGET_TOKENS}) AS int)
+            AS pack_seq,
+        n_tokens > {CONV_PACK_BUDGET_TOKENS} AS is_oversize
     FROM (
-        SELECT conv_id, sum(n_tokens) AS n_tokens,
-            cast({_hash_bucket_sql('conv_id', CONV_PACK_BUCKETS, ':cpack')}
-                AS int) AS pack_bucket,
-            md5(conv_id || ':cpack-ord') AS ord_key
+        SELECT conv_id, pack_bucket, n_tokens,
+            sum(n_tokens) OVER (PARTITION BY pack_bucket ORDER BY ord_key
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
         FROM (
-            SELECT conv_id, {_TURN_TOKENS_SQL} AS n_tokens
-            FROM transcripts
-        ) t
-        GROUP BY conv_id
-    ) c
-) q
+            SELECT conv_id, sum(n_tokens) AS n_tokens,
+                cast({_hash_bucket_sql('conv_id', CONV_PACK_BUCKETS, ':cpack')}
+                    AS int) AS pack_bucket,
+                md5(conv_id || ':cpack-ord') AS ord_key
+            FROM (
+                SELECT conv_id, {_TURN_TOKENS_SQL} AS n_tokens
+                FROM transcripts
+            ) t
+            GROUP BY conv_id
+        ) c
+    ) q
+) p
 """

@@ -188,40 +188,3 @@ def read_otlp_jsonl(
         spark.read.text(path).withColumnRenamed("value", "otlp_json")
     )
 
-
-def ingest_otlp_jsonl(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """Ingest with the per-request partial-success surface: returns
-    ``(decoded, responses)`` where responses carries one row per ingest
-    request — in the file model, one input FILE is one export request —
-    with (accepted, rejected, first_error), mirroring the receiver's
-    ExportResponse partial-success fields (plogotlp/response.go
-    ExportPartialSuccess: rejected_log_records + error_message;
-    otlpreceiver/otlp.go returns it per Export call).
-
-    A line is rejected when it fails JSON decode or carries no conv_id
-    identity (the codec-boundary dead-letter predicate). first_error is
-    the lexicographically-smallest offending line (deterministic).
-
-    Scale: responses is one partial-aggregable groupBy on the file name —
-    map-side combine collapses each scan partition to one row per file.
-    """
-    from pyspark.sql import functions as F
-
-    from opentelemetry_collector_spark.operators.observe import (
-        LOG_RECORD_JSON_SCHEMA,
-    )
-
-    raw = spark.read.text(path).select(
-        F.input_file_name().alias("request_file"),
-        F.col("value").alias("otlp_json"),
-    )
-    decoded = from_otlp_json(raw.select("otlp_json"))
-    rej = F.from_json("otlp_json", LOG_RECORD_JSON_SCHEMA)["conv_id"].isNull()
-    responses = raw.groupBy("request_file").agg(
-        F.sum(F.when(~rej, 1).otherwise(0)).cast("int").alias("accepted"),
-        F.sum(F.when(rej, 1).otherwise(0)).cast("int").alias("rejected"),
-        F.min(F.when(rej, F.col("otlp_json"))).alias("first_error"),
-    )
-    return decoded, responses

@@ -108,7 +108,3 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     valid argument here."""
     return spark.read.parquet(path)
 
-
-def transcripts_oracle_cte() -> str:
-    """`WITH transcripts AS (...)` prefix for DuckDB oracle SQL."""
-    return f"WITH transcripts AS ({TRANSCRIPTS_FROM_EVENTS_SQL})"

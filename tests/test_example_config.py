@@ -145,6 +145,40 @@ def test_cli_stream_mode_refuses_an_events_source(tmp_path):
     assert not any(tmp_path.iterdir())
 
 
+def test_cli_stream_mode_honours_max_records_per_file(spark, tmp_path):
+    """--mode stream drains a transcripts table once (availableNow) and
+    writes its sinks under the --max-records-per-file cap: every routed
+    row lands, and no sink file holds more rows than the cap."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    from opentelemetry_collector_spark.sources.transcripts import (
+        events_to_transcripts,
+    )
+
+    src = str(tmp_path / "transcripts")
+    events_to_transcripts(spark, SF_SMOKE).coalesce(2).write.parquet(src)
+    out = tmp_path / "out"
+    cap = 50
+    proc = subprocess.run(
+        [sys.executable, "-m", "opentelemetry_collector_spark",
+         "--source", src, "--output", str(out), "--mode", "stream",
+         "--source-kind", "transcripts", "--max-records-per-file", str(cap),
+         "--master", "local[2]", "--shuffle-partitions", "2"],
+        capture_output=True, text=True, timeout=240,
+        cwd=str(Path(__file__).resolve().parent.parent),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1])["mode"] == "stream"
+    sizes = [pq.read_metadata(str(f)).num_rows
+             for f in (out / "sinks").rglob("*.parquet")]
+    assert sum(sizes) == spark.read.parquet(src).count() > cap
+    assert max(sizes) <= cap
+
+
 def test_cli_flag_mode_batch_run_and_resume(tmp_path):
     """Flag mode builds the default sinks + metrics graph and runs it
     through run_service: the report comes from this run's ledger rows, a

@@ -63,127 +63,6 @@ def test_double_commit_does_not_duplicate(spark, deduper):
     assert deduper.metrics() == {"accepted_docs": 2, "ticks": 1}
 
 
-# --- cross-tick curation (streaming twin of corpus_curation) ------------------
-
-
-def test_tick_by_tick_curation_equals_batch(spark, tmp_path):
-    """VERDICT r03 task 7: the curation pipeline (quality gate -> near-dup
-    canonical -> class tag) run tick-by-tick over IncrementalSource equals
-    the one-shot batch corpus_curation on the same corpus, when ticks
-    arrive in doc_id order (append-only ingest)."""
-    from pyspark.sql import functions as F
-
-    from opentelemetry_collector_spark.operators.incremental_dedup import (
-        IncrementalCurator,
-    )
-    from opentelemetry_collector_spark.operators.textstats import (
-        corpus_curation,
-    )
-    from opentelemetry_collector_spark.sources.incremental import (
-        IncrementalSource,
-    )
-    from tests.conftest import SF_CORRECT
-
-    docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-    batch = corpus_curation(spark, SF_CORRECT).toPandas()
-
-    # three doc_id-ordered tick files landing one at a time
-    data_path = str(tmp_path / "incoming")
-    splits = [(0, 160), (160, 320), (320, 10**9)]
-    src = IncrementalSource(
-        spark, data_path, str(tmp_path / "file_ledger")
-    )
-    curator = IncrementalCurator(spark, str(tmp_path / "fp_ledger"))
-    out_path = str(tmp_path / "accepted")
-
-    for k, (lo, hi) in enumerate(splits):
-        (
-            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{data_path}/part{k}")
-        )
-        pending = src.pending()
-        assert pending is not None
-
-        def action(df, _tick=pending.tick_id):
-            accepted = curator.curate(df, _tick)
-            accepted.write.mode("append").parquet(out_path)
-            curator.commit(accepted, _tick)
-
-        src.process_new(action, pending=pending)
-
-    import pandas as pd
-
-    streamed = spark.read.parquet(out_path).toPandas()
-    cols = sorted(batch.columns)
-    pd.testing.assert_frame_equal(
-        streamed[cols].sort_values("doc_id").reset_index(drop=True),
-        batch[cols].sort_values("doc_id").reset_index(drop=True),
-        check_dtype=False,
-    )
-
-
-def test_curation_retry_is_deterministic(spark, tmp_path):
-    """Crash-before-commit: re-running curate over the same tick yields
-    the same accepted set (the ledger only moves at commit)."""
-    from opentelemetry_collector_spark.operators.incremental_dedup import (
-        IncrementalCurator,
-    )
-    from tests.conftest import SF_CORRECT
-
-    docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet").limit(100)
-    curator = IncrementalCurator(spark, str(tmp_path / "fp_ledger"))
-    a1 = curator.curate(docs, "t1")
-    curator.commit(a1, "t1")
-    first = {r.doc_id for r in curator.curate(docs, "t2").collect()}
-    retry = {r.doc_id for r in curator.curate(docs, "t2").collect()}
-    assert first == retry == set()  # everything already accepted in t1
-
-
-def test_stateless_curation_stages_commute_with_ticks(spark, tmp_path):
-    """Round-5 composition: normalize -> gopher_filter are per-row stages,
-    so running them inside each tick BEFORE IncrementalCurator equals the
-    one-shot batch normalize -> gopher -> corpus_curation over the full
-    corpus (doc_id-ordered ticks, the curator's parity regime)."""
-    from pyspark.sql import functions as F
-
-    from opentelemetry_collector_spark.operators.incremental_dedup import (
-        IncrementalCurator,
-    )
-    from opentelemetry_collector_spark.operators.quality import (
-        doc_gopher_rules,
-        doc_normalize,
-    )
-    from opentelemetry_collector_spark.operators.textstats import (
-        corpus_curation,
-    )
-    from tests.conftest import SF_CORRECT
-
-    docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-
-    def stages(df):
-        normed = doc_normalize(spark, "", docs=df, project=False).drop(
-            "norm_hash"
-        )
-        return doc_gopher_rules(spark, "", docs=normed, project=False)
-
-    batch = {
-        (r.doc_id, r.prefix_fp)
-        for r in corpus_curation(spark, "", docs=stages(docs)).collect()
-    }
-    assert batch, "the staged batch must accept something"
-
-    curator = IncrementalCurator(spark, str(tmp_path / "fp_ledger"))
-    ticked = set()
-    for lo, hi in [(0, 160), (160, 320), (320, 10**9)]:
-        tick = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        accepted = curator.curate(stages(tick), f"tick{lo}")
-        ticked |= {(r.doc_id, r.prefix_fp) for r in accepted.collect()}
-        curator.commit(accepted, f"tick{lo}")
-    assert ticked == batch
-
-
 def test_incremental_hll_ticks_equal_batch_sketch(spark, tmp_path):
     """Cross-tick HLL: committing per-tick registers and merging by max
     must reproduce the one-shot batch sketch EXACTLY (same registers,
@@ -559,41 +438,31 @@ def test_minhash_dedup_over_incremental_ticks_with_crash(spark, tmp_path):
     assert src.pending() is None  # everything committed at the file layer
 
 
-@pytest.mark.parametrize("owner", ["exact", "curator", "minhash"])
+@pytest.mark.parametrize("owner", ["exact", "minhash"])
 def test_retry_after_commit_accepts_the_same_docs(spark, tmp_path, owner):
     """A crash after ``commit`` (before the tick is recorded upstream)
     retries the tick over a ledger that already holds it. The retry must
     accept the same docs again — not match the tick's own ledger rows and
     erase the tick with its re-commit."""
-    from pyspark.sql import functions as F
-
     from opentelemetry_collector_spark.operators.incremental_dedup import (
-        IncrementalCurator,
         IncrementalMinHashDeduper,
     )
-    from tests.conftest import SF_CORRECT
 
     path = str(tmp_path / "ledger")
     if owner == "exact":
         d, docs = IncrementalDeduper(spark, path), _docs(spark, [(1, "aa"), (2, "bb")])
-    elif owner == "minhash":
+    else:
         d = IncrementalMinHashDeduper(spark, path)
         docs = _docs(spark, [(1, _BASE), (2, _NOVEL)])
-    else:
-        d = IncrementalCurator(spark, path)
-        docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet").filter(
-            F.col("doc_id") < 100
-        )
-    accept = d.curate if owner == "curator" else d.dedup
 
     def accepted_ids():
-        return sorted(r.doc_id for r in accept(docs, "t1").collect())
+        return sorted(r.doc_id for r in d.dedup(docs, "t1").collect())
 
     first = accepted_ids()
     assert first
-    d.commit(accept(docs, "t1"), "t1")
+    d.commit(d.dedup(docs, "t1"), "t1")
     assert accepted_ids() == first
-    d.commit(accept(docs, "t1"), "t1")  # the retry's own re-commit
+    d.commit(d.dedup(docs, "t1"), "t1")  # the retry's own re-commit
     assert sorted(r.doc_id for r in d.ledger.read().collect()) == first
 
 

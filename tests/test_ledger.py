@@ -17,10 +17,8 @@ from opentelemetry_collector_spark.operators.bloom import (
     IncrementalBloom,
 )
 from opentelemetry_collector_spark.operators.incremental_dedup import (
-    CURATION_FP_SCHEMA,
     FP_SCHEMA,
     SIG_SCHEMA,
-    IncrementalCurator,
     IncrementalDeduper,
     IncrementalMinHashDeduper,
 )
@@ -49,7 +47,6 @@ OWNERS = {
         CHECKPOINT_SCHEMA,
     ),
     "IncrementalDeduper": (IncrementalDeduper, FP_SCHEMA),
-    "IncrementalCurator": (IncrementalCurator, CURATION_FP_SCHEMA),
     "IncrementalMinHashDeduper": (IncrementalMinHashDeduper, SIG_SCHEMA),
     "IncrementalBloom": (IncrementalBloom, BLOOM_LEDGER_SCHEMA),
     "IncrementalSketcher": (IncrementalSketcher, HLL_LEDGER_SCHEMA),

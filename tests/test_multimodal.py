@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: binary payload handling, Arrow batch shape,
-row-expanding frame sampling, corrupt-payload dead-letter path."""
+corrupt-payload dead-letter path."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators.multimodal import (
     extract_features,
-    frame_sample,
     media_features,
     synth_media,
 )
@@ -46,34 +45,3 @@ def test_checksum_mismatch_flagged(spark):
     # corrupt rows are kept, not dropped (dead-letter split is downstream)
     assert feats.count() == media.count()
 
-
-def test_frame_sample_expands_video_rows(spark):
-    media = synth_media(spark, SF_SMOKE)
-    frames = frame_sample(media, every_n=8)
-    per_doc = frames.groupBy("doc_id").count()
-    # images always yield exactly 1 frame
-    img_ids = {r.doc_id for r in media.filter("media_type = 'image/png'")
-               .select("doc_id").collect()}
-    for r in per_doc.collect():
-        if r.doc_id in img_ids:
-            assert r["count"] == 1
-    # frame bytes are bounded slices of the payload
-    assert frames.filter(F.length("frame_bytes") > 8).count() == 0
-    # deterministic across runs
-    a = sorted(map(tuple, frames.collect()))
-    b = sorted(map(tuple, frame_sample(media, every_n=8).collect()))
-    assert a == b
-
-
-def test_resize_conserves_rows_and_sets_dims(spark):
-    from opentelemetry_collector_spark.operators.multimodal import resize_media
-
-    media = synth_media(spark, SF_SMOKE)
-    resized = resize_media(media, target_w=32, target_h=32)
-    assert resized.count() == media.count()
-    ok = resized.filter(F.col("payload").isNotNull())
-    assert ok.filter((F.col("width") != 32) | (F.col("height") != 32)).count() == 0
-    # output payload size is the deterministic fake-scale size
-    assert ok.filter(F.length("payload") != max(8, (32 * 32) // 256)).count() == 0
-    # original dims preserved for lineage
-    assert ok.filter(F.col("orig_width").isNull()).count() == 0

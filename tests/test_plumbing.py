@@ -379,3 +379,98 @@ def test_otlp_json_key_names_have_one_home():
         if rel != home:
             text = path.read_text()
             assert not [k for k in keys if k in text], rel
+
+
+# Public top-level names whose only callers are tests, each with the aim it
+# serves. Any other such name is test-only code: delete it with its tests,
+# or name its aim here.
+TEST_ONLY_AIMS = {
+    "IncrementalDeduper": "aim 3: exact cross-tick dedup ledger, "
+    "retry-idempotent at every crash point",
+    "IncrementalSketcher": "aim 3: cross-tick HLL ledger, compaction keeps "
+    "one partition per tick",
+    "decode_log_records": "environment gate: the native spark-protobuf "
+    "decoder when its jar is on the classpath",
+    "get_catalog": "environment gate: the Iceberg catalog when its jar is on "
+    "the classpath, bucketed parquet otherwise",
+    "observed_pipeline": "ROADMAP item 2: becomes run_service's "
+    "per-boundary counts, or goes",
+    "attach_obs_listener": "ROADMAP item 2: stream-mode receiver counters",
+    "detach_obs_listener": "ROADMAP item 2: stream-mode receiver counters",
+    "classify_http_error": "COVERAGE §2.2: the OTLP/HTTP exporter's "
+    "retryable/permanent error split",
+    "has_flag": "COVERAGE §2.7: flags-word scalar functions",
+    "trace_flags": "COVERAGE §2.7: flags-word scalar functions",
+    "otlp_ingest_response": "wire-codec pair: protobuf wire of "
+    "otlp_ingest_response_json",
+    "to_otlp_trace_protobuf": "wire-codec pair: protobuf wire of "
+    "to_otlp_trace_json",
+    "from_otlp_trace_protobuf": "wire-codec pair: decoder of "
+    "to_otlp_trace_protobuf",
+    "to_otlp_metric_protobuf": "wire-codec pair: protobuf wire of "
+    "to_otlp_metric_json",
+    "from_otlp_metric_protobuf": "wire-codec pair: decoder of "
+    "to_otlp_metric_protobuf",
+    "decode_logs_response": "wire-codec pair: decoder of encode_logs_response",
+    "logs_response_from_otlp_json": "wire-codec pair: decoder of "
+    "logs_response_to_otlp_json",
+}
+
+
+def _public_names_and_outside_refs():
+    """(public top-level def/class name -> module, every identifier that
+    code outside tests references): the package (a definition's own body
+    excluded), __spark_entry__.py, the benchmarks, the scripts and the
+    example configs."""
+    import ast
+    import pathlib
+    import re
+
+    import opentelemetry_collector_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    repo = root.parent
+
+    def refs(node, own=None):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rsplit(".", 1)[-1])
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str) \
+                    and n.value.isidentifier():
+                out.add(n.value)
+        return out - {own}
+
+    defs, used = {}, set()
+    kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(repo).as_posix()
+        for stmt in ast.parse(path.read_text()).body:
+            own = stmt.name if isinstance(stmt, kinds) else None
+            if own and not own.startswith("_"):
+                defs[own] = rel
+            used |= refs(stmt, own)
+    outside = [repo / "__spark_entry__.py", repo / "bench.py"] + [
+        p for d in ("perfbench", "scripts") for p in sorted((repo / d).rglob("*.py"))
+        if "tests" not in p.relative_to(repo).parts
+    ]
+    for path in outside:
+        used |= refs(ast.parse(path.read_text()))
+    for path in sorted((repo / "examples").glob("*.yaml")):
+        used |= set(re.findall(r"[A-Za-z_]\w*", path.read_text()))
+    return defs, used
+
+
+def test_public_names_have_a_caller_outside_tests():
+    """Every public top-level name in the package is reached by the CLI,
+    run_service, the query registry, the benchmarks, the scripts or the
+    example configs, or is listed in TEST_ONLY_AIMS with its aim; a listed
+    name that is gone or has gained such a caller is a stale entry."""
+    defs, used = _public_names_and_outside_refs()
+    test_only = {name: rel for name, rel in defs.items() if name not in used}
+    assert {n: r for n, r in test_only.items() if n not in TEST_ONLY_AIMS} == {}
+    assert sorted(set(TEST_ONLY_AIMS) - set(test_only)) == []

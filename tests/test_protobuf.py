@@ -519,31 +519,26 @@ def test_otlp_ingest_response_partial_success(spark, parsed):
     assert br.response_protobuf is None
 
 
-def test_ingest_otlp_jsonl_partial_success(spark, parsed, tmp_path):
-    """JSONL ingest twin: one input file == one request; malformed lines
-    count as rejected with the offending line surfaced."""
-    from opentelemetry_collector_spark.sources.jsonl import (
-        ingest_otlp_jsonl,
-        write_otlp_jsonl,
+def test_null_request_cell_is_one_reject_on_both_wires(spark):
+    """A NULL request cell (no body) is a full reject answered before the
+    wire decoder runs: the same row on the protobuf and the JSON wire, with
+    one engine message instead of a decoder's TypeError text."""
+    from opentelemetry_collector_spark.operators.protobuf import (
+        otlp_ingest_response,
+        otlp_ingest_response_json,
     )
 
-    path = str(tmp_path / "wire")
-    write_otlp_jsonl(parsed, path)
-    # corrupt: add one file with a malformed line and one valid-but-no-id
-    (tmp_path / "wire" / "part-corrupt.txt").write_text(
-        'not json at all\n{"turn_idx": 1, "body": "no id"}\n'
+    pb = spark.createDataFrame(
+        [("conv-x", None)], "conv_id string, otlp_request binary"
     )
-    decoded, responses = ingest_otlp_jsonl(spark, path)
-    rs = responses.collect()
-    corrupt = [r for r in rs if "corrupt" in r.request_file]
-    clean = [r for r in rs if "corrupt" not in r.request_file]
-    assert len(corrupt) == 1 and corrupt[0].rejected == 2
-    assert corrupt[0].accepted == 0
-    assert corrupt[0].first_error is not None
-    assert all(r.rejected == 0 and r.first_error is None for r in clean)
-    assert sum(r.accepted for r in rs) == parsed.count()
-    # decoded frame carries the rejected lines as NULL-identity rows
-    assert decoded.filter("conv_id IS NULL").count() == 2
+    js = spark.createDataFrame(
+        [("conv-x", None)], "conv_id string, otlp_json_request string"
+    )
+    (pr,) = otlp_ingest_response(pb).collect()
+    (jr,) = otlp_ingest_response_json(js).collect()
+    assert tuple(pr) == tuple(jr) == (
+        "conv-x", None, None, "unmarshal: NULL request", None
+    )
 
 
 def test_native_protobuf_gate(spark):

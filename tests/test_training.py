@@ -166,6 +166,35 @@ def test_conversation_pack_greedy_recount_and_oversize(spark):
             cum += r.n_tokens
 
 
+def test_conversation_pack_flags_over_budget_packs(spark):
+    """A pack is a start-offset window, so conversations each under the
+    budget can share a pack whose summed n_tokens overruns it: every row of
+    such a pack carries over_budget, as a python recount per (pack_bucket,
+    pack_seq) and the DuckDB oracle say."""
+    # 1204 tokens each: start offsets 0, 1204, 2408, ... put two
+    # conversations in each pack of a stream, 2408 tokens > 2048
+    rows = [(f"pack-{i:02d}", 0, "user", "y" * 4800) for i in range(40)]
+    tx = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string"
+    )
+    got = conversation_pack(spark, "", transcripts=tx)
+    packs: dict[tuple, list] = {}
+    for r in got.collect():
+        packs.setdefault((r.pack_bucket, r.pack_seq), []).append(r)
+    for members in packs.values():
+        over = sum(r.n_tokens for r in members) > CONV_PACK_BUDGET_TOKENS
+        assert [r.over_budget for r in members] == [over] * len(members)
+    shared = [r for members in packs.values() if len(members) > 1
+              for r in members]
+    assert shared
+    assert all(r.over_budget and not r.is_oversize for r in shared)
+
+    con = duckdb.connect()
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text"])
+    con.register("transcripts", pdf)
+    _cmp(got, CONVERSATION_PACK_ORACLE, con)
+
+
 def test_pack_totals_equal_last_sft_span_end(spark):
     """The cross-op invariant the shared token model buys: a packed
     conversation's n_tokens == the last turn's tok_end."""
