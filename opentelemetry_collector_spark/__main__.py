@@ -56,6 +56,25 @@ def build_arg_parser() -> argparse.ArgumentParser:
     return p
 
 
+# batch-only flags: the stream branch reads --source, --output and
+# --max-records-per-file, so passing any of these with --mode stream is an
+# error, not a silent no-op
+_STREAM_REFUSED = ("n_buckets", "buckets_per_wave", "bucket_seconds",
+                   "attempt_timeout", "adaptive_salting", "run_id", "resume")
+
+
+def _given_flags(argv: list[str] | None, dests: tuple[str, ...]) -> list[str]:
+    """The option strings, among ``dests``, that ``argv`` sets: a re-parse
+    with an unset marker as their default (so an explicit default value or
+    an abbreviated flag still counts as given)."""
+    unset = object()
+    parser = build_arg_parser()
+    parser.set_defaults(**{d: unset for d in dests})
+    args = parser.parse_args(argv)
+    return ["--" + d.replace("_", "-") for d in dests
+            if getattr(args, d) is not unset]
+
+
 def flag_service_config(args: argparse.Namespace, run_id: str):
     """The flag CLI's default graph: one receiver feeding two pipelines,
     ``sinks`` (checkpointed per-sink tables) and ``metrics`` (the
@@ -107,6 +126,10 @@ def main(argv: list[str] | None = None) -> int:
         # the stream source reads the path under the transcript schema; an
         # sf dir of events would stream every row into dead_letter
         parser.error("--mode stream needs --source-kind transcripts")
+    if args.config is None and args.mode == "stream":
+        refused = _given_flags(argv, _STREAM_REFUSED)
+        if refused:
+            parser.error(f"--mode stream does not use {', '.join(refused)}")
 
     from pyspark.sql import SparkSession
 
@@ -155,7 +178,13 @@ def main(argv: list[str] | None = None) -> int:
             max_records_per_file=args.max_records_per_file,
         )
         q.awaitTermination()
-        report = {"mode": "stream", "wall_s": round(time.perf_counter() - t0, 2)}
+        report = {
+            "mode": "stream",
+            "wall_s": round(time.perf_counter() - t0, 2),
+            # availableNow with no per-trigger file cap drains the source
+            # in one micro-batch, well inside recentProgress's window
+            "n_input": sum(p["numInputRows"] for p in q.recentProgress),
+        }
     else:
         import uuid
 

@@ -1,6 +1,7 @@
 """Vector-similarity operators over the ``embeddings`` table
 (vec_id, embedding: array<float> 64-dim, label): brute-force cosine top-k,
-LSH-bucketed approximate top-k, and embedding-cosine near-dup pairs.
+IVF approximate top-k, int8 quantization, k-means and product
+quantization, SemDeDup near-dup pairs, and MMR re-ranking.
 
 Spark-first design:
 * all vector math is native higher-order functions (``zip_with`` +
@@ -10,14 +11,21 @@ Spark-first design:
 * brute-force top-k: the (small) query set is **broadcast** against the full
   table — one scan of the big side, no shuffle of the corpus; per-query
   ranking is a window over query_id.
-* the scale path is **random-hyperplane LSH**: a deterministic md5-derived
-  +/-1 projection matrix assigns every vector a bucket id; top-k runs inside
-  matching buckets only. At 10^9 vectors the bucket equality join replaces
-  the O(n*q) scan with a hash-partitioned join on bucket id; recall is
-  tunable via n_planes / multi-probe.
-* a Pandas-UDF (Arrow/numpy) cosine kernel is provided for the 100 TB hot
-  path (matrix multiply per batch beats per-row folds by ~10-100x); the
-  native-SQL variants remain the oracle-checkable reference semantics.
+* the scale path is **IVF**: one broadcast of the seed centroids assigns
+  every vector its nearest cells (``_ivf_cells``, the one coarse
+  quantizer); top-k runs inside the query's probed cells and SemDeDup's
+  IVF variant blocks on the home cell. At 10^9 vectors the cell equality
+  join replaces the O(n*q) scan with a hash-partitioned join on cell id;
+  recall is tunable via the probe count. It beat random-hyperplane LSH on
+  both recall@5 and wall time at sf0.01 and sf0.1 (BENCH.md), so it is the
+  only bucketed top-k.
+* k-means and product quantization share one Lloyd loop (``_pq_train``):
+  k-means is PQ with one subspace.
+* a Pandas-UDF (Arrow/numpy) cosine kernel is provided for the hot path
+  (one matmul per batch; measured 3.8x faster than the SQL fold scan at
+  100k vectors, 2.9 s vs 10.8 s on local[4], BENCH.md); the native-SQL
+  scan stays as the oracle-checkable reference that ``ann_recall``
+  measures against.
 
 No reference analog (SURVEY §2.8 — the collector has no vector ops); these
 are the training-data-pipeline ANN requirements.
@@ -25,16 +33,12 @@ are the training-data-pipeline ANN requirements.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DIM = 64
 TOPK = 5
 N_QUERIES = 10  # demo query set: vec_id < 10
-NEARDUP_COS = 0.35  # tuned to the synthetic corpus (max within-label cos ~0.47)
-N_PLANES = 6  # LSH: 2^6 = 64 buckets
 
 
 def _emb(spark: SparkSession, sf_dir: str, id_col: str = "vec_id",
@@ -133,192 +137,7 @@ SELECT query_id, data_id, cos, rk FROM (
 """
 
 
-# --- LSH planes (shared by ANN + embedding dedup) ---------------------------
-
-
-def _planes() -> list[list[float]]:
-    """Deterministic +/-1 hyperplanes from md5 parity (shared with oracle)."""
-    planes = []
-    for h in range(N_PLANES):
-        row = []
-        for i in range(DIM):
-            digest = hashlib.md5(f"{h}:{i}".encode()).hexdigest()
-            row.append(1.0 if digest[0] in "01234567" else -1.0)
-        planes.append(row)
-    return planes
-
-
-def _bucket(vec_col: str) -> Column:
-    """LSH bucket id: sign bit per hyperplane, packed into an int."""
-    acc = F.lit(0)
-    for h, coeffs in enumerate(_planes()):
-        arr = F.array(*[F.lit(c) for c in coeffs])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), arr, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        acc = acc + F.when(dot > 0, F.lit(1 << h)).otherwise(F.lit(0))
-    return acc.cast("int")
-
-
-def _planes_sql() -> str:
-    """DuckDB literal for the same plane matrix: list of DOUBLE lists."""
-    rows = []
-    for coeffs in _planes():
-        rows.append("[" + ", ".join(f"{c:.1f}" for c in coeffs) + "]")
-    return "[" + ", ".join(rows) + "]"
-
-
-# --- embedding-cosine near-dup ---------------------------------------------
-
-
-def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs with cosine >= {NEARDUP_COS}, candidates blocked by
-    the random-hyperplane LSH bucket (same ``_bucket`` the ANN path uses).
-
-    Plan shape: bucket assignment is a narrow per-row projection; the
-    candidate join is an EQUALITY join on bucket id — hash-partitioned
-    shuffle, O(sum of bucket^2) verify work instead of the previous
-    all-pairs-within-label block whose B^2 blowup did not survive scale.
-    Expected bucket size is n / 2^{N_PLANES}, so per-bucket verify stays
-    bounded as long as N_PLANES grows with log2(n) — the same knob (and
-    math) as the simhash bands. Recall per pair is (1 - theta/pi)^{N_PLANES}
-    for angle theta; raise it with multi-probe (flip one plane bit per
-    probe) when the deployment needs closer-to-exhaustive recall — the
-    oracle applies the identical bucketing, so parity is exact by
-    construction."""
-    a = (
-        _emb(spark, sf_dir, "doc_a", "va")
-        .withColumn("block", _bucket("va"))
-        .select("doc_a", "va", "block")
-    )
-    b = (
-        _emb(spark, sf_dir, "doc_b", "vb")
-        .withColumn("block", _bucket("vb"))
-        .select("doc_b", "vb", "block")
-    )
-    return (
-        a.join(b, "block")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.round(_cos("va", "vb"), 6).alias("cos"))
-        .filter(F.col("cos") >= NEARDUP_COS)
-    )
-
-
-DEDUP_EMBEDDING_ORACLE = f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> cast(x AS double)) AS v
-    FROM embeddings
-),
-bucketed AS (
-    SELECT vec_id, v,
-        cast(list_aggregate(list_transform(range(1, {N_PLANES} + 1), h ->
-            CASE WHEN list_aggregate(list_transform(range(1, {DIM} + 1),
-                i -> v[i] * ({_planes_sql()})[h][i]), 'sum') > 0
-            THEN (1 << (h - 1)) ELSE 0 END), 'sum') AS int) AS block
-    FROM e
-)
-SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-    round({_cos_sql('a.v', 'b.v')}, 6) AS cos
-FROM bucketed a JOIN bucketed b USING (block)
-WHERE a.vec_id < b.vec_id
-  AND round({_cos_sql('a.v', 'b.v')}, 6) >= {NEARDUP_COS}
-"""
-
-
-# --- LSH-bucketed ANN (the scale path) --------------------------------------
-
-
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-{TOPK}: candidates restricted to the query's LSH
-    bucket plus its {N_PLANES} Hamming-distance-1 neighbor buckets
-    (multi-probe LSH, Lv et al. VLDB 2007), ranked by exact cosine
-    inside the probed buckets.
-
-    Why multi-probe: the ``ann_recall`` harness measured single-probe
-    recall@{TOPK} at ~0.06 on the fixture corpus (64 buckets, one probe
-    — near neighbors that disagree with the query on ANY plane are
-    invisible). Flipping one plane bit per probe recovers exactly the
-    neighbors lost to one marginal hyperplane — the highest-probability
-    misses — for a bounded 1+{N_PLANES} x candidate cost, still an
-    EQUALITY join on bucket id (the 10^9-vector plan; only the ≤10-row
-    query side is exploded, the corpus is scanned once)."""
-    from pyspark.sql.window import Window
-
-    data = (
-        _emb(spark, sf_dir, "data_id", "dv")
-        .withColumn("bucket", _bucket("dv"))
-        .withColumn("dnorm", _norm("dv"))
-    )
-    probe_set = F.array(
-        F.col("home"),
-        *[
-            F.col("home").bitwiseXOR(F.lit(1 << h)).cast("int")
-            for h in range(N_PLANES)
-        ],
-    )
-    q = (
-        _emb(spark, sf_dir, "query_id", "qv")
-        .filter(F.col("query_id") < N_QUERIES)
-        .withColumn("home", _bucket("qv"))
-        .withColumn("bucket", F.explode(probe_set))
-        .withColumn("qnorm", _norm("qv"))
-    )
-    pairs = data.join(
-        F.broadcast(q.select("query_id", "qv", "qnorm", "bucket")), "bucket"
-    ).filter(F.col("data_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        "data_id",
-        "bucket",
-        F.round(
-            _dot("qv", "dv") / (F.col("qnorm") * F.col("dnorm")), 6
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("data_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOPK)
-        .select("query_id", "data_id", "bucket", "cos", "rk")
-    )
-
-
-ANN_LSH_ORACLE = f"""
-WITH e AS (
-    SELECT vec_id, list_transform(embedding, x -> cast(x AS double)) AS v
-    FROM embeddings
-),
-bucketed AS (
-    SELECT vec_id, v,
-        cast(list_aggregate(list_transform(range(1, {N_PLANES} + 1), h ->
-            CASE WHEN list_aggregate(list_transform(range(1, {DIM} + 1),
-                i -> v[i] * ({_planes_sql()})[h][i]), 'sum') > 0
-            THEN (1 << (h - 1)) ELSE 0 END), 'sum') AS int) AS bucket
-    FROM e
-),
-q_probe AS (
-    SELECT vec_id, v,
-        cast(unnest([bucket,
-            {", ".join(f"xor(bucket, {1 << h})" for h in range(N_PLANES))}
-        ]) AS int) AS bucket
-    FROM bucketed WHERE vec_id < {N_QUERIES}
-),
-scored AS (
-    SELECT q.vec_id AS query_id, d.vec_id AS data_id, d.bucket,
-        round({_cos_sql('q.v', 'd.v')}, 6) AS cos
-    FROM q_probe q JOIN bucketed d USING (bucket)
-    WHERE d.vec_id <> q.vec_id
-)
-SELECT query_id, data_id, bucket, cos, rk FROM (
-    SELECT *, cast(row_number() OVER (PARTITION BY query_id
-        ORDER BY cos DESC, data_id) AS int) AS rk
-    FROM scored
-) r WHERE rk <= {TOPK}
-"""
-
-
-# --- vectorized kernel (performance path, not oracle-gated) -----------------
+# --- vectorized kernel (performance path; ann_cosine_topk's oracle) ----------
 
 
 def cosine_topk_pandas(spark: SparkSession, sf_dir: str, k: int = TOPK,
@@ -373,53 +192,85 @@ def cosine_topk_pandas(spark: SparkSession, sf_dir: str, k: int = TOPK,
     )
 
 
-# --- IVF-bucketed ANN (the second scale path) --------------------------------
+# --- IVF-bucketed ANN (the scale path) ---------------------------------------
 
 N_CELLS = 8  # coarse quantizer size; seeds are the first N_CELLS vectors
 N_PROBE = 2  # query probes its nearest N_PROBE cells
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-{TOPK}: a coarse quantizer assigns every vector
-    to its nearest seed cell (seeds = vectors vec_id < {N_CELLS} — a
+def _ivf_cells(
+    spark: SparkSession,
+    sf_dir: str,
+    df: DataFrame,
+    id_col: str,
+    vec: str,
+    norm: str,
+    n_probe: int,
+) -> DataFrame:
+    """The coarse quantizer: ``df`` with one row per (``id_col``, cell) for
+    its nearest ``n_probe`` seed cells by cosine (rank 1 = home cell, ties
+    to the lower seed id). Seeds are the vectors vec_id < {N_CELLS} — a
     deterministic stand-in for trained kmeans centroids; the plan shape is
-    identical), queries probe their {N_PROBE} nearest cells, and exact
-    cosine ranks candidates inside the probed cells.
-
-    Scale path: cell assignment is one broadcast join against {N_CELLS}
-    centroids (O(n*k) map work, no shuffle of the corpus); the probe join
-    is an equality join on cell id — at 10^9 vectors this replaces the
-    brute-force O(n*q) scan exactly like the LSH variant, with recall
-    controlled by n_probe instead of plane count."""
+    identical. One broadcast join against the seeds (O(n*cells) map work,
+    no shuffle of the corpus), then a window per id."""
     from pyspark.sql.window import Window
 
-    emb = _emb(spark, sf_dir, "data_id", "dv").withColumn("dnorm", _norm("dv"))
     seeds = (
         _emb(spark, sf_dir, "seed_id", "sv")
         .filter(F.col("seed_id") < N_CELLS)
         .withColumn("snorm", _norm("sv"))
         .select("seed_id", "sv", "snorm")
     )
-
-    def assign(df, id_col, vec, norm, rank_n):
-        """nearest-`rank_n` seed cells by cosine (rank 1 = home cell)."""
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("seed_cos").desc(), F.col("seed_id")
+    w = Window.partitionBy(id_col).orderBy(
+        F.col("seed_cos").desc(), F.col("seed_id")
+    )
+    return (
+        df.crossJoin(F.broadcast(seeds))
+        .withColumn(
+            "seed_cos",
+            F.round(_dot(vec, "sv") / (F.col(norm) * F.col("snorm")), 6),
         )
-        return (
-            df.crossJoin(F.broadcast(seeds))
-            .withColumn(
-                "seed_cos",
-                F.round(_dot(vec, "sv") / (F.col(norm) * F.col("snorm")), 6),
-            )
-            .withColumn("cell_rk", F.row_number().over(w))
-            .filter(F.col("cell_rk") <= rank_n)
-            .drop("sv", "snorm", "seed_cos", "cell_rk")
-            .withColumnRenamed("seed_id", "cell")
-        )
+        .withColumn("cell_rk", F.row_number().over(w))
+        .filter(F.col("cell_rk") <= n_probe)
+        .drop("sv", "snorm", "seed_cos", "cell_rk")
+        .withColumnRenamed("seed_id", "cell")
+    )
 
-    data = assign(emb, "data_id", "dv", "dnorm", 1)
-    q = assign(
+
+def _ivf_cells_sql(n_probe: int, where: str = "true") -> str:
+    """DuckDB twin of ``_ivf_cells`` over a CTE ``e(vec_id, v)``: rows
+    (vec_id, v, cell) for the nearest ``n_probe`` seed cells of every
+    vector of ``e`` that passes ``where``."""
+    return f"""
+    SELECT vec_id, v, cell FROM (
+        SELECT e.vec_id, e.v, s.vec_id AS cell,
+            row_number() OVER (PARTITION BY e.vec_id
+                ORDER BY round({_cos_sql('e.v', 's.v')}, 6) DESC, s.vec_id)
+                AS cell_rk
+        FROM e, e s WHERE s.vec_id < {N_CELLS} AND {where}
+    ) a WHERE cell_rk <= {n_probe}"""
+
+
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF approximate top-{TOPK}: every vector lands in its home cell,
+    queries probe their {N_PROBE} nearest cells (both by ``_ivf_cells``),
+    and exact cosine ranks candidates inside the probed cells.
+
+    Scale path: cell assignment is one broadcast join against {N_CELLS}
+    centroids; the probe join is an equality join on cell id — at 10^9
+    vectors this replaces the brute-force O(n*q) scan, with recall
+    controlled by n_probe."""
+    from pyspark.sql.window import Window
+
+    data = _ivf_cells(
+        spark,
+        sf_dir,
+        _emb(spark, sf_dir, "data_id", "dv").withColumn("dnorm", _norm("dv")),
+        "data_id", "dv", "dnorm", 1,
+    )
+    q = _ivf_cells(
+        spark,
+        sf_dir,
         _emb(spark, sf_dir, "query_id", "qv")
         .filter(F.col("query_id") < N_QUERIES)
         .withColumn("qnorm", _norm("qv")),
@@ -447,24 +298,9 @@ WITH e AS (
     SELECT vec_id, list_transform(embedding, x -> cast(x AS double)) AS v
     FROM embeddings
 ),
-seeds AS (SELECT vec_id AS seed_id, v AS sv FROM e WHERE vec_id < {N_CELLS}),
-data_cells AS (
-    SELECT vec_id, v, cell FROM (
-        SELECT e.vec_id, e.v, s.seed_id AS cell,
-            row_number() OVER (PARTITION BY e.vec_id
-                ORDER BY round({_cos_sql('e.v', 's.sv')}, 6) DESC, s.seed_id)
-                AS cell_rk
-        FROM e, seeds s
-    ) a WHERE cell_rk = 1
+data_cells AS ({_ivf_cells_sql(1)}
 ),
-query_cells AS (
-    SELECT vec_id, v, cell FROM (
-        SELECT e.vec_id, e.v, s.seed_id AS cell,
-            row_number() OVER (PARTITION BY e.vec_id
-                ORDER BY round({_cos_sql('e.v', 's.sv')}, 6) DESC, s.seed_id)
-                AS cell_rk
-        FROM e, seeds s WHERE e.vec_id < {N_QUERIES}
-    ) a WHERE cell_rk <= {N_PROBE}
+query_cells AS ({_ivf_cells_sql(N_PROBE, f'e.vec_id < {N_QUERIES}')}
 ),
 scored AS (
     SELECT DISTINCT q.vec_id AS query_id, d.vec_id AS data_id,
@@ -477,85 +313,6 @@ SELECT query_id, data_id, cos, rk FROM (
         ORDER BY cos DESC, data_id) AS int) AS rk
     FROM scored
 ) r WHERE rk <= {TOPK}
-"""
-
-
-# --- ANN recall measurement (approximation-quality evidence) -----------------
-
-
-def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured recall@{TOPK} of the two bucketed ANN paths against the
-    exact scan, per query vector:
-    (query_id, method, n_exact, n_hit, recall_milli).
-
-    This is the evaluation harness every production ANN deployment runs
-    before trusting a bucketed index (FAISS's standard recall@k
-    protocol): ``n_hit`` = |approx top-k ∩ exact top-k|, and
-    ``recall_milli`` = floor(1000 * n_hit / n_exact) — integer division,
-    so the emitted values are exact in both engines. A query whose
-    bucket/probed cells contain no candidates still appears (n_hit = 0):
-    the blind spots are the point of the measurement.
-
-    Scale shape: the heavy lifting is the underlying operators (the
-    exact scan is the cost ceiling — which is why recall is measured on
-    a bounded query SAMPLE, here the {N_QUERIES}-vector demo set, never
-    the full corpus); the comparison itself is a key-equality join on
-    (query_id, data_id) followed by a partial aggregate on ~q*k rows.
-    Tuning loop at 10^9 vectors: raise N_PROBE / lower N_PLANES until
-    recall_milli clears the product bar, re-measuring on the same
-    sample."""
-    exact = ann_cosine_topk(spark, sf_dir).select("query_id", "data_id")
-    base = exact.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_exact")
-    )
-    per_method = []
-    for method, fn in (("ivf", ann_ivf_topk), ("lsh", ann_lsh_topk)):
-        approx = fn(spark, sf_dir).select("query_id", "data_id")
-        hits = (
-            exact.join(approx, ["query_id", "data_id"], "left_semi")
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
-        )
-        per_method.append(
-            base.join(hits, "query_id", "left").select(
-                "query_id",
-                F.lit(method).alias("method"),
-                "n_exact",
-                F.coalesce(F.col("n_hit"), F.lit(0))
-                .cast("long")
-                .alias("n_hit"),
-            )
-        )
-    both = per_method[0].unionByName(per_method[1])
-    return both.withColumn(
-        "recall_milli",
-        F.expr("(1000 * n_hit) div n_exact").cast("long"),
-    )
-
-
-ANN_RECALL_ORACLE = f"""
-WITH exact AS (SELECT query_id, data_id FROM ({ANN_TOPK_ORACLE})),
-lsh AS (SELECT query_id, data_id FROM ({ANN_LSH_ORACLE})),
-ivf AS (SELECT query_id, data_id FROM ({ANN_IVF_ORACLE})),
-base AS (
-    SELECT query_id, cast(count(*) AS bigint) AS n_exact
-    FROM exact GROUP BY 1
-),
-m AS (
-    SELECT 'lsh' AS method, * FROM lsh
-    UNION ALL SELECT 'ivf' AS method, * FROM ivf
-),
-hits AS (
-    SELECT method, query_id, cast(count(*) AS bigint) AS n_hit
-    FROM m JOIN exact USING (query_id, data_id) GROUP BY 1, 2
-),
-methods AS (SELECT 'lsh' AS method UNION ALL SELECT 'ivf')
-SELECT b.query_id, md.method, b.n_exact,
-    cast(coalesce(h.n_hit, 0) AS bigint) AS n_hit,
-    cast((1000 * coalesce(h.n_hit, 0)) // b.n_exact AS bigint)
-        AS recall_milli
-FROM base b CROSS JOIN methods md
-LEFT JOIN hits h ON h.query_id = b.query_id AND h.method = md.method
 """
 
 
@@ -620,40 +377,210 @@ FROM (
 """
 
 
-# --- k-means over quantized embeddings (diversity clustering) ----------------
+# --- Lloyd's k-means on the int8 lattice: k-means and PQ codebooks ----------
+#
+# One Lloyd loop serves both vector quantizers. Product quantization splits
+# each quantized vector into m contiguous subspaces and runs k-means in every
+# subspace at once (the subspace id rides every join and group key); plain
+# k-means is the m=1 case, its code is the cluster id.
 
 KMEANS_K = 4
 KMEANS_ITERS = 3
+PQ_M = 4  # subspaces of DIM/PQ_M dims each
+PQ_KSUB = 8  # codes per subspace (3 bits x 4 subspaces at test scale)
+PQ_ITERS = 2
 
 
-def _quantized_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, dim_idx, qval) int8-quantized components (embedding_quantize
-    without the per-vector scale column)."""
+def _pq_dims(spark: SparkSession, sf_dir: str, m: int) -> DataFrame:
+    """(vec_id, sub, dim_idx, qval): the int8-quantized component stream
+    (embedding_quantize without the per-vector scale) keyed by its PQ
+    subspace (dims 1..DIM split into ``m`` contiguous blocks)."""
+    w = DIM // m
     return embedding_quantize(spark, sf_dir).select(
-        "vec_id", "dim_idx", "qval"
+        "vec_id",
+        F.floor((F.col("dim_idx") - 1) / w).cast("int").alias("sub"),
+        "dim_idx",
+        "qval",
     )
 
 
-def _assign(q: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest integer-lattice centroid per vector: exact integer
-    distances, ties to the lower cluster id."""
+def _pq_assign(q: DataFrame, cents: DataFrame) -> DataFrame:
+    """Nearest codebook entry per (vector, subspace): exact integer
+    distances on the quantized lattice, ties to the lower code."""
     from pyspark.sql.window import Window
 
     d = (
-        q.join(F.broadcast(cents), "dim_idx")
-        .groupBy("vec_id", "cluster")
+        q.join(F.broadcast(cents), ["sub", "dim_idx"])
+        .groupBy("vec_id", "sub", "code")
         .agg(
             F.sum(
                 (F.col("qval") - F.col("c")) * (F.col("qval") - F.col("c"))
             ).cast("long").alias("dist_sq")
         )
     )
-    w = Window.partitionBy("vec_id").orderBy("dist_sq", "cluster")
+    w = Window.partitionBy("vec_id", "sub").orderBy("dist_sq", "code")
     return (
         d.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
-        .select("vec_id", "cluster", "dist_sq")
+        .select("vec_id", "sub", "code", "dist_sq")
     )
+
+
+def _pq_train(
+    spark: SparkSession,
+    sf_dir: str,
+    m: int = PQ_M,
+    ksub: int = PQ_KSUB,
+    iters: int = PQ_ITERS,
+) -> tuple[DataFrame, DataFrame]:
+    """The Lloyd loop: ``iters`` rounds of k-means with ``ksub`` centroids
+    in each of ``m`` subspaces. Returns (q, cents) — the persisted subspace
+    component stream and the final ksub*DIM-cell codebook literal — so
+    embedding_kmeans (m=1), embedding_pq (codes) and ann_pq_topk (ADC
+    search) share one training pass shape.
+
+    Deterministic and cross-engine-exact by construction: vectors AND
+    centroids live on the integer lattice (the update rounds the per-dim
+    mean back to an int), so distances are order-independent integer sums
+    and the argmin needs no float tolerance; vector j seeds code j in every
+    subspace (a deterministic stand-in for kmeans++ — the plan shape is
+    what scales, not the init).
+
+    Scale shape per iteration: one broadcast of ksub*DIM centroid cells
+    onto the exploded (vec_id, dim) stream, a (vec_id, sub, code)
+    partial-agg distance sum, a (vec_id, sub) window argmin, and a
+    (sub, code, dim) partial-agg mean — every shuffle keyed on uniform
+    ids, centroids never leave the driver-broadcast size class, and all m
+    subspaces train in the same pass.
+
+    Iteration state is MATERIALIZED: each update collects the centroid
+    cells (tiny by construction) to the driver and rebuilds ``cents`` as a
+    literal DataFrame. Chaining the lazy centroid lineage instead makes
+    every later ``_pq_assign`` re-execute the quantize pass and all
+    earlier iterations each time ``q`` is re-joined — plan depth and scan
+    count grow with ``iters`` (round-2 scale-audit finding; guards:
+    test_kmeans_final_plan_is_flat_in_iters,
+    test_pq_final_plan_is_flat_in_iters). ``q`` itself is cached for the
+    2*iters passes over it and the handle is kept on the returned plan,
+    matching how dedup_clusters pins its per-round state
+    (operators/dedup.py localCheckpoint)."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    cent_schema = StructType(
+        [
+            StructField("sub", IntegerType(), False),
+            StructField("code", IntegerType(), False),
+            StructField("dim_idx", IntegerType(), False),
+            StructField("c", IntegerType(), False),
+        ]
+    )
+
+    q = _pq_dims(spark, sf_dir, m).persist()
+    seed_rows = (
+        q.filter(F.col("vec_id") < ksub)
+        .select(
+            "sub",
+            F.col("vec_id").cast("int").alias("code"),
+            F.col("dim_idx").cast("int").alias("dim_idx"),
+            F.col("qval").cast("int").alias("c"),
+        )
+        .collect()
+    )
+    cells = {(r.sub, r.code, r.dim_idx): r.c for r in seed_rows}
+    for _ in range(iters):
+        cents = spark.createDataFrame(
+            [(s, co, d, c) for (s, co, d), c in sorted(cells.items())],
+            cent_schema,
+        )
+        assign = _pq_assign(q, cents)
+        means = (
+            q.join(assign.select("vec_id", "sub", "code"), ["vec_id", "sub"])
+            .groupBy("sub", "code", "dim_idx")
+            .agg(
+                F.round(
+                    F.sum("qval").cast("double") / F.count(F.lit(1))
+                ).cast("int").alias("c_new")
+            )
+            .collect()
+        )
+        # an empty code keeps its previous entry (identical rule in the
+        # oracle's unrolled CTEs)
+        for r in means:
+            cells[(r.sub, r.code, r.dim_idx)] = r.c_new
+    final = spark.createDataFrame(
+        [(s, co, d, c) for (s, co, d), c in sorted(cells.items())],
+        cent_schema,
+    )
+    return q, final
+
+
+def _pq_oracle(
+    m: int = PQ_M, ksub: int = PQ_KSUB, iters: int = PQ_ITERS
+) -> tuple[str, str]:
+    """DuckDB twin of ``_pq_train`` + ``_pq_assign``: the CTE list (no
+    ``WITH``) of the quantized stream ``q``, the unrolled Lloyd rounds and
+    the final assignment ``afinal`` (vec_id, sub, code, dist_sq), plus the
+    name of the final codebook CTE."""
+    w = DIM // m
+    quant = f"""
+q AS (
+    SELECT vec_id, cast(floor((dim_idx - 1) / {w}.0) AS int) AS sub,
+        dim_idx, qval
+    FROM ({EMBEDDING_QUANTIZE_ORACLE}) q0
+)"""
+
+    def assign(cent: str, name: str) -> str:
+        return f"""
+{name} AS (
+    SELECT vec_id, sub, code, dist_sq FROM (
+        SELECT vec_id, sub, code, dist_sq,
+            row_number() OVER (PARTITION BY vec_id, sub
+                ORDER BY dist_sq, code) AS rk
+        FROM (
+            SELECT q.vec_id, q.sub, c.code,
+                cast(sum((q.qval - c.c) * (q.qval - c.c)) AS bigint)
+                    AS dist_sq
+            FROM q JOIN {cent} c
+                ON q.sub = c.sub AND q.dim_idx = c.dim_idx
+            GROUP BY q.vec_id, q.sub, c.code
+        ) d
+    ) r WHERE rk = 1
+)"""
+
+    def update(prev_cent: str, assign_name: str, name: str) -> str:
+        return f"""
+{name} AS (
+    SELECT p.sub, p.code, p.dim_idx,
+        coalesce(m.c_new, p.c) AS c
+    FROM {prev_cent} p LEFT JOIN (
+        SELECT a.sub, a.code, q.dim_idx,
+            cast(round(cast(sum(q.qval) AS double) / count(*)) AS int)
+                AS c_new
+        FROM q JOIN {assign_name} a
+            ON q.vec_id = a.vec_id AND q.sub = a.sub
+        GROUP BY a.sub, a.code, q.dim_idx
+    ) m ON m.sub = p.sub AND m.code = p.code AND m.dim_idx = p.dim_idx
+)"""
+
+    parts = [
+        quant,
+        f"""
+c0 AS (
+    SELECT sub, cast(vec_id AS int) AS code, dim_idx, qval AS c
+    FROM q WHERE vec_id < {ksub}
+)""",
+    ]
+    cent = "c0"
+    for i in range(1, iters + 1):
+        parts.append(assign(cent, f"a{i}"))
+        parts.append(update(cent, f"a{i}", f"c{i}"))
+        cent = f"c{i}"
+    parts.append(assign(cent, "afinal"))
+    body = ",".join(parts)
+    return body, cent
+
+
+# --- k-means over quantized embeddings (diversity clustering) ----------------
 
 
 def embedding_kmeans(
@@ -664,150 +591,24 @@ def embedding_kmeans(
 ) -> DataFrame:
     """Distributed k-means over the int8-quantized embeddings — the
     diversity-clustering step of corpus curation (cluster-balanced
-    sampling / per-cluster dedup budgets). Deterministic and
-    cross-engine-exact by construction: vectors AND centroids live on the
-    integer lattice (centroid update rounds the per-dim mean back to an
-    int), so distances are order-independent integer sums and the argmin
-    needs no float tolerance; seeds are the first ``k`` quantized vectors
-    (a deterministic stand-in for kmeans++ — the plan shape is what
-    scales, not the init).
-
-    Scale shape per iteration: one broadcast of k*dim centroid cells onto
-    the exploded (vec_id, dim) stream, a (vec_id, cluster) partial-agg
-    distance sum, a vec_id window argmin, and a (cluster, dim) partial-agg
-    mean — every shuffle keyed on uniform ids, centroids never leave the
-    driver-broadcast size class.
-
-    Iteration state is MATERIALIZED: each update collects the k*dim
-    integer centroid cells (tiny by construction — k=4 x 64 dims) to the
-    driver and rebuilds ``cents`` as a literal DataFrame. Chaining the
-    lazy centroid lineage instead makes every later ``_assign`` re-execute
-    the quantize pass and all earlier iterations each time ``q`` is
-    re-joined — plan depth and scan count grow with ``iters``
-    (round-2 scale-audit finding; guard:
-    test_kmeans_final_plan_is_flat_in_iters). ``q`` itself is cached for
-    the 2*iters passes over it and the handle is kept on the returned
-    plan, matching how dedup_clusters pins its per-round state
-    (operators/dedup.py localCheckpoint).
-    """
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    cent_schema = StructType(
-        [
-            StructField("cluster", IntegerType(), False),
-            StructField("dim_idx", IntegerType(), False),
-            StructField("c", IntegerType(), False),
-        ]
+    sampling / per-cluster dedup budgets): (vec_id, cluster, dist_sq).
+    It is the Lloyd loop ``_pq_train`` with one subspace, so the codebook
+    is the k centroids and a vector's code is its cluster; the first ``k``
+    quantized vectors seed the clusters, and ``dist_sq`` is the exact
+    integer distance to the final centroid."""
+    q, cents = _pq_train(spark, sf_dir, m=1, ksub=k, iters=iters)
+    return _pq_assign(q, cents).select(
+        "vec_id", F.col("code").alias("cluster"), "dist_sq"
     )
 
-    q = _quantized_dims(spark, sf_dir).persist()
-    seed_rows = (
-        q.filter(F.col("vec_id") < k)
-        .select(
-            F.col("vec_id").cast("int").alias("cluster"),
-            F.col("dim_idx").cast("int").alias("dim_idx"),
-            F.col("qval").cast("int").alias("c"),
-        )
-        .collect()
-    )
-    cells = {(r.cluster, r.dim_idx): r.c for r in seed_rows}
-    for _ in range(iters):
-        cents = spark.createDataFrame(
-            [(cl, d, c) for (cl, d), c in sorted(cells.items())], cent_schema
-        )
-        assign = _assign(q, cents)
-        means = (
-            q.join(assign.select("vec_id", "cluster"), "vec_id")
-            .groupBy("cluster", "dim_idx")
-            .agg(
-                F.round(
-                    F.sum("qval").cast("double") / F.count(F.lit(1))
-                ).cast("int").alias("c_new")
-            )
-            .collect()
-        )
-        # an empty cluster keeps its previous centroid (identical rule in
-        # the oracle's unrolled CTEs)
-        for r in means:
-            cells[(r.cluster, r.dim_idx)] = r.c_new
-    final = spark.createDataFrame(
-        [(cl, d, c) for (cl, d), c in sorted(cells.items())], cent_schema
-    )
-    return _assign(q, final)
 
+# the m=1 Lloyd rounds; every k-means-blocked oracle below reads the
+# ``kmeans`` (vec_id, cluster, dist_sq) CTE
+_KMEANS_CTE = _pq_oracle(1, KMEANS_K, KMEANS_ITERS)[0] + """,
+kmeans AS (SELECT vec_id, code AS cluster, dist_sq FROM afinal)"""
 
-def _kmeans_oracle(k: int = KMEANS_K, iters: int = KMEANS_ITERS) -> str:
-    quant = """
-q AS (
-    SELECT vec_id, cast(i AS int) AS dim_idx,
-        cast(round(v[i] * scale) AS int) AS qval
-    FROM (
-        SELECT vec_id, v, scale, unnest(generate_series(1, len(v))) AS i
-        FROM (
-            SELECT vec_id, v,
-                CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-                     THEN 127.0 / list_max(list_transform(v, x -> abs(x)))
-                     ELSE 1.0 END AS scale
-            FROM (
-                SELECT vec_id,
-                    list_transform(embedding, x -> cast(x AS double)) AS v
-                FROM embeddings
-            ) e
-        ) s
-    ) u
-)"""
-
-    def assign(cent: str, name: str) -> str:
-        return f"""
-{name} AS (
-    SELECT vec_id, cluster, dist_sq FROM (
-        SELECT vec_id, cluster, dist_sq,
-            row_number() OVER (PARTITION BY vec_id
-                ORDER BY dist_sq, cluster) AS rk
-        FROM (
-            SELECT q.vec_id, c.cluster,
-                cast(sum((q.qval - c.c) * (q.qval - c.c)) AS bigint)
-                    AS dist_sq
-            FROM q JOIN {cent} c USING (dim_idx)
-            GROUP BY q.vec_id, c.cluster
-        ) d
-    ) r WHERE rk = 1
-)"""
-
-    def update(prev_cent: str, assign_name: str, name: str) -> str:
-        return f"""
-{name} AS (
-    SELECT p.cluster, p.dim_idx,
-        coalesce(m.c_new, p.c) AS c
-    FROM {prev_cent} p LEFT JOIN (
-        SELECT a.cluster, q.dim_idx,
-            cast(round(cast(sum(q.qval) AS double) / count(*)) AS int)
-                AS c_new
-        FROM q JOIN {assign_name} a USING (vec_id)
-        GROUP BY a.cluster, q.dim_idx
-    ) m ON m.cluster = p.cluster AND m.dim_idx = p.dim_idx
-)"""
-
-    parts = [
-        quant,
-        f"""
-c0 AS (
-    SELECT cast(vec_id AS int) AS cluster, dim_idx, qval AS c
-    FROM q WHERE vec_id < {k}
-)""",
-    ]
-    cent = "c0"
-    for i in range(1, iters + 1):
-        parts.append(assign(cent, f"a{i}"))
-        parts.append(update(cent, f"a{i}", f"c{i}"))
-        cent = f"c{i}"
-    final = assign(cent, "afinal")
-    parts.append(final)
-    body = ",".join(parts)
-    return f"WITH {body}\nSELECT vec_id, cluster, dist_sq FROM afinal"
-
-
-EMBEDDING_KMEANS_ORACLE = _kmeans_oracle()
+EMBEDDING_KMEANS_ORACLE = f"""WITH {_KMEANS_CTE}
+SELECT vec_id, cluster, dist_sq FROM kmeans"""
 
 CLUSTER_SAMPLE_QUOTA = 16
 _CSAMPLE_SALT = ":csample"
@@ -861,20 +662,14 @@ def cluster_balanced_sample(
     )
 
 
-def _cluster_sample_oracle(quota: int = CLUSTER_SAMPLE_QUOTA) -> str:
-    base = _kmeans_oracle()
-    body = base[len("WITH "):base.rindex("\nSELECT")]
-    return f"""WITH {body}
+CLUSTER_SAMPLE_ORACLE = f"""WITH {_KMEANS_CTE}
 SELECT vec_id, cluster, cast(rk AS int) AS sample_rank FROM (
     SELECT vec_id, cluster,
         row_number() OVER (PARTITION BY cluster
             ORDER BY md5(cast(vec_id AS string) || '{_CSAMPLE_SALT}'),
                      vec_id) AS rk
-    FROM afinal
-) q2 WHERE rk <= {quota}"""
-
-
-CLUSTER_SAMPLE_ORACLE = _cluster_sample_oracle()
+    FROM kmeans
+) q2 WHERE rk <= {CLUSTER_SAMPLE_QUOTA}"""
 
 
 # --- SemDeDup: semantic dedup within k-means cluster blocks ------------------
@@ -977,32 +772,31 @@ def semdedup(
     )
 
 
-def _semdedup_base_cte() -> str:
-    """kmeans oracle body (ends at CTE ``afinal``) + embedding/pair CTEs,
-    shared by both SemDeDup oracles (same splice as the cluster sampler)."""
-    base = _kmeans_oracle()
-    body = base[len("WITH "):base.rindex("\nSELECT")]
-    return f"""{body},
+# the DuckDB twin of _semdedup_pairs_from over a CTE ``av(vec_id, cluster,
+# v)``, shared by the k-means and IVF blockings
+_TAUPAIRS_SQL = f"""
+    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.cluster,
+        round({_cos_sql('a.v', 'b.v')}, 6) AS cos
+    FROM av a JOIN av b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+    WHERE round({_cos_sql('a.v', 'b.v')}, 6) >= {SEMDEDUP_COS}"""
+
+_SEMDEDUP_CTE = f"""{_KMEANS_CTE},
 ev AS (
     SELECT vec_id, list_transform(embedding, x -> cast(x AS double)) AS v
     FROM embeddings
 ),
 av AS (
     SELECT a.vec_id, a.cluster, ev.v
-    FROM afinal a JOIN ev USING (vec_id)
+    FROM kmeans a JOIN ev USING (vec_id)
 ),
-taupairs AS (
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.cluster,
-        round({_cos_sql('a.v', 'b.v')}, 6) AS cos
-    FROM av a JOIN av b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-    WHERE round({_cos_sql('a.v', 'b.v')}, 6) >= {SEMDEDUP_COS}
+taupairs AS ({_TAUPAIRS_SQL}
 )"""
 
 
-SEMDEDUP_PAIRS_ORACLE = f"""WITH {_semdedup_base_cte()}
+SEMDEDUP_PAIRS_ORACLE = f"""WITH {_SEMDEDUP_CTE}
 SELECT vec_a, vec_b, cluster, cos FROM taupairs"""
 
-SEMDEDUP_ORACLE = f"""WITH RECURSIVE {_semdedup_base_cte()},
+SEMDEDUP_ORACLE = f"""WITH RECURSIVE {_SEMDEDUP_CTE},
 edges AS (
     SELECT vec_a AS a, vec_b AS b FROM taupairs
     UNION
@@ -1018,40 +812,23 @@ lab AS (SELECT node AS vec_id, min(r) AS canonical_id FROM reach GROUP BY node)
 SELECT s.vec_id, s.cluster,
     coalesce(l.canonical_id, s.vec_id) AS canonical_id,
     (coalesce(l.canonical_id, s.vec_id) != s.vec_id) AS is_dup
-FROM afinal s LEFT JOIN lab l USING (vec_id)
+FROM kmeans s LEFT JOIN lab l USING (vec_id)
 """
 
 
 def semdedup_ivf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup blocking by IVF home cell — the billion-vector variant the
-    kmeans form documents: the coarse quantizer is ONE broadcast of
-    {N_CELLS} seed centroids (no Lloyd iterations, no per-iteration
-    shuffles, no driver-side centroid collection), each vector lands in
-    its rank-1 cell, and the tau-pair stage is identical to semdedup_pairs
-    — an equality join on the cell id. Cell count is the block-size knob
-    exactly as k is for the kmeans variant; assign cost is one O(n*cells)
-    map pass."""
-    from pyspark.sql.window import Window
-
+    kmeans form documents: the coarse quantizer (``_ivf_cells``, the one
+    ann_ivf_topk uses) is ONE broadcast of {N_CELLS} seed centroids (no
+    Lloyd iterations, no per-iteration shuffles, no driver-side centroid
+    collection), each vector lands in its rank-1 cell, and the tau-pair
+    stage is identical to semdedup_pairs — an equality join on the cell
+    id. Cell count is the block-size knob exactly as k is for the kmeans
+    variant; assign cost is one O(n*cells) map pass."""
     emb = _emb(spark, sf_dir).withColumn("nrm", _norm("v"))
-    seeds = (
-        _emb(spark, sf_dir, "seed_id", "sv")
-        .filter(F.col("seed_id") < N_CELLS)
-        .withColumn("snorm", _norm("sv"))
-        .select("seed_id", "sv", "snorm")
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("seed_cos").desc(), F.col("seed_id")
-    )
     cells = (
-        emb.crossJoin(F.broadcast(seeds))
-        .withColumn(
-            "seed_cos",
-            F.round(_dot("v", "sv") / (F.col("nrm") * F.col("snorm")), 6),
-        )
-        .withColumn("cell_rk", F.row_number().over(w))
-        .filter(F.col("cell_rk") == 1)
-        .select("vec_id", F.col("seed_id").alias("cluster"))
+        _ivf_cells(spark, sf_dir, emb, "vec_id", "v", "nrm", 1)
+        .select("vec_id", F.col("cell").alias("cluster"))
         # both tau-join subtrees read the assignment; pin it so the
         # O(n*cells) coarse-quantizer pass runs once (diamond persist rule)
         .persist()
@@ -1064,126 +841,12 @@ WITH e AS (
     SELECT vec_id, list_transform(embedding, x -> cast(x AS double)) AS v
     FROM embeddings
 ),
-seeds AS (SELECT vec_id AS seed_id, v AS sv FROM e WHERE vec_id < {N_CELLS}),
-cells AS (
-    SELECT vec_id, cluster FROM (
-        SELECT e.vec_id, s.seed_id AS cluster,
-            row_number() OVER (PARTITION BY e.vec_id
-                ORDER BY round({_cos_sql('e.v', 's.sv')}, 6) DESC, s.seed_id)
-                AS cell_rk
-        FROM e, seeds s
-    ) a WHERE cell_rk = 1
-),
-av AS (
-    SELECT c.vec_id, c.cluster, e.v FROM cells c JOIN e USING (vec_id)
-)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.cluster,
-    round({_cos_sql('a.v', 'b.v')}, 6) AS cos
-FROM av a JOIN av b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-WHERE round({_cos_sql('a.v', 'b.v')}, 6) >= {SEMDEDUP_COS}
+av AS (SELECT vec_id, cell AS cluster, v FROM ({_ivf_cells_sql(1)}) c)
+{_TAUPAIRS_SQL}
 """
 
 
 # --- product quantization (the PQ half of IVF-PQ) -----------------------------
-
-PQ_M = 4  # subspaces of DIM/PQ_M dims each
-PQ_KSUB = 8  # codes per subspace (3 bits x 4 subspaces at test scale)
-PQ_ITERS = 2
-
-
-def _pq_dims(spark: SparkSession, sf_dir: str, m: int) -> DataFrame:
-    """(vec_id, sub, dim_idx, qval): the quantized component stream keyed
-    by its PQ subspace (dims 1..DIM split into ``m`` contiguous blocks)."""
-    w = DIM // m
-    return _quantized_dims(spark, sf_dir).select(
-        "vec_id",
-        F.floor((F.col("dim_idx") - 1) / w).cast("int").alias("sub"),
-        "dim_idx",
-        "qval",
-    )
-
-
-def _pq_assign(q: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest codebook entry per (vector, subspace): exact integer
-    distances on the quantized lattice, ties to the lower code."""
-    from pyspark.sql.window import Window
-
-    d = (
-        q.join(F.broadcast(cents), ["sub", "dim_idx"])
-        .groupBy("vec_id", "sub", "code")
-        .agg(
-            F.sum(
-                (F.col("qval") - F.col("c")) * (F.col("qval") - F.col("c"))
-            ).cast("long").alias("dist_sq")
-        )
-    )
-    w = Window.partitionBy("vec_id", "sub").orderBy("dist_sq", "code")
-    return (
-        d.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "sub", "code", "dist_sq")
-    )
-
-
-def _pq_train(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    iters: int = PQ_ITERS,
-) -> tuple[DataFrame, DataFrame]:
-    """Train the PQ codebooks (see embedding_pq for semantics): returns
-    (q, cents) — the persisted subspace component stream and the final
-    ksub*DIM-cell codebook literal — so embedding_pq (codes) and
-    ann_pq_topk (ADC search) share one training pass shape."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    cent_schema = StructType(
-        [
-            StructField("sub", IntegerType(), False),
-            StructField("code", IntegerType(), False),
-            StructField("dim_idx", IntegerType(), False),
-            StructField("c", IntegerType(), False),
-        ]
-    )
-
-    q = _pq_dims(spark, sf_dir, m).persist()
-    seed_rows = (
-        q.filter(F.col("vec_id") < ksub)
-        .select(
-            "sub",
-            F.col("vec_id").cast("int").alias("code"),
-            F.col("dim_idx").cast("int").alias("dim_idx"),
-            F.col("qval").cast("int").alias("c"),
-        )
-        .collect()
-    )
-    cells = {(r.sub, r.code, r.dim_idx): r.c for r in seed_rows}
-    for _ in range(iters):
-        cents = spark.createDataFrame(
-            [(s, co, d, c) for (s, co, d), c in sorted(cells.items())],
-            cent_schema,
-        )
-        assign = _pq_assign(q, cents)
-        means = (
-            q.join(assign.select("vec_id", "sub", "code"), ["vec_id", "sub"])
-            .groupBy("sub", "code", "dim_idx")
-            .agg(
-                F.round(
-                    F.sum("qval").cast("double") / F.count(F.lit(1))
-                ).cast("int").alias("c_new")
-            )
-            .collect()
-        )
-        # an empty code keeps its previous entry (identical rule in the
-        # oracle's unrolled CTEs)
-        for r in means:
-            cells[(r.sub, r.code, r.dim_idx)] = r.c_new
-    final = spark.createDataFrame(
-        [(s, co, d, c) for (s, co, d), c in sorted(cells.items())],
-        cent_schema,
-    )
-    return q, final
 
 
 def embedding_pq(
@@ -1206,19 +869,14 @@ def embedding_pq(
     subspace; dist_sq is the exact integer quantization error against the
     chosen codebook entry (the reconstruction-error term PQ minimizes).
 
-    Determinism/exactness mirrors ``embedding_kmeans`` (same lattice
-    trick, same seed rule per subspace — vector j seeds code j): vectors
-    and codebooks live on the integer lattice, so distances and argmins
-    are exact and the DuckDB oracle unrolls the identical iterations.
-
-    Scale shape per iteration: the codebook is m*ksub*(DIM/m) = ksub*DIM
-    integer cells — broadcast-sized by construction, independent of the
-    corpus — joined once onto the component stream; the argmin windows on
-    (vec_id, sub) (uniform keys); the update is a (sub, code, dim_idx)
-    partial aggregate. All m subspaces train in the SAME single pass per
-    iteration (subspace rides the join key), so adding subspaces adds no
-    stages. Iteration state is materialized driver-side like
-    embedding_kmeans (flat plan in iters; same guard pattern).
+    Training is the Lloyd loop ``_pq_train`` that embedding_kmeans runs
+    with one subspace (same lattice trick, same seed rule — vector j seeds
+    code j): distances and argmins are exact integers and the DuckDB
+    oracle unrolls the identical iterations. The codebook is
+    m*ksub*(DIM/m) = ksub*DIM integer cells — broadcast-sized by
+    construction, independent of the corpus — and all m subspaces train
+    in the SAME single pass per iteration, so adding subspaces adds no
+    stages.
     """
     q, final = _pq_train(spark, sf_dir, m, ksub, iters)
     return _pq_assign(q, final)
@@ -1276,98 +934,16 @@ def ann_pq_topk(
     )
 
 
-def _pq_oracle(
-    m: int = PQ_M, ksub: int = PQ_KSUB, iters: int = PQ_ITERS
-) -> str:
-    w = DIM // m
-    quant = f"""
-q0 AS (
-    SELECT vec_id, cast(i AS int) AS dim_idx,
-        cast(round(v[i] * scale) AS int) AS qval
-    FROM (
-        SELECT vec_id, v, scale, unnest(generate_series(1, len(v))) AS i
-        FROM (
-            SELECT vec_id, v,
-                CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-                     THEN 127.0 / list_max(list_transform(v, x -> abs(x)))
-                     ELSE 1.0 END AS scale
-            FROM (
-                SELECT vec_id,
-                    list_transform(embedding, x -> cast(x AS double)) AS v
-                FROM embeddings
-            ) e
-        ) s
-    ) u
-),
-q AS (
-    SELECT vec_id, cast(floor((dim_idx - 1) / {w}.0) AS int) AS sub,
-        dim_idx, qval
-    FROM q0
-)"""
+_PQ_CTE, _PQ_CENTS = _pq_oracle()
 
-    def assign(cent: str, name: str) -> str:
-        return f"""
-{name} AS (
-    SELECT vec_id, sub, code, dist_sq FROM (
-        SELECT vec_id, sub, code, dist_sq,
-            row_number() OVER (PARTITION BY vec_id, sub
-                ORDER BY dist_sq, code) AS rk
-        FROM (
-            SELECT q.vec_id, q.sub, c.code,
-                cast(sum((q.qval - c.c) * (q.qval - c.c)) AS bigint)
-                    AS dist_sq
-            FROM q JOIN {cent} c
-                ON q.sub = c.sub AND q.dim_idx = c.dim_idx
-            GROUP BY q.vec_id, q.sub, c.code
-        ) d
-    ) r WHERE rk = 1
-)"""
+EMBEDDING_PQ_ORACLE = f"""WITH {_PQ_CTE}
+SELECT vec_id, sub, code, dist_sq FROM afinal"""
 
-    def update(prev_cent: str, assign_name: str, name: str) -> str:
-        return f"""
-{name} AS (
-    SELECT p.sub, p.code, p.dim_idx,
-        coalesce(m.c_new, p.c) AS c
-    FROM {prev_cent} p LEFT JOIN (
-        SELECT a.sub, a.code, q.dim_idx,
-            cast(round(cast(sum(q.qval) AS double) / count(*)) AS int)
-                AS c_new
-        FROM q JOIN {assign_name} a
-            ON q.vec_id = a.vec_id AND q.sub = a.sub
-        GROUP BY a.sub, a.code, q.dim_idx
-    ) m ON m.sub = p.sub AND m.code = p.code AND m.dim_idx = p.dim_idx
-)"""
-
-    parts = [
-        quant,
-        f"""
-c0 AS (
-    SELECT sub, cast(vec_id AS int) AS code, dim_idx, qval AS c
-    FROM q WHERE vec_id < {ksub}
-)""",
-    ]
-    cent = "c0"
-    for i in range(1, iters + 1):
-        parts.append(assign(cent, f"a{i}"))
-        parts.append(update(cent, f"a{i}", f"c{i}"))
-        cent = f"c{i}"
-    parts.append(assign(cent, "afinal"))
-    body = ",".join(parts)
-    return body, cent
-
-
-def _pq_codes_oracle() -> str:
-    body, _ = _pq_oracle()
-    return f"WITH {body}\nSELECT vec_id, sub, code, dist_sq FROM afinal"
-
-
-def _pq_adc_oracle() -> str:
-    body, cent = _pq_oracle()
-    return f"""WITH {body},
+ANN_PQ_ORACLE = f"""WITH {_PQ_CTE},
 lut AS (
     SELECT qq.vec_id AS query_id, c.sub, c.code,
         cast(sum((qq.qval - c.c) * (qq.qval - c.c)) AS bigint) AS d
-    FROM q qq JOIN {cent} c
+    FROM q qq JOIN {_PQ_CENTS} c
         ON qq.sub = c.sub AND qq.dim_idx = c.dim_idx
     WHERE qq.vec_id < {N_QUERIES}
     GROUP BY qq.vec_id, c.sub, c.code
@@ -1387,8 +963,83 @@ SELECT query_id, data_id, adc_dist, rk FROM (
 ) r WHERE rk <= {TOPK}"""
 
 
-EMBEDDING_PQ_ORACLE = _pq_codes_oracle()
-ANN_PQ_ORACLE = _pq_adc_oracle()
+# --- ANN recall measurement (approximation-quality evidence) -----------------
+
+
+def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Measured recall@{TOPK} of the two approximate top-k paths — IVF
+    cells (``ivf``) and PQ codes (``pq``) — against the exact cosine scan,
+    per query vector: (query_id, method, n_exact, n_hit, recall_milli).
+
+    This is the evaluation harness every production ANN deployment runs
+    before trusting a bucketed index (FAISS's standard recall@k
+    protocol): ``n_hit`` = |approx top-k ∩ exact top-k|, and
+    ``recall_milli`` = floor(1000 * n_hit / n_exact) — integer division,
+    so the emitted values are exact in both engines. A query whose
+    approximate top-k holds none of its exact neighbours still appears
+    (n_hit = 0): the blind spots are the point of the measurement.
+
+    Scale shape: the heavy lifting is the underlying operators (the
+    exact scan is the cost ceiling — which is why recall is measured on
+    a bounded query SAMPLE, here the {N_QUERIES}-vector demo set, never
+    the full corpus); the comparison itself is a key-equality join on
+    (query_id, data_id) followed by a partial aggregate on ~q*k rows.
+    Tuning loop at 10^9 vectors: raise N_PROBE (IVF) or PQ_M / PQ_KSUB
+    (PQ) until recall_milli clears the product bar, re-measuring on the
+    same sample."""
+    exact = ann_cosine_topk(spark, sf_dir).select("query_id", "data_id")
+    base = exact.groupBy("query_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_exact")
+    )
+    per_method = []
+    for method, fn in (("ivf", ann_ivf_topk), ("pq", ann_pq_topk)):
+        approx = fn(spark, sf_dir).select("query_id", "data_id")
+        hits = (
+            exact.join(approx, ["query_id", "data_id"], "left_semi")
+            .groupBy("query_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
+        )
+        per_method.append(
+            base.join(hits, "query_id", "left").select(
+                "query_id",
+                F.lit(method).alias("method"),
+                "n_exact",
+                F.coalesce(F.col("n_hit"), F.lit(0))
+                .cast("long")
+                .alias("n_hit"),
+            )
+        )
+    both = per_method[0].unionByName(per_method[1])
+    return both.withColumn(
+        "recall_milli",
+        F.expr("(1000 * n_hit) div n_exact").cast("long"),
+    )
+
+
+ANN_RECALL_ORACLE = f"""
+WITH exact AS (SELECT query_id, data_id FROM ({ANN_TOPK_ORACLE})),
+ivf AS (SELECT query_id, data_id FROM ({ANN_IVF_ORACLE})),
+pq AS (SELECT query_id, data_id FROM ({ANN_PQ_ORACLE})),
+base AS (
+    SELECT query_id, cast(count(*) AS bigint) AS n_exact
+    FROM exact GROUP BY 1
+),
+m AS (
+    SELECT 'ivf' AS method, * FROM ivf
+    UNION ALL SELECT 'pq' AS method, * FROM pq
+),
+hits AS (
+    SELECT method, query_id, cast(count(*) AS bigint) AS n_hit
+    FROM m JOIN exact USING (query_id, data_id) GROUP BY 1, 2
+),
+methods AS (SELECT 'ivf' AS method UNION ALL SELECT 'pq')
+SELECT b.query_id, md.method, b.n_exact,
+    cast(coalesce(h.n_hit, 0) AS bigint) AS n_hit,
+    cast((1000 * coalesce(h.n_hit, 0)) // b.n_exact AS bigint)
+        AS recall_milli
+FROM base b CROSS JOIN methods md
+LEFT JOIN hits h ON h.query_id = b.query_id AND h.method = md.method
+"""
 
 
 # --- MMR diversity re-ranking (Carbonell & Goldstein 1998) -------------------

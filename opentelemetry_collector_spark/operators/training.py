@@ -40,10 +40,10 @@ Scale notes (100 TB / 10^12 turns):
   cumsum), so results are bit-identical across engines — the DuckDB
   oracles below run the same SQL text.
 
-Registry note: the driver correctness window is saturated (99 entries),
-so like ``doc_pii_scrub`` these ship their oracle SQL in-module and are
-gated by DuckDB-parity pytest on a handcrafted fixture plus the sf0.01
-transcripts (tests/test_training.py) instead of a registry slot.
+Both ops are registered queries: the oracle sweep runs the in-module
+oracles below over the sf0.01 transcripts (queries.PIPELINE_ORACLES), and
+tests/test_training.py runs them on a handcrafted fixture with the edge
+rows sf0.01 lacks.
 """
 
 from __future__ import annotations
@@ -230,7 +230,7 @@ FROM (
             sum(n_tokens) OVER (PARTITION BY pack_bucket ORDER BY ord_key
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
         FROM (
-            SELECT conv_id, sum(n_tokens) AS n_tokens,
+            SELECT conv_id, cast(sum(n_tokens) AS bigint) AS n_tokens,
                 cast({_hash_bucket_sql('conv_id', CONV_PACK_BUCKETS, ':cpack')}
                     AS int) AS pack_bucket,
                 md5(conv_id || ':cpack-ord') AS ord_key

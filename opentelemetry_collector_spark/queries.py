@@ -43,6 +43,7 @@ from opentelemetry_collector_spark.operators import metrics as _met
 from opentelemetry_collector_spark.operators import traces as _tr
 from opentelemetry_collector_spark.operators import similarity as _sim
 from opentelemetry_collector_spark.operators import textstats as _ts
+from opentelemetry_collector_spark.operators import training as _train
 from opentelemetry_collector_spark.sources.transcripts import (
     TRANSCRIPTS_FROM_EVENTS_SQL,
     events_to_transcripts,
@@ -659,6 +660,8 @@ PIPELINE_QUERIES: dict[str, QueryFn] = {
     "probabilistic_sampler": q_probabilistic_sampler,
     "metrics_sum_rate": q_metrics_sum_rate,
     "redaction": q_redaction,
+    "sft_loss_mask": _train.sft_loss_mask,
+    "conversation_pack": _train.conversation_pack,
 }
 
 # --- training-data-pipeline operators (documents / embeddings tables) ------
@@ -673,9 +676,7 @@ DOCS_QUERIES: dict[str, QueryFn] = {
     "dedup_minhash_pairs": _dedup.dedup_minhash_pairs,
     "dedup_simhash": _dedup.dedup_simhash,
     "dedup_simhash_pairs": _dedup.dedup_simhash_pairs,
-    "dedup_embedding_pairs": _sim.dedup_embedding_pairs,
     "ann_cosine_topk": _sim.ann_cosine_topk,
-    "ann_lsh_topk": _sim.ann_lsh_topk,
     "ann_ivf_topk": _sim.ann_ivf_topk,
     # performance-path twin of ann_cosine_topk (Arrow/numpy matmul). Both
     # sides normalize in float64 and round the cosine to 6 dp, which
@@ -735,10 +736,8 @@ DOCS_ORACLES: dict[str, str] = {
     "dedup_minhash_pairs": _dedup.DEDUP_MINHASH_ORACLE,
     "dedup_simhash": _dedup.DEDUP_SIMHASH_ORACLE,
     "dedup_simhash_pairs": _dedup.DEDUP_SIMHASH_PAIRS_ORACLE,
-    "dedup_embedding_pairs": _sim.DEDUP_EMBEDDING_ORACLE,
     "ann_cosine_topk": _sim.ANN_TOPK_ORACLE,
     "ann_cosine_topk_pandas": _sim.ANN_TOPK_ORACLE,
-    "ann_lsh_topk": _sim.ANN_LSH_ORACLE,
     "ann_ivf_topk": _sim.ANN_IVF_ORACLE,
     "media_features": _mm.MEDIA_FEATURES_ORACLE,
     "corpus_curation": _ts.CORPUS_CURATION_ORACLE,
@@ -985,6 +984,12 @@ FROM (
         + ")\n"
         + _grok.GROK_ORACLE_BODY
     ),
+    # the transcript-native training ops ship their oracles in-module,
+    # written against a `transcripts` view
+    "sft_loss_mask": f"""WITH transcripts AS ({TRANSCRIPTS_FROM_EVENTS_SQL})
+{_train.SFT_LOSS_MASK_ORACLE}""",
+    "conversation_pack": f"""WITH transcripts AS ({TRANSCRIPTS_FROM_EVENTS_SQL})
+{_train.CONVERSATION_PACK_ORACLE}""",
 }
 
 # The OTLP/JSON wire round-trips are identities on their operators' outputs,

@@ -48,22 +48,6 @@ def test_pandas_topk_agrees_with_sql_topk(spark):
     assert by_q_sql == by_q_pd
 
 
-def test_lsh_topk_is_subset_of_exact_ranking(spark):
-    """ANN results are drawn from the query's bucket; every returned
-    neighbor's exact cosine must match the brute-force score."""
-    exact = {
-        (r.query_id, r.data_id): r.cos
-        for r in DOCS_QUERIES["ann_cosine_topk"](spark, SF_CORRECT)
-        .drop("rk").collect()
-    }
-    # brute force only kept top-5; recompute full scores for checked pairs
-    lsh = DOCS_QUERIES["ann_lsh_topk"](spark, SF_CORRECT).collect()
-    assert lsh, "LSH buckets must be non-degenerate"
-    for r in lsh:
-        if (r.query_id, r.data_id) in exact:
-            assert abs(exact[(r.query_id, r.data_id)] - r.cos) < 1e-9
-
-
 def test_simhash_band_recall_is_total_within_radius(spark):
     """Pigeonhole property: 4x16-bit band equality must find EVERY pair
     with Hamming(simhash) <= SIMHASH_MAX_HAMMING — recall 1.0 by
@@ -452,8 +436,7 @@ def test_kmeans_assignment_is_true_argmin(spark):
 
     from opentelemetry_collector_spark.operators.similarity import (
         KMEANS_K,
-        _assign,
-        _quantized_dims,
+        _pq_dims,
         embedding_kmeans,
     )
 
@@ -465,7 +448,7 @@ def test_kmeans_assignment_is_true_argmin(spark):
     # ground truth: recompute centroids per cluster from the quantized
     # dims and verify each sampled vector's cluster is the true argmin
     qd = defaultdict(dict)
-    for r in _quantized_dims(spark, SF_CORRECT).collect():
+    for r in _pq_dims(spark, SF_CORRECT, 1).collect():
         qd[r.vec_id][r.dim_idx] = r.qval
     by_cluster = defaultdict(list)
     for r in rows:
@@ -1502,7 +1485,7 @@ def test_ppl_buckets_are_exact_inverse_cdf_terciles(spark):
 def test_ann_recall_matches_python_set_recount(spark):
     """recall@k rows must equal a python recount of |approx ∩ exact| per
     (query, method), with every query present for both methods even when
-    the bucketed path found nothing."""
+    the approximate path found none of its exact neighbours."""
     from opentelemetry_collector_spark.operators import similarity as sim
 
     exact: dict = {}
@@ -1510,7 +1493,7 @@ def test_ann_recall_matches_python_set_recount(spark):
         exact.setdefault(r.query_id, set()).add(r.data_id)
     rows = DOCS_QUERIES["ann_recall"](spark, SF_CORRECT).collect()
     assert len(rows) == 2 * len(exact)
-    for method, fn in (("ivf", sim.ann_ivf_topk), ("lsh", sim.ann_lsh_topk)):
+    for method, fn in (("ivf", sim.ann_ivf_topk), ("pq", sim.ann_pq_topk)):
         approx: dict = {}
         for r in fn(spark, SF_CORRECT).collect():
             approx.setdefault(r.query_id, set()).add(r.data_id)
@@ -1596,12 +1579,13 @@ def test_corpus_interleave_matches_python_recount(spark):
 
 def test_multiprobe_lsh_recall_floor(spark):
     """Regression floor for the measured recall@k on the fixed sf0.01
-    corpus: multi-probe LSH measured 0.32 mean recall (single-probe was
-    0.06 — the reason multi-probe exists), IVF 0.80. Both deterministic
-    on the fixture; a drop means someone broke the probing."""
+    corpus: IVF measured 0.80 mean recall and PQ 0.18 (ADC ranks by
+    integer L2 on the codes, the exact scan by cosine). Both deterministic
+    on the fixture; a drop means someone broke the probing or the
+    codebooks."""
     rows = DOCS_QUERIES["ann_recall"](spark, SF_CORRECT).collect()
     by: dict = {}
     for r in rows:
         by.setdefault(r.method, []).append(r.recall_milli)
-    assert sum(by["lsh"]) / len(by["lsh"]) >= 300
+    assert sum(by["pq"]) / len(by["pq"]) >= 180
     assert sum(by["ivf"]) / len(by["ivf"]) >= 700

@@ -145,10 +145,30 @@ def test_cli_stream_mode_refuses_an_events_source(tmp_path):
     assert not any(tmp_path.iterdir())
 
 
+def test_cli_stream_mode_refuses_batch_only_flags(tmp_path):
+    """--mode stream has no buckets, waves, ledger or salting: a batch-only
+    flag is a parser error naming the flag, before Spark starts, even when
+    it repeats the flag's default value."""
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [sys.executable, "-m", "opentelemetry_collector_spark",
+         "--source", SF_SMOKE, "--output", str(tmp_path), "--mode", "stream",
+         "--source-kind", "transcripts", "--n-buckets", "16"],
+        capture_output=True, text=True, timeout=60,
+        cwd=str(Path(__file__).resolve().parent.parent),
+    )
+    assert proc.returncode == 2
+    assert "--mode stream does not use --n-buckets" in proc.stderr
+    assert not any(tmp_path.iterdir())
+
+
 def test_cli_stream_mode_honours_max_records_per_file(spark, tmp_path):
     """--mode stream drains a transcripts table once (availableNow) and
     writes its sinks under the --max-records-per-file cap: every routed
-    row lands, and no sink file holds more rows than the cap."""
+    row lands, no sink file holds more rows than the cap, and the report's
+    n_input counts every source row."""
     import json
     import subprocess
     import sys
@@ -172,10 +192,13 @@ def test_cli_stream_mode_honours_max_records_per_file(spark, tmp_path):
         cwd=str(Path(__file__).resolve().parent.parent),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    assert json.loads(proc.stdout.strip().splitlines()[-1])["mode"] == "stream"
+    report = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert report["mode"] == "stream"
+    n_src = spark.read.parquet(src).count()
+    assert report["n_input"] == n_src
     sizes = [pq.read_metadata(str(f)).num_rows
              for f in (out / "sinks").rglob("*.parquet")]
-    assert sum(sizes) == spark.read.parquet(src).count() > cap
+    assert sum(sizes) == n_src > cap
     assert max(sizes) <= cap
 
 

@@ -4,6 +4,8 @@ asserted here so a future change can't silently trade them away (the
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -116,11 +118,32 @@ def test_contamination_broadcasts_benchmark_side(spark):
     assert "CartesianProduct" not in plan
 
 
+def _outside_cache(plan: str) -> str:
+    """The plan text without the cached subtrees that each
+    InMemoryTableScan prints under itself (they run once, to fill the
+    cache)."""
+    out, cached_below = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached_below is not None and depth > cached_below:
+            continue
+        cached_below = None
+        out.append(line)
+        if "InMemoryTableScan" in line:
+            cached_below = depth
+    return "\n".join(out)
+
+
 def test_embedding_pairs_use_bucket_equality_join(spark):
-    """Embedding near-dup candidates come from an equality join on the
-    LSH bucket id — never an all-pairs nested loop."""
-    plan = _plan(DOCS_QUERIES["dedup_embedding_pairs"](spark, SF_SMOKE))
-    assert "BroadcastNestedLoopJoin" not in plan
+    """Embedding near-dup candidates (semdedup_ivf_pairs) come from an
+    equality join on the IVF cell id — never a cartesian product or a
+    nested loop. The plan's one nested-loop join is the coarse
+    quantizer's broadcast of the seed cells, inside the cached cell
+    assignment."""
+    plan = _plan(DOCS_QUERIES["semdedup_ivf_pairs"](spark, SF_SMOKE))
+    pairs = _outside_cache(plan)
+    assert re.search(r"Join \[cluster#\d+L?\], \[cluster#\d+L?\], Inner", pairs)
+    assert "BroadcastNestedLoopJoin" not in pairs
     assert "CartesianProduct" not in plan
 
 
@@ -437,7 +460,6 @@ def test_dedup_paragraphs_no_window_over_content_key(spark):
     plan = _plan(DOCS_QUERIES["dedup_paragraphs"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    import re
     assert not re.search(r"Window .*\bh\b", plan), (
         "tile-hash ordering must not run through a Window"
     )

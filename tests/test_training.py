@@ -1,6 +1,7 @@
 """SFT loss-mask spans + conversation packing (operators/training.py):
-DuckDB-oracle parity on a handcrafted fixture AND on the real
-events-derived transcripts, python ground-truth recounts, the shared
+DuckDB-oracle parity on a handcrafted fixture (the oracle sweep in
+tests/test_pipeline_oracle.py covers the events-derived transcripts),
+python ground-truth recounts, the shared
 token-model cross-op invariant, plan guards (incl. exchange elision on
 the production bucketed layout), and the config-built processors."""
 
@@ -21,7 +22,6 @@ from opentelemetry_collector_spark.operators.training import (
     sft_loss_mask,
 )
 from opentelemetry_collector_spark.sources.transcripts import (
-    TRANSCRIPTS_FROM_EVENTS_SQL,
     events_to_transcripts,
 )
 from tests.conftest import SF_SMOKE
@@ -70,16 +70,6 @@ def _fixture_con() -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _events_con() -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW events AS "
-        f"SELECT * FROM '{SF_SMOKE}/events.parquet'"
-    )
-    con.sql(f"CREATE VIEW transcripts AS {TRANSCRIPTS_FROM_EVENTS_SQL}")
-    return con
-
-
 def test_sft_loss_mask_matches_duckdb_oracle_fixture(spark):
     _cmp(
         sft_loss_mask(spark, "", transcripts=_fixture_transcripts(spark)),
@@ -95,18 +85,6 @@ def test_conversation_pack_matches_duckdb_oracle_fixture(spark):
         ),
         CONVERSATION_PACK_ORACLE,
         _fixture_con(),
-    )
-
-
-def test_sft_loss_mask_matches_duckdb_oracle_real_transcripts(spark):
-    _cmp(sft_loss_mask(spark, SF_SMOKE), SFT_LOSS_MASK_ORACLE, _events_con())
-
-
-def test_conversation_pack_matches_duckdb_oracle_real_transcripts(spark):
-    _cmp(
-        conversation_pack(spark, SF_SMOKE),
-        CONVERSATION_PACK_ORACLE,
-        _events_con(),
     )
 
 
