@@ -1,6 +1,5 @@
 from opentelemetry_collector_spark.functions.values import (  # noqa: F401
     as_string,
-    attributes_json,
     deterministic_span_id,
     deterministic_trace_id,
 )

@@ -6,10 +6,14 @@ dissolves into typed columns; the two semantics that must be preserved are:
 - ``AsString`` canonicalization (value.go:361-426): maps/slices -> JSON,
   bytes -> base64. Here: ``as_string`` builds the canonical string column.
 - ordered-Map equality (pdata/pcommon/map.go:109-127): MapType loses order,
-  so attributes serialize to a sorted-key JSON string (``attributes_json``).
+  so attributes serialize to a sorted-key JSON string (``attributes_json_sql``
+  for the parse stage, ``attributes_json_typed`` for typed nested columns).
 
-All functions are pure Column expressions — JVM-side, inside whole-stage
-codegen; no Python UDFs.
+The Column functions are pure Column expressions — JVM-side, inside
+whole-stage codegen; no Python UDFs except ``es6_double_string``. The
+``*_sql`` renderers return Spark SQL text for the same rules: a hot
+projection planned from SQL text costs a handful of py4j round trips,
+where each PySpark Column call costs one or more.
 """
 
 from __future__ import annotations
@@ -29,27 +33,6 @@ def as_string(col: Column, kind: str = "str") -> Column:
     return col.cast("string")
 
 
-def attributes_json(pairs: dict[str, Column]) -> Column:
-    """Sorted-key canonical JSON object from (name -> Column) pairs.
-
-    Null-valued keys are omitted (Map.Get absent-key semantics,
-    pdata/pcommon/map.go:64-75). String columns are quoted; numeric columns
-    are rendered bare. Output example: '{"dur_ms": 42, "status": "OK"}'.
-    """
-    frags = []
-    for key in sorted(pairs):
-        col = pairs[key]
-        quoted = F.when(
-            col.cast("string").isNotNull(),
-            F.concat(
-                F.lit(f'"{key}": '),
-                _json_scalar(col),
-            ),
-        )
-        frags.append(quoted)
-    return F.concat(F.lit("{"), F.concat_ws(", ", *frags), F.lit("}"))
-
-
 # A value serializes bare iff it is a CANONICAL JSON number (no leading
 # zeros — '0123' bare would be invalid JSON). Single source for every
 # attributes serializer (parse stage here, transform rewrites, codecs).
@@ -65,8 +48,8 @@ JSON_TERMINATOR_RE = r"[\n\r\u0085\u2028\u2029]"
 # Full JSON string-escape table (RFC 8259 §7): backslash FIRST (escaping
 # it later would double the escapes the other rules introduce), the five
 # short escapes + \b \f, then every remaining control char as \u00XX.
-# Single source for the Column serializer here and the Python twin in
-# operators/protobuf.py.
+# Single source for the Column and SQL-text serializers here and the Python
+# twin in operators/protobuf.py.
 JSON_ESCAPES: tuple[tuple[str, str], ...] = (
     ("\\", "\\\\"),
     ('"', '\\"'),
@@ -91,13 +74,50 @@ def _json_scalar(col: Column) -> Column:
     # noise); a branch-gated variant compiled BOTH chains and measured
     # slower, so the straight chain stays.
     s = col.cast("string")
-    e = s
-    for raw, esc in JSON_ESCAPES:
-        e = F.replace(e, F.lit(raw), F.lit(esc))
     is_bare = s.rlike(JSON_NUMBER_RE) & ~s.rlike(JSON_TERMINATOR_RE)
     return F.when(is_bare, s).otherwise(
-        F.concat(F.lit('"'), e, F.lit('"'))
+        F.concat(F.lit('"'), _escape_col(s), F.lit('"'))
     )
+
+
+def sql_str(s: str) -> str:
+    """Spark SQL string literal reading ``s`` under both values of
+    ``spark.sql.parser.escapedStringLiterals``: quoted as is when it holds
+    no backslash, quote or non-printable character, else its UTF-8 bytes
+    as ``CAST(X'..' AS STRING)`` (which constant-folds to the literal)."""
+    if s.isprintable() and "\\" not in s and "'" not in s:
+        return f"'{s}'"
+    return f"CAST(X'{s.encode().hex().upper()}' AS STRING)"
+
+
+def json_scalar_sql(expr: str) -> str:
+    """SQL text twin of ``_json_scalar``: the flat scalar rule over the SQL
+    expression ``expr``, read from the same JSON_ESCAPES, JSON_NUMBER_RE
+    and JSON_TERMINATOR_RE."""
+    s = f"CAST({expr} AS STRING)"
+    e = s
+    for raw, esc in JSON_ESCAPES:
+        e = f"replace({e}, {sql_str(raw)}, {sql_str(esc)})"
+    return (
+        f"CASE WHEN {s} RLIKE {sql_str(JSON_NUMBER_RE)}"
+        f" AND NOT ({s} RLIKE {sql_str(JSON_TERMINATOR_RE)}) THEN {s}"
+        f" ELSE concat('\"', {e}, '\"') END"
+    )
+
+
+def attributes_json_sql(pairs: dict[str, str]) -> str:
+    """Sorted-key canonical JSON object, as SQL text, from (name -> SQL
+    expression) pairs. Null-valued keys are omitted (Map.Get absent-key
+    semantics, pdata/pcommon/map.go:64-75); values follow the flat scalar
+    rule (``json_scalar_sql``). Output example:
+    '{"dur_ms": 42, "status": "OK"}'."""
+    frags = ", ".join(
+        f"CASE WHEN CAST({expr} AS STRING) IS NOT NULL"
+        f" THEN concat({sql_str(json_key)}, {json_scalar_sql(expr)}) END"
+        for key, expr in sorted(pairs.items())
+        for json_key in [f'"{key}": ']
+    )
+    return f"concat('{{', concat_ws(', ', {frags}), '}}')"
 
 
 def _escape_col(col: Column) -> Column:
@@ -127,10 +147,10 @@ def json_value(col: Column, kind="scalar") -> Column:
 
     The default kind "scalar" is the FLAT top-level rule (_json_scalar:
     cast to string, bare iff it looks like a canonical JSON number) —
-    what attributes_json has always done for untyped scalar columns.
+    what attributes_json_sql does for the parse stage's scalar columns.
 
     NULL elements/values render as JSON null; a NULL at the top level
-    renders NULL (the attributes_json builder omits the key). Everything
+    renders NULL (attributes_json_typed omits the key). Everything
     is a pure Column expression — JVM-side, inside whole-stage codegen
     (the "double" leaf's ES6 formatter is the one Arrow-UDF exception).
     """
@@ -170,7 +190,8 @@ def json_value(col: Column, kind="scalar") -> Column:
 
 
 def attributes_json_typed(pairs: dict) -> Column:
-    """attributes_json with per-key kind specs: values are (Column, kind)
+    """attributes_json_sql's Column form with per-key kind specs: values are
+    (Column, kind)
     tuples (kind as in json_value) or bare Columns (scalar). Lets a nested
     attribute decoded from the wire — or built from typed nested columns —
     be re-canonicalized entirely column-side, byte-identical to the Python

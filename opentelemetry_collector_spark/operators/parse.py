@@ -19,10 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_spark.functions.values import attributes_json
+from opentelemetry_collector_spark.functions.values import (
+    attributes_json_sql,
+    sql_str,
+)
 from opentelemetry_collector_spark.severity import (
+    SEVERITY_NUMBER,
     severity_case_sql,
-    severity_number_column,
 )
 
 # Regex patterns — RE2-compatible so the DuckDB oracle runs the same ones.
@@ -33,63 +36,73 @@ SPAN_PATTERN = r"span_id=([0-9a-f]{16})"
 DUR_PATTERN = r"dur_ms=([0-9]+)"
 STATUS_PATTERN = r"status=(OK|ERROR)"
 
+# (output column, staging column, pattern), in extraction order
+_FIELDS = [
+    ("severity_text", "__sev_raw", SEV_PATTERN),
+    ("parsed_tool", "__tool_raw", TOOL_PATTERN),
+    ("trace_id", "__trace_raw", TRACE_PATTERN),
+    ("span_id", "__span_raw", SPAN_PATTERN),
+    ("dur_ms", "__dur_raw", DUR_PATTERN),
+    ("status", "__status_raw", STATUS_PATTERN),
+]
+
+# token -> number as ONE lookup into a constant-folded literal map, not the
+# 25-branch CASE: NULL token -> 0, unknown token -> NULL (try_element_at's
+# missing key), as severity_case_sql. The expression references the token
+# twice instead of 25 times — when Catalyst pushes a severity predicate
+# down through this projection it inlines the token's defining regex per
+# reference, and the CASE form multiplied it ~25x into every pushed filter.
+_SEVERITY_NUMBER_SQL = (
+    "CAST(CASE WHEN severity_text IS NULL THEN 0 ELSE try_element_at(map("
+    + ", ".join(f"{sql_str(name)}, {num}" for name, num in SEVERITY_NUMBER.items())
+    + "), severity_text) END AS INT)"
+)
+
+
+def _staged(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    return df.withColumns({name: F.expr(sql) for name, sql in exprs.items()})
+
 
 def parse_turns(transcripts: DataFrame) -> DataFrame:
     """transcripts -> parsed turns (PARSED_SCHEMA). Narrow op: no shuffle.
 
     Plan shape: each regexp_extract is planned EXACTLY ONCE, staged
-    through attribute references. Reusing the Column trees directly (the
-    obvious construction) bakes expression-level duplicates into single
-    projections — nullif(re, '') copies the regex twice, attributes_json
-    embeds the same trees again — and Catalyst's CollapseProject then
-    multiplies them further through the downstream single-reference merge
-    cascade (measured: 33 regex evaluations/row in the parse projection
-    alone, 83 after a 9-statement transform; 6 and ~10 staged). Catalyst
-    does NOT inline a non-cheap expression referenced more than once, so
-    attribute indirection is the stable way to pin evaluation counts.
+    through attribute references. Inlining each regex into every
+    expression that reads it (the obvious construction) bakes
+    expression-level duplicates into single projections — nullif(re, '')
+    copies the regex twice, the attributes JSON embeds the same trees
+    again — and Catalyst's CollapseProject then multiplies them further
+    through the downstream single-reference merge cascade (measured: 33
+    regex evaluations/row in the parse projection alone, 83 after a
+    9-statement transform; 6 and ~10 staged). Catalyst does NOT inline a
+    non-cheap expression referenced more than once, so attribute
+    indirection is the stable way to pin evaluation counts.
+
+    The three staged projections are SQL text, each reading the previous
+    stage's columns by name: the raw regex captures, their typed NULL-on-
+    no-match forms, then severity_number, attributes_json and body in
+    canonical order. Planned from text, parse costs about 100 py4j round
+    trips, where building the same plan from PySpark Column calls takes
+    ~2,000.
+    Literals render through ``sql_str``, so the plan is the same under
+    either ``spark.sql.parser.escapedStringLiterals``.
     """
-    raw = transcripts.withColumns(
-        {
-            "__sev_raw": F.regexp_extract(F.col("text"), SEV_PATTERN, 1),
-            "__tool_raw": F.regexp_extract(F.col("text"), TOOL_PATTERN, 1),
-            "__trace_raw": F.regexp_extract(F.col("text"), TRACE_PATTERN, 1),
-            "__span_raw": F.regexp_extract(F.col("text"), SPAN_PATTERN, 1),
-            "__dur_raw": F.regexp_extract(F.col("text"), DUR_PATTERN, 1),
-            "__status_raw": F.regexp_extract(F.col("text"), STATUS_PATTERN, 1),
-        }
-    )
+    raw = _staged(transcripts, {
+        stage: f"regexp_extract(text, {sql_str(pattern)}, 1)"
+        for _, stage, pattern in _FIELDS
+    })
     # regexp_extract gives '' on no match in Spark and DuckDB: NULL it
-    typed = raw.withColumns(
-        {
-            "severity_text": F.nullif(F.col("__sev_raw"), F.lit("")),
-            "parsed_tool": F.nullif(F.col("__tool_raw"), F.lit("")),
-            "trace_id": F.nullif(F.col("__trace_raw"), F.lit("")),
-            "span_id": F.nullif(F.col("__span_raw"), F.lit("")),
-            "dur_ms": F.nullif(F.col("__dur_raw"), F.lit("")).cast("long"),
-            "status": F.nullif(F.col("__status_raw"), F.lit("")),
-        }
+    typed = _staged(raw, {
+        name: f"nullif({stage}, '')" for name, stage, _ in _FIELDS
+    } | {"dur_ms": "CAST(nullif(__dur_raw, '') AS BIGINT)"})
+    attrs = attributes_json_sql(
+        {"dur_ms": "dur_ms", "status": "status", "tool": "parsed_tool"}
     )
-    derived = typed.withColumns(
-        {
-            "severity_number": severity_number_column(
-                F.col("severity_text")
-            ).cast("int"),
-            "attributes_json": attributes_json(
-                {
-                    "dur_ms": F.col("dur_ms"),
-                    "status": F.col("status"),
-                    "tool": F.col("parsed_tool"),
-                }
-            ),
-            "body": F.col("text"),
-        }
-    )
-    # canonical output order (PARSED_SCHEMA) — the withColumns staging
-    # above appends in dependency order, not presentation order
-    return derived.select(
+    return typed.selectExpr(
         "conv_id", "turn_idx", "role", "text", "tool", "ts",
-        "severity_text", "severity_number", "parsed_tool", "trace_id",
-        "span_id", "dur_ms", "status", "attributes_json", "body",
+        "severity_text", f"{_SEVERITY_NUMBER_SQL} AS severity_number",
+        "parsed_tool", "trace_id", "span_id", "dur_ms", "status",
+        f"{attrs} AS attributes_json", "text AS body",
     )
 
 

@@ -26,7 +26,7 @@ so both wires decode to identical rows.
 Engine columns ride in the reserved ``otelcol.`` attribute namespace
 (conv_id/turn_idx/role/tool/parsed_tool/dur_ms/status); user attributes
 (attributes_json) become real typed KeyValue pairs and are re-canonicalized
-on decode with byte-identical rules to functions.values.attributes_json.
+on decode with byte-identical rules to functions.values.attributes_json_sql.
 
 Scale notes: both directions are ``mapInPandas`` (Arrow-batched, one pass);
 the logs and trace encoders' only shuffle is the groupBy(conv_id) that the
@@ -155,7 +155,7 @@ def _scalar_text(v: Any) -> str:
 
 def canonical_attrs_json(attrs: dict[str, Any]) -> str:
     """Sorted-key canonical JSON — the Python twin of
-    functions.values.attributes_json (null-valued keys omitted)."""
+    functions.values.attributes_json_sql (null-valued keys omitted)."""
     return (
         "{"
         + ", ".join(

@@ -20,53 +20,45 @@ with fanoutconsumer/logs.go:40-58).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ERR_EMPTY_TEXT = "empty_text"
 ERR_UNKNOWN_SEVERITY = "unknown_severity"
 
-
-def _error_reason() -> Column:
-    return (
-        F.when(F.col("text").isNull() | (F.col("text") == ""), F.lit(ERR_EMPTY_TEXT))
-        .when(
-            F.col("severity_text").isNotNull() & F.col("severity_number").isNull(),
-            F.lit(ERR_UNKNOWN_SEVERITY),
-        )
-        .otherwise(F.lit(None).cast("string"))
-    )
+_ERROR_REASON_SQL = (
+    f"CASE WHEN text IS NULL OR text = '' THEN '{ERR_EMPTY_TEXT}'"
+    " WHEN severity_text IS NOT NULL AND severity_number IS NULL"
+    f" THEN '{ERR_UNKNOWN_SEVERITY}' ELSE CAST(NULL AS STRING) END"
+)
+# NULL-propagating concat (matches the oracle's `||`): concat_ws would
+# silently SKIP a null role/tool_family and emit a partial sink id on the
+# Spark side only
+_SINK_ID_SQL = "CASE WHEN error_reason IS NULL THEN concat(role, '/', tool_family) END"
 
 
 def route(enriched: DataFrame) -> DataFrame:
     """Add (error_reason, sink_id); sink_id NULL iff dead-lettered.
 
-    sink_id reads error_reason through the ATTRIBUTE, not a second copy of
-    the Column tree: the reason CASE chains through severity_number's
-    25-branch mapping down to the parse regexes, and a duplicated tree
-    re-evaluates that whole chain per row (operators/parse.py plan-shape
-    note — Catalyst won't inline a non-cheap expression referenced twice,
-    but it can't dedupe two copies it was handed)."""
-    routed = enriched.withColumn("error_reason", _error_reason())
-    return routed.withColumn(
-        "sink_id",
-        # NULL-propagating concat (matches the oracle's `||`): concat_ws
-        # would silently SKIP a null role/tool_family and emit a partial
-        # sink id on the Spark side only
-        F.when(
-            F.col("error_reason").isNull(),
-            F.concat(F.col("role"), F.lit("/"), F.col("tool_family")),
-        ),
-    )
+    Both are SQL text, which plans in a few py4j round trips (each PySpark
+    Column call costs one or more). sink_id reads error_reason through the
+    ATTRIBUTE, in a second projection, not a second copy of the CASE: the
+    reason chains through severity_number's map lookup down to the parse
+    regexes, and a duplicated tree re-evaluates that whole chain per row
+    (operators/parse.py plan-shape note — Catalyst won't inline a
+    non-cheap expression referenced twice, but it can't dedupe two copies
+    it was handed)."""
+    routed = enriched.withColumn("error_reason", F.expr(_ERROR_REASON_SQL))
+    return routed.withColumn("sink_id", F.expr(_SINK_ID_SQL))
 
 
 def routed_ok(routed: DataFrame) -> DataFrame:
-    return routed.filter(F.col("error_reason").isNull())
+    return routed.filter("error_reason IS NULL")
 
 
 def dead_letter(routed: DataFrame) -> DataFrame:
     """The dead-letter sink (permanent errors; consumererror.NewPermanent)."""
-    return routed.filter(F.col("error_reason").isNotNull())
+    return routed.filter("error_reason IS NOT NULL")
 
 
 def write_sinks(
@@ -94,7 +86,7 @@ def write_sinks(
     storage boundary.
     """
     writer = (
-        routed.withColumn("sink", F.coalesce("sink_id", F.lit("dead_letter")))
+        routed.withColumn("sink", F.expr("coalesce(sink_id, 'dead_letter')"))
         .write.option("maxRecordsPerFile", max_records_per_file)
     )
     if compression:

@@ -18,6 +18,12 @@ for a deterministic batch DAG:
   never a session setting; idempotent — a re-run of a half-written wave
   replaces it), and ONLY THEN is a checkpoint row committed per bucket
   (write-then-commit = delete-after-OnProcessingFinished ordering).
+* A wave's per-bucket stats are **observed on its write**, the way the
+  reference's obsreport counts items as they pass a boundary rather than in
+  a second pass: each write attempt carries a fresh ``Observation`` of
+  conditional aggregates, one set per bucket of the wave, and only the
+  attempt that succeeded is read. The stats therefore describe exactly the
+  rows that were written, with no persist and no second job.
 * Resume = anti-join committed buckets: a new run processes only buckets with
   no committed checkpoint row. Crash between write and commit re-runs the
   wave; the overwrite makes that exactly-once in the output.
@@ -36,7 +42,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -76,7 +82,24 @@ def bucket_col(n_buckets: int):
     CheckpointedRunner.run so wave filters align with (and prune on) the
     table's own partitioning.
     """
-    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
+    return F.expr(f"CAST(pmod(xxhash64(conv_id), {int(n_buckets)}) AS INT)")
+
+
+def _bucket_stats_sql(b: int) -> str:
+    """Bucket ``b``'s ledger stats as one observed aggregate over its wave:
+    the order-independent 64-bit lineage fingerprint (bit_xor cannot
+    overflow at any row count, where a sum of hashes overflows int64
+    around 1.8e10 rows and ANSI mode turns that into a post-write
+    failure; NULL when the bucket has no rows), its row count, and the
+    ok / dead-letter split on error_reason."""
+    return (
+        "named_struct("
+        f"'fp', bit_xor(CASE WHEN part_bucket = {b} THEN xxhash64(conv_id, turn_idx) END), "
+        f"'n', count_if(part_bucket = {b}), "
+        f"'ok', count_if(part_bucket = {b} AND error_reason IS NULL), "
+        f"'dl', count_if(part_bucket = {b} AND error_reason IS NOT NULL)"
+        f") AS b{b}"
+    )
 
 
 @dataclass
@@ -175,74 +198,53 @@ class CheckpointedRunner:
         # system.bucket so wave filters prune the storage partitions)
         bucketed = routed.withColumn(
             "part_bucket",
-            (bucket_expr if bucket_expr is not None
-             else bucket_col(cfg.n_buckets)).cast("int"),
+            bucket_col(cfg.n_buckets) if bucket_expr is None
+            else bucket_expr.cast("int"),
         )
         totals = {"run_id": run_id, "skipped_buckets": sorted(done),
                   "processed_buckets": [], "n_routed_ok": 0, "n_dead_letter": 0}
 
         for w_idx, wave in enumerate(waves):
             t0 = time.perf_counter()
-            # persist the wave: the sink write and the lineage stats must
-            # consume ONE materialization (a re-scan could see an input
-            # that changed between the two actions, making the committed
-            # fingerprint describe data that was never written), and it
-            # halves the upstream scans per wave
+            # no persist: the write is the wave's one materialization, and
+            # the stats are observed on it (module docstring)
             wave_df = bucketed.filter(
-                F.col("part_bucket").isin(wave)
-            ).persist()
-
-            with_retry(
-                lambda df=wave_df: with_timeout(
-                    lambda: write_sinks(
-                        df, cfg.sinks_path, cfg.max_records_per_file,
-                        extra_partition_cols=["part_bucket"],
-                    ),
-                    cfg.attempt_timeout_s,
-                    spark=self.spark,
-                ),
-                self.retry,
+                f"part_bucket IN ({', '.join(map(str, wave))})"
             )
+            stats = [F.expr(_bucket_stats_sql(b)) for b in wave]
 
-            stats = (
-                wave_df.groupBy("part_bucket")
-                .agg(
-                    # order-independent 64-bit lineage fingerprint;
-                    # bit_xor cannot overflow at any row count (a sum of
-                    # hashes overflows int64 around 1.8e10 rows, which
-                    # ANSI mode turns into a post-write failure)
-                    F.expr("bit_xor(xxhash64(conv_id, turn_idx))").alias("fp"),
-                    F.count(F.lit(1)).alias("n_input"),
-                    F.count(F.when(F.col("error_reason").isNull(), 1)).alias("n_ok"),
-                    F.count(F.when(F.col("error_reason").isNotNull(), 1)).alias("n_dl"),
+            def attempt(df=wave_df, stats=stats) -> Observation:
+                obs = Observation()
+                write_sinks(
+                    df.observe(obs, *stats), cfg.sinks_path,
+                    cfg.max_records_per_file,
+                    extra_partition_cols=["part_bucket"],
                 )
-                .collect()
-            )
-            wave_df.unpersist()
-            by_bucket = {r.part_bucket: r for r in stats}
+                return obs
+
+            observed = with_retry(
+                lambda: with_timeout(attempt, cfg.attempt_timeout_s,
+                                     spark=self.spark),
+                self.retry,
+            ).get
+            by_bucket = {b: observed[f"b{b}"] for b in wave}
             wall_ms = int((time.perf_counter() - t0) * 1000)
             # attribute wave wall time to buckets by row share (buckets
             # run concurrently in one job; an even split overstates the
             # small buckets' throughput)
-            wave_rows = max(sum(r.n_input for r in stats), 1)
+            wave_rows = max(sum(r.n for r in by_bucket.values()), 1)
             self.ledger.append(
                 [
                     (
-                        run_id, cfg.n_buckets, b,
-                        int(r.fp) if r else None,
-                        r.n_input if r else 0,
-                        r.n_ok if r else 0,
-                        r.n_dl if r else 0,
-                        max(1, wall_ms * (r.n_input if r else 0) // wave_rows),
-                        "committed",
+                        run_id, cfg.n_buckets, b, r.fp, r.n, r.ok, r.dl,
+                        max(1, wall_ms * r.n // wave_rows), "committed",
                     )
-                    for b in wave
-                    for r in [by_bucket.get(b)]
+                    for b, r in by_bucket.items()
                 ]
             )
             totals["processed_buckets"].extend(wave)
-            totals["n_routed_ok"] += sum(r.n_ok for r in stats)
-            totals["n_dead_letter"] += sum(r.n_dl for r in stats)
+            totals["n_routed_ok"] += sum(r.ok for r in by_bucket.values())
+            totals["n_dead_letter"] += sum(r.dl for r in by_bucket.values())
 
             if fail_after_waves is not None and w_idx + 1 >= fail_after_waves:
                 raise RuntimeError(

@@ -8,9 +8,11 @@ severity_number.go:52-107 (base names without a numeric suffix for level 1
 of each band, e.g. "Info", "Info2", ...). We use the UPPERCASE token form
 that appears in transcript text markers.
 
-This table is the single source of truth for BOTH the Spark engine (CASE
-expression / broadcast lookup) and the DuckDB oracle SQL (generated CASE),
-so engine-vs-oracle equality is structural, not coincidental.
+This table is the single source of truth for BOTH the Spark engine and the
+DuckDB oracle SQL, so engine-vs-oracle equality is structural, not
+coincidental. The engine's form is one lookup into a literal SQL ``map(...)``
+rendered by ``operators/parse.py`` (``_SEVERITY_NUMBER_SQL``); the oracle's is
+the generated CASE of ``severity_case_sql`` (DuckDB has no map literals).
 """
 
 from __future__ import annotations
@@ -33,31 +35,6 @@ SEVERITY_UNSPECIFIED = 0
 # sink_counts aggregate (n_error_severity), mirroring how obsreport splits
 # send_failed vs sent counters (obsreport/obsreport_exporter.go:141-161).
 ERROR_THRESHOLD = SEVERITY_NUMBER["ERROR"]
-
-
-def severity_number_column(col):
-    """Column form of the token->number mapping for the Spark engine: ONE
-    lookup into a constant-folded literal map instead of the 25-branch
-    CASE. Identical semantics to severity_case_sql (NULL token -> 0,
-    unknown token -> NULL via try_element_at's missing-key NULL), but the
-    expression references the token column twice instead of 25 times —
-    when Catalyst pushes a severity predicate down through the parse
-    projection it inlines the column's defining expression per reference,
-    and the CASE form multiplied the severity regex ~25x into every pushed
-    filter (operators/parse.py plan-shape note). The SQL CASE remains the
-    oracle-side form (DuckDB has no map literals)."""
-    from pyspark.sql import functions as F
-
-    lookup = F.create_map(
-        *[
-            lit
-            for name, num in SEVERITY_NUMBER.items()
-            for lit in (F.lit(name), F.lit(num))
-        ]
-    )
-    return F.when(col.isNull(), F.lit(0)).otherwise(
-        F.try_element_at(lookup, col)
-    )
 
 
 def severity_case_sql(col: str = "sev_text") -> str:

@@ -110,9 +110,10 @@ def test_crashed_tick_resumes_at_both_layers(spark, tmp_path):
 def test_tick_job_budget(spark, tmp_path):
     """A steady-state tick (the file ledger already holds a tick) over
     three new files, with a checkpointed parse -> enrich -> route write,
-    runs at most 9 Spark jobs on its own thread (the footer probes run on a
+    runs at most 7 Spark jobs on its own thread (the footer probes run on a
     pool): enrich's lookups and the ledger rows are literals, so they start
-    no job of their own."""
+    no job of their own, and each wave's stats are observed on its write,
+    so the wave is neither persisted nor scanned a second time."""
     data = str(tmp_path / "landing")
     src = IncrementalSource(spark, data, str(tmp_path / "file_ledger"))
     base = events_to_transcripts(spark, SF_SMOKE)
@@ -141,4 +142,31 @@ def test_tick_job_budget(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert out["n_files"] == 3
     jobs = sc.statusTracker().getJobIdsForGroup("tick-budget")
-    assert 0 < len(jobs) <= 9, f"{len(jobs)} jobs in one tick"
+    assert 0 < len(jobs) <= 7, f"{len(jobs)} jobs in one tick"
+
+
+def test_planning_py4j_budget(spark, monkeypatch):
+    """Planning parse -> enrich -> route takes at most 250 py4j round trips
+    (counted by wrapping the gateway client's send_command): the three
+    stages are SQL text, where the same plan built from PySpark Column
+    calls took ~2,300. The fewest of three plannings is taken, so a
+    garbage-collection burst of py4j object releases does not count."""
+    import gc
+
+    df = events_to_transcripts(spark, SF_SMOKE)
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real = client.send_command
+
+    def counted(*args, **kwargs):
+        sent.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    calls = []
+    for _ in range(3):
+        gc.collect()
+        sent.clear()
+        route(enrich(parse_turns(df), spark))
+        calls.append(len(sent))
+    assert 0 < min(calls) <= 250, f"{calls} py4j calls to plan the tick"

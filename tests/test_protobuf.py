@@ -155,7 +155,7 @@ def test_logs_request_roundtrip_python():
 
 
 def test_canonical_attrs_json_matches_column_semantics():
-    # vectors mirror functions.values.attributes_json output shapes
+    # vectors mirror functions.values.attributes_json_sql output shapes
     assert canonical_attrs_json({}) == "{}"
     assert (
         canonical_attrs_json({"tool": "browser", "dur_ms": 113})
