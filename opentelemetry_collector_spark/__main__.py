@@ -13,6 +13,13 @@ Lifecycle mirrors the reference: resolve+validate config -> build the DAG
 Batch flags and ``--config`` YAML both become a ``ServiceConfig`` that
 ``run_service`` executes; checkpointed waves make any crash resumable
 (--resume skips committed buckets, persistent-queue semantics).
+
+Both print one JSON report, ``{"mode", "wall_s", "pipelines": {pipeline:
+{exporter: counts, "wall_s"}}}``, taken from what ``run_service`` returns:
+each exporter's counts are observed on its own write, so the report costs
+no extra job. ``checkpointed_sinks`` reports its run totals (processed and
+skipped buckets, ok and dead-letter rows, run_id) next to ``sent``.
+``--mode stream`` prints ``{"mode", "wall_s", "n_input"}``.
 """
 
 from __future__ import annotations
@@ -148,24 +155,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = builder.getOrCreate()
 
     t0 = time.perf_counter()
-    if args.config:
-        # collector.Run parity: resolve config (confmap provider URIs,
-        # ${} expansion, right-biased merge across files), build the
-        # pipeline graph, run every pipeline (service/service.go:83-233)
-        import os
-
-        from opentelemetry_collector_spark.plans.config import ServiceConfig
-
-        svc_cfg = ServiceConfig.from_sources(*args.config, env=dict(os.environ))
-        # persist_results: the report counts below reuse the exporters'
-        # execution instead of re-running every pipeline plan
-        results = run_service(spark, svc_cfg, persist_results=True)
-        report = {
-            "mode": "config",
-            "pipelines": {name: df.count() for name, df in results.items()},
-            "wall_s": round(time.perf_counter() - t0, 2),
-        }
-    elif args.mode == "stream":
+    if args.mode == "stream" and not args.config:
         from opentelemetry_collector_spark.streaming.pipeline import (
             routed_stream,
             start_sink_writer,
@@ -186,47 +176,47 @@ def main(argv: list[str] | None = None) -> int:
             "n_input": sum(p["numInputRows"] for p in q.recentProgress),
         }
     else:
-        import uuid
+        if args.config:
+            # collector.Run parity: resolve config (confmap provider URIs,
+            # ${} expansion, right-biased merge across files), build the
+            # pipeline graph, run every pipeline (service/service.go:83-233)
+            import os
 
-        from pyspark.sql import functions as F
-
-        from opentelemetry_collector_spark.plans.checkpoint import (
-            CheckpointConfig,
-            CheckpointedRunner,
-        )
-
-        run_id = args.run_id or uuid.uuid4().hex[:12]
-        svc_cfg = flag_service_config(args, run_id)
-        ledger = CheckpointedRunner(
-            spark, CheckpointConfig(args.output, n_buckets=args.n_buckets)
-        )
-        done = ledger.committed_buckets()
-        if done and not args.resume:
-            # fresh run: a prior ledger would mask new work — require clean dir
-            print(
-                "output ledger exists; pass --resume to continue it",
-                file=sys.stderr,
+            from opentelemetry_collector_spark.plans.config import (
+                ServiceConfig,
             )
-            spark.stop()
-            return 2
-        # persist_results=False: each checkpoint wave filters the
-        # unpersisted plan by its own buckets, so a resume parses only the
-        # buckets it still has to write
-        run_service(spark, svc_cfg, persist_results=False)
-        # this run's ledger rows; a reused --run-id may also own rows of
-        # buckets committed before this run
-        rows = [
-            r for r in ledger.metrics().filter(F.col("run_id") == run_id).collect()
-            if r.bucket not in done
-        ]
+
+            mode = "config"
+            svc_cfg = ServiceConfig.from_sources(
+                *args.config, env=dict(os.environ)
+            )
+        else:
+            import uuid
+
+            from opentelemetry_collector_spark.plans.checkpoint import (
+                CheckpointConfig,
+                CheckpointedRunner,
+            )
+
+            mode = "batch"
+            run_id = args.run_id or uuid.uuid4().hex[:12]
+            svc_cfg = flag_service_config(args, run_id)
+            if CheckpointedRunner(
+                spark, CheckpointConfig(args.output, n_buckets=args.n_buckets)
+            ).committed_buckets() and not args.resume:
+                # fresh run: a prior ledger would mask new work — require
+                # a clean dir
+                print(
+                    "output ledger exists; pass --resume to continue it",
+                    file=sys.stderr,
+                )
+                spark.stop()
+                return 2
+        results = run_service(spark, svc_cfg)
         report = {
-            "mode": "batch",
+            "mode": mode,
             "wall_s": round(time.perf_counter() - t0, 2),
-            "skipped_buckets": sorted(done),
-            "processed_buckets": sorted(r.bucket for r in rows),
-            "n_routed_ok": sum(r.n_routed_ok for r in rows),
-            "n_dead_letter": sum(r.n_dead_letter for r in rows),
-            "run_id": run_id,
+            "pipelines": {name: r.report for name, r in results.items()},
         }
 
     print(json.dumps(report))

@@ -26,7 +26,10 @@ BUCKET_SECONDS = 300  # 5-minute tumbling buckets (FIXTURES.md §3 sink_counts)
 
 
 def time_bucket(ts: Column, seconds: int = BUCKET_SECONDS) -> Column:
-    """Tumbling-window bucket start as epoch seconds (bigint)."""
+    """Tumbling-window bucket start as epoch seconds (bigint). Raises
+    ValueError when ``seconds <= 0``: such a bucket has no meaning."""
+    if seconds <= 0:
+        raise ValueError(f"bucket_seconds must be positive, got {seconds}")
     return (F.floor(F.unix_timestamp(ts) / seconds) * seconds).cast("long")
 
 

@@ -1,16 +1,5 @@
-"""Pipeline-health counters — the obsreport analog (SURVEY §2.6).
-
-The reference counts records at every stage boundary:
-``receiver/accepted_log_records`` / ``refused_log_records``
-(obsreport/obsreport_receiver.go:165-313),
-``processor/accepted|refused|dropped`` (obsreport_processor.go:236-292),
-``exporter/sent_log_records`` / ``send_failed_log_records``
-(obsreport_exporter.go:141-161).
-
-Spark's ``Observation`` API attaches these as metrics on the SAME pass that
-computes the result — zero extra scans, collected on action completion.
-Metric names mirror the obsmetrics key names
-(internal/obsreportconfig/obsmetrics/obs_receiver.go:41-52 etc.).
+"""Record envelopes of the parsed turns: the JSONL record envelope and the
+trace signal's span rows.
 
 JSONL record envelope: to_otlp_json / from_otlp_json serialize parsed
 turns to / from one flat JSON object per LogRecord with to_json /
@@ -18,11 +7,18 @@ from_json — the line format of the ``otlp_jsonl`` exporter and
 sources/jsonl.py. The round trip is lossless (tested). It is the engine's
 own envelope, not the OTLP/JSON wire: the spec-exact wires of all three
 signals are operators/protobuf.py's ``to/from_otlp_*_json``.
+
+Span rows: build_spans materializes the pdata/ptrace Span surface from the
+parsed tool-call turns.
+
+Pipeline-health counts (the obsreport analog, SURVEY §2.6) are not here:
+each exporter counts the rows it sent on its own write
+(plans/service.py ``count_on_write``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # OTLP wire timestamps are integers since epoch (uint64 ns,
@@ -34,31 +30,6 @@ LOG_RECORD_JSON_SCHEMA = (
     "severity_number:int, severity_text:string, trace_id:string, "
     "span_id:string, attributes_json:string, body:string>"
 )
-
-
-def observed_pipeline(routed: DataFrame) -> tuple[DataFrame, Observation]:
-    """Attach obsreport-style counters to a routed DataFrame. The returned
-    Observation yields, after the next action on the returned frame:
-    receiver_accepted_log_records, exporter_sent_log_records,
-    processor_dropped_log_records (dead-letter), and active_sinks (the live
-    fan-out width, a queue-gauge analog).
-    """
-    obs = Observation("otelcol_pipeline")
-    observed = routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("receiver_accepted_log_records"),
-        F.count(F.when(F.col("error_reason").isNull(), 1)).alias(
-            "exporter_sent_log_records"
-        ),
-        F.count(F.when(F.col("error_reason").isNotNull(), 1)).alias(
-            "processor_dropped_log_records"
-        ),
-        # queue-gauge analog: live sink fan-out width (DISTINCT aggregates
-        # are disallowed in observed metrics; HLL is exact at this
-        # cardinality)
-        F.approx_count_distinct("sink_id").alias("active_sinks"),
-    )
-    return observed, obs
 
 
 def to_otlp_json(parsed: DataFrame) -> DataFrame:

@@ -15,8 +15,9 @@ Two operators:
   as requiring traceID-affinity routing (docs/performance.md:69-72): the
   keep/drop decision needs ALL spans of a trace in one place. Policies
   (first match wins): `error` (any span with status=ERROR), `latency`
-  (any span with dur_ms >= threshold). Kept traces emit all their spans
-  with the deciding policy attached.
+  (any span with dur_ms >= threshold), and with ``composite=True`` a
+  hash-deterministic `probabilistic` fallback. Kept traces emit all their
+  spans with the deciding policy attached.
 
 Scale notes: both operators shuffle by conv_id — the table's bucket(conv_id)
 layout means this is the one partitioning the whole pipeline already uses, so
@@ -49,31 +50,53 @@ def trace_rollup(parsed: DataFrame) -> DataFrame:
     )
 
 
+# composite fallback: the probabilistic policy keeps 10.00% of the rest
+TAIL_PROB_PERMYRIAD = 1000
+TAIL_PROB_SALT = ":tailprob"
+
+
 def tail_sampling(
     parsed: DataFrame,
     latency_threshold_ms: int = LATENCY_THRESHOLD_MS,
     project: bool = True,
+    composite: bool = False,
 ) -> DataFrame:
     """Keep whole traces matching a policy; emit their spans + the policy.
 
     Policy order mirrors tail-sampling's first-match semantics: `error`
-    wins over `latency`. ``project=False`` keeps every input column
-    (+ ``keep_policy``) — the in-pipeline processor shape, where
-    downstream stages still need the full record.
+    wins over `latency`. ``composite=True`` appends the `probabilistic`
+    fallback — the and/or policy chain the tail-sampling pattern defines:
+    it keeps a hash-deterministic TAIL_PROB_PERMYRIAD/10000 share of the
+    traces no stronger policy claimed, so kept traffic stays bounded. That
+    decision hashes the trace identity (conv_id), so it needs no window —
+    all spans of a trace agree by construction — and the composite costs
+    the same one trace-affinity shuffle as the two-policy form
+    (exchange-free on the bucket(conv_id) layout).
+
+    ``project=False`` keeps every input column (+ ``keep_policy``) — the
+    in-pipeline processor shape, where downstream stages still need the
+    full record.
     """
     w = Window.partitionBy("conv_id")
     spans = parsed.filter(F.col("trace_id").isNotNull())
-    flagged = spans.withColumn(
-        "keep_policy",
-        F.when(
-            F.max(F.when(F.col("status") == "ERROR", 1).otherwise(0)).over(w)
-            == 1,
-            F.lit("error"),
-        ).when(
-            F.max("dur_ms").over(w) >= latency_threshold_ms, F.lit("latency")
-        ),
+    policy = F.when(
+        F.max(F.when(F.col("status") == "ERROR", 1).otherwise(0)).over(w)
+        == 1,
+        F.lit("error"),
+    ).when(F.max("dur_ms").over(w) >= latency_threshold_ms, F.lit("latency"))
+    if composite:
+        from opentelemetry_collector_spark.operators.textstats import (
+            _hash_bucket,
+        )
+
+        prob_bucket = _hash_bucket(F.col("conv_id"), 10000, TAIL_PROB_SALT)
+        policy = policy.when(
+            prob_bucket.cast("int") < TAIL_PROB_PERMYRIAD,
+            F.lit("probabilistic"),
+        )
+    kept = spans.withColumn("keep_policy", policy).filter(
+        F.col("keep_policy").isNotNull()
     )
-    kept = flagged.filter(F.col("keep_policy").isNotNull())
     if not project:
         return kept
     return kept.select(
@@ -105,7 +128,18 @@ GROUP BY conv_id
 
 def tail_sampling_oracle_body(
     latency_threshold_ms: int = LATENCY_THRESHOLD_MS,
+    composite: bool = False,
 ) -> str:
+    fallback = ""
+    if composite:
+        from opentelemetry_collector_spark.operators.textstats import (
+            _hash_bucket_sql,
+        )
+
+        bucket = _hash_bucket_sql("conv_id", 10000, TAIL_PROB_SALT)
+        fallback = f"""
+            WHEN cast({bucket} AS int) < {TAIL_PROB_PERMYRIAD}
+                THEN 'probabilistic'"""
     return f"""
 SELECT conv_id, turn_idx, tool, trace_id, span_id, dur_ms, status, keep_policy
 FROM (
@@ -114,7 +148,7 @@ FROM (
             WHEN max(CASE WHEN status = 'ERROR' THEN 1 ELSE 0 END)
                 OVER (PARTITION BY conv_id) = 1 THEN 'error'
             WHEN max(dur_ms) OVER (PARTITION BY conv_id)
-                >= {latency_threshold_ms} THEN 'latency'
+                >= {latency_threshold_ms} THEN 'latency'{fallback}
         END AS keep_policy
     FROM parsed WHERE trace_id IS NOT NULL
 ) q WHERE keep_policy IS NOT NULL
@@ -140,8 +174,8 @@ def probabilistic_sampler(
     The trace-unit key is hashed (salted md5, first 8 hex chars -> int)
     into [0, 10000); spans with bucket < SAMPLER_PERMYRIAD are kept. The
     key is ``conv_id`` — the engine's trace unit, the SAME identity
-    tail_sampling / tail_sampling_composite evaluate whole-trace policies
-    over (parse synthesizes ``trace_id`` per TURN, so hashing it would
+    tail_sampling evaluates its whole-trace policies over (parse
+    synthesizes ``trace_id`` per TURN, so hashing it would
     sample individual spans out of a conversation and a downstream
     whole-trace policy would see partial traces; ADVICE r02). All spans of
     a conversation share conv_id, so the decision is trace-consistent
@@ -185,93 +219,6 @@ FROM (
         dur_ms, cast({bucket} AS int) AS sample_bucket
     FROM parsed WHERE trace_id IS NOT NULL
 ) q WHERE sample_bucket < {SAMPLER_PERMYRIAD}
-"""
-
-
-# --- composite tail sampling -------------------------------------------------
-
-TAIL_PROB_PERMYRIAD = 1000  # probabilistic fallback keeps 10.00% of the rest
-TAIL_PROB_SALT = ":tailprob"
-
-
-def tail_sampling_composite(
-    parsed: DataFrame,
-    latency_threshold_ms: int = LATENCY_THRESHOLD_MS,
-    project: bool = True,
-) -> DataFrame:
-    """Composite tail-sampling policy chain, first match wins:
-    ``error`` > ``latency`` > ``probabilistic`` — the and/or policy
-    composition the tail-sampling pattern defines (the reference's docs
-    call out tail sampling as the traceID-affinity workload,
-    docs/performance.md:69-72; the probabilistic fallback keeps a hash-
-    deterministic TAIL_PROB_PERMYRIAD/10000 share of traces no stronger
-    policy claimed, so kept traffic stays bounded).
-
-    The probabilistic decision hashes the trace identity (conv_id), so
-    it needs NO window — all spans of a trace agree by construction; the
-    error/latency policies reuse the single conv_id-partitioned window,
-    so the whole composite costs the same one trace-affinity shuffle as
-    the two-policy form (exchange-free on the bucket(conv_id) layout).
-    """
-    from opentelemetry_collector_spark.operators.textstats import (
-        _hash_bucket,
-    )
-
-    w = Window.partitionBy("conv_id")
-    spans = parsed.filter(F.col("trace_id").isNotNull())
-    prob_bucket = _hash_bucket(F.col("conv_id"), 10000, TAIL_PROB_SALT)
-    flagged = spans.withColumn(
-        "keep_policy",
-        F.when(
-            F.max(F.when(F.col("status") == "ERROR", 1).otherwise(0)).over(w)
-            == 1,
-            F.lit("error"),
-        )
-        .when(
-            F.max("dur_ms").over(w) >= latency_threshold_ms, F.lit("latency")
-        )
-        .when(
-            prob_bucket.cast("int") < TAIL_PROB_PERMYRIAD,
-            F.lit("probabilistic"),
-        ),
-    )
-    kept = flagged.filter(F.col("keep_policy").isNotNull())
-    if not project:
-        return kept
-    return kept.select(
-        "conv_id",
-        "turn_idx",
-        F.col("parsed_tool").alias("tool"),
-        "trace_id",
-        "span_id",
-        "dur_ms",
-        "status",
-        "keep_policy",
-    )
-
-
-def tail_sampling_composite_oracle_body(
-    latency_threshold_ms: int = LATENCY_THRESHOLD_MS,
-) -> str:
-    from opentelemetry_collector_spark.operators.textstats import (
-        _hash_bucket_sql,
-    )
-
-    bucket = _hash_bucket_sql("conv_id", 10000, TAIL_PROB_SALT)
-    return f"""
-SELECT conv_id, turn_idx, tool, trace_id, span_id, dur_ms, status, keep_policy
-FROM (
-    SELECT conv_id, turn_idx, parsed_tool AS tool, trace_id, span_id, dur_ms, status,
-        CASE
-            WHEN max(CASE WHEN status = 'ERROR' THEN 1 ELSE 0 END)
-                OVER (PARTITION BY conv_id) = 1 THEN 'error'
-            WHEN max(dur_ms) OVER (PARTITION BY conv_id)
-                >= {latency_threshold_ms} THEN 'latency'
-            WHEN cast({bucket} AS int) < {TAIL_PROB_PERMYRIAD}
-                THEN 'probabilistic'
-        END AS keep_policy
-    FROM parsed WHERE trace_id IS NOT NULL
-) q WHERE keep_policy IS NOT NULL
 """
 
 

@@ -6,7 +6,8 @@ receivers -> processors -> exporters per pipeline. Here the "graph" is
 DataFrame composition: each named component resolves to a function, and a
 pipeline is a fold of processors over the receiver's DataFrame, fanned out
 to every exporter (fanoutconsumer semantics — the DataFrame is shared; each
-exporter is one write action over the same plan).
+exporter is one write action over the same plan, and reports the rows it
+sent, counted on that write).
 
 Component registry (extensible by passing extra factories):
   receivers:  transcripts (events-derived), transcripts_table (parquet dir),
@@ -20,9 +21,12 @@ Component registry (extensible by passing extra factories):
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.plans.config import ServiceConfig
 
@@ -59,7 +63,6 @@ def _builtin_processors() -> dict[str, Callable]:
         LATENCY_THRESHOLD_MS,
         probabilistic_sampler,
         tail_sampling,
-        tail_sampling_composite,
     )
 
     def sampler_factory(spark, df, cfg):
@@ -76,17 +79,13 @@ def _builtin_processors() -> dict[str, Callable]:
         )
 
     def tail_factory(spark, df, cfg):
-        fn = (
-            tail_sampling_composite
-            if cfg.get("policies") == "composite"
-            else tail_sampling
-        )
-        return fn(
+        return tail_sampling(
             df,
             latency_threshold_ms=cfg.get(
                 "latency_threshold_ms", LATENCY_THRESHOLD_MS
             ),
             project=False,
+            composite=cfg.get("policies") == "composite",
         )
 
     # --- corpus-curation processors (documents stream) ----------------
@@ -95,8 +94,6 @@ def _builtin_processors() -> dict[str, Callable]:
     # every input column). Policies are the standard curation ones; the
     # underlying operators are the oracle-gated ones in operators/dedup.py
     # and operators/textstats.py (docs= processor-position entry).
-
-    from pyspark.sql import functions as F
 
     from opentelemetry_collector_spark.operators import dedup as _dd
     from opentelemetry_collector_spark.operators import textstats as _tx
@@ -427,10 +424,30 @@ def _builtin_processors() -> dict[str, Callable]:
     }
 
 
-def _builtin_exporters() -> dict[str, Callable]:
-    from pyspark.sql import functions as F
+def count_on_write(df: DataFrame, write: Callable[[DataFrame], object]) -> int:
+    """Run ``write`` on ``df`` and return how many rows of ``df`` it
+    consumed, counted by one ``Observation`` on the frame handed to it: the
+    write is the count, as obsreport counts records as they cross the
+    exporter boundary (obsreport_exporter.go:141-161), with no second pass.
 
-    from opentelemetry_collector_spark.operators.aggregate import sink_counts
+    ``write`` must run one Dataset action on that frame (a DataFrameWriter
+    save or a collect): ``Observation.get`` waits for it, and an RDD action
+    never completes it. An observation also stops filters above it from
+    being pushed below it, so observe only the frame the write consumes."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return obs.get["n"]
+
+
+def _builtin_exporters() -> dict[str, Callable]:
+    """Exporter factories. Each runs one write and returns its counts,
+    ``{"sent": n}``: the pipeline rows that fed the write (all of them, or
+    the ok / dead-letter split the exporter selects), counted on that
+    write by ``count_on_write``."""
+    from opentelemetry_collector_spark.operators.aggregate import (
+        log_dedup,
+        sink_counts,
+    )
     from opentelemetry_collector_spark.operators.route import (
         dead_letter,
         routed_ok,
@@ -439,13 +456,18 @@ def _builtin_exporters() -> dict[str, Callable]:
     from opentelemetry_collector_spark.sources.jsonl import write_otlp_jsonl
 
     def export_sinks(spark, df, cfg):
-        write_sinks(df, cfg["path"],
-                    cfg.get("max_records_per_file", 8192),
-                    compression=cfg.get("compression"))
+        def write(d):
+            write_sinks(d, cfg["path"],
+                        cfg.get("max_records_per_file", 8192),
+                        compression=cfg.get("compression"))
+
+        return {"sent": count_on_write(df, write)}
 
     def export_checkpointed(spark, df, cfg):
         # keys are CheckpointConfig's fields plus run_id; an unknown key
-        # fails in the dataclass constructor
+        # fails in the dataclass constructor. The runner counts each wave
+        # on its own write; an observation on ``df`` would sit above the
+        # wave filter and make every wave parse every bucket.
         from opentelemetry_collector_spark.plans.checkpoint import (
             CheckpointConfig,
             CheckpointedRunner,
@@ -453,36 +475,45 @@ def _builtin_exporters() -> dict[str, Callable]:
 
         ckpt = dict(cfg)
         run_id = ckpt.pop("run_id", None)
-        CheckpointedRunner(spark, CheckpointConfig(**ckpt)).run(
+        totals = CheckpointedRunner(spark, CheckpointConfig(**ckpt)).run(
             df, run_id=run_id
         )
+        return {**totals,
+                "sent": totals["n_routed_ok"] + totals["n_dead_letter"]}
 
     def export_counts(spark, df, cfg):
-        bucket_seconds = cfg.get("bucket_seconds", 300)
-        if bucket_seconds <= 0:
-            raise ValueError("sink_counts: bucket_seconds must be positive")
-        counts = sink_counts(routed_ok(df), bucket_seconds)
-        counts.coalesce(1).write.mode("overwrite").parquet(cfg["path"])
+        def write(ok):
+            counts = sink_counts(ok, cfg.get("bucket_seconds", 300))
+            counts.coalesce(1).write.mode("overwrite").parquet(cfg["path"])
+
+        return {"sent": count_on_write(routed_ok(df), write)}
 
     def export_jsonl(spark, df, cfg):
-        write_otlp_jsonl(df, cfg["path"], cfg.get("compression"))
+        # write_otlp_jsonl counts its own lines: its pyarrow zstd branch
+        # writes through an RDD action, which no Observation sees
+        return {"sent": write_otlp_jsonl(df, cfg["path"],
+                                         cfg.get("compression"))}
 
     def export_dead_letter(spark, df, cfg):
-        dead_letter(df).write.mode("overwrite").parquet(cfg["path"])
+        return {"sent": count_on_write(
+            dead_letter(df),
+            lambda d: d.write.mode("overwrite").parquet(cfg["path"]))}
 
     def export_log_dedup(spark, df, cfg):
-        from opentelemetry_collector_spark.operators.aggregate import (
-            log_dedup,
-        )
+        def write(d):
+            groups = log_dedup(d, cfg.get("bucket_seconds", 300))
+            groups.write.mode("overwrite").parquet(cfg["path"])
 
-        groups = log_dedup(df, cfg.get("bucket_seconds", 300))
-        groups.write.mode("overwrite").parquet(cfg["path"])
+        return {"sent": count_on_write(df, write)}
 
     def export_parquet(spark, df, cfg):
-        writer = df.write.mode("overwrite")
-        if cfg.get("partition_by"):
-            writer = writer.partitionBy(*cfg["partition_by"])
-        writer.parquet(cfg["path"])
+        def write(d):
+            writer = d.write.mode("overwrite")
+            if cfg.get("partition_by"):
+                writer = writer.partitionBy(*cfg["partition_by"])
+            writer.parquet(cfg["path"])
+
+        return {"sent": count_on_write(df, write)}
 
     return {
         "sinks": export_sinks,
@@ -497,27 +528,34 @@ def _builtin_exporters() -> dict[str, Callable]:
     }
 
 
+class PipelineRun(NamedTuple):
+    """One pipeline's result: its final (pre-export) frame, and its report
+    ``{exporter: counts, "wall_s": seconds}``."""
+
+    frame: DataFrame
+    report: dict
+
+
 def run_service(
     spark: SparkSession,
     config: ServiceConfig,
     extra_receivers: dict[str, Callable] | None = None,
     extra_processors: dict[str, Callable] | None = None,
     extra_exporters: dict[str, Callable] | None = None,
-    persist_results: bool = False,
-) -> dict[str, DataFrame]:
+) -> dict[str, PipelineRun]:
     """Build and execute every configured pipeline. Component TYPE is the
     config key before any '/' (collector 'type/name' instance convention,
-    e.g. 'otlp_jsonl/backup'). Returns the final DataFrame per pipeline
-    (pre-export) for inspection.
+    e.g. 'otlp_jsonl/backup'). Returns a ``PipelineRun`` per pipeline: the
+    final frame (pre-export) for inspection, and a report holding what each
+    exporter returned (the built-ins return ``{"sent": n}``, counted on
+    their own write) and the pipeline's wall time. Nothing is counted in a
+    pass of its own.
 
     Fan-out parity (fanoutconsumer/logs.go:35-85): all of a pipeline's
     exporters consume the SAME DataFrame — immutability replaces the
     clone-if-mutating dance; Catalyst may recompute the plan per action,
     which callers avoid at scale by .persist() between exporters (handled
-    here when a pipeline has >1 exporter). ``persist_results=True`` keeps
-    each pipeline's frame cached past the exporter loop so the caller's
-    post-run actions (e.g. the CLI's report counts) reuse the exporters'
-    execution instead of re-running the plan — the caller owns unpersist.
+    here when a pipeline has >1 exporter, and released after them).
     """
     receivers = {**_builtin_receivers(), **(extra_receivers or {})}
     processors = {**_builtin_processors(), **(extra_processors or {})}
@@ -526,8 +564,9 @@ def run_service(
     def ctype(name: str) -> str:
         return name.split("/", 1)[0]
 
-    results: dict[str, DataFrame] = {}
+    results: dict[str, PipelineRun] = {}
     for pname, p in config.pipelines.items():
+        t0 = time.perf_counter()
         # receivers: union of all configured sources (shared-component dedup
         # happens naturally — one DataFrame per receiver instance)
         dfs = []
@@ -547,9 +586,10 @@ def run_service(
             df = factory(spark, df, config.processors[prname])
 
         exps = p["exporters"]
-        persisted = persist_results or len(exps) > 1
+        persisted = len(exps) > 1
         if persisted:
             df = df.persist()
+        report = {}
         try:
             for ename in exps:
                 factory = exporters.get(ctype(ename))
@@ -557,9 +597,10 @@ def run_service(
                     raise ValueError(
                         f"no factory for exporter type {ctype(ename)!r}"
                     )
-                factory(spark, df, config.exporters[ename])
+                report[ename] = factory(spark, df, config.exporters[ename])
         finally:
-            if persisted and not persist_results:
+            if persisted:
                 df.unpersist()
-        results[pname] = df
+        report["wall_s"] = round(time.perf_counter() - t0, 2)
+        results[pname] = PipelineRun(df, report)
     return results

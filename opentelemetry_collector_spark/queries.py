@@ -563,7 +563,7 @@ def q_tail_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tail_sampling_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tr.tail_sampling_composite(_parsed(spark, sf_dir))
+    return _tr.tail_sampling(_parsed(spark, sf_dir), composite=True)
 
 
 def q_span_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -955,7 +955,7 @@ FROM spans WHERE linked_trace_id IS NOT NULL""",
     "trace_rollup": f"{_PARSED_CTE}\n{_tr.TRACE_ROLLUP_ORACLE_BODY}",
     "tail_sampling": f"{_PARSED_CTE}\n{_tr.tail_sampling_oracle_body()}",
     "tail_sampling_composite": (
-        f"{_PARSED_CTE}\n{_tr.tail_sampling_composite_oracle_body()}"
+        f"{_PARSED_CTE}\n{_tr.tail_sampling_oracle_body(composite=True)}"
     ),
     "span_edges": f"{_PARSED_CTE}\n{_tr.SPAN_EDGES_ORACLE_BODY}",
     "probabilistic_sampler": (

@@ -60,7 +60,7 @@ def _resolve_codec(compression: str | None) -> str | None:
         ) from None
 
 
-def _write_zstd_pyarrow(lines: DataFrame, path: str) -> None:
+def _write_zstd_pyarrow(lines: DataFrame, path: str) -> int:
     """zstd-frame JSONL wire without the Hadoop codec: one
     ``part-NNNNN.jsonl.zst`` per partition, written executor-side through
     pyarrow's CompressedOutputStream (zstd frames, the same stream format
@@ -68,7 +68,8 @@ def _write_zstd_pyarrow(lines: DataFrame, path: str) -> None:
     is the one legitimate RDD use here; files land atomically via
     tmp+rename. Requires a shared filesystem mount on multi-node clusters
     (same assumption as any POSIX-path sink); deployments with the Hadoop
-    zstd codec on the classpath never reach this path.
+    zstd codec on the classpath never reach this path. Returns the number
+    of lines written, summed from the per-partition counts.
     """
     import os
     import shutil
@@ -81,18 +82,18 @@ def _write_zstd_pyarrow(lines: DataFrame, path: str) -> None:
 
         out = os.path.join(path, f"part-{idx:05d}.jsonl.zst")
         tmp = f"{out}.tmp-{os.getpid()}"
-        wrote = False
+        n = 0
         with pa.output_stream(tmp, compression="zstd") as f:
             for row in it:
                 f.write((row[0] + "\n").encode("utf-8"))
-                wrote = True
-        if wrote:
+                n += 1
+        if n:
             os.replace(tmp, out)
         else:
             os.remove(tmp)  # skip empty partitions (Spark writers do too)
-        return iter(())
+        return iter((n,))
 
-    lines.rdd.mapPartitionsWithIndex(write_part).count()
+    return lines.rdd.mapPartitionsWithIndex(write_part).sum()
 
 
 def _read_zstd_pyarrow(spark: SparkSession, path: str) -> DataFrame:
@@ -147,22 +148,27 @@ def _hadoop_codec_available(spark: SparkSession, codec: str) -> bool:
 
 def write_otlp_jsonl(
     parsed: DataFrame, path: str, compression: str | None = None
-) -> None:
+) -> int:
     """Export parsed turns as JSON lines (logging/OTLP-HTTP exporter
-    analog). ``compression`` takes any reference wire codec name
-    (WIRE_CODECS); zstd transparently uses the pyarrow frame wire when the
-    Hadoop codec is off the classpath."""
+    analog) and return the number of lines written. ``compression`` takes
+    any reference wire codec name (WIRE_CODECS); zstd transparently uses
+    the pyarrow frame wire when the Hadoop codec is off the classpath."""
+    from opentelemetry_collector_spark.plans.service import count_on_write
+
     codec = _resolve_codec(compression)
     lines = to_otlp_json(parsed).select("otlp_json")
     if codec == "zstd" and not _hadoop_codec_available(
         lines.sparkSession, "zstd"
     ):
-        _write_zstd_pyarrow(lines, path)
-        return
-    writer = lines.write.mode("overwrite")
-    if codec:
-        writer = writer.option("compression", codec)
-    writer.text(path)
+        return _write_zstd_pyarrow(lines, path)
+
+    def write(d: DataFrame) -> None:
+        writer = d.write.mode("overwrite")
+        if codec:
+            writer = writer.option("compression", codec)
+        writer.text(path)
+
+    return count_on_write(lines, write)
 
 
 def read_otlp_jsonl(

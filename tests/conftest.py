@@ -41,7 +41,7 @@ def run_routed(spark, transcripts, salted: bool):
         cfg,
         extra_receivers={"fixture": lambda spark, cfg: transcripts},
         extra_exporters={"none": lambda spark, df, cfg: None},
-    )["p"]
+    )["p"].frame
 
 
 def assert_same_routing(plain, salted):

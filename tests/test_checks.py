@@ -203,7 +203,7 @@ def test_config_built_quality_checks_processor(spark, tmp_path):
         spark,
         cfg({"doc_id": {"not_empty": True},
              "lang": {"max_null_frac": 0.0}}),
-    )["gate"]
+    )["gate"].frame
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     assert ok.count() == docs.count()  # gate passes rows through intact
 

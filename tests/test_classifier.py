@@ -252,7 +252,7 @@ def _run_classifier_filter(spark, tmp_path, docs, label_col="label"):
         },
         env={},
     )
-    return run_service(spark, cfg)["clf"]
+    return run_service(spark, cfg)["clf"].frame
 
 
 def test_config_built_classifier_filter(spark, tmp_path):

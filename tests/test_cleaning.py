@@ -254,7 +254,7 @@ def test_config_built_cleaning_pipeline(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["clean"]
+    got = run_service(spark, cfg)["clean"].frame
     docs = spark.read.parquet(src)
     want = doc_c4_filters(
         spark,
@@ -371,7 +371,7 @@ def test_shipped_cleaning_example_runs_end_to_end(spark, tmp_path):
     cfg = ServiceConfig.from_sources(
         example, env={"DATA_DIR": str(tmp_path), "OUT_DIR": str(tmp_path)}
     )
-    got = run_service(spark, cfg)["clean"]
+    got = run_service(spark, cfg)["clean"].frame
     rows = {r.doc_id: r for r in got.collect()}
     assert set(rows) == {0, 1, 6}  # the fixture's surviving pages
     assert "<EMAIL>" in rows[0].text and "<SSN>" in rows[0].text

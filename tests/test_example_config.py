@@ -20,7 +20,7 @@ def test_example_config_runs_end_to_end(spark, tmp_path):
     cfg = ServiceConfig.from_sources(
         EXAMPLE, env={"DATA_DIR": SF_SMOKE, "OUT_DIR": str(tmp_path)}
     )
-    out = run_service(spark, cfg)["logs"]
+    out = run_service(spark, cfg)["logs"].frame
 
     # the transform dropped system turns and masked conv_id
     assert out.filter("role = 'system'").count() == 0
@@ -48,6 +48,8 @@ def test_sampled_example_via_cli_config_mode(tmp_path):
     import subprocess
     import sys
 
+    import pyarrow.parquet as pq
+
     env = dict(os.environ, DATA_DIR=SF_SMOKE, OUT_DIR=str(tmp_path))
     proc = subprocess.run(
         [sys.executable, "-m", "opentelemetry_collector_spark",
@@ -59,8 +61,11 @@ def test_sampled_example_via_cli_config_mode(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     report = json.loads(proc.stdout.strip().splitlines()[-1])
     assert report["mode"] == "config"
-    assert report["pipelines"]["sampled"] > 0
-    assert (tmp_path / "log_dedup").exists()
+    # the exporter's sent count is the rows its write consumed: every
+    # sampled record lands in exactly one log_dedup group
+    sent = report["pipelines"]["sampled"]["log_dedup"]["sent"]
+    groups = pq.read_table(str(tmp_path / "log_dedup"))
+    assert sum(groups.column("n_records").to_pylist()) == sent > 0
 
 
 EXAMPLE_CURATION = str(
@@ -88,7 +93,7 @@ def test_curation_example_via_cli_config_mode(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     report = json.loads(proc.stdout.strip().splitlines()[-1])
     assert report["mode"] == "config"
-    n_curated = report["pipelines"]["curation"]
+    n_curated = report["pipelines"]["curation"]["parquet"]["sent"]
     assert n_curated > 0
     # the pass actually filtered something, and wrote what it kept
     import pyarrow.parquet as pq
@@ -100,14 +105,14 @@ def test_curation_example_via_cli_config_mode(tmp_path):
     assert 0 < n_out == n_curated < n_in
     # second pipeline: normalize -> gopher_filter -> mix over the same
     # receiver (training-mix construction)
-    n_mixed = report["pipelines"]["mixing"]
+    n_mixed = report["pipelines"]["mixing"]["parquet/mixed"]["sent"]
     mixed_files = list((tmp_path / "mixed").rglob("*.parquet"))
     assert mixed_files
     n_mixed_out = sum(pq.read_table(str(f)).num_rows for f in mixed_files)
     assert 0 < n_mixed_out == n_mixed < n_in
     # third pipeline: gopher_filter -> priority_sample (fixed-size
     # weighted selection) — exactly k docs survive
-    n_selected = report["pipelines"]["selection"]
+    n_selected = report["pipelines"]["selection"]["parquet/selected"]["sent"]
     selected_files = list((tmp_path / "selected").rglob("*.parquet"))
     assert selected_files
     n_sel_out = sum(pq.read_table(str(f)).num_rows for f in selected_files)
@@ -204,9 +209,10 @@ def test_cli_stream_mode_honours_max_records_per_file(spark, tmp_path):
 
 def test_cli_flag_mode_batch_run_and_resume(tmp_path):
     """Flag mode builds the default sinks + metrics graph and runs it
-    through run_service: the report comes from this run's ledger rows, a
-    rerun over a committed ledger needs --resume, and a resume over a
-    fully committed ledger processes nothing."""
+    through run_service: the report is what its exporters returned (the
+    checkpoint runner's totals for this run), a rerun over a committed
+    ledger needs --resume, and a resume over a fully committed ledger
+    processes nothing."""
     import json
     import subprocess
     import sys
@@ -229,14 +235,17 @@ def test_cli_flag_mode_batch_run_and_resume(tmp_path):
     assert first.returncode == 0, first.stderr[-2000:]
     report = json.loads(first.stdout.strip().splitlines()[-1])
     assert report["mode"] == "batch"
-    assert report["processed_buckets"] == [0, 1, 2, 3]
-    assert report["skipped_buckets"] == []
-    assert (report["n_routed_ok"], report["n_dead_letter"]) == (988, 12)
+    sinks = report["pipelines"]["sinks"]["checkpointed_sinks"]
+    assert sinks["processed_buckets"] == [0, 1, 2, 3]
+    assert sinks["skipped_buckets"] == []
+    assert (sinks["n_routed_ok"], sinks["n_dead_letter"]) == (988, 12)
+    assert sinks["sent"] == 988 + 12
     ledger = pq.read_table(str(out / "_checkpoints")).to_pylist()
-    assert {r["run_id"] for r in ledger} == {report["run_id"]}
-    assert sum(r["n_routed_ok"] for r in ledger) == report["n_routed_ok"]
+    assert {r["run_id"] for r in ledger} == {sinks["run_id"]}
+    assert sum(r["n_routed_ok"] for r in ledger) == sinks["n_routed_ok"]
     counts = pq.read_table(str(out / "_metrics" / "sink_counts"))
-    assert sum(counts.column("n_rows").to_pylist()) == report["n_routed_ok"]
+    assert sum(counts.column("n_rows").to_pylist()) == sinks["n_routed_ok"]
+    assert report["pipelines"]["metrics"]["sink_counts"] == {"sent": 988}
 
     again = cli()
     assert again.returncode == 2
@@ -245,6 +254,7 @@ def test_cli_flag_mode_batch_run_and_resume(tmp_path):
     resumed = cli("--resume")
     assert resumed.returncode == 0, resumed.stderr[-2000:]
     report = json.loads(resumed.stdout.strip().splitlines()[-1])
-    assert report["processed_buckets"] == []
-    assert report["skipped_buckets"] == [0, 1, 2, 3]
-    assert (report["n_routed_ok"], report["n_dead_letter"]) == (0, 0)
+    sinks = report["pipelines"]["sinks"]["checkpointed_sinks"]
+    assert sinks["processed_buckets"] == []
+    assert sinks["skipped_buckets"] == [0, 1, 2, 3]
+    assert (sinks["n_routed_ok"], sinks["n_dead_letter"]) == (0, 0)

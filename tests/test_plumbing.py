@@ -1,5 +1,5 @@
-"""Config resolution, obsreport counters, OTLP JSON round-trip, batch split,
-salting invariance — the control-plane / reliability parity tests
+"""Config resolution, OTLP JSON round-trip, batch split, salting
+invariance — the control-plane / reliability parity tests
 (SURVEY §2.6, §2.9; otelcol/collector_test.go:41-227 config variants,
 processor/batchprocessor split tests)."""
 
@@ -8,12 +8,10 @@ from __future__ import annotations
 import glob
 
 import pytest
-from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators.enrich import enrich
 from opentelemetry_collector_spark.operators.observe import (
     from_otlp_json,
-    observed_pipeline,
     to_otlp_json,
 )
 from opentelemetry_collector_spark.operators.parse import parse_turns
@@ -173,25 +171,6 @@ def test_config_unknown_scheme_raises():
         load_uri("ftp:whatever")
 
 
-# --- obsreport counters -----------------------------------------------------
-
-
-def test_observed_counts_match_groupby(spark):
-    routed = route(enrich(parse_turns(
-        events_to_transcripts(spark, SF_SMOKE)), spark))
-    observed, obs = observed_pipeline(routed)
-    total = observed.count()  # the action that materializes the observation
-    m = obs.get
-    assert m["receiver_accepted_log_records"] == total
-    assert (
-        m["exporter_sent_log_records"] + m["processor_dropped_log_records"]
-        == total
-    )
-    dead = routed.filter(F.col("error_reason").isNotNull()).count()
-    assert m["processor_dropped_log_records"] == dead
-    assert m["active_sinks"] == routed.select("sink_id").na.drop().distinct().count()
-
-
 # --- OTLP JSON codec --------------------------------------------------------
 
 
@@ -250,8 +229,12 @@ def test_jsonl_file_roundtrip(spark, tmp_path, compression):
     round-trip must be lossless, including µs timestamps, under every
     reference wire codec (configcompression/compressionType.go:22-41 —
     zlib and deflate are one stream format there too; zstd exercises the
-    pyarrow frame wire on this sandbox's Hadoop-codec-less classpath)."""
+    pyarrow frame wire on a classpath without the Hadoop zstd codec).
+    The write returns the number of lines it wrote; it runs on a daemon
+    thread under a deadline, so a count that never completes fails the
+    test instead of stalling the suite."""
     import glob
+    import threading
 
     from opentelemetry_collector_spark.sources.jsonl import (
         read_otlp_jsonl,
@@ -260,7 +243,21 @@ def test_jsonl_file_roundtrip(spark, tmp_path, compression):
 
     parsed = parse_turns(events_to_transcripts(spark, SF_SMOKE))
     path = str(tmp_path / "export")
-    write_otlp_jsonl(parsed, path, compression=compression)
+    out = {}
+
+    def write():
+        try:
+            out["n"] = write_otlp_jsonl(parsed, path, compression=compression)
+        except BaseException as e:  # re-raised on the test thread
+            out["error"] = e
+
+    t = threading.Thread(target=write, daemon=True)
+    t.start()
+    t.join(180)
+    assert not t.is_alive(), "write_otlp_jsonl did not return within 180 s"
+    if "error" in out:
+        raise out["error"]
+    assert out["n"] == parsed.count() > 0
 
     if compression not in (None, "none"):
         ext = {"gzip": ".gz", "zlib": ".deflate", "deflate": ".deflate",
@@ -393,10 +390,6 @@ TEST_ONLY_AIMS = {
     "decoder when its jar is on the classpath",
     "get_catalog": "environment gate: the Iceberg catalog when its jar is on "
     "the classpath, bucketed parquet otherwise",
-    "observed_pipeline": "ROADMAP item 2: becomes run_service's "
-    "per-boundary counts, or goes",
-    "attach_obs_listener": "ROADMAP item 2: stream-mode receiver counters",
-    "detach_obs_listener": "ROADMAP item 2: stream-mode receiver counters",
     "classify_http_error": "COVERAGE §2.2: the OTLP/HTTP exporter's "
     "retryable/permanent error split",
     "has_flag": "COVERAGE §2.7: flags-word scalar functions",

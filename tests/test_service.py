@@ -41,7 +41,7 @@ def _cfg(tmp_path) -> ServiceConfig:
 
 def test_run_service_end_to_end(spark, tmp_path):
     results = run_service(spark, _cfg(tmp_path))
-    routed = results["logs"]
+    routed = results["logs"].frame
     n = routed.count()
 
     # every exporter consumed the same fan-out (count conservation per sink)
@@ -72,7 +72,7 @@ def test_run_service_custom_factory(spark, tmp_path):
     cfg.exporters["capture"] = {}
     cfg.pipelines["logs"]["exporters"] = ["capture"]
     results = run_service(spark, cfg, extra_exporters={"capture": capture})
-    assert captured["n"] == results["logs"].count()
+    assert captured["n"] == results["logs"].frame.count()
 
 
 def test_run_service_curation_pipeline(spark, tmp_path):
@@ -119,7 +119,7 @@ def test_run_service_curation_pipeline(spark, tmp_path):
         env={},
     )
     results = run_service(spark, cfg)
-    got = results["curation"]
+    got = results["curation"].frame
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     d1 = docs.join(
@@ -157,7 +157,7 @@ def test_run_service_sampling_pipeline(spark, tmp_path):
     from opentelemetry_collector_spark.operators.parse import parse_turns
     from opentelemetry_collector_spark.operators.traces import (
         probabilistic_sampler,
-        tail_sampling_composite,
+        tail_sampling,
     )
     from opentelemetry_collector_spark.sources.transcripts import (
         events_to_transcripts,
@@ -192,12 +192,12 @@ def test_run_service_sampling_pipeline(spark, tmp_path):
         env={},
     )
     results = run_service(spark, cfg)
-    got = results["sampled"]
+    got = results["sampled"].frame
 
     parsed = parse_turns(events_to_transcripts(spark, SF_SMOKE))
-    want = tail_sampling_composite(
+    want = tail_sampling(
         probabilistic_sampler(parsed, project=False),
-        latency_threshold_ms=200, project=False,
+        latency_threshold_ms=200, project=False, composite=True,
     )
     assert got.count() == want.count() > 0
     key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
@@ -245,7 +245,7 @@ def test_config_built_jsonl_sink_every_wire_codec(spark, tmp_path, compression):
         env={},
     )
     results = run_service(spark, cfg)
-    n = results["logs"].count()
+    n = results["logs"].frame.count()
     back = read_otlp_jsonl(spark, str(tmp_path / "export"))
     assert back.count() == n > 0
     assert back.filter("conv_id IS NULL").count() == 0
@@ -282,7 +282,7 @@ def test_run_service_mixing_pipeline(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["mixing"]
+    got = run_service(spark, cfg)["mixing"].frame
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     want = q.corpus_mix(
@@ -332,7 +332,7 @@ def test_dsir_filter_processor(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["select"]
+    got = run_service(spark, cfg)["select"].frame
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     want_ids = {
         r.doc_id
@@ -370,7 +370,7 @@ def test_leakage_split_processor(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["cut"]
+    got = run_service(spark, cfg)["cut"].frame
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     want_ids = {
         r.doc_id
@@ -410,7 +410,7 @@ def test_dedup_paragraphs_processor(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["clean"]
+    got = run_service(spark, cfg)["clean"].frame
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     want = {
         r.doc_id: r.text_kept
@@ -451,7 +451,7 @@ def test_entropy_filter_processor(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["filter"]
+    got = run_service(spark, cfg)["filter"].frame
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     dropped = {
         r.doc_id
@@ -493,7 +493,7 @@ def test_priority_sample_processor(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["select"]
+    got = run_service(spark, cfg)["select"].frame
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     want_ids = {
         r.doc_id
@@ -533,7 +533,7 @@ def test_ppl_filter_processor(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["select"]
+    got = run_service(spark, cfg)["select"].frame
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     want_ids = {
         r.doc_id
@@ -580,7 +580,7 @@ def test_shuffle_order_and_interleave_processors(spark, tmp_path):
         },
         env={},
     )
-    got = run_service(spark, cfg)["order"].toPandas().set_index("doc_id")
+    got = run_service(spark, cfg)["order"].frame.toPandas().set_index("doc_id")
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     kept = docs.join(
         q.corpus_ppl_buckets(spark, "", docs=docs)

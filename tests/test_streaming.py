@@ -133,43 +133,6 @@ def test_stream_resume_from_checkpoint(spark, transcripts_dir, tmp_path):
     assert n1 == n2  # no duplicates: nothing re-consumed
 
 
-def test_stream_obs_counters_match_input(spark, transcripts_dir, tmp_path):
-    """StreamingQueryListener counters: accepted records across all
-    micro-batches equal the input row count, and the batch-size
-    distribution reflects multiple batches (obsreport-in-streaming parity).
-    """
-    import time
-
-    from opentelemetry_collector_spark.streaming.observe import (
-        attach_obs_listener,
-        detach_obs_listener,
-    )
-
-    listener = attach_obs_listener(spark)
-    try:
-        src = stream_transcripts(spark, transcripts_dir, max_files_per_trigger=2)
-        q = start_complete(
-            sink_counts(routed_ok(routed_stream(src, spark))),
-            "t_obs_counts", str(tmp_path / "obs_ckpt"),
-        )
-        q.awaitTermination(120)
-        # listener events are delivered asynchronously after termination
-        deadline = time.monotonic() + 30
-        want = spark.read.parquet(transcripts_dir).count()
-        while time.monotonic() < deadline:
-            c = listener.by_query.get("t_obs_counts")
-            if c and c.receiver_accepted_log_records >= want:
-                break
-            time.sleep(0.5)
-        c = listener.by_query.get("t_obs_counts")
-        assert c is not None, "no progress captured for the named query"
-        assert c.receiver_accepted_log_records == want
-        assert c.batch_count() > 1  # maxFilesPerTrigger=2 over 8 files
-        assert sum(c.batch_send_sizes) == want
-    finally:
-        detach_obs_listener(spark, listener)
-
-
 def test_stream_sampler_matches_batch(spark, transcripts_dir, tmp_path):
     """Head sampling is a stateless, shuffle-free filter, so the same
     probabilistic_sampler call must work unchanged on a streaming parsed

@@ -274,7 +274,7 @@ def test_config_built_training_processors(spark, tmp_path):
             },
             env={},
         )
-        got = run_service(spark, cfg)["train_prep"].toPandas()
+        got = run_service(spark, cfg)["train_prep"].frame.toPandas()
         want = direct(spark, "", transcripts=tx).toPandas()
         cols = sorted(want.columns)
         assert sorted(got.columns) == cols

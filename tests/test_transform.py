@@ -171,7 +171,7 @@ def test_service_builder_runs_transform(spark, tmp_path):
             }
         },
     )
-    out = run_service(spark, cfg)["logs"]
+    out = run_service(spark, cfg)["logs"].frame
     assert out.filter("role = 'system'").count() == 0
     assert out.filter(~F.col("attributes_json").contains('"env": "test"')).count() == 0
 
