@@ -6,11 +6,13 @@ extension/experimental/storage/storage.go:48-62).
 A ledger is one parquet directory under an explicit schema, in one of
 two layouts:
 
-* **flat** (``tick_col=None``): an append-only log, one ``coalesce(1)``
-  file per ``append``, each row stamped with ``committed_at`` (the
-  schema's last field). The processed-files ledger of
-  ``sources/incremental.py`` and the bucket ledger of
-  ``plans/checkpoint.py`` are flat.
+* **flat** (``tick_col=None``): an append-only log, one file per
+  ``append``, each row stamped with ``committed_at`` (the schema's last
+  field). The driver encodes the file and renames it into place, so a
+  commit runs no Spark job; the file is the one Spark's own parquet writer
+  would produce, so old and new commits read back alike. The
+  processed-files ledger of ``sources/incremental.py`` and the bucket
+  ledger of ``plans/checkpoint.py`` are flat.
 * **tick-partitioned**: one ``{tick_col}=<id>`` directory per tick,
   written by ``commit_tick`` as a dynamic partition overwrite, so a
   retried tick replaces its own partition instead of appending
@@ -27,9 +29,17 @@ layout, so a compacted ledger reads and commits exactly like the original.
 
 from __future__ import annotations
 
+import io
+import uuid
+from datetime import datetime, timezone
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from opentelemetry_collector_spark.operators.compact import compact_sinks
 from opentelemetry_collector_spark.session import local_rows
@@ -39,13 +49,17 @@ from opentelemetry_collector_spark.session import local_rows
 TICK_FILES = 8
 
 
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Hadoop Path) of ``path`` under the session's
+    Hadoop configuration."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
 def _data_files(spark: SparkSession, path: str):
     """FileStatus of every data file under ``path``, lazily, via the Hadoop
     FileSystem API — a metadata listing, no data read."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
+    fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
         return
     it = fs.listFiles(hpath, True)  # recursive
@@ -95,14 +109,49 @@ class Ledger:
 
     def append(self, rows: list[tuple]) -> None:
         """Append ``rows`` (every field but the trailing ``committed_at``,
-        which is stamped here) to a flat ledger as one file."""
-        (
-            local_rows(self.spark, rows, self.schema[:-1])
-            .withColumn("committed_at", F.current_timestamp())
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.path)
+        which is stamped here) to a flat ledger as one file, written by the
+        driver with no Spark job.
+
+        The rows, checked against the schema, become one Arrow table that
+        pyarrow encodes as Spark's parquet writer would: INT96 timestamps
+        and the ``org.apache.spark.version`` and
+        ``org.apache.spark.sql.parquet.row.metadata`` footer keys (beside
+        pyarrow's own ``ARROW:schema`` key, which Spark ignores). The bytes
+        go to a hidden ``.part-<uuid>.parquet`` through the Hadoop
+        FileSystem, which is closed and then renamed to
+        ``part-<uuid>.parquet``. Listings and reads skip hidden names, so
+        the rename is the commit: a crash before it leaves a file that no
+        read, ``exists`` or ``compact`` sees. A rename that returns false
+        raises."""
+        now = datetime.now(timezone.utc)
+        stamped = [tuple(r) + (now,) for r in rows]
+        verify = _make_type_verifier(self.schema)
+        for row in stamped:
+            verify(row)
+        jvm = self.spark.sparkContext._jvm
+        table = pa.Table.from_pylist(
+            [dict(zip(self.schema.fieldNames(), row)) for row in stamped],
+            schema=to_arrow_schema(self.schema).with_metadata({
+                "org.apache.spark.version": self.spark.version,
+                "org.apache.spark.sql.parquet.row.metadata": (
+                    jvm.org.apache.spark.sql.types.DataType.fromJson(
+                        self.schema.json()).json()
+                ),
+            }),
         )
+        buf = io.BytesIO()
+        pq.write_table(table, buf, compression="snappy",
+                       use_deprecated_int96_timestamps=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        fs, staged = _fs(self.spark, f"{self.path}/.{name}")
+        out = fs.create(staged, False)
+        try:
+            out.write(buf.getvalue())
+        finally:
+            out.close()
+        final = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{name}")
+        if not fs.rename(staged, final):
+            raise OSError(f"ledger commit: rename {staged} -> {final} failed")
 
     def commit_tick(self, df: DataFrame, tick_id: str) -> None:
         """Write ``df``'s ledger columns as tick ``tick_id``, replacing only

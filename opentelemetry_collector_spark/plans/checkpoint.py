@@ -252,15 +252,3 @@ class CheckpointedRunner:
                 )
 
         return totals
-
-    def metrics(self) -> DataFrame:
-        """The checkpoint ledger as a DataFrame (queue-depth / sent-counter
-        gauges analog, queued_retry.go:209-223), with per-bucket throughput
-        (the north-rule "checkpoints carrying lineage AND throughput")."""
-        return self.ledger.read().withColumn(
-            "rows_per_sec",
-            F.round(
-                F.col("n_input") / (F.greatest(F.col("wall_ms"), F.lit(1)) / 1000.0),
-                1,
-            ),
-        )

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 
@@ -60,6 +62,29 @@ def assert_same_routing(plain, salted):
     assert {tuple(r) for r in sink_counts(routed_ok(plain)).collect()} == {
         tuple(r) for r in sink_counts(routed_ok(salted)).collect()
     }
+
+
+def jobs_started(spark, action) -> list[int]:
+    """Ids of every Spark job ``action()`` starts, on any thread. Jobs of
+    this thread carry a job group set for the call; a thread the action
+    starts (a driver pool) runs its jobs in no group, so those are the
+    no-group jobs numbered above every no-group job seen before the call.
+    Comparing ids, not counts, stays exact once the status store starts
+    evicting old jobs (``spark.ui.retainedJobs``)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    seen = max(tracker.getJobIdsForGroup(None), default=-1)
+    group = f"jobs-started-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed by it
+    return sorted(
+        [j for j in tracker.getJobIdsForGroup(None) if j > seen]
+        + list(tracker.getJobIdsForGroup(group))
+    )
 
 
 @pytest.fixture(scope="session")

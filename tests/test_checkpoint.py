@@ -50,7 +50,7 @@ def test_clean_run_writes_all_rows_once(spark, routed, tmp_path):
     # no duplicate (conv_id, turn_idx)
     assert out.select("conv_id", "turn_idx").distinct().count() == n_in
     # ledger covers every bucket exactly once
-    ledger = runner.metrics()
+    ledger = runner.ledger.read()
     assert ledger.filter(F.col("status") == "committed").count() == 8
     assert set(runner.committed_buckets()) == set(range(8))
 
@@ -79,9 +79,9 @@ def test_crash_then_resume_is_exactly_once(spark, routed, tmp_path):
     cfg2 = CheckpointConfig(base_path=str(tmp_path / "out2"), n_buckets=8)
     CheckpointedRunner(spark, cfg2).run(routed, run_id="fresh")
     fp1 = {r.bucket: r.input_fingerprint
-           for r in runner.metrics().select("bucket", "input_fingerprint").collect()}
+           for r in runner.ledger.read().select("bucket", "input_fingerprint").collect()}
     fp2 = {r.bucket: r.input_fingerprint
-           for r in CheckpointedRunner(spark, cfg2).metrics()
+           for r in CheckpointedRunner(spark, cfg2).ledger.read()
            .select("bucket", "input_fingerprint").collect()}
     assert fp1 == fp2
 
@@ -281,19 +281,19 @@ def test_retry_zero_max_elapsed_means_no_limit():
 
 def test_checkpoint_ledger_compaction_preserves_resume(spark, routed, tmp_path):
     """ledger.compact() on the checkpoint ledger: committed_buckets() and
-    metrics() read through unchanged, and a resumed run is still a no-op."""
+    the ledger's rows read through unchanged, and a resumed run is still a no-op."""
     cfg = CheckpointConfig(base_path=str(tmp_path / "out"), n_buckets=8,
                            buckets_per_wave=2)
     CheckpointedRunner(spark, cfg).run(routed, run_id="first")
 
     runner = CheckpointedRunner(spark, cfg)
     committed = runner.committed_buckets()
-    rows = runner.metrics().count()
+    rows = runner.ledger.read().count()
     stats = runner.ledger.compact()
     assert stats["files_before"] == 4  # one append per 2-bucket wave
     assert stats["files_after"] == 1
     assert runner.committed_buckets() == committed
-    assert runner.metrics().count() == rows
+    assert runner.ledger.read().count() == rows
 
     totals = CheckpointedRunner(spark, cfg).run(routed, run_id="second")
     assert totals["processed_buckets"] == []

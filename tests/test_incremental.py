@@ -216,18 +216,20 @@ def test_ledger_compaction_missing_dir_is_noop(spark, dirs):
 
 
 def test_ledger_metrics_scraped_vs_errored_split(spark, dirs):
-    """metrics() surfaces the per-run scraped/errored file split and the
-    tick row count (obsreport scraper-counter analog)."""
+    """The ledger holds the per-run scraped/errored file split: each good
+    file's row carries its own footer row count, a dead-lettered file's
+    row its error and a NULL count (obsreport scraper-counter analog)."""
     import pathlib
 
     data, ledger, _ = dirs
     src = IncrementalSource(spark, data, ledger)
     _write_batch(spark, data, 0, 20)
+    _write_batch(spark, data, 20, 5)
     pathlib.Path(data, "bad.parquet").write_bytes(b"not parquet")
     src.process_new(lambda df: None, run_id="mixed-tick")
 
-    m = {r.run_id: r for r in src.metrics().collect()}
-    row = m["mixed-tick"]
-    assert row.files_committed == 1
-    assert row.files_failed == 1
-    assert row.n_rows == 20
+    rows = src.ledger.read().filter("run_id = 'mixed-tick'").collect()
+    good = sorted(r.n_rows for r in rows if r.error is None)
+    (bad,) = [r for r in rows if r.error is not None]
+    assert good == [5, 20]
+    assert bad.file_path.endswith("bad.parquet") and bad.n_rows is None

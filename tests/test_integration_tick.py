@@ -17,7 +17,7 @@ from opentelemetry_collector_spark.plans.checkpoint import (
 )
 from opentelemetry_collector_spark.sources.incremental import IncrementalSource
 from opentelemetry_collector_spark.sources.transcripts import events_to_transcripts
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_started
 
 
 def _routed(spark, df):
@@ -109,11 +109,16 @@ def test_crashed_tick_resumes_at_both_layers(spark, tmp_path):
 
 def test_tick_job_budget(spark, tmp_path):
     """A steady-state tick (the file ledger already holds a tick) over
-    three new files, with a checkpointed parse -> enrich -> route write,
-    runs at most 7 Spark jobs on its own thread (the footer probes run on a
-    pool): enrich's lookups and the ledger rows are literals, so they start
-    no job of their own, and each wave's stats are observed on its write,
-    so the wave is neither persisted nor scanned a second time."""
+    three new files and one corrupt file, with a checkpointed parse ->
+    enrich -> route write, runs exactly one Spark job on all threads: the
+    write. The footer probes open each file on the driver (their pool's
+    threads would run jobs in no group, which are counted too), the row
+    count is the footers' sum, both ledger commits are driver-side file
+    renames, the source keeps the processed set it committed, enrich's
+    lookups are literals, and each wave's stats are observed on its
+    write."""
+    import pathlib
+
     data = str(tmp_path / "landing")
     src = IncrementalSource(spark, data, str(tmp_path / "file_ledger"))
     base = events_to_transcripts(spark, SF_SMOKE)
@@ -126,6 +131,7 @@ def test_tick_job_budget(spark, tmp_path):
     src.process_new(lambda df: None)
     for k in (1, 2, 3):
         land(k)
+    pathlib.Path(data, "corrupt.parquet").write_bytes(b"PAR1 not really")
 
     def action(df):
         CheckpointedRunner(
@@ -134,15 +140,10 @@ def test_tick_job_budget(spark, tmp_path):
                              buckets_per_wave=2),
         ).run(route(enrich(parse_turns(df), spark)))
 
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", "tick-budget")
-    try:
-        out = src.process_new(action)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert out["n_files"] == 3
-    jobs = sc.statusTracker().getJobIdsForGroup("tick-budget")
-    assert 0 < len(jobs) <= 7, f"{len(jobs)} jobs in one tick"
+    out = {}
+    jobs = jobs_started(spark, lambda: out.update(src.process_new(action)))
+    assert out["n_files"] == 3 and out["n_failed_files"] == 1
+    assert len(jobs) == 1, f"{len(jobs)} jobs in one tick: {jobs}"
 
 
 def test_planning_py4j_budget(spark, monkeypatch):

@@ -48,7 +48,7 @@ def _run(spark, routed, base, retry=None) -> CheckpointedRunner:
 
 
 def _ledger(runner) -> list[tuple]:
-    return sorted(tuple(r) for r in runner.metrics().select(*STATS).collect())
+    return sorted(tuple(r) for r in runner.ledger.read().select(*STATS).collect())
 
 
 def _expected(routed) -> list[tuple]:
