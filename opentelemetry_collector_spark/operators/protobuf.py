@@ -4,8 +4,10 @@ The reference negotiates protobuf or JSON per signal on the OTLP/HTTP
 endpoint and swaps only the serializer by content type
 (receiver/otlpreceiver/encoder.go:30-36; marshalers at
 pdata/plog/pb.go:24-40 and pdata/plog/json.go:29-42). This module
-round-trips the engine's frames through real OTLP bytes or OTLP/JSON text
-(wire layouts in functions/protowire.py and functions/otlpjson.py):
+round-trips the engine's frames through real OTLP bytes or OTLP/JSON text.
+The wire layout is the message table of functions/protowire.py; the
+protobuf wire's generic codec is there, and functions/otlpjson.py walks
+the same table for the JSON wire:
 
 * flat: one ``LogRecord`` protobuf message per row (to/from_otlp_protobuf);
 * logs: one ``ExportLogsServiceRequest`` per conversation —
@@ -19,9 +21,10 @@ round-trips the engine's frames through real OTLP bytes or OTLP/JSON text
 * the ingest response: per-request partial success
   (``ExportLogsServiceResponse``).
 
-Each signal's encoder and decoder is written once and bound to a wire;
-the ``*_protobuf`` and ``*_json`` functions differ only in that binding,
-so both wires decode to identical rows.
+Each signal's encoder and decoder is written once and bound to a wire
+(``_Wire``: the wire's generic request codecs); the ``*_protobuf`` and
+``*_json`` functions differ only in that binding, so both wires decode to
+identical rows.
 
 Engine columns ride in the reserved ``otelcol.`` attribute namespace
 (conv_id/turn_idx/role/tool/parsed_tool/dur_ms/status); user attributes
@@ -46,6 +49,7 @@ from __future__ import annotations
 
 import json
 import re
+from functools import partial
 from typing import Any, Callable, Iterator, NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -57,6 +61,9 @@ from opentelemetry_collector_spark.functions.otlpjson import (
     any_value_to_otlp_json,
 )
 from opentelemetry_collector_spark.functions.protowire import (
+    LOGS_REQUEST,
+    METRICS_REQUEST,
+    TRACE_REQUEST,
     decode_log_record,
     encode_log_record,
 )
@@ -378,34 +385,26 @@ def from_otlp_protobuf(serialized: DataFrame) -> DataFrame:
 # The OTLP/HTTP receiver serves each signal on two wires and swaps only the
 # serializer by content type (receiver/otlpreceiver/encoder.go:30-36). So
 # does this module: each signal's Spark encoder and decoder is written once
-# and takes a _Wire, which supplies the request codecs and the Spark type
-# of the wire column. Each public function binds one wire.
+# and takes a _Wire, which supplies the wire's generic request codecs (bound
+# to the signal's request message at the call) and the Spark type of the
+# wire column. Each public function binds one wire.
 
 
 class _Wire(NamedTuple):
     spark_type: str  # of the wire column
-    encode_logs: Callable[..., Any]
-    decode_logs: Callable[[Any], list]
-    encode_traces: Callable[..., Any]
-    decode_traces: Callable[[Any], list]
-    encode_metrics: Callable[..., Any]
-    decode_metrics: Callable[[Any], list]
+    # (request message, resource attrs, scope name, items) -> one request
+    encode: Callable[..., Any]
+    # (request message, request) -> [(resource attrs, scope name, items)]
+    decode: Callable[..., list]
     encode_logs_response: Callable[[int, str], Any]
 
 
 _PROTOBUF = _Wire(
-    "binary",
-    protowire.encode_logs_request, protowire.decode_logs_request,
-    protowire.encode_trace_request, protowire.decode_trace_request,
-    protowire.encode_metrics_request, protowire.decode_metrics_request,
+    "binary", protowire.encode_request, protowire.decode_request,
     protowire.encode_logs_response,
 )
 _JSON = _Wire(
-    "string",
-    otlpjson.logs_request_to_otlp_json, otlpjson.logs_request_from_otlp_json,
-    otlpjson.trace_request_to_otlp_json, otlpjson.trace_request_from_otlp_json,
-    otlpjson.metrics_request_to_otlp_json,
-    otlpjson.metrics_request_from_otlp_json,
+    "string", otlpjson.request_to_otlp_json, otlpjson.request_from_otlp_json,
     otlpjson.logs_response_to_otlp_json,
 )
 
@@ -511,7 +510,7 @@ def _to_logs_requests(
     item = F.struct(*[F.col(c) for c in _WIRE_INPUT_FIELDS if c != "conv_id"])
     return _encode_by_conv(
         _wire_input(parsed), item, lambda r: _row_to_record(_clean_row(r)),
-        wire.encode_logs, out_col, wire.spark_type,
+        partial(wire.encode, LOGS_REQUEST), out_col, wire.spark_type,
     )
 
 
@@ -519,7 +518,7 @@ def _from_logs_requests(
     serialized: DataFrame, wire: _Wire, in_col: str
 ) -> DataFrame:
     return _decode_requests(
-        serialized, in_col, wire.decode_logs,
+        serialized, in_col, partial(wire.decode, LOGS_REQUEST),
         lambda res, rec: [_resource_conv(res, _record_to_row(rec))],
         _rows_to_pdf, DECODED_SCHEMA,
     )
@@ -583,7 +582,7 @@ def _ingest_response(
                     )
                     continue
                 try:
-                    requests = wire.decode_logs(blob)
+                    requests = wire.decode(LOGS_REQUEST, blob)
                 except Exception as e:  # malformed request: full reject
                     # NULL response, NOT the empty one: an empty response
                     # encodes FULL SUCCESS (0 rejects), so the wire must
@@ -838,8 +837,8 @@ def _to_trace_requests(
         "turn_idx", *[F.col(c) for c in _SPAN_OUT_COLS if c != "turn_idx"]
     )
     return _encode_by_conv(
-        build_spans(parsed), item, _span_row_to_wire, wire.encode_traces,
-        out_col, wire.spark_type,
+        build_spans(parsed), item, _span_row_to_wire,
+        partial(wire.encode, TRACE_REQUEST), out_col, wire.spark_type,
     )
 
 
@@ -847,7 +846,7 @@ def _from_trace_requests(
     serialized: DataFrame, wire: _Wire, in_col: str
 ) -> DataFrame:
     return _decode_requests(
-        serialized, in_col, wire.decode_traces,
+        serialized, in_col, partial(wire.decode, TRACE_REQUEST),
         lambda res, sp: [_resource_conv(res, _wire_to_span_row(sp))],
         lambda rows: _frame(rows, _SPAN_OUT_COLS, _SPAN_INT_DTYPES),
         SPAN_DECODED_SCHEMA,
@@ -909,7 +908,7 @@ def _to_metric_requests(
     )
 
     bucket_cols = _hist_bucket_cols()
-    encode = wire.encode_metrics
+    encode = partial(wire.encode, METRICS_REQUEST)
 
     def metric(r: dict[str, Any]) -> dict[str, Any]:
         start = int(r["bucket_start_epoch"])
@@ -1008,7 +1007,7 @@ def _from_metric_requests(
         return rows
 
     return _decode_requests(
-        serialized, in_col, wire.decode_metrics, point_rows,
+        serialized, in_col, partial(wire.decode, METRICS_REQUEST), point_rows,
         lambda rows: _frame(rows, col_order),
         _HIST_DECODED_SCHEMA_TMPL.format(
             buckets=", ".join(f"{c} bigint" for c in bucket_cols)

@@ -72,19 +72,6 @@ class Registry:
             return self._overrides[gate_id]
         return _STAGE_RULES[g.stage][0]
 
-    def apply_flags(self, flags: list[str]) -> None:
-        """Collector CLI convention: ``--feature-gates=+foo,-bar`` (a bare
-        name means enable)."""
-        for raw in flags:
-            for tok in raw.split(","):
-                tok = tok.strip()
-                if not tok:
-                    continue
-                if tok.startswith("-"):
-                    self.set(tok[1:], False)
-                else:
-                    self.set(tok.lstrip("+"), True)
-
     def gates(self) -> list[Gate]:
         return sorted(self._gates.values(), key=lambda g: g.gate_id)
 

@@ -59,15 +59,6 @@ def test_unknown_and_duplicate_rejected():
         r.register("x", "gamma")
 
 
-def test_cli_flag_convention():
-    r = _reg()
-    r.apply_flags(["+a.alpha,-b.beta", "  "])
-    assert r.is_enabled("a.alpha") and not r.is_enabled("b.beta")
-    r2 = _reg()
-    r2.apply_flags(["a.alpha"])  # bare name enables
-    assert r2.is_enabled("a.alpha")
-
-
 def test_global_registry_ships_engine_gates():
     """The shipped gates are exactly the ones the engine reads: setting a
     gate that no module checks would silently do nothing."""

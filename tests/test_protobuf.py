@@ -8,7 +8,7 @@ independently of the encoder under test.
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from opentelemetry_collector_spark.functions.protowire import (
@@ -1258,3 +1258,257 @@ def test_any_value_json_wire_roundtrip_and_codec_agreement(v):
     got_json = any_value_from_otlp_json(wire)
     assert got_json == v
     assert got_json == decode_any_value(encode_any_value(v))
+
+
+# --- one message table, two wires ----------------------------------------------
+
+
+def test_none_attribute_is_an_empty_any_value_on_both_wires():
+    """A None-valued attribute is an empty AnyValue on both wires: the key
+    is kept, and decodes back to None."""
+    import json
+
+    from opentelemetry_collector_spark.functions.otlpjson import (
+        log_record_from_otlp_json,
+        log_record_to_otlp_json,
+    )
+
+    rec = {"attributes": {"a": None, "b": 1}}
+    pb = decode_log_record(encode_log_record(rec))
+    js = log_record_from_otlp_json(json.loads(json.dumps(
+        log_record_to_otlp_json(rec)
+    )))
+    assert pb["attributes"] == js["attributes"] == {"a": None, "b": 1}
+    assert encode_log_record(pb) == encode_log_record(rec)
+
+
+@pytest.mark.parametrize("wire", ["protobuf", "json"])
+@pytest.mark.parametrize(
+    "message, rec",
+    [
+        ("log_record", {"flags": 1 << 33}),
+        ("log_record", {"flags": -1}),
+        ("log_record", {"time_unix_nano": (1 << 64) + 5}),
+        ("log_record", {"dropped_attributes_count": -1}),
+        ("log_record", {"severity_number": 1 << 31}),
+        ("log_record", {"attributes": {"big": 1 << 70}}),
+        ("log_record", {"body": [-(1 << 63) - 1]}),
+        ("span", {"kind": -(1 << 31) - 1}),
+        ("number_point", {"as_int": 1 << 63}),
+        ("histogram_point", {"bucket_counts": [1, -1]}),
+        ("exp_histogram_point", {"scale": 1 << 31}),
+        ("exp_histogram_point", {"positive": {"bucket_counts": [1 << 64]}}),
+    ],
+)
+def test_out_of_range_integers_raise_on_both_wires(wire, message, rec):
+    """Each integer kind has one range, checked by both wires' encoders:
+    uint32/fixed32 [0, 2^32), fixed64 [0, 2^64), int64/sfixed64
+    [-2^63, 2^63), sint32 and enums [-2^31, 2^31)."""
+    from opentelemetry_collector_spark.functions import otlpjson, protowire
+
+    encode = (
+        getattr(protowire, f"encode_{message}") if wire == "protobuf"
+        else getattr(otlpjson, f"{message}_to_otlp_json")
+    )
+    with pytest.raises(ValueError, match="range"):
+        encode(rec)
+
+
+def test_in_range_extremes_encode_on_both_wires():
+    from opentelemetry_collector_spark.functions import otlpjson
+    from opentelemetry_collector_spark.functions import protowire as pw
+
+    rec = {
+        "flags": (1 << 32) - 1, "time_unix_nano": (1 << 64) - 1,
+        "dropped_attributes_count": (1 << 32) - 1,
+        "severity_number": -(1 << 31), "attributes": {"i": -(1 << 63)},
+    }
+    pb = pw.decode_log_record(pw.encode_log_record(rec))
+    js = otlpjson.log_record_from_otlp_json(otlpjson.log_record_to_otlp_json(rec))
+    assert pb == js and {k: pb[k] for k in rec} == rec
+
+
+@pytest.mark.parametrize(
+    "blob, field",
+    [
+        (b"\x0a\x01x", "LogRecord.time_unix_nano"),  # LEN for a fixed64
+        (b"\x48\x01", "LogRecord.trace_id"),  # varint for bytes
+        (b"\x18\x05", "LogRecord.severity_text"),  # varint for a string
+        (b"\x2d\x00\x00\x00\x00", "LogRecord.body"),  # fixed32 for a message
+    ],
+    ids=["time_unix_nano", "trace_id", "severity_text", "body"],
+)
+def test_wrong_wire_type_raises_naming_the_field(blob, field):
+    with pytest.raises(ValueError, match=field.replace(".", r"\.")):
+        decode_log_record(blob)
+
+
+def test_unknown_fields_are_skipped():
+    # field 12 (varint) and field 13 (LEN) are not in LogRecord's layout
+    rec = decode_log_record(b"\x60\x01\x6a\x02hi\x10\x09")
+    assert rec["severity_number"] == 9 and rec == {
+        **decode_log_record(b""), "severity_number": 9,
+    }
+
+
+# records nest messages in lists, so a draw can be large and slow to build
+_NESTED = [HealthCheck.data_too_large, HealthCheck.too_slow]
+
+
+def _table_messages():
+    """Every message reachable from the request and response envelopes."""
+    from opentelemetry_collector_spark.functions import protowire as pw
+
+    seen, todo = {}, [
+        pw.LOGS_REQUEST, pw.TRACE_REQUEST, pw.METRICS_REQUEST,
+        pw.LOGS_RESPONSE,
+    ]
+    while todo:
+        msg = todo.pop()
+        if msg.name not in seen:
+            seen[msg.name] = msg
+            todo += [f.message for f in msg.fields if f.message is not None]
+    return [seen[name] for name in sorted(seen)]
+
+
+def _ints(lo: int, hi: int):
+    """Integers of [lo, hi), and the two just outside it."""
+    return st.integers(min_value=lo, max_value=hi - 1) | st.sampled_from(
+        [lo - 1, hi]
+    )
+
+
+_ANY_VALUES = st.recursive(
+    st.one_of(
+        st.booleans(),
+        _ints(-(1 << 63), 1 << 63),
+        st.floats(allow_nan=False),
+        st.text(max_size=8),
+        st.binary(max_size=8),
+    ),
+    lambda leaf: st.one_of(
+        st.lists(leaf, max_size=3),
+        st.dictionaries(st.text(max_size=4), leaf, max_size=3),
+    ),
+    max_leaves=4,
+)
+
+
+def _record_fields(msg) -> dict:
+    """key -> value strategy for each field of ``msg`` the record holds
+    (an INLINE message's fields included, a data oneof's excluded)."""
+    from opentelemetry_collector_spark.functions import protowire as pw
+
+    def ints(kind):
+        return _ints(kind.lo, kind.hi)
+
+    scalars = {
+        pw.STRING: st.text(max_size=6),
+        pw.ID: st.binary(max_size=16),
+        pw.BOOL: st.booleans(),
+        pw.DOUBLE: st.floats(allow_nan=False),
+        pw.ANY: _ANY_VALUES,
+        pw.ATTRS: st.dictionaries(
+            st.text(max_size=4), st.none() | _ANY_VALUES, max_size=3
+        ),
+        pw.PACKED_DOUBLE: st.lists(st.floats(allow_nan=False), max_size=3),
+        pw.PACKED_FIXED64: st.lists(ints(pw.PACKED_FIXED64), max_size=3),
+        pw.PACKED_UINT64: st.lists(ints(pw.PACKED_UINT64), max_size=3),
+    }
+    out = {}
+    for key, f in zip(msg.keys, msg.fields):
+        if f.presence is pw.ONEOF:
+            continue
+        if f.kind is pw.INLINE:
+            out.update(_record_fields(f.message))
+            continue
+        if f.kind is pw.MESSAGES:
+            value = st.lists(_records(f.message), max_size=2)
+        elif f.kind is pw.MESSAGE:
+            value = _records(f.message)
+        else:
+            value = scalars[f.kind] if f.kind in scalars else ints(f.kind)
+        out[key] = value if f.presence is pw.IMPLICIT else st.none() | value
+    return out
+
+
+def _records(msg):
+    """Records of ``msg``, any key absent or present; a message with a
+    data oneof draws one member and that member's fields."""
+    fields = _record_fields(msg)
+    if not msg.oneof:
+        return st.fixed_dictionaries({}, optional=fields)
+    members = [f for f in msg.fields if f.name in msg.oneof]
+    return st.one_of([
+        st.fixed_dictionaries(
+            {"type": st.just(f.name)},
+            optional={**fields, **_record_fields(f.message)},
+        )
+        for f in members
+    ])
+
+
+@pytest.mark.parametrize("msg", _table_messages(), ids=lambda m: m.name)
+@settings(max_examples=30, deadline=None, suppress_health_check=_NESTED)
+@given(data=st.data())
+def test_every_table_message_agrees_on_both_wires(msg, data):
+    """For every message of the table: the protobuf and JSON wires both
+    reject a record (an integer out of its kind's range) or decode it to
+    the same dict, and each wire re-encodes its own decode
+    byte-identically."""
+    import json
+
+    from opentelemetry_collector_spark.functions import otlpjson
+    from opentelemetry_collector_spark.functions import protowire as pw
+
+    rec = data.draw(_records(msg))
+    try:
+        pb = pw.encode_message(msg, rec)
+    except ValueError:
+        with pytest.raises(ValueError):
+            otlpjson.message_to_json(msg, rec)
+        return
+    text = json.dumps(otlpjson.message_to_json(msg, rec), allow_nan=False)
+    from_pb = pw.decode_message(msg, pb)
+    from_json = otlpjson.message_from_json(msg, text)
+    assert from_pb == from_json
+    assert pw.encode_message(msg, from_pb) == pb
+    assert json.dumps(
+        otlpjson.message_to_json(msg, from_json), allow_nan=False
+    ) == text
+
+
+@pytest.mark.parametrize("signal", ["logs", "trace", "metrics"])
+@settings(max_examples=30, deadline=None, suppress_health_check=_NESTED)
+@given(data=st.data())
+def test_request_envelopes_agree_on_both_wires(signal, data):
+    from opentelemetry_collector_spark.functions import otlpjson
+    from opentelemetry_collector_spark.functions import protowire as pw
+
+    item = {"logs": pw.LOG_RECORD, "trace": pw.SPAN, "metrics": pw.METRIC}[
+        signal
+    ]
+    resource = data.draw(_record_fields(pw.RESOURCE)["attributes"])
+    scope = data.draw(st.text(max_size=6))
+    items = data.draw(st.lists(_records(item), max_size=3))
+    try:
+        pb = getattr(pw, f"encode_{signal}_request")(
+            resource or {}, scope, items
+        )
+    except ValueError:
+        with pytest.raises(ValueError):
+            getattr(otlpjson, f"{signal}_request_to_otlp_json")(
+                resource or {}, scope, items
+            )
+        return
+    text = getattr(otlpjson, f"{signal}_request_to_otlp_json")(
+        resource or {}, scope, items
+    )
+    from_pb = getattr(pw, f"decode_{signal}_request")(pb)
+    from_json = getattr(otlpjson, f"{signal}_request_from_otlp_json")(text)
+    assert from_pb == from_json
+    [(res, name, recs)] = from_pb
+    assert getattr(pw, f"encode_{signal}_request")(res, name, recs) == pb
+    assert getattr(otlpjson, f"{signal}_request_to_otlp_json")(
+        res, name, recs
+    ) == text
