@@ -216,9 +216,35 @@ def encode_any_value(v: Any) -> bytes:
     raise TypeError(f"unsupported AnyValue type: {type(v).__name__}")
 
 
+# (name, wire type) of the known fields of the hand-written messages below:
+# a known field on the wrong wire raises the table decoder's ValueError
+_ANY_VALUE_FIELDS = {
+    1: ("string_value", _LEN), 2: ("bool_value", _VARINT),
+    3: ("int_value", _VARINT), 4: ("double_value", _FIXED64),
+    5: ("array_value", _LEN), 6: ("kvlist_value", _LEN),
+    7: ("bytes_value", _LEN),
+}
+_KEY_VALUE_FIELDS = {1: ("key", _LEN), 2: ("value", _LEN)}
+_VALUES_FIELDS = {1: ("values", _LEN)}  # ArrayValue, KeyValueList
+
+
+def _known_fields(
+    name: str, fields: dict[int, tuple[str, int]], buf: bytes
+) -> Iterator[tuple[int, Any]]:
+    """(field number, value) of ``buf``'s known fields, unknown ones
+    skipped; a known field with the wrong wire type raises ValueError."""
+    for number, wire, v in iter_fields(buf):
+        f = fields.get(number)
+        if f is None:
+            continue
+        if wire != f[1]:
+            raise ValueError(f"{name}.{f[0]}: wire type {wire}, expected {f[1]}")
+        yield number, v
+
+
 def decode_any_value(buf: bytes) -> Any:
     val: Any = None  # empty AnyValue == unset oneof
-    for field, _wire, v in iter_fields(buf):
+    for field, v in _known_fields("AnyValue", _ANY_VALUE_FIELDS, buf):
         if field == 1:
             val = v.decode("utf-8")
         elif field == 2:
@@ -230,16 +256,14 @@ def decode_any_value(buf: bytes) -> Any:
         elif field == 5:
             val = [
                 decode_any_value(item)
-                for f2, _w2, item in iter_fields(v)
-                if f2 == 1
+                for _, item in _known_fields("ArrayValue", _VALUES_FIELDS, v)
             ]
         elif field == 6:
             val = dict(
                 decode_key_value(item)
-                for f2, _w2, item in iter_fields(v)
-                if f2 == 1
+                for _, item in _known_fields("KeyValueList", _VALUES_FIELDS, v)
             )
-        elif field == 7:
+        else:
             val = bytes(v)
     return val
 
@@ -253,10 +277,10 @@ def encode_key_value(key: str, value: Any) -> bytes:
 def decode_key_value(buf: bytes) -> tuple[str, Any]:
     key = ""
     value: Any = None
-    for field, _wire, v in iter_fields(buf):
+    for field, v in _known_fields("KeyValue", _KEY_VALUE_FIELDS, buf):
         if field == 1:
             key = v.decode("utf-8")
-        elif field == 2:
+        else:
             value = decode_any_value(v)
     return key, value
 

@@ -4,7 +4,8 @@ The reference's dynamic value system (pdata/pcommon/value.go:31-40, 7 types)
 dissolves into typed columns; the two semantics that must be preserved are:
 
 - ``AsString`` canonicalization (value.go:361-426): maps/slices -> JSON,
-  bytes -> base64. Here: ``as_string`` builds the canonical string column.
+  bytes -> base64. Here: ``json_value`` renders a nested attribute value
+  that way (its Python twin is operators/protobuf.py ``_nested_fragment``).
 - ordered-Map equality (pdata/pcommon/map.go:109-127): MapType loses order,
   so attributes serialize to a sorted-key JSON string (``attributes_json_sql``
   for the parse stage, ``attributes_json_typed`` for typed nested columns).
@@ -20,17 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def as_string(col: Column, kind: str = "str") -> Column:
-    """pcommon.Value.AsString analog (pdata/pcommon/value.go:361-395):
-    kind='map'/'slice' -> canonical JSON; 'bytes' -> base64; else cast.
-    """
-    if kind in ("map", "slice"):
-        return F.to_json(col)
-    if kind == "bytes":
-        return F.base64(col)
-    return col.cast("string")
 
 
 # A value serializes bare iff it is a CANONICAL JSON number (no leading

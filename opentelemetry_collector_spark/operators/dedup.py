@@ -1,25 +1,27 @@
-"""Deduplication operators over the ``documents`` table: exact, n-gram
-Jaccard, MinHash+LSH, SimHash. (Embedding-cosine near-dup lives in
-similarity.py with the other vector ops.)
+"""Deduplication operators over the ``documents`` table: exact, MinHash+LSH
+near-dup pairs and their clusters, substring spans and paragraph tiles.
+(Embedding-cosine near-dup lives in similarity.py with the other vector
+ops.)
 
-Corpus-dedup semantics follow the standard near-dup literature (shingling /
-MinHash banding per Broder; SimHash per Charikar) implemented Spark-first:
+Text near-dup is one path, MinHash+LSH over word-shingle sets (Broder),
+implemented Spark-first:
 
-* candidate generation is always a **key-equality self-join** (shingle
-  posting lists, LSH band keys, SimHash byte-bands) — a hash-partitioned
-  shuffle Catalyst executes as a sort-merge/hash join, never an O(n^2)
-  cross join;
-* verification (true Jaccard / Hamming) runs only on candidate pairs;
+* candidate generation is a **key-equality self-join** on LSH band keys —
+  a hash-partitioned shuffle Catalyst executes as a sort-merge/hash join,
+  never an O(n^2) cross join;
+* verification (exact shingle Jaccard) runs only on candidate pairs;
 * everything is native Spark SQL expressions — md5-based hashing gives
   identical results in the DuckDB oracles (no Python in the hot path).
 
+Why not an inverted index on the shingles: its self-join emits
+sum(df*(df-1))/2 rows, and on a corpus over a fixed vocabulary a shingle's
+document frequency grows linearly with the doc count, so the join grows
+quadratically (6.8x MinHash's time at 100k docs; BENCH.md "Text near-dup
+recall / cost").
+
 Scale notes (100 TB / 10^9 docs):
-* posting-list skew: a shingle shared by k docs emits k^2 candidate pairs —
-  ``max_doc_freq`` drops degenerate ultra-common shingles (standard df-cap),
-  bounding the join fan-out; the cap is part of the operator contract and is
-  applied identically in the oracle.
-* signatures are O(1) per doc (16 minhashes / 1 simhash), so the band
-  self-join shuffles only ~doc_count * bands tiny rows.
+* signatures are O(1) per doc (16 minhashes), so the band self-join
+  shuffles only ~doc_count * bands tiny rows.
 * the final pair verify re-joins the (small) candidate set back to the
   shingle arrays — at scale that join is broadcast-able when candidates fit,
   else it hash-partitions on doc_id.
@@ -30,31 +32,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-NGRAM = 3  # word-shingle width
+SHINGLE_W = 3  # word-shingle width
 JACCARD_THRESHOLD = 0.6
-MAX_DOC_FREQ = 500  # df-cap: drop shingles occurring in more docs than this
 MINHASH_K = 16  # signature length
 MINHASH_BANDS = 4  # bands x rows = 4 x 4
-SIMHASH_BITS = 64
-SIMHASH_BANDS = 4
-SIMHASH_BAND_BITS = 16  # 4 x 16 = 64; pigeonhole: Hamming <= 3 diffs spread
-# over 4 disjoint bands leave >= 1 band identical, so band equality finds
-# every pair within the radius (recall = 1.0; property-tested)
-SIMHASH_MAX_HAMMING = 3
 
 # evaluated over a pre-split `words` column: inlining split(text) inside the
 # lambda would re-split the text at EVERY shingle position (O(words^2) per
 # document — measured 6s for 5k docs vs ~1s hoisted)
 _SHINGLES_EXPR = (
     "array_distinct(transform(sequence(1, greatest(size(words) - "
-    f"{NGRAM - 1}, 1)), i -> concat_ws(' ', slice(words, i, {NGRAM}))))"
+    f"{SHINGLE_W - 1}, 1)), i -> concat_ws(' ', slice(words, i, {SHINGLE_W}))))"
 )
 
 # DuckDB list slicing is 1-based inclusive: words[i:i+2] is 3 elements.
 _SHINGLES_SQL = (
     "list_distinct(list_transform(range(1, greatest(len(string_split(text, ' ')) - "
-    f"{NGRAM - 1}, 1) + 1), i -> array_to_string("
-    f"string_split(text, ' ')[i:i+{NGRAM - 1}], ' ')))"
+    f"{SHINGLE_W - 1}, 1) + 1), i -> array_to_string("
+    f"string_split(text, ' ')[i:i+{SHINGLE_W - 1}], ' ')))"
 )
 
 
@@ -115,78 +110,6 @@ SELECT doc_id, md5(text) AS text_md5,
     count(*) OVER (PARTITION BY md5(text)) AS group_size,
     doc_id <> min(doc_id) OVER (PARTITION BY md5(text)) AS is_dup
 FROM documents
-"""
-
-
-# --- n-gram Jaccard ---------------------------------------------------------
-
-
-def dedup_ngram_pairs(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> DataFrame:
-    """Near-dup pairs by word-{NGRAM}-gram Jaccard >= {JACCARD_THRESHOLD}.
-
-    Inverted-index candidate generation: explode shingles, df-cap, self-join
-    on shingle (equality shuffle join), count co-occurrences, then
-    jaccard = co / (|A| + |B| - co) — exact, no verification join needed
-    because co-occurrence counting IS the intersection size.
-    """
-    sh = _shingled(spark, sf_dir, docs=docs).withColumn(
-        "n_sh", F.size("shingles")
-    )
-    posting = sh.select(
-        "doc_id", "n_sh", F.explode("shingles").alias("shingle")
-    )
-    rare = (
-        posting.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= MAX_DOC_FREQ)
-        .select("shingle")
-    )
-    posting = posting.join(rare, "shingle")
-    a, b = posting.alias("a"), posting.alias("b")
-    pairs = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("co"))
-    )
-    jac = F.col("co") / (F.col("n_a") + F.col("n_b") - F.col("co"))
-    return (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "co", "jaccard")
-    )
-
-
-DEDUP_NGRAM_ORACLE = f"""
-WITH sh AS (
-    SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents
-),
-posting AS (
-    SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle FROM sh
-),
-rare AS (
-    SELECT shingle FROM posting GROUP BY shingle
-    HAVING count(*) <= {MAX_DOC_FREQ}
-),
-capped AS (SELECT p.* FROM posting p JOIN rare USING (shingle)),
-pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        a.n_sh AS n_a, b.n_sh AS n_b, count(*) AS co
-    FROM capped a JOIN capped b USING (shingle)
-    WHERE a.doc_id < b.doc_id
-    GROUP BY 1, 2, 3, 4
-)
-SELECT doc_a, doc_b, co,
-    round(co / (n_a + n_b - co), 6) AS jaccard
-FROM pairs
-WHERE round(co / (n_a + n_b - co), 6) >= {JACCARD_THRESHOLD}
 """
 
 
@@ -276,10 +199,10 @@ def dedup_minhash_pairs(
     """MinHash+LSH near-dup pairs (shingle -> 16-hash signature -> 4 bands of
     4 -> band-bucket equality join -> true-Jaccard verify >= threshold).
 
-    The md5(j + ':' + shingle) family plays the role of the j-th random
-    permutation; band key = md5 of the band's minhashes. Candidates from ANY
-    matching band are verified with exact Jaccard via array intersection on
-    the (small) candidate set.
+    One md5 per shingle, lane-mixed per j, plays the role of the j-th
+    random permutation; band key = md5 of the band's minhashes. Candidates
+    from ANY matching band are verified with exact Jaccard via array
+    intersection on the (small) candidate set.
     """
     # The shingled frame feeds THREE subtrees of one DAG (signature path +
     # both sides of the verify join); unpersisted, Spark recomputes the
@@ -352,163 +275,6 @@ WHERE round(len(list_intersect(sa.shingles, sb.shingles)) /
 """
 
 
-# --- SimHash ----------------------------------------------------------------
-
-
-def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """{SIMHASH_BITS}-bit SimHash (Charikar): each distinct word votes +/-1
-    per bit; bit set iff the vote sum is > 0.
-
-    One md5 per token supplies all 64 vote bits: the 32-hex digest is split
-    into two 32-bit lanes (hex chars 1-8 and 9-16) and vote bit j is lane
-    bit j — so the per-token cost is a single hash plus integer shifts,
-    not 64 hashes. The lanes stage is narrow (no shuffle); the only
-    shuffles are the two hash aggregations on (doc_id, bit) and doc_id,
-    both with map-side partial aggregation.
-    """
-    tokens = _docs(spark, sf_dir, compute_dense=True).select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
-    )
-    lanes = tokens.select(
-        "doc_id",
-        F.expr("cast(conv(substr(md5(tok), 1, 8), 16, 10) AS bigint)").alias("h0"),
-        F.expr("cast(conv(substr(md5(tok), 9, 8), 16, 10) AS bigint)").alias("h1"),
-    )
-    # fan each token out to the 64 bit positions with a lateral explode —
-    # a generator inside the same stage, not a join (a crossJoin against a
-    # 64-row range compiles to BroadcastNestedLoopJoin; harmless at any
-    # scale but an explode keeps the stage narrow and the plan join-free)
-    votes = lanes.withColumn(
-        "bit",
-        F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))),
-    ).select(
-        "doc_id",
-        "bit",
-        F.expr(
-            "CASE WHEN bit < 32 THEN (shiftright(h0, bit) & 1) * 2 - 1 "
-            "ELSE (shiftright(h1, bit - 32) & 1) * 2 - 1 END"
-        ).alias("vote"),
-    )
-    # shiftleft(1L, 63) wraps to Long.MIN_VALUE (Java shift), which is the
-    # correct two's-complement weight for the sign bit; the oracle spells
-    # that weight out because DuckDB raises on the overflowing shift.
-    return (
-        votes.groupBy("doc_id", "bit")
-        .agg(F.sum("vote").alias("v"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.when(F.col("v") > 0, F.expr("shiftleft(1L, bit)")).otherwise(0)
-            ).alias("simhash")
-        )
-    )
-
-
-_SIMHASH_SQL = f"""
-    SELECT doc_id, cast(sum(CASE WHEN v > 0 THEN
-            CASE WHEN bit = 63 THEN -9223372036854775808
-                 ELSE (1::BIGINT << bit) END
-        ELSE 0 END) AS BIGINT) AS simhash
-    FROM (
-        SELECT doc_id, bit, sum(vote) AS v
-        FROM (
-            SELECT doc_id, bit,
-                CASE WHEN bit < 32 THEN ((h0 >> bit) & 1) * 2 - 1
-                     ELSE ((h1 >> (bit - 32)) & 1) * 2 - 1 END AS vote
-            FROM (
-                SELECT doc_id,
-                    ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h0,
-                    ('0x' || substr(md5(tok), 9, 8))::BIGINT AS h1
-                FROM (
-                    SELECT doc_id,
-                        unnest(list_distinct(string_split(text, ' '))) AS tok
-                    FROM documents
-                ) t
-            ) lanes, (SELECT unnest(range(0, {SIMHASH_BITS})) AS bit) b
-        ) q GROUP BY doc_id, bit
-    ) s GROUP BY doc_id
-"""
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash values per doc (fingerprint surface for Hamming-distance
-    dedup)."""
-    return _simhash_df(spark, sf_dir)
-
-
-DEDUP_SIMHASH_ORACLE = f"SELECT doc_id, simhash FROM ({_SIMHASH_SQL}) q"
-
-
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= {SIMHASH_MAX_HAMMING}.
-
-    Candidate generation: {SIMHASH_BANDS} bands of {SIMHASH_BAND_BITS} bits
-    each — with <= 3 differing bits over 4 disjoint 16-bit bands, at least
-    one band is bit-identical (pigeonhole), so a band-key equality join has
-    recall 1.0 within the radius (property-tested). Verify with
-    bit_count(xor).
-
-    Bucket-cardinality math (why 16-bit bands, and what to change at 10^9):
-    each band key has 2^16 = 65,536 values, so uniform simhashes give
-    expected bucket size n / 2^16 and expected candidate pairs
-    ~ bands * n^2 / 2^17 — a 2^16x reduction vs the 8-bit-band scheme's
-    1,024 global buckets (which was an effective cross join past ~10^5
-    docs). At n = 10^6 this is ~3 candidate pairs per doc; past ~10^8 docs
-    the band width must grow with log2(n) (Manku et al.'s permute-and-sort
-    tables generalize this: sort on a d-bit prefix with d chosen so
-    n / 2^d stays O(1)); SIMHASH_BAND_BITS is the knob and the pigeonhole
-    guarantee holds for any equal split with bands > max_hamming.
-    """
-    sh = _simhash_df(spark, sf_dir)
-    bands = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {SIMHASH_BANDS - 1}), b -> "
-                "struct(b AS band, cast(shiftright(simhash, "
-                f"b * {SIMHASH_BAND_BITS}) & {2 ** SIMHASH_BAND_BITS - 1} "
-                "AS int) AS key))"
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-        .withColumn("hamming", F.expr("bit_count(sh_a ^ sh_b)"))
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
-DEDUP_SIMHASH_PAIRS_ORACLE = f"""
-WITH sh AS ({_SIMHASH_SQL}),
-bands AS (
-    SELECT doc_id, simhash, b.band,
-        cast((simhash >> (b.band * {SIMHASH_BAND_BITS}))
-             & {2 ** SIMHASH_BAND_BITS - 1} AS int) AS key
-    FROM sh, (SELECT unnest(range(0, {SIMHASH_BANDS})) AS band) b
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        a.simhash AS sh_a, b.simhash AS sh_b
-    FROM bands a JOIN bands b USING (band, key)
-    WHERE a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, bit_count(xor(sh_a, sh_b)) AS hamming
-FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= {SIMHASH_MAX_HAMMING}
-"""
-
-
 # --- near-dup clustering (connected components) -----------------------------
 
 
@@ -520,11 +286,12 @@ def connected_components(
     by any edge — (doc_id, cluster_id, cluster_size), where cluster_id is
     the smallest doc_id in the component.
 
-    This is the canonical-selection step after ANY pair-emitting dedup
-    (ngram-Jaccard, MinHash, SimHash, embedding-cosine) — pairs alone
-    can't answer "which docs do I keep" when duplicates chain (A~B, B~C
-    but not A~C): dropping doc_b of every pair over-deletes transitively
-    linked non-duplicates (ADVICE r03).
+    This is the canonical-selection step after a pair-emitting dedup
+    (MinHash text pairs through ``dedup_clusters``, embedding-cosine pairs
+    through ``semdedup``) — pairs alone can't answer "which docs do I
+    keep" when duplicates chain (A~B, B~C but not A~C): dropping doc_b of
+    every pair over-deletes transitively linked non-duplicates (ADVICE
+    r03).
 
     Scale: label propagation converges in O(component diameter) rounds —
     near-dup components are shallow (dups of a common source), so a
@@ -598,18 +365,20 @@ def dedup_clusters(
     max_iter: int = 20,
     docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-dup clusters over the ``dedup_ngram_pairs`` edge set — the
-    registry/oracle entry point for ``connected_components`` (see there
-    for semantics and the scale story)."""
+    """Near-dup clusters over the ``dedup_minhash_pairs`` edge set: the one
+    place text near-dup pairs become clusters. The registry entry, the
+    ``dedup_minhash`` processor, ``doc_split_leakage_safe`` and
+    ``IncrementalMinHashDeduper``'s in-batch step all call it (see
+    ``connected_components`` for semantics and the scale story)."""
     return connected_components(
-        dedup_ngram_pairs(spark, sf_dir, docs=docs), max_iter=max_iter
+        dedup_minhash_pairs(spark, sf_dir, docs=docs), max_iter=max_iter
     )
 
 
 # Oracle: reachability closure via recursive CTE (components are tiny at
 # oracle SF, so the closure is cheap), then min-reachable per node.
 DEDUP_CLUSTERS_ORACLE = f"""
-WITH RECURSIVE base AS ({DEDUP_NGRAM_ORACLE}),
+WITH RECURSIVE base AS ({DEDUP_MINHASH_ORACLE}),
 edges AS (
     SELECT doc_a AS a, doc_b AS b FROM base
     UNION

@@ -24,6 +24,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 # Ordered pattern library: (name, regex with named groups). Tried in order;
 # first pattern whose mandatory group matches claims the row.
@@ -48,6 +49,10 @@ GROK_SCHEMA = (
 )
 
 _FIELDS = ["severity_text", "tool", "trace_id", "span_id", "dur_ms", "status"]
+
+# the kernel's batches carry dur_ms as its matched digits; the JVM types it
+# with try_cast, so a value past bigint reads NULL instead of failing the job
+_KERNEL_SCHEMA = GROK_SCHEMA.replace("dur_ms long", "dur_ms string")
 
 # DuckDB oracle for the library: the ordered CASE expresses exactly the
 # first-matching-pattern-wins precedence the kernel implements; each field
@@ -78,7 +83,7 @@ SELECT conv_id, turn_idx, pattern,
     CASE pattern WHEN 'tool_call' THEN regexp_extract(text, '{p1}', 4) END
         AS span_id,
     CASE pattern
-        WHEN 'tool_call' THEN cast(regexp_extract(text, '{p1}', 5) AS BIGINT)
+        WHEN 'tool_call' THEN try_cast(regexp_extract(text, '{p1}', 5) AS BIGINT)
     END AS dur_ms,
     CASE pattern WHEN 'tool_result' THEN regexp_extract(text, '{p2}', 3) END
         AS status
@@ -130,11 +135,10 @@ def grok_parse(transcripts: DataFrame) -> DataFrame:
                 for col in ext.columns:
                     out.loc[idx, col] = ext[col].to_numpy()[hit]
                 unclaimed[idx] = False
-            out["dur_ms"] = pd.to_numeric(out["dur_ms"], errors="coerce").astype(
-                "Int64"
-            )
             yield out
 
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        kernel, GROK_SCHEMA
+    return (
+        transcripts.select("conv_id", "turn_idx", "text")
+        .mapInPandas(kernel, _KERNEL_SCHEMA)
+        .withColumn("dur_ms", F.expr("try_cast(dur_ms AS BIGINT)"))
     )

@@ -162,11 +162,12 @@ class IncrementalMinHashDeduper:
     catches only byte-identical content across ticks).
 
     Per tick: (1) in-batch near-dups collapse to cluster canonicals via
-    ``dedup_minhash_pairs`` (exact shingle-Jaccard verify) + connected
-    components — the same policy as the batch ``dedup_minhash`` config
-    processor; (2) the canonicals' LSH band keys (identical banding to the
-    in-batch op — ``bands_from_signatures``) equality-join against the
-    ledger's bands, and candidates are verified by SIGNATURE-estimated
+    ``dedup_clusters`` (MinHash pairs with exact shingle-Jaccard verify,
+    then connected components) — the same call the batch
+    ``dedup_minhash`` config processor makes; (2) the canonicals' LSH
+    band keys (identical banding to the in-batch op —
+    ``bands_from_signatures``) equality-join against the ledger's bands,
+    and candidates are verified by SIGNATURE-estimated
     Jaccard (matching minhash components / K ≥ the same threshold): the
     ledger keeps the 16-bigint sketch per accepted doc, never its
     shingles, so the cross-tick verify uses the standard unbiased MinHash
@@ -205,15 +206,13 @@ class IncrementalMinHashDeduper:
             JACCARD_THRESHOLD,
             MINHASH_K,
             bands_from_signatures,
-            connected_components,
-            dedup_minhash_pairs,
+            dedup_clusters,
             minhash_signatures,
         )
 
         # (1) in-batch: exact-verified pairs -> component canonicals
-        pairs = dedup_minhash_pairs(self.spark, "", docs=docs)
         drop_in_batch = (
-            connected_components(pairs)
+            dedup_clusters(self.spark, "", docs=docs)
             .filter(F.col("doc_id") != F.col("cluster_id"))
             .select("doc_id")
         )

@@ -91,10 +91,12 @@ def parse_turns(transcripts: DataFrame) -> DataFrame:
         stage: f"regexp_extract(text, {sql_str(pattern)}, 1)"
         for _, stage, pattern in _FIELDS
     })
-    # regexp_extract gives '' on no match in Spark and DuckDB: NULL it
+    # regexp_extract gives '' on no match in Spark and DuckDB: NULL it.
+    # try_cast: a dur_ms past bigint reads NULL like a missing marker
+    # (under ANSI a plain CAST would fail the whole job on one row)
     typed = _staged(raw, {
         name: f"nullif({stage}, '')" for name, stage, _ in _FIELDS
-    } | {"dur_ms": "CAST(nullif(__dur_raw, '') AS BIGINT)"})
+    } | {"dur_ms": "try_cast(nullif(__dur_raw, '') AS BIGINT)"})
     attrs = attributes_json_sql(
         {"dur_ms": "dur_ms", "status": "status", "tool": "parsed_tool"}
     )
@@ -128,7 +130,7 @@ FROM (
     SELECT *,
         nullif(regexp_extract(text, '{SEV_PATTERN}', 1), '') AS severity_text,
         nullif(regexp_extract(text, '{TOOL_PATTERN}', 1), '') AS parsed_tool,
-        cast(nullif(regexp_extract(text, '{DUR_PATTERN}', 1), '') AS bigint) AS dur_ms,
+        try_cast(nullif(regexp_extract(text, '{DUR_PATTERN}', 1), '') AS bigint) AS dur_ms,
         nullif(regexp_extract(text, '{STATUS_PATTERN}', 1), '') AS status,
         nullif(regexp_extract(text, '{TRACE_PATTERN}', 1), '') AS trace_id,
         nullif(regexp_extract(text, '{SPAN_PATTERN}', 1), '') AS span_id

@@ -13,8 +13,8 @@ methods:
   ``keep`` — filters are kept inspectable, never silent.
 * ``doc_normalize`` — the canonical text form near-dedup pipelines hash
   (lowercase, strip non-alphanumerics, collapse whitespace) plus its md5,
-  so MinHash/SimHash stages upstream can key on ``norm_hash`` instead of
-  raw text.
+  so a MinHash stage downstream can key on ``norm_hash`` instead of raw
+  text.
 * ``corpus_mix`` — deterministic weighted source mixing: given integer
   source weights, compute the largest feasible mixed corpus hitting those
   proportions and keep each doc by a salted hash threshold — reproducible
@@ -595,8 +595,8 @@ def doc_split_leakage_safe(
     ``doc_split``, so singleton docs land in exactly the split they'd get
     there (swapping the op in only moves docs that have a near-duplicate).
 
-    Scale shape at 10^12 docs: the pair set is the same inverted-index
-    equality join ``dedup_clusters`` runs (never all-pairs); components
+    Scale shape at 10^12 docs: the pair set is ``dedup_clusters``'
+    MinHash band-key equality join (never all-pairs); components
     converge in O(diameter) propagation rounds over the node set only
     (≪ corpus); the join back to the corpus keys on uniform doc_id —
     left as a shuffle join deliberately, because at web scale 30-50% of

@@ -102,26 +102,14 @@ def _builtin_processors() -> dict[str, Callable]:
         dups = _dd.dedup_exact(spark, "", docs=df).filter("is_dup")
         return df.join(dups.select("doc_id"), "doc_id", "left_anti")
 
-    def dedup_near_p(spark, df, cfg):
-        # connected components over ngram-Jaccard pairs; keep the cluster
-        # canonical (min doc_id) so chained duplicates collapse to one doc
-        clusters = _dd.dedup_clusters(
-            spark, "", max_iter=cfg.get("max_iter", 20), docs=df
-        )
-        drop = clusters.filter(
-            F.col("doc_id") != F.col("cluster_id")
-        ).select("doc_id")
-        return df.join(drop, "doc_id", "left_anti")
-
     def dedup_minhash_p(spark, df, cfg):
         # keep-first policy via connected components over the verified
         # MinHash pair set: only the cluster canonical (min doc_id per
         # component) survives. Dropping doc_b of every pair would
         # over-delete on chains a~b, b~c (no a~c): c's only near-dup b is
         # itself removed, so keep-first would re-keep c (ADVICE r03).
-        pairs = _dd.dedup_minhash_pairs(spark, "", docs=df)
-        clusters = _dd.connected_components(
-            pairs, max_iter=cfg.get("max_iter", 20)
+        clusters = _dd.dedup_clusters(
+            spark, "", max_iter=cfg.get("max_iter", 20), docs=df
         )
         drop = clusters.filter(
             F.col("doc_id") != F.col("cluster_id")
@@ -399,7 +387,6 @@ def _builtin_processors() -> dict[str, Callable]:
         "tail_sampling": tail_factory,
         # corpus-curation processors (documents stream)
         "dedup_exact": dedup_exact_p,
-        "dedup_near": dedup_near_p,
         "dedup_minhash": dedup_minhash_p,
         "dedup_substring": dedup_substring_p,
         "quality_filter": quality_filter_p,

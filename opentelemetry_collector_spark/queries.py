@@ -672,10 +672,7 @@ DOCS_QUERIES: dict[str, QueryFn] = {
     "doc_langid": _ts.doc_langid,
     "doc_fingerprint": _ts.doc_fingerprint,
     "dedup_exact": _dedup.dedup_exact,
-    "dedup_ngram_pairs": _dedup.dedup_ngram_pairs,
     "dedup_minhash_pairs": _dedup.dedup_minhash_pairs,
-    "dedup_simhash": _dedup.dedup_simhash,
-    "dedup_simhash_pairs": _dedup.dedup_simhash_pairs,
     "ann_cosine_topk": _sim.ann_cosine_topk,
     "ann_ivf_topk": _sim.ann_ivf_topk,
     # performance-path twin of ann_cosine_topk (Arrow/numpy matmul). Both
@@ -732,10 +729,7 @@ DOCS_ORACLES: dict[str, str] = {
     "doc_langid": _ts.DOC_LANGID_ORACLE,
     "doc_fingerprint": _ts.DOC_FINGERPRINT_ORACLE,
     "dedup_exact": _dedup.DEDUP_EXACT_ORACLE,
-    "dedup_ngram_pairs": _dedup.DEDUP_NGRAM_ORACLE,
     "dedup_minhash_pairs": _dedup.DEDUP_MINHASH_ORACLE,
-    "dedup_simhash": _dedup.DEDUP_SIMHASH_ORACLE,
-    "dedup_simhash_pairs": _dedup.DEDUP_SIMHASH_PAIRS_ORACLE,
     "ann_cosine_topk": _sim.ANN_TOPK_ORACLE,
     "ann_cosine_topk_pandas": _sim.ANN_TOPK_ORACLE,
     "ann_ivf_topk": _sim.ANN_IVF_ORACLE,

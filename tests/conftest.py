@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import datetime
 import uuid
 
 import duckdb
@@ -106,6 +107,36 @@ def duck():
         return con
 
     return connect
+
+
+# a tool call whose dur_ms does not fit a bigint, and a normal one
+_TS = datetime.datetime(2020, 2, 11, 20, 26, 13)
+OVERFLOW_ROWS = [
+    ("big", 0, "assistant",
+     "[INFO] calling tool=python trace_id=" + "a" * 32 + " span_id="
+     + "b" * 16 + " dur_ms=99999999999999999999 args={}", "python", _TS),
+    ("big", 1, "assistant",
+     "[INFO] calling tool=python trace_id=" + "c" * 32 + " span_id="
+     + "d" * 16 + " dur_ms=42 args={}", "python", _TS),
+]
+
+
+def oracle_over(spark, rows, oracle_sql):
+    """(Spark transcripts frame of ``rows``, the DuckDB result of a
+    registered oracle run over those rows instead of the fixture)."""
+    from opentelemetry_collector_spark.schemas import TRANSCRIPT_SCHEMA
+    from opentelemetry_collector_spark.sources.transcripts import (
+        TRANSCRIPTS_FROM_EVENTS_SQL,
+    )
+
+    t = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    con = duckdb.connect()
+    con.register("given_rows", t.toPandas())
+    assert TRANSCRIPTS_FROM_EVENTS_SQL in oracle_sql
+    sql = oracle_sql.replace(
+        TRANSCRIPTS_FROM_EVENTS_SQL, "SELECT * FROM given_rows", 1
+    )
+    return t, con.sql(sql).df()
 
 
 def assert_df_equal(spark_df, duck_df, sort_cols=None):

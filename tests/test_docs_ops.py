@@ -17,15 +17,24 @@ def test_docs_query_matches_oracle(name, spark, duck):
     assert_df_equal(sdf, con.sql(DOCS_ORACLES[name]))
 
 
-def test_minhash_recall_vs_exact_jaccard(spark):
-    """LSH candidates must contain every true near-dup pair found by the
-    exhaustive n-gram path (banding can only LOSE pairs below threshold —
-    at threshold 0.6 with 4x4 bands, P(miss) = (1-s^4)^4 < 3% at s=0.6 and
+def test_minhash_recall_vs_exact_jaccard(spark, duck):
+    """LSH must return every true near-dup pair: the reference is the
+    exhaustive all-pairs shingle Jaccard >= JACCARD_THRESHOLD, computed in
+    DuckDB from the same shingles (banding can only LOSE pairs — at
+    threshold 0.6 with 4x4 bands, P(miss) = (1-s^4)^4 < 3% at s=0.6 and
     the deterministic corpus has only high-s pairs)."""
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in DOCS_QUERIES["dedup_ngram_pairs"](spark, SF_CORRECT).collect()
-    }
+    from opentelemetry_collector_spark.operators.dedup import (
+        _SHINGLES_SQL,
+        JACCARD_THRESHOLD,
+    )
+
+    con = duck(SF_CORRECT)
+    exact = set(con.sql(f"""
+        WITH sh AS (SELECT doc_id, {_SHINGLES_SQL} AS s FROM documents)
+        SELECT a.doc_id, b.doc_id FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+        WHERE round(len(list_intersect(a.s, b.s)) /
+                    len(list_distinct(list_concat(a.s, b.s))), 6)
+              >= {JACCARD_THRESHOLD}""").fetchall())
     lsh = {
         (r.doc_a, r.doc_b)
         for r in DOCS_QUERIES["dedup_minhash_pairs"](spark, SF_CORRECT).collect()
@@ -46,39 +55,6 @@ def test_pandas_topk_agrees_with_sql_topk(spark):
     for r in pd_rows:
         by_q_pd.setdefault(r.query_id, set()).add(r.data_id)
     assert by_q_sql == by_q_pd
-
-
-def test_simhash_band_recall_is_total_within_radius(spark):
-    """Pigeonhole property: 4x16-bit band equality must find EVERY pair
-    with Hamming(simhash) <= SIMHASH_MAX_HAMMING — recall 1.0 by
-    construction (<= 3 differing bits cannot touch all 4 disjoint bands).
-    Brute-force all-pairs Hamming on the fixture is the ground truth."""
-    from itertools import combinations
-
-    from opentelemetry_collector_spark.operators import dedup
-
-    hashes = {
-        r.doc_id: r.simhash
-        for r in DOCS_QUERIES["dedup_simhash"](spark, SF_CORRECT).collect()
-    }
-    truth = {
-        (a, b)
-        for a, b in combinations(sorted(hashes), 2)
-        if bin((hashes[a] ^ hashes[b]) & 0xFFFFFFFFFFFFFFFF).count("1")
-        <= dedup.SIMHASH_MAX_HAMMING
-    }
-    banded = {
-        (r.doc_a, r.doc_b)
-        for r in DOCS_QUERIES["dedup_simhash_pairs"](spark, SF_CORRECT).collect()
-    }
-    assert truth, "fixture must contain pairs within the Hamming radius"
-    assert banded == truth
-
-
-def test_simhash_is_deterministic(spark):
-    a = DOCS_QUERIES["dedup_simhash"](spark, SF_CORRECT).collect()
-    b = DOCS_QUERIES["dedup_simhash"](spark, SF_CORRECT).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_ivf_recall_vs_brute_force(spark):
@@ -333,7 +309,7 @@ def test_dedup_clusters_raises_on_non_convergence(spark, monkeypatch):
         [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
     )
     monkeypatch.setattr(
-        _d, "dedup_ngram_pairs", lambda spark, sf_dir, docs=None: chain
+        _d, "dedup_minhash_pairs", lambda spark, sf_dir, docs=None: chain
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
         _d.dedup_clusters(spark, SF_CORRECT, max_iter=3)
@@ -808,7 +784,7 @@ def test_leakage_safe_split_never_separates_near_duplicates(spark):
     split = DOCS_QUERIES["doc_split_leakage_safe"](
         spark, SF_CORRECT
     ).cache()
-    pairs = DOCS_QUERIES["dedup_ngram_pairs"](spark, SF_CORRECT)
+    pairs = DOCS_QUERIES["dedup_minhash_pairs"](spark, SF_CORRECT)
     a = split.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
     )

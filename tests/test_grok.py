@@ -57,3 +57,17 @@ def test_grok_pattern_priority(spark):
     calls = g.filter(F.col("text").contains("calling tool="))
     assert calls.count() > 0
     assert calls.filter(F.col("pattern") != "tool_call").count() == 0
+
+
+def test_grok_bigint_overflowing_dur_ms_reads_null(spark):
+    """grok_parse reads a dur_ms past bigint as NULL, as the native parse
+    does, and agrees with its oracle; the normal row keeps its value."""
+    from opentelemetry_collector_spark.queries import PIPELINE_ORACLES
+    from tests.conftest import OVERFLOW_ROWS, assert_df_equal, oracle_over
+
+    t, want = oracle_over(spark, OVERFLOW_ROWS, PIPELINE_ORACLES["grok_parse"])
+    got = grok_parse(t)
+    assert_df_equal(got, want)
+    r = {r.turn_idx: r for r in got.collect()}
+    assert r[0].pattern == "tool_call" and r[0].dur_ms is None
+    assert r[1].dur_ms == 42

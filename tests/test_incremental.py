@@ -233,3 +233,29 @@ def test_ledger_metrics_scraped_vs_errored_split(spark, dirs):
     (bad,) = [r for r in rows if r.error is not None]
     assert good == [5, 20]
     assert bad.file_path.endswith("bad.parquet") and bad.n_rows is None
+
+
+def test_tick_over_bigint_overflowing_dur_ms_commits(spark, dirs):
+    """A landed file holding a turn whose dur_ms overflows bigint runs
+    through parse -> enrich -> route and commits: the row reads NULL, so
+    the file is not retried forever."""
+    from opentelemetry_collector_spark.operators.enrich import enrich
+    from opentelemetry_collector_spark.operators.parse import parse_turns
+    from opentelemetry_collector_spark.operators.route import route
+    from opentelemetry_collector_spark.schemas import TRANSCRIPT_SCHEMA
+    from tests.conftest import OVERFLOW_ROWS
+
+    data, ledger, out = dirs
+    rows = spark.createDataFrame(OVERFLOW_ROWS, TRANSCRIPT_SCHEMA)
+    rows.coalesce(1).write.parquet(data)
+    src = IncrementalSource(spark, data, ledger)
+
+    def write_out(df):
+        routed = route(enrich(parse_turns(df), spark))
+        routed.write.mode("overwrite").parquet(out)
+
+    r = src.process_new(write_out)
+    assert r["n_rows"] == 2 and r["n_failed_files"] == 0
+    assert src.pending() is None
+    got = {x.turn_idx: x.dur_ms for x in spark.read.parquet(out).collect()}
+    assert got == {0: None, 1: 42}

@@ -121,3 +121,29 @@ def test_trace_ids_match_deterministic_helpers(spark):
            != deterministic_span_id(F.col("conv_id"), F.col("turn_idx")))
     ).count()
     assert parsed.count() > 0 and mismatches == 0
+
+
+def test_bigint_overflowing_dur_ms_reads_null(spark):
+    """A dur_ms past bigint parses to NULL, like a missing marker, instead
+    of failing the job under ANSI casts; the attributes JSON leaves the key
+    out, the oracle agrees, and the row beside it is untouched."""
+    from opentelemetry_collector_spark.operators.enrich import enrich
+    from opentelemetry_collector_spark.operators.route import route
+    from opentelemetry_collector_spark.queries import (
+        _ROUTED_COLS,
+        PIPELINE_ORACLES,
+        _normalize_enriched,
+    )
+    from tests.conftest import OVERFLOW_ROWS, assert_df_equal, oracle_over
+
+    t, want = oracle_over(spark, OVERFLOW_ROWS, PIPELINE_ORACLES["route"])
+    got = _normalize_enriched(route(enrich(parse_turns(t), spark))).select(
+        *_ROUTED_COLS
+    )
+    assert_df_equal(got, want)
+    r = {r.turn_idx: r for r in got.collect()}
+    assert r[0].dur_ms is None
+    assert r[0].attributes_json == '{"tool": "python"}'
+    assert r[0].error_reason is None and r[0].trace_id == "a" * 32
+    assert r[1].dur_ms == 42
+    assert r[1].attributes_json == '{"dur_ms": 42, "tool": "python"}'

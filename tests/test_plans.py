@@ -74,13 +74,11 @@ def test_ann_brute_force_broadcasts_query_side_only(spark):
 
 
 def test_dedup_joins_are_equality_joins(spark):
-    """Candidate generation must hash-join on band/bucket keys — a nested
+    """Candidate generation must hash-join on LSH band keys — a nested
     loop here would be quadratic in the corpus."""
-    for name in ["dedup_minhash_pairs", "dedup_simhash_pairs",
-                 "dedup_ngram_pairs"]:
-        plan = _plan(DOCS_QUERIES[name](spark, SF_SMOKE))
-        assert "BroadcastNestedLoopJoin" not in plan, name
-        assert "CartesianProduct" not in plan, name
+    plan = _plan(DOCS_QUERIES["dedup_minhash_pairs"](spark, SF_SMOKE))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_sampler_and_redaction_add_no_shuffle(spark):

@@ -421,15 +421,19 @@ TEST_ONLY_AIMS = {
     "bucketed table of the catalog get_catalog returns",
     "IcebergCatalog.write_transcripts": "environment gate: writes the "
     "bucketed table of the catalog get_catalog returns",
+    "deterministic_trace_id": "FIXTURES.md: defines the trace ids the "
+    "fixture's transcripts embed",
+    "deterministic_span_id": "FIXTURES.md: defines the span ids the "
+    "fixture's transcripts embed",
 }
 
 
 def _public_names_and_outside_refs():
     """(public top-level def/class name, or ``Class.method`` for a public
     method of a package class -> module, every identifier that code outside
-    tests references): the package (a definition's own body excluded),
-    __spark_entry__.py, the benchmarks, the scripts and the example
-    configs."""
+    tests references): the package (a definition's own body and the
+    imports of a package ``__init__.py`` excluded), __spark_entry__.py, the
+    benchmarks, the scripts and the example configs."""
     import ast
     import pathlib
     import re
@@ -456,9 +460,12 @@ def _public_names_and_outside_refs():
     defs, used = {}, set()
     kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
     functions = (ast.FunctionDef, ast.AsyncFunctionDef)
+    reexports = (ast.Import, ast.ImportFrom)
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(repo).as_posix()
         for stmt in ast.parse(path.read_text()).body:
+            if path.name == "__init__.py" and isinstance(stmt, reexports):
+                continue  # a package re-export is not a caller
             own = stmt.name if isinstance(stmt, kinds) else None
             if own and not own.startswith("_"):
                 defs[own] = rel

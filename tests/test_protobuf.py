@@ -1335,8 +1335,17 @@ def test_in_range_extremes_encode_on_both_wires():
         (b"\x48\x01", "LogRecord.trace_id"),  # varint for bytes
         (b"\x18\x05", "LogRecord.severity_text"),  # varint for a string
         (b"\x2d\x00\x00\x00\x00", "LogRecord.body"),  # fixed32 for a message
+        # AnyValue and KeyValue decode outside the table, by the same rule
+        (b"\x2a\x02\x08\x01", "AnyValue.string_value"),  # varint for a string
+        (b"\x2a\x02\x20\x01", "AnyValue.double_value"),  # varint for a double
+        (b"\x2a\x04\x2a\x02\x08\x01", "ArrayValue.values"),  # varint element
+        (b"\x2a\x04\x32\x02\x08\x01", "KeyValueList.values"),
+        (b"\x32\x02\x08\x01", "KeyValue.key"),  # attribute key as a varint
+        (b"\x32\x02\x10\x01", "KeyValue.value"),
     ],
-    ids=["time_unix_nano", "trace_id", "severity_text", "body"],
+    ids=["time_unix_nano", "trace_id", "severity_text", "body",
+         "any_string_value", "any_double_value", "array_values",
+         "kvlist_values", "kv_key", "kv_value"],
 )
 def test_wrong_wire_type_raises_naming_the_field(blob, field):
     with pytest.raises(ValueError, match=field.replace(".", r"\.")):

@@ -157,7 +157,7 @@ def test_redact_statement_validation():
 def test_dedup_clusters_are_valid_components(spark):
     """Every pair's endpoints share a cluster; every cluster id is the min
     member; sizes agree with membership."""
-    pairs = DOCS_QUERIES["dedup_ngram_pairs"](spark, SF_CORRECT).collect()
+    pairs = DOCS_QUERIES["dedup_minhash_pairs"](spark, SF_CORRECT).collect()
     rows = DOCS_QUERIES["dedup_clusters"](spark, SF_CORRECT).collect()
     assert pairs and rows
     label = {r.doc_id: r.cluster_id for r in rows}
