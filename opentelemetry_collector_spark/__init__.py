@@ -16,5 +16,3 @@ Reference parity citations live in each module's docstrings
 """
 
 __version__ = "0.1.0"
-
-from opentelemetry_collector_spark.session import get_spark  # noqa: F401

@@ -6,6 +6,11 @@ ops.)
 Text near-dup is one path, MinHash+LSH over word-shingle sets (Broder),
 implemented Spark-first:
 
+* the signature is **one compiled hash aggregate** over the exploded
+  shingles: a row per (doc, shingle) carries the shingle's two md5 lanes,
+  and a groupBy on doc_id takes the MINHASH_K ``min``s — no per-shingle
+  lambda, and no Exchange, as the shingles are already partitioned on
+  doc_id;
 * candidate generation is a **key-equality self-join** on LSH band keys —
   a hash-partitioned shuffle Catalyst executes as a sort-merge/hash join,
   never an O(n^2) cross join;
@@ -39,10 +44,13 @@ MINHASH_BANDS = 4  # bands x rows = 4 x 4
 
 # evaluated over a pre-split `words` column: inlining split(text) inside the
 # lambda would re-split the text at EVERY shingle position (O(words^2) per
-# document — measured 6s for 5k docs vs ~1s hoisted)
+# document — measured 6s for 5k docs vs ~1s hoisted). A NULL text has no
+# shingles (NULL here, [] in DuckDB), so its signature is all NULLs on both
+# sides; concat_ws alone would make it the shingle '' of an empty text.
 _SHINGLES_EXPR = (
-    "array_distinct(transform(sequence(1, greatest(size(words) - "
-    f"{SHINGLE_W - 1}, 1)), i -> concat_ws(' ', slice(words, i, {SHINGLE_W}))))"
+    "CASE WHEN words IS NOT NULL THEN array_distinct(transform(sequence(1, "
+    f"greatest(size(words) - {SHINGLE_W - 1}, 1)), "
+    f"i -> concat_ws(' ', slice(words, i, {SHINGLE_W})))) END"
 )
 
 # DuckDB list slicing is 1-based inclusive: words[i:i+2] is 3 elements.
@@ -120,29 +128,11 @@ FROM documents
 # (h0*A_j + h1*B_j + j) mod 2^32 — a universal-style hash family. The
 # multipliers stay < 2^30 so each product < 2^62 and the sum < 2^63:
 # identical exact math on Spark's LongType and DuckDB's overflow-checked
-# BIGINT. This replaces the previous 16-md5s-per-shingle signature that
-# dominated the sf0.1 bench (16.7s of 44.2s).
+# BIGINT. Spark takes the per-j minimum in an aggregate (``_signatures``);
+# the DuckDB oracle below takes it with list lambdas, same values.
 _MINHASH_A = [((2654435761 * (2 * j + 1)) % (1 << 30)) | 1 for j in range(MINHASH_K)]
 _MINHASH_B = [((2654435769 * (2 * j + 3)) % (1 << 30)) | 1 for j in range(MINHASH_K)]
 
-_PERM_A = "array(" + ", ".join(f"{a}L" for a in _MINHASH_A) + ")"
-_PERM_B = "array(" + ", ".join(f"{b}L" for b in _MINHASH_B) + ")"
-# lanes are hoisted into their own column so the md5+conv per shingle runs
-# ONCE, not once per permutation (16x recompute inside the per-j lambda
-# measured 33s vs 6s at sf0.1)
-_LANES_EXPR = (
-    "transform(transform(shingles, s -> md5(s)), m -> struct("
-    "  cast(conv(substr(m, 1, 8), 16, 10) AS bigint) AS h0,"
-    "  cast(conv(substr(m, 9, 8), 16, 10) AS bigint) AS h1))"
-)
-_SIG_EXPR = (
-    "transform("
-    f"  sequence(0, {MINHASH_K - 1}),"
-    "  j -> array_min(transform(lanes,"
-    f"    l -> (l.h0 * element_at({_PERM_A}, j + 1)"
-    f"          + l.h1 * element_at({_PERM_B}, j + 1)"
-    "          + j) & 4294967295)))"
-)
 _PERM_A_SQL = "[" + ", ".join(f"{a}::BIGINT" for a in _MINHASH_A) + "]"
 _PERM_B_SQL = "[" + ", ".join(f"{b}::BIGINT" for b in _MINHASH_B) + "]"
 _LANES_SQL = (
@@ -172,17 +162,36 @@ _BANDS_FROM_SIG_EXPR = (
 )
 
 
+def _signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, sig) from a doc_id-partitioned (doc_id, shingles) frame:
+    one row per (doc, shingle) carrying the md5 lanes, then one hash
+    aggregate on doc_id whose MINHASH_K ``min``s are the signature.
+    The lanes and the (h0*A_j + h1*B_j + j) & (2^32 - 1) mix are the ones
+    ``_LANES_SQL``/``_SIG_SQL`` compute. ``explode_outer`` keeps a doc with
+    NULL shingles (a NULL text) as one NULL row, so its sig is MINHASH_K
+    NULLs, as DuckDB's ``list_min([])``; plain ``explode`` would also let
+    Catalyst infer a ``size(shingles) > 0`` filter and push it below the
+    repartition, re-running the shingle lambda inside the scan task."""
+    m = F.md5("s")
+    h0 = F.conv(F.substring(m, 1, 8), 16, 10).cast("bigint")
+    h1 = F.conv(F.substring(m, 9, 8), 16, 10).cast("bigint")
+    lanes = sh.select("doc_id", F.explode_outer("shingles").alias("s")).select(
+        "doc_id", h0.alias("h0"), h1.alias("h1")
+    )
+    mins = [
+        F.min(((F.col("h0") * a + F.col("h1") * b) + j).bitwiseAND(0xFFFFFFFF))
+        for j, (a, b) in enumerate(zip(_MINHASH_A, _MINHASH_B))
+    ]
+    return lanes.groupBy("doc_id").agg(F.array(*mins).alias("sig"))
+
+
 def minhash_signatures(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, sig) — the {MINHASH_K}-permutation MinHash signature, the
     compact sketch the cross-tick near-dup ledger persists (~16 bigints
     per accepted doc instead of its shingle set)."""
-    return (
-        _shingled(spark, sf_dir, docs=docs)
-        .withColumn("lanes", F.expr(_LANES_EXPR))
-        .select("doc_id", F.expr(_SIG_EXPR).alias("sig"))
-    )
+    return _signatures(_shingled(spark, sf_dir, docs=docs))
 
 
 def bands_from_signatures(sig_df: DataFrame) -> DataFrame:
@@ -211,12 +220,7 @@ def dedup_minhash_pairs(
     # spills rather than OOMs at corpus scale — ~5 KB/doc of shingles —
     # and the ContextCleaner unpersists when the frame goes out of scope.
     sh = _shingled(spark, sf_dir, docs=docs).persist()
-    sig = sh.withColumn("lanes", F.expr(_LANES_EXPR)).withColumn(
-        "sig", F.expr(_SIG_EXPR)
-    )
-    bands = sig.select(
-        "doc_id", F.explode(F.expr(_BANDS_FROM_SIG_EXPR)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
+    bands = bands_from_signatures(_signatures(sh))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, ["band", "key"])
@@ -231,11 +235,13 @@ def dedup_minhash_pairs(
                             F.col("shingles").alias("sh_a")), "doc_a")
         .join(sh.select(F.col("doc_id").alias("doc_b"),
                         F.col("shingles").alias("sh_b")), "doc_b")
+        # array_size, not size: NULL (a NULL text's shingles) stays NULL
+        # and fails the threshold; size reads -1 when ANSI mode is off
         .withColumn(
             "jaccard",
             F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
+                F.array_size(F.array_intersect("sh_a", "sh_b"))
+                / F.array_size(F.array_union("sh_a", "sh_b")),
                 6,
             ),
         )

@@ -246,9 +246,9 @@ class IncrementalMinHashDeduper:
             )
             .withColumn(
                 "est_jaccard",
-                F.expr(
-                    "size(filter(zip_with(sig, old_sig,"
-                    " (x, y) -> x = y), v -> v))"
+                sum(
+                    F.when(F.col("sig")[i] == F.col("old_sig")[i], 1).otherwise(0)
+                    for i in range(MINHASH_K)
                 )
                 / F.lit(MINHASH_K),
             )

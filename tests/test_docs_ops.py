@@ -43,6 +43,66 @@ def test_minhash_recall_vs_exact_jaccard(spark, duck):
     assert lsh == exact  # at this scale the corpus' pairs are all s>0.9
 
 
+EDGE_DOCS = [
+    (1, None), (2, ""), (3, "   "), (4, "one"), (5, "one two"),
+    (6, "a a a a a"), (7, "a a a a a"), (8, "one two three four"),
+]
+
+
+def test_minhash_signatures_match_duckdb(spark, duck):
+    """``minhash_signatures`` equals DuckDB's ``_SHINGLES_SQL`` ->
+    ``_LANES_SQL`` -> ``_SIG_SQL`` per doc, on the sf0.01 corpus and on
+    edge texts: NULL (no shingles, so all-NULL minhashes), empty,
+    whitespace-only, one and two words (one short shingle) and repeated
+    shingles. On the edge texts the pairs also equal the oracle's, with
+    and without ANSI mode, so a NULL text pairs with nothing."""
+    import duckdb
+
+    from opentelemetry_collector_spark.operators.dedup import (
+        _LANES_SQL,
+        _SHINGLES_SQL,
+        _SIG_SQL,
+        DEDUP_MINHASH_ORACLE,
+        minhash_signatures,
+    )
+
+    sig_sql = f"""
+        WITH sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
+        lanes AS (SELECT doc_id, shingles, {_LANES_SQL} AS lanes FROM sh)
+        SELECT doc_id, {_SIG_SQL} AS sig FROM lanes"""
+
+    def spark_sigs(docs):
+        return sorted(
+            (r.doc_id, list(r.sig))
+            for r in minhash_signatures(spark, "", docs=docs).collect()
+        )
+
+    con = duck(SF_CORRECT)
+    corpus = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
+    assert spark_sigs(corpus) == sorted(con.sql(sig_sql).fetchall())
+
+    edge = duckdb.connect()
+    edge.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    edge.executemany("INSERT INTO documents VALUES (?, ?)", EDGE_DOCS)
+    docs = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    sigs = spark_sigs(docs)
+    assert sigs == sorted(edge.sql(sig_sql).fetchall())
+    assert sigs[0] == (1, [None] * len(sigs[0][1]))
+    expected = set(edge.sql(DEDUP_MINHASH_ORACLE).fetchall())
+    assert (6, 7, 1.0) in expected
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):  # size(NULL) is -1 without ANSI
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            pairs = {
+                tuple(r) for r in DOCS_QUERIES["dedup_minhash_pairs"](
+                    spark, "", docs=docs).collect()
+            }
+            assert pairs == expected, mode
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_pandas_topk_agrees_with_sql_topk(spark):
     """The Arrow/numpy top-k must return the same neighbor SETS as the
     native-SQL brute force (scores may differ in the last ulp)."""

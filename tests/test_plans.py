@@ -81,6 +81,34 @@ def test_dedup_joins_are_equality_joins(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_minhash_signature_is_one_compiled_aggregate(spark):
+    """The signature is a hash aggregate on doc_id over the exploded
+    shingles: its only Exchange is ``_docs``' compute_dense repartition,
+    no Filter sits between the scan and that Exchange (``explode`` would
+    infer a shingle-size filter there), and the aggregate's expressions
+    hold no lambda (the per-permutation ``transform`` signature did).
+    The cache is cleared first: a shingle frame that an earlier
+    ``dedup_minhash_pairs`` persisted over the same input would stand in
+    for the scan."""
+    from opentelemetry_collector_spark.operators.dedup import (
+        minhash_signatures,
+    )
+
+    spark.catalog.clearCache()
+    plan = _plan(minhash_signatures(spark, SF_SMOKE))
+    assert _shuffles(plan) == 1, plan
+    lines = plan.splitlines()
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange" in ln)
+    filters = [
+        ln for ln in lines[exchange:]
+        if re.match(r"[\s:+-]*(\*\(\d+\) )?Filter ", ln)
+    ]
+    assert not filters, plan
+    aggs = [ln for ln in lines if "HashAggregate" in ln]
+    assert aggs, plan
+    assert not [ln for ln in aggs if "lambdafunction" in ln], plan
+
+
 def test_sampler_and_redaction_add_no_shuffle(spark):
     """Head sampling and redaction are stateless filters/projections over
     the parsed stage — at 100 TB they must pipeline into the scan. The

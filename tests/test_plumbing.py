@@ -359,6 +359,24 @@ def test_overwrite_mode_and_empty_frames_have_one_home():
     assert _SCALE_CONFS["spark.sql.sources.partitionOverwriteMode"] == "static"
 
 
+def test_operator_import_loads_only_what_it_uses():
+    """The package ``__init__`` modules import nothing: importing one
+    operator module leaves parse, route and aggregate unloaded."""
+    import subprocess
+    import sys
+
+    probe = (
+        "import sys; import opentelemetry_collector_spark.operators.dedup; "
+        "print(sorted(m for m in ('parse', 'route', 'aggregate') "
+        "if f'opentelemetry_collector_spark.operators.{m}' in sys.modules))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True,
+        check=True, timeout=120,
+    )
+    assert out.stdout.strip() == "[]", out.stdout + out.stderr
+
+
 def test_otlp_json_key_names_have_one_home():
     """The OTLP/JSON request nesting is written once, by
     functions/otlpjson.py's encoder (which derives the member names from
