@@ -9,14 +9,14 @@ implemented Spark-first:
 * the signature is **one compiled hash aggregate** over the exploded
   shingles: a row per (doc, shingle) carries the shingle's two md5 lanes,
   and a groupBy on doc_id takes the MINHASH_K ``min``s — no per-shingle
-  lambda, and no Exchange, as the shingles are already partitioned on
-  doc_id;
-* candidate generation is a **key-equality self-join** on LSH band keys —
-  a hash-partitioned shuffle Catalyst executes as a sort-merge/hash join,
-  never an O(n^2) cross join;
+  lambda (the persisted frame of ``dedup_minhash_pairs`` loses the doc_id
+  partitioning, so there the partial mins shuffle once);
+* candidate generation is **band buckets**: band rows group on (band, key)
+  and each bucket of 2+ docs emits its doc_a < doc_b pairs — no band
+  self-join (each doc is signed once), never an O(n^2) cross join;
 * verification (exact shingle Jaccard) runs only on candidate pairs;
-* everything is native Spark SQL expressions — md5-based hashing gives
-  identical results in the DuckDB oracles (no Python in the hot path).
+* everything is Spark SQL text — md5-based hashing gives identical
+  results in the DuckDB oracles (no Python in the hot path).
 
 Why not an inverted index on the shingles: its self-join emits
 sum(df*(df-1))/2 rows, and on a corpus over a fixed vocabulary a shingle's
@@ -25,8 +25,9 @@ quadratically (6.8x MinHash's time at 100k docs; BENCH.md "Text near-dup
 recall / cost").
 
 Scale notes (100 TB / 10^9 docs):
-* signatures are O(1) per doc (16 minhashes), so the band self-join
-  shuffles only ~doc_count * bands tiny rows.
+* signatures are O(1) per doc (16 minhashes), so the bucket aggregate
+  shuffles only ~doc_count * bands tiny rows; a bucket's id list is one
+  row, so a hot band key (many exact copies) must fit one task.
 * the final pair verify re-joins the (small) candidate set back to the
   shingle arrays — at scale that join is broadcast-able when candidates fit,
   else it hash-partitions on doc_id.
@@ -87,8 +88,8 @@ def _shingled(
 ) -> DataFrame:
     return (
         _docs(spark, sf_dir, compute_dense=True, docs=docs)
-        .select("doc_id", F.split("text", " ").alias("words"))
-        .select("doc_id", F.expr(_SHINGLES_EXPR).alias("shingles"))
+        .selectExpr("doc_id", "split(text, ' ') AS words")
+        .selectExpr("doc_id", f"{_SHINGLES_EXPR} AS shingles")
     )
 
 
@@ -172,17 +173,16 @@ def _signatures(sh: DataFrame) -> DataFrame:
     NULLs, as DuckDB's ``list_min([])``; plain ``explode`` would also let
     Catalyst infer a ``size(shingles) > 0`` filter and push it below the
     repartition, re-running the shingle lambda inside the scan task."""
-    m = F.md5("s")
-    h0 = F.conv(F.substring(m, 1, 8), 16, 10).cast("bigint")
-    h1 = F.conv(F.substring(m, 9, 8), 16, 10).cast("bigint")
-    lanes = sh.select("doc_id", F.explode_outer("shingles").alias("s")).select(
-        "doc_id", h0.alias("h0"), h1.alias("h1")
+    lanes = sh.selectExpr("doc_id", "explode_outer(shingles) AS s").selectExpr(
+        "doc_id",
+        "cast(conv(substring(md5(s), 1, 8), 16, 10) AS bigint) AS h0",
+        "cast(conv(substring(md5(s), 9, 8), 16, 10) AS bigint) AS h1",
     )
-    mins = [
-        F.min(((F.col("h0") * a + F.col("h1") * b) + j).bitwiseAND(0xFFFFFFFF))
+    mins = ", ".join(
+        f"min((h0 * {a} + h1 * {b} + {j}) & {0xFFFFFFFF})"
         for j, (a, b) in enumerate(zip(_MINHASH_A, _MINHASH_B))
-    ]
-    return lanes.groupBy("doc_id").agg(F.array(*mins).alias("sig"))
+    )
+    return lanes.groupBy("doc_id").agg(F.expr(f"array({mins}) AS sig"))
 
 
 def minhash_signatures(
@@ -197,21 +197,21 @@ def minhash_signatures(
 def bands_from_signatures(sig_df: DataFrame) -> DataFrame:
     """(doc_id, band, key) LSH band keys from a (doc_id, sig) frame —
     identical keying to dedup_minhash_pairs' in-batch banding."""
-    return sig_df.select(
-        "doc_id", F.explode(F.expr(_BANDS_FROM_SIG_EXPR)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
+    return sig_df.selectExpr("doc_id", f"inline({_BANDS_FROM_SIG_EXPR})")
 
 
 def dedup_minhash_pairs(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs (shingle -> 16-hash signature -> 4 bands of
-    4 -> band-bucket equality join -> true-Jaccard verify >= threshold).
+    4 -> band buckets -> true-Jaccard verify >= threshold).
 
     One md5 per shingle, lane-mixed per j, plays the role of the j-th
-    random permutation; band key = md5 of the band's minhashes. Candidates
-    from ANY matching band are verified with exact Jaccard via array
-    intersection on the (small) candidate set.
+    random permutation; band key = md5 of the band's minhashes. Band rows
+    group on (band, key) into sorted doc-id buckets, and one ``inline``
+    emits each bucket's doc_a < doc_b pairs, so each doc is signed once (a
+    band self-join signed it per side). Distinct candidates from ANY band
+    are verified with exact Jaccard via array intersection.
     """
     # The shingled frame feeds THREE subtrees of one DAG (signature path +
     # both sides of the verify join); unpersisted, Spark recomputes the
@@ -220,34 +220,28 @@ def dedup_minhash_pairs(
     # spills rather than OOMs at corpus scale — ~5 KB/doc of shingles —
     # and the ContextCleaner unpersists when the frame goes out of scope.
     sh = _shingled(spark, sf_dir, docs=docs).persist()
-    bands = bands_from_signatures(_signatures(sh))
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        bands_from_signatures(_signatures(sh))
+        .groupBy("band", "key")
+        .agg(F.expr("array_sort(collect_list(doc_id)) AS ids"))
+        .where("size(ids) > 1")
+        .selectExpr(
+            "inline(flatten(transform(ids, (a, i) -> transform("
+            "slice(ids, i + 2, size(ids)), b -> struct(a AS doc_a, b AS doc_b)))))"
         )
         .distinct()
     )
-    verified = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"),
-                            F.col("shingles").alias("sh_a")), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"),
-                        F.col("shingles").alias("sh_b")), "doc_b")
-        # array_size, not size: NULL (a NULL text's shingles) stays NULL
-        # and fails the threshold; size reads -1 when ANSI mode is off
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.array_size(F.array_intersect("sh_a", "sh_b"))
-                / F.array_size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
+    # array_size, not size: NULL (a NULL text's shingles) stays NULL and
+    # fails the threshold; size reads -1 when ANSI mode is off
+    return (
+        cand.join(sh.selectExpr("doc_id AS doc_a", "shingles AS sh_a"), "doc_a")
+        .join(sh.selectExpr("doc_id AS doc_b", "shingles AS sh_b"), "doc_b")
+        .selectExpr(
+            "doc_a", "doc_b", "round(array_size(array_intersect(sh_a, sh_b)) / "
+            "array_size(array_union(sh_a, sh_b)), 6) AS jaccard",
         )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .where(f"jaccard >= {JACCARD_THRESHOLD}")
     )
-    return verified.select("doc_a", "doc_b", "jaccard")
 
 
 DEDUP_MINHASH_ORACLE = f"""

@@ -103,6 +103,44 @@ def test_minhash_signatures_match_duckdb(spark, duck):
         spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
+BUCKET_DOCS = [
+    (1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"),
+    (3, "the quick brown fox jumps"), (4, None), (5, None), (6, None),
+    (7, "an unrelated text of words"),
+]
+
+
+def test_minhash_buckets_emit_each_pair_once(spark):
+    """Band buckets on edge texts, pairs equal to ``DEDUP_MINHASH_ORACLE``
+    with ANSI mode on and off: three identical texts share one bucket of
+    three in every band, so they make three pairs, each emitted once
+    although four bands propose it; three NULL texts sign as all NULLs,
+    whose band keys are all ``md5('')``, and that bucket yields no pair."""
+    import duckdb
+
+    from opentelemetry_collector_spark.operators.dedup import (
+        DEDUP_MINHASH_ORACLE,
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", BUCKET_DOCS)
+    expected = sorted(con.sql(DEDUP_MINHASH_ORACLE).fetchall())
+    assert expected == [(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0)]
+    docs = spark.createDataFrame(BUCKET_DOCS, "doc_id long, text string")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            pairs = sorted(
+                tuple(r) for r in DOCS_QUERIES["dedup_minhash_pairs"](
+                    spark, "", docs=docs).collect()
+            )
+            assert pairs == expected, mode
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_pandas_topk_agrees_with_sql_topk(spark):
     """The Arrow/numpy top-k must return the same neighbor SETS as the
     native-SQL brute force (scores may differ in the last ulp)."""

@@ -109,6 +109,54 @@ def test_minhash_signature_is_one_compiled_aggregate(spark):
     assert not [ln for ln in aggs if "lambdafunction" in ln], plan
 
 
+def test_minhash_pairs_sign_each_doc_once(spark):
+    """Candidates come from (band, key) buckets, not a band self-join:
+    the executed plan holds exactly one signature aggregate (output
+    ``doc_id, sig``; each side of a self-join re-ran it), no join keyed
+    on the band ``key``, and the distinct over ``[doc_a, doc_b]`` whose
+    rows the traced harness reads as the candidate count. The cache is
+    cleared first, as above."""
+    spark.catalog.clearCache()
+    plan = _plan(DOCS_QUERIES["dedup_minhash_pairs"](spark, SF_SMOKE))
+    sig_aggs = re.findall(r"output=\[doc_id#\d+L?, sig#\d+\]\)", plan)
+    assert len(sig_aggs) == 1, plan
+    joins = [ln for ln in plan.splitlines() if "Join" in ln]
+    assert joins, plan
+    assert not [ln for ln in joins if re.search(r"Join \[[^\]]*\bkey#", ln)], plan
+    assert re.search(
+        r"HashAggregate\(keys=\[doc_a#\d+L?, doc_b#\d+L?\], functions=\[\], "
+        r"output=\[doc_a#\d+L?, doc_b#\d+L?\]\)",
+        plan,
+    ), plan
+
+
+def test_minhash_pairs_planning_py4j_budget(spark, monkeypatch):
+    """Building ``dedup_minhash_pairs`` takes at most 250 py4j round trips
+    (counted by wrapping the gateway client's send_command): the operator
+    is SQL text, where its Column-call build took ~1,900. The fewest of
+    three builds is taken, so a garbage-collection burst of py4j object
+    releases does not count."""
+    import gc
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real = client.send_command
+
+    def counted(*args, **kwargs):
+        sent.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    calls = []
+    for _ in range(3):
+        gc.collect()
+        sent.clear()
+        DOCS_QUERIES["dedup_minhash_pairs"](spark, "", docs=docs)
+        calls.append(len(sent))
+    assert 0 < min(calls) <= 250, f"{calls} py4j calls to build the operator"
+
+
 def test_sampler_and_redaction_add_no_shuffle(spark):
     """Head sampling and redaction are stateless filters/projections over
     the parsed stage — at 100 TB they must pipeline into the scan. The
