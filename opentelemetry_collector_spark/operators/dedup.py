@@ -12,8 +12,8 @@ implemented Spark-first:
   lambda (the persisted frame of ``dedup_minhash_pairs`` loses the doc_id
   partitioning, so there the partial mins shuffle once);
 * candidate generation is **band buckets**: band rows group on (band, key)
-  and each bucket of 2+ docs emits its doc_a < doc_b pairs — no band
-  self-join (each doc is signed once), never an O(n^2) cross join;
+  and each bucket of 2+ docs streams out its doc_a < doc_b pairs — no
+  band self-join (each doc is signed once), never an O(n^2) cross join;
 * verification (exact shingle Jaccard) runs only on candidate pairs;
 * everything is Spark SQL text — md5-based hashing gives identical
   results in the DuckDB oracles (no Python in the hot path).
@@ -26,8 +26,9 @@ recall / cost").
 
 Scale notes (100 TB / 10^9 docs):
 * signatures are O(1) per doc (16 minhashes), so the bucket aggregate
-  shuffles only ~doc_count * bands tiny rows; a bucket's id list is one
-  row, so a hot band key (many exact copies) must fit one task.
+  shuffles only ~doc_count * bands tiny rows; a hot band key (many exact
+  copies) holds its id list in one task and streams its n(n-1)/2 pairs
+  as the band self-join did (NULL texts are dropped before grouping).
 * the final pair verify re-joins the (small) candidate set back to the
   shingle arrays — at scale that join is broadcast-able when candidates fit,
   else it hash-partitions on doc_id.
@@ -208,27 +209,30 @@ def dedup_minhash_pairs(
 
     One md5 per shingle, lane-mixed per j, plays the role of the j-th
     random permutation; band key = md5 of the band's minhashes. Band rows
-    group on (band, key) into sorted doc-id buckets, and one ``inline``
-    emits each bucket's doc_a < doc_b pairs, so each doc is signed once (a
-    band self-join signed it per side). Distinct candidates from ANY band
-    are verified with exact Jaccard via array intersection.
+    group on (band, key) into sorted doc-id buckets, and a ``posexplode``
+    then an ``explode`` of the ids after each position emit each bucket's
+    doc_a < doc_b pairs, so each doc is signed once (a band self-join
+    signed it per side). Distinct candidates from ANY band are verified
+    with exact Jaccard via array intersection.
     """
     # The shingled frame feeds THREE subtrees of one DAG (signature path +
     # both sides of the verify join); unpersisted, Spark recomputes the
-    # scan + split + shingle transform per subtree (measured 4.9s -> 1.5s
-    # at sf0.1 with persist). MEMORY_AND_DISK (the persist() default)
+    # scan + split + shingle transform per subtree (4.9s -> 1.5s at sf0.1
+    # under the band self-join; unconfirmed on the buckets: 2.27s without,
+    # 2.39s with at 20k docs). MEMORY_AND_DISK (the persist() default)
     # spills rather than OOMs at corpus scale — ~5 KB/doc of shingles —
     # and the ContextCleaner unpersists when the frame goes out of scope.
     sh = _shingled(spark, sf_dir, docs=docs).persist()
+    # NULL texts sign as all NULLs, share the md5('') keys and never pass
+    # the verify: drop them before grouping. Pairs leave a bucket one row
+    # at a time, so no array outgrows the bucket.
     cand = (
-        bands_from_signatures(_signatures(sh))
+        bands_from_signatures(_signatures(sh).where("sig[0] IS NOT NULL"))
         .groupBy("band", "key")
         .agg(F.expr("array_sort(collect_list(doc_id)) AS ids"))
         .where("size(ids) > 1")
-        .selectExpr(
-            "inline(flatten(transform(ids, (a, i) -> transform("
-            "slice(ids, i + 2, size(ids)), b -> struct(a AS doc_a, b AS doc_b)))))"
-        )
+        .selectExpr("ids", "posexplode(ids) AS (i, doc_a)")
+        .selectExpr("doc_a", "explode(slice(ids, i + 2, size(ids))) AS doc_b")
         .distinct()
     )
     # array_size, not size: NULL (a NULL text's shingles) stays NULL and

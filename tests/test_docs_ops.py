@@ -103,19 +103,16 @@ def test_minhash_signatures_match_duckdb(spark, duck):
         spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
-BUCKET_DOCS = [
-    (1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"),
-    (3, "the quick brown fox jumps"), (4, None), (5, None), (6, None),
-    (7, "an unrelated text of words"),
-]
-
-
-def test_minhash_buckets_emit_each_pair_once(spark):
+@pytest.mark.parametrize("n_null,n_same", [(3, 3), (3000, 300)])
+def test_minhash_buckets_emit_each_pair_once(spark, n_null, n_same):
     """Band buckets on edge texts, pairs equal to ``DEDUP_MINHASH_ORACLE``
-    with ANSI mode on and off: three identical texts share one bucket of
-    three in every band, so they make three pairs, each emitted once
-    although four bands propose it; three NULL texts sign as all NULLs,
-    whose band keys are all ``md5('')``, and that bucket yields no pair."""
+    with ANSI mode on and off: ``n_same`` identical texts share one bucket
+    in every band, so they make all their pairs, each emitted once
+    although four bands propose it; ``n_null`` NULL texts sign as all
+    NULLs, whose band keys are all ``md5('')``, and that bucket yields no
+    pair. The larger case is a hot band key of each kind."""
+    import itertools
+
     import duckdb
 
     from opentelemetry_collector_spark.operators.dedup import (
@@ -123,11 +120,18 @@ def test_minhash_buckets_emit_each_pair_once(spark):
     )
 
     con = duckdb.connect()
-    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", BUCKET_DOCS)
+    con.execute(f"""
+        CREATE TABLE documents AS
+        SELECT range AS doc_id, CASE WHEN range >= {n_null}
+            THEN 'the quick brown fox jumps' END AS text
+        FROM range({n_null + n_same})
+        UNION ALL VALUES (-1, 'an unrelated text of words'), (-2, '')""")
     expected = sorted(con.sql(DEDUP_MINHASH_ORACLE).fetchall())
-    assert expected == [(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0)]
-    docs = spark.createDataFrame(BUCKET_DOCS, "doc_id long, text string")
+    same = range(n_null, n_null + n_same)
+    assert expected == [(a, b, 1.0) for a, b in itertools.combinations(same, 2)]
+    docs = spark.createDataFrame(
+        con.sql("FROM documents").fetchall(), "doc_id long, text string"
+    )
     ansi = spark.conf.get("spark.sql.ansi.enabled")
     try:
         for mode in ("true", "false"):

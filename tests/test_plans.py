@@ -114,10 +114,13 @@ def test_minhash_pairs_sign_each_doc_once(spark):
     the executed plan holds exactly one signature aggregate (output
     ``doc_id, sig``; each side of a self-join re-ran it), no join keyed
     on the band ``key``, and the distinct over ``[doc_a, doc_b]`` whose
-    rows the traced harness reads as the candidate count. The cache is
-    cleared first, as above."""
+    rows the traced harness reads as the candidate count. No generator
+    takes a ``flatten``: a bucket's pairs must stream out row by row, not
+    as one n(n-1)/2-element array. The cache is cleared first, as above."""
     spark.catalog.clearCache()
     plan = _plan(DOCS_QUERIES["dedup_minhash_pairs"](spark, SF_SMOKE))
+    assert not [ln for ln in plan.splitlines()
+                if "Generate" in ln and "flatten(" in ln], plan
     sig_aggs = re.findall(r"output=\[doc_id#\d+L?, sig#\d+\]\)", plan)
     assert len(sig_aggs) == 1, plan
     joins = [ln for ln in plan.splitlines() if "Join" in ln]
