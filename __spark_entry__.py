@@ -24,7 +24,7 @@ def _ensure_pkg_shipped(spark: SparkSession) -> None:
     """Ship the engine package to executor Python workers via addPyFile.
 
     The driver may import this module from any cwd; Arrow-batched
-    operators (mapInPandas in operators/protobuf.py, grok.py) unpickle by
+    operators (mapInPandas in operators/protobuf.py) unpickle by
     module reference on the workers, which otherwise only see the cwd the
     Spark JVM inherited. Deduped per SparkContext by applicationId
     (id() would be reused after a stopped context is garbage-collected);

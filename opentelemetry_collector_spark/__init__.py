@@ -5,7 +5,7 @@ This is NOT a port of the Go goroutine/channel execution engine. The
 collector's receiver -> processor -> exporter DAG is re-expressed as a
 Catalyst logical plan over a transcripts table:
 
-    scan (receiver)  ->  regexp/Arrow parse (processorhelper)
+    scan (receiver)  ->  regexp parse (processorhelper)
                      ->  literal-map enrich (attributes/resource processor)
                      ->  fan-out routing filters (fanoutconsumer/router)
                      ->  groupBy(time-bucket) counts (batchprocessor/obsreport)

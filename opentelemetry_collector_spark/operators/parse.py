@@ -10,8 +10,9 @@ pdata/pcommon/map.go:109-127).
 Everything is native ``regexp_extract`` — JVM-side, whole-stage codegen, no
 per-row Python (input_hint: "vectorized ... no per-row Python"). Duplicate
 markers resolve first-match-wins, mirroring Map upsert semantics
-(pdata/pcommon/map.go:121-127). An Arrow ``mapInPandas`` grok variant for
-patterns regex-in-SQL can't express lives in operators/grok.py.
+(pdata/pcommon/map.go:121-127). The multi-pattern grok library, tried in
+order with one layout claiming each row, lives in operators/grok.py (also
+native SQL).
 """
 
 from __future__ import annotations

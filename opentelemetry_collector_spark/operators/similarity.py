@@ -64,10 +64,6 @@ def _norm(a: str) -> Column:
     )
 
 
-def _cos(a: str, b: str) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 _DOT_SQL = (
     "list_aggregate(list_transform(range(1, {d} + 1), i -> {a}[i] * {b}[i]), 'sum')"
 )

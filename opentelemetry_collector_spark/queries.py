@@ -26,7 +26,6 @@ from opentelemetry_collector_spark.severity import ERROR_THRESHOLD
 from opentelemetry_collector_spark.operators.route import dead_letter, route, routed_ok
 from opentelemetry_collector_spark.operators import aggregate as _agg
 from opentelemetry_collector_spark.operators import dedup as _dedup
-from opentelemetry_collector_spark.operators import multimodal as _mm
 from opentelemetry_collector_spark.operators import bpe as _bpe
 from opentelemetry_collector_spark.operators import sketch as _sk
 from opentelemetry_collector_spark.operators import quality as _qual
@@ -622,9 +621,10 @@ PIPELINE_QUERIES: dict[str, QueryFn] = {
     "nested_attributes": q_nested_attributes,
     "sink_counts_rollup": q_sink_counts_rollup,
     "asof_enrich": q_asof_enrich,
-    # grok pattern-library parse (Arrow mapInPandas); oracle = ordered
-    # regexp CASE precedence (GROK_ORACLE_BODY); native-parse agreement is
-    # additionally pytest-gated (tests/test_grok.py)
+    # grok pattern-library parse (one ordered RLIKE CASE + per-field
+    # regexp_extract CASEs, all SQL); oracle = the same ordered CASE in
+    # DuckDB (GROK_ORACLE_BODY); native-parse agreement is additionally
+    # pytest-gated (tests/test_grok.py)
     "grok_parse": lambda spark, sf_dir: _grok_parse(
         events_to_transcripts(spark, sf_dir)
     ),
@@ -680,7 +680,6 @@ DOCS_QUERIES: dict[str, QueryFn] = {
     # absorbs the ~1e-13 summation-order difference between the numpy
     # matmul and the SQL fold — so it shares ann_cosine_topk's oracle.
     "ann_cosine_topk_pandas": _sim.cosine_topk_pandas,
-    "media_features": _mm.media_features,
     "corpus_curation": _ts.corpus_curation,
     "doc_split": _ts.doc_split,
     "corpus_sample": _ts.corpus_sample,
@@ -733,7 +732,6 @@ DOCS_ORACLES: dict[str, str] = {
     "ann_cosine_topk": _sim.ANN_TOPK_ORACLE,
     "ann_cosine_topk_pandas": _sim.ANN_TOPK_ORACLE,
     "ann_ivf_topk": _sim.ANN_IVF_ORACLE,
-    "media_features": _mm.MEDIA_FEATURES_ORACLE,
     "corpus_curation": _ts.CORPUS_CURATION_ORACLE,
     "doc_split": _ts.DOC_SPLIT_ORACLE,
     "corpus_sample": _ts.CORPUS_SAMPLE_ORACLE,

@@ -25,7 +25,9 @@ _SCALE_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for pandas UDF / mapInPandas boundaries (the grok parse fallback).
+    # Arrow for the pandas UDF / mapInPandas boundaries that remain: the
+    # protobuf codec, the pyarrow zstd fallback, es6_double_string and the
+    # ann_cosine_topk_pandas twin.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Broadcast threshold: TPC-H dims at sf0.1 and the as-of versions table

@@ -3,6 +3,8 @@ agree wherever both claim a row (same first-match-wins invariant)."""
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators.grok import grok_parse
@@ -71,3 +73,46 @@ def test_grok_bigint_overflowing_dur_ms_reads_null(spark):
     r = {r.turn_idx: r for r in got.collect()}
     assert r[0].pattern == "tool_call" and r[0].dur_ms is None
     assert r[1].dur_ms == 42
+
+
+# rows where Java's regex engine (Spark) and RE2 (DuckDB) could part ways:
+# NULL/empty text, a marker without its trailing space, the marker after a
+# newline (``^`` anchors at the text start only), a newline after a full
+# match, a digit-suffixed, non-ASCII or lowercase severity, an unknown
+# status, and a tab in place of the space after the marker
+_TS = datetime.datetime(2020, 2, 11, 20, 26, 13)
+EDGE_ROWS = [
+    ("edge", i, "tool", text, None, _TS)
+    for i, text in enumerate([
+        None,
+        "",
+        "[INFO]",
+        "[INFO] ",
+        "x\n[INFO] tool=a status=OK",
+        "[INFO] tool=a status=OK\nmore",
+        "[WARN2] tool=web_search status=ERROR",
+        "[ÉRR] tool=a status=OK",
+        "[info] tool=a status=OK",
+        "[INFO] tool=a status=PENDING",
+        "[INFO]\ttool=a status=OK",
+    ])
+]
+
+
+def test_grok_edge_rows_match_oracle_ansi_on_and_off(spark):
+    """grok_parse equals its DuckDB oracle over the regex-engine edge rows
+    and the dur_ms overflow rows, with ANSI on and off."""
+    from opentelemetry_collector_spark.queries import PIPELINE_ORACLES
+    from tests.conftest import OVERFLOW_ROWS, assert_df_equal, oracle_over
+
+    t, want = oracle_over(
+        spark, EDGE_ROWS + OVERFLOW_ROWS, PIPELINE_ORACLES["grok_parse"]
+    )
+    assert want["pattern"].notna().sum() == 6  # 4 edge rows + 2 overflow
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            assert_df_equal(grok_parse(t), want)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)

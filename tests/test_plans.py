@@ -380,6 +380,7 @@ def test_regex_evaluation_counts_are_pinned(spark):
         "sink_counts": 10,
         "transform_pipeline": 12,
         "tail_sampling": 10,
+        "grok_parse": 9,      # one per (pattern, field) arm of the library
     }
     for name, bound in counts.items():
         plan = _plan(PIPELINE_QUERIES[name](spark, SF_SMOKE))
@@ -389,6 +390,17 @@ def test_regex_evaluation_counts_are_pinned(spark):
             f"(bound {bound}) — expression duplication is back, see "
             "PLANS.md 'Expression-duplication audit'"
         )
+
+
+def test_grok_parse_plan_is_sql_only(spark):
+    """grok_parse is native SQL: no Python worker node in its plan, and the
+    ordered pattern CASE is planned once (3 RLIKE, one per library pattern)
+    rather than inlined into each field's CASE."""
+    plan = _plan(PIPELINE_QUERIES["grok_parse"](spark, SF_SMOKE))
+    for node in ["MapInPandas", "PythonUDF", "ArrowEvalPython",
+                 "BatchEvalPython"]:
+        assert node not in plan, f"grok_parse plans a {node}"
+    assert plan.count("RLIKE") == 3
 
 
 def test_quality_ops_plan_shapes(spark):
